@@ -50,14 +50,9 @@ object Catalog {
     * stream cannot see — tail those with
     * [[graft.streaming.ChangeFeed]] between snapshots instead. */
   def readStreamTable(spark: SparkSession, ref: String): org.apache.spark.sql.DataFrame = {
-    val parts = ref.split('.')
-    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
-    val root = Option(spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
-      .getOrElse(throw new IllegalArgumentException(
-        s"catalog '${parts(0)}' is not configured in this session"))
-    val dir = java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
+    val dir = tableDir(spark, ref)
     require(java.nio.file.Files.exists(dir), s"no such table '$ref'")
-    require(DeletableTable.versionsOf(dir).isEmpty,
+    require(graft.streaming.StateStore.versionsOf(dir).isEmpty,
       s"'$ref' is a versioned table — stream its commits as a change " +
         "feed via readStreamTable(spark, ref, keys)")
     val logical = spark.table(ref).schema
@@ -122,14 +117,9 @@ object Catalog {
   def readStreamTable(spark: SparkSession, ref: String,
                       keys: Seq[String],
                       branch: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val parts = ref.split('.')
-    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
-    val root = Option(spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
-      .getOrElse(throw new IllegalArgumentException(
-        s"catalog '${parts(0)}' is not configured in this session"))
-    val dir = java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
+    val dir = tableDir(spark, ref)
     require(java.nio.file.Files.exists(dir), s"no such table '$ref'")
-    require(DeletableTable.versionsOf(dir).nonEmpty || Snapshots.isVersioned(dir),
+    require(graft.streaming.SnapshotReads.of(spark, dir.toString).nonEmpty,
       s"'$ref' is not a versioned table — tail its part files with " +
         "readStreamTable(spark, ref) instead")
     val reader = spark.readStream
@@ -151,27 +141,16 @@ object Catalog {
   def readTableChanges(spark: SparkSession, ref: String, keys: Seq[String],
                        from: Long, to: Long,
                        branch: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val parts = ref.split('.')
-    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
-    val root = Option(spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
-      .getOrElse(throw new IllegalArgumentException(
-        s"catalog '${parts(0)}' is not configured in this session"))
-    val dir = java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
+    val dir = tableDir(spark, ref)
     require(java.nio.file.Files.exists(dir), s"no such table '$ref'")
     // PRIMARY-KEY tables: the feed is the RESOLVED changelog —
     // ManifestSnapshotReads.read(v) resolves latest-per-key, so each
     // version's diff carries c/u/d over resolved states and shadowed
     // versions never leak (Paimon's changelog-producer semantics; the
     // endpoint-diff twin is [[readPkTableChanges]]).
-    val store: graft.streaming.SnapshotReads =
-      if (Snapshots.isVersioned(dir))
-        ManifestSnapshotReads(spark, dir.toString, branch)
-      else if (DeletableTable.versionsOf(dir).nonEmpty) {
-        require(branch.isEmpty,
-          s"'$ref': branches apply to manifest-versioned tables only")
-        new graft.streaming.StateStore(spark, dir.toString)
-      } else throw new IllegalArgumentException(
-        s"'$ref' is not a versioned table — no change feed to read")
+    val store = graft.streaming.SnapshotReads.of(spark, dir.toString, branch)
+      .getOrElse(throw new IllegalArgumentException(
+        s"'$ref' is not a versioned table — no change feed to read"))
     graft.streaming.ChangeFeed.tableChanges(store, from, to, keys)
   }
 
@@ -191,12 +170,7 @@ object Catalog {
   def readPkTableChanges(spark: SparkSession, ref: String,
                          from: Long, to: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{coalesce => co, col, lit, struct, when}
-    val parts = ref.split('.')
-    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
-    val root = Option(spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
-      .getOrElse(throw new IllegalArgumentException(
-        s"catalog '${parts(0)}' is not configured in this session"))
-    val dir = java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
+    val dir = tableDir(spark, ref)
     val pk = PkTables.read(dir).getOrElse(throw new IllegalArgumentException(
       s"'$ref' is not a PRIMARY-KEY table — use readTableChanges for " +
         "the file-level feed"))
@@ -229,6 +203,18 @@ object Catalog {
       .select(col("op"),
         when(aKey, before).as("before"),
         when(bKey, after).as("after"))
+  }
+
+  /** The table directory of `cat.db.table`, a `GraftLakeCatalog` name
+    * registered in this session. */
+  private[catalog] def tableDir(spark: SparkSession,
+                                ref: String): java.nio.file.Path = {
+    val parts = ref.split('.')
+    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
+    val root = Option(spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
+      .getOrElse(throw new IllegalArgumentException(
+        s"catalog '${parts(0)}' is not configured in this session"))
+    java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
   }
 
   /** logical → physical column renames from a table's evolution

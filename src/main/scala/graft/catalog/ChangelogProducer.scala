@@ -49,7 +49,7 @@ object ChangelogProducer {
   private val SchemaMarker = "_row_schema.json"
 
   def dirFor(tableDir: Path, ver: Long): Path =
-    tableDir.resolve(DirName).resolve(s"v=$ver")
+    graft.streaming.StateStore.versionDir(tableDir.resolve(DirName), ver)
 
   /** Serve version `ver`'s feed from its persisted files, producing
     * them first if absent. None = schema evolved since the files were
@@ -67,22 +67,21 @@ object ChangelogProducer {
 
   /** Version `ver`'s feed is provably EMPTY from manifest metadata
     * alone — no Spark job needed to derive it: an audit/no-op commit
-    * (zero added+removed data/delete/eq-delete files over a recorded
-    * parent — the [[ManifestSnapshotReads.noopCommit]] condition), or
-    * an empty snapshot whose parent state is empty too (the CREATE
-    * version: a diff of two empty states). Production then publishes
-    * a MARKER-ONLY version dir; [[serve]] reads zero files under the
-    * explicit feed schema — the same empty feed the computed path
-    * derives, at zero planning/job cost per covered commit. */
+    * ([[Snapshots.Snapshot.isNoopOverParent]]) whose recorded parent
+    * is still retained, or an empty snapshot whose parent state is
+    * empty too (the CREATE version: a diff of two empty states).
+    * Production then publishes a MARKER-ONLY version dir; [[serve]]
+    * reads zero files under the explicit feed schema — the same empty
+    * feed the computed path derives, at zero planning/job cost per
+    * covered commit. Fails closed: a no-op over an EXPIRED parent is
+    * not provably empty (the computed feed re-derives it as an
+    * initial load, or raises on a tag-pinned retention hole — exactly
+    * [[graft.streaming.ChangeFeed.versionFeed]]'s rule). */
   private def provablyEmptyFeed(tableDir: Path, ver: Long): Boolean =
     Snapshots.read(tableDir, ver).exists { s =>
-      def noop = s.parent.isDefined &&
-        s.summary.get("added-data-files").contains(0L) &&
-        s.summary.get("removed-data-files").contains(0L) &&
-        s.summary.getOrElse("added-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-eqdelete-files", 0L) == 0L
+      // retention check last: non-noop commits never list the log
+      def noop = s.isNoopOverParent &&
+        s.parent.exists(Snapshots.versions(tableDir).contains)
       def emptyNow = Snapshots.dataFiles(s.files).isEmpty
       def parentEmpty = s.parent match {
         case None => true // earliest retained: initial load of ∅

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions.{coalesce, lit, not}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.streaming.StateStore
+
 /** SQL `DELETE FROM` / `TRUNCATE TABLE` for lake-catalog tables — the
   * row-level maintenance surface a Paimon/Iceberg user expects of the
   * lake tier the reference exposes (reference `README.md:81-93`; Paimon
@@ -196,7 +198,7 @@ private[catalog] final class DeletableTable(
         // rows all survive: keep-everything overwrite) — writing into
         // the live v=<n> directory would mutate a committed snapshot
         // and silently change what VERSION AS OF <n> reads
-        case None if DeletableTable.versionsOf(tableDir).nonEmpty =>
+        case None if StateStore.versionsOf(tableDir).nonEmpty =>
           stagedRewriteWrite(info, Some(lit(false)))
         case None => inner.newWriteBuilder(info).build()
         case Some(preds) =>
@@ -253,10 +255,9 @@ private[catalog] final class DeletableTable(
       case None =>
         val kept = reader.parquet(dataDir.toString)
           .filter(not(coalesce(cond, lit(false))))
-        if (DeletableTable.versionsOf(tableDir).nonEmpty) {
+        if (StateStore.versionsOf(tableDir).nonEmpty) {
           // snapshot table: DELETE = one more commit; history intact
-          new graft.streaming.StateStore(spark, tableDir.toString)
-            .write(kept, DeletableTable.versionsOf(tableDir).max + 1L)
+          new StateStore(spark, tableDir.toString).writeNext(kept)
           spark.catalog.clearCache()
         } else {
           // plain table: copy-on-write rewrite + sidecar carry + swap
@@ -456,25 +457,17 @@ private[catalog] final class DeletableTable(
 private[catalog] object DeletableTable {
 
   /** Publish a staged rewrite directory as the table's new content:
-    * versioned tables gain snapshot `latest+1` (manifest-stamped like
-    * every StateStore commit, so `TIMESTAMP AS OF` keeps working);
+    * versioned tables gain snapshot `latest+1` through
+    * [[StateStore.commitStaged]] (stamped and parent-anchored like
+    * every store commit, so `TIMESTAMP AS OF` and the change feed's
+    * retention-hole detection cover DML-published versions too);
     * plain tables swap via rename with the schema/mapping sidecars
     * carried over. Shared by the DML writes and the plain-table
     * `compact` procedure. */
   private[catalog] def publishStagedRewrite(tableDir: Path, tmp: Path): Path = {
-    val versions = versionsOf(tableDir)
-    val newDataDir = if (versions.nonEmpty) {
-      val next = tableDir.resolve(s"v=${versions.max + 1L}")
-      deleteRecursive(next)
-      Files.move(tmp, next)
-      // parent line like every StateStore commit: the change feed's
-      // tag-pinned retention-hole detection must cover DML-published
-      // versions too, not just streaming-sink ones
-      Files.writeString(
-        next.resolve(graft.streaming.StateStore.CommitManifest),
-        String.valueOf(System.currentTimeMillis()) +
-          s"\nparent=${versions.max}")
-      next
+    val newDataDir = if (StateStore.versionsOf(tableDir).nonEmpty) {
+      val store = new StateStore(SparkSession.active, tableDir.toString)
+      StateStore.versionDir(tableDir, store.commitStaged(tmp.toString))
     } else {
       val old = tableDir.resolveSibling(tableDir.getFileName.toString + ".__old")
       if (Files.isDirectory(tableDir)) {
@@ -637,19 +630,6 @@ private[catalog] object DeletableTable {
       case _ => T
     }
   }
-
-  private[catalog] def versionsOf(p: Path): Seq[Long] =
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("v="))
-        .flatMap(v => v.stripPrefix("v=").toLongOption)
-        .toSeq.sorted
-      finally s.close()
-    }
 
   private def deleteRecursive(p: Path): Unit =
     if (Files.exists(p)) {

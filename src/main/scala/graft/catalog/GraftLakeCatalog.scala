@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.streaming.StateStore
+
 /** A Spark V2 catalog plugin over a parquet lake directory — the
   * engine's `CREATE CATALOG` equivalent (reference
   * `flink-cdc/sql/tickets-cdc.sql:11-14` `CREATE CATALOG fluss_catalog
@@ -156,22 +158,6 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     else None
   }
 
-  /** Committed snapshot versions of a VERSIONED table directory (the
-    * [[graft.streaming.StateStore]] `v=<n>/` layout), ascending; empty
-    * for a plain parquet table. Presence of any `v=` subdirectory is
-    * what flips a table into snapshot semantics — the default read
-    * resolves the LATEST version (snapshot isolation), never the union
-    * of all versions a naive recursive listing would produce. */
-  private def versionsOf(p: Path): Seq[Long] =
-    if (!Files.isDirectory(p)) Seq.empty
-    else withDirStream(Files.list(p)) {
-      _.filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("v="))
-        .flatMap(v => v.stripPrefix("v=").toLongOption)
-        .toSeq.sorted
-    }
-
   /** Rename/drop evolution sidecar next to the schema sidecar:
     * `renames` maps each RENAMED column's current logical name to its
     * physical (in-file) name — the role Iceberg field-ids play;
@@ -285,7 +271,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     }
     val evo = readEvolution(p)
     val schema = declaredSchema(p)
-    val data = versionsOf(p).lastOption.fold(p)(v => p.resolve(s"v=$v"))
+    val data = StateStore.currentDir(p)
     val base = parquetTable(ident, data, schema, evo)
     // the CURRENT table supports DELETE FROM / TRUNCATE (copy-on-write
     // rewrite, or a new snapshot commit for versioned tables); the
@@ -350,7 +336,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
           s"$catalogName: ${ident.toString} has no snapshot s-$v " +
             "(a concurrent expire_snapshots dropped it)")))
     }
-    val vs = versionsOf(p)
+    val vs = StateStore.versionsOf(p)
     if (vs.isEmpty) throw new UnsupportedOperationException(
       s"$catalogName: ${ident.toString} is not a versioned table (no v=<n> snapshots)")
     // non-numeric versions resolve through the tag sidecar (Iceberg
@@ -364,30 +350,14 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     if (!vs.contains(v)) throw new IllegalArgumentException(
       s"$catalogName: ${ident.toString} has no snapshot v=$v " +
         s"(committed: ${vs.mkString(",")} — older snapshots may have been expired)")
-    parquetTable(ident, p.resolve(s"v=$v"), declaredSchema(p), readEvolution(p))
-  }
-
-  /** Commit wall-clock of a snapshot: the explicit epoch-ms stamp the
-    * commit wrote into the version's `_graft_commit` manifest
-    * ([[graft.streaming.StateStore.CommitManifest]]); directory mtime
-    * only as the LEGACY fallback for pre-manifest stores — mtime is an
-    * attribute of the copy, not the commit (a restored/rsync'd lake or
-    * a touched `v=` directory shifts it silently), while the manifest's
-    * content travels with the data. Same clock `StateStore.readAsOf`
-    * consults, so SQL and Scala answers agree. */
-  private def commitMsOf(p: Path, v: Long): Long = {
-    val vdir = p.resolve(s"v=$v")
-    val manifest = vdir.resolve(graft.streaming.StateStore.CommitManifest)
-    // parse/fallback policy lives in ONE place (resolveCommitMs) so
-    // the SQL clock cannot drift from the Scala readAsOf clock
-    graft.streaming.StateStore.resolveCommitMs(
-      if (Files.exists(manifest)) Some(Files.readString(manifest)) else None,
-      Files.getLastModifiedTime(vdir).toMillis)
+    parquetTable(ident, StateStore.versionDir(p, v), declaredSchema(p), readEvolution(p))
   }
 
   /** SQL-text time travel, timestamp form: `… TIMESTAMP AS OF <ts>`
     * (Spark passes MICROseconds). Resolves to the newest snapshot
-    * committed at or before the timestamp, per [[commitMsOf]]. */
+    * committed at or before the timestamp — on flat stores per
+    * [[StateStore.versionAsOf]], the same commit clock as
+    * `StateStore.readAsOf`, so SQL and Scala answers agree. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val p = tablePath(ident)
     if (!Files.exists(p)) throw new NoSuchTableException(ident)
@@ -411,15 +381,17 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
         pspec, Some(snap), writable = false,
         renames = readEvolution(p).renames)
     }
-    val vs = versionsOf(p)
+    val store = new StateStore(SparkSession.active, p.toString)
+    val vs = store.versions
     if (vs.isEmpty) throw new UnsupportedOperationException(
       s"$catalogName: ${ident.toString} is not a versioned table (no v=<n> snapshots)")
     val tsMs = timestampMicros / 1000L
-    val v = vs.reverse.find(v => commitMsOf(p, v) <= tsMs)
+    val v = store.versionAsOf(tsMs)
       .getOrElse(throw new IllegalArgumentException(
         s"$catalogName: ${ident.toString} has no snapshot at or before " +
-          s"timestamp ${tsMs}ms (earliest commit: ${commitMsOf(p, vs.head)}ms)"))
-    parquetTable(ident, p.resolve(s"v=$v"), declaredSchema(p), readEvolution(p))
+          s"timestamp ${tsMs}ms (earliest commit: " +
+          s"${store.commitTimeMs(vs.head).getOrElse(-1L)}ms)"))
+    parquetTable(ident, StateStore.versionDir(p, v), declaredSchema(p), readEvolution(p))
   }
 
   /** CREATE TABLE / CTAS: the table is a (initially empty) parquet

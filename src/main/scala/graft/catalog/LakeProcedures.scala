@@ -12,6 +12,8 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.streaming.{SnapshotReads, StateStore}
+
 /** SQL stored procedures for lake maintenance — the `CALL
   * cat.system.<proc>(…)` surface a Paimon/Iceberg user drives
   * compaction and snapshot lifecycle with (Iceberg's
@@ -23,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * argument binding (positional and named, with defaults), and result
   * display are all Spark's; each procedure here is a thin binding from
   * the bound argument row to the engine's existing
-  * [[graft.streaming.StateStore]] maintenance operations, returning
+  * [[graft.streaming.SnapshotReads]] maintenance operations, returning
   * its report rows through a driver-local [[LocalScan]] (maintenance
   * reports are O(versions) — never data-sized).
   *
@@ -38,9 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    remove the keys from EVERY retained snapshot, deliberately
   *    piercing time travel ([[graft.streaming.StateStore.purgeKeys]]).
   *
-  * `tbl` is `db.table` relative to the catalog root; all four require
-  * the versioned (`v=<n>`) snapshot layout — plain tables get the
-  * row-level SQL surface (DELETE/UPDATE/MERGE) instead. */
+  * `tbl` is `db.table` relative to the catalog root. The snapshot
+  * lifecycle runs over either versioned layout through
+  * [[graft.streaming.SnapshotReads]] (`purge_keys` over the flat
+  * `v=<n>` store only); plain tables get the row-level SQL surface
+  * (DELETE/UPDATE/MERGE) instead. */
 private[catalog] object LakeProcedures {
 
   val Namespace = "system"
@@ -156,7 +160,7 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "add_partition_field",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               val colName = input.getUTF8String(1).toString
               val spec = requireSpecEvolvable("add_partition_field", tableDir)
               val field = validateNewIdentityCol("add_partition_field",
@@ -242,11 +246,11 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "migrate",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               if (Snapshots.isVersioned(tableDir))
                 throw new IllegalArgumentException(
                   "migrate: already a manifest-versioned table")
-              if (DeletableTable.versionsOf(tableDir).nonEmpty)
+              if (StateStore.versionsOf(tableDir).nonEmpty)
                 throw new UnsupportedOperationException(
                   "migrate: this is a flat v=<n> snapshot store — it is " +
                     "already versioned under its own layout")
@@ -560,13 +564,13 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "compact",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               val target = input.getInt(1)
               val spark = SparkSession.active
               val pspec = PartitionSpec.read(tableDir)
               val result =
-                if (DeletableTable.versionsOf(tableDir).nonEmpty) {
-                  val store = new graft.streaming.StateStore(spark, tableDir.toString)
+                if (StateStore.versionsOf(tableDir).nonEmpty) {
+                  val store = new StateStore(spark, tableDir.toString)
                   store.compact(target)
                   InternalRow(store.latestVersion.getOrElse(-1L))
                 } else if (pspec.nonEmpty) {
@@ -739,7 +743,7 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "dedupe",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               // the dedupe rewrite is flat — running it on a hive
               // layout would silently destroy the partition dirs
               if (PartitionSpec.read(tableDir).nonEmpty)
@@ -763,12 +767,12 @@ private[catalog] object LakeProcedures {
                     if (keys.contains(c)) col(c) else col(s"__rest.$c").as(c)): _*)
               }
               val result =
-                if (DeletableTable.versionsOf(tableDir).nonEmpty) {
-                  val store = new graft.streaming.StateStore(spark, tableDir.toString)
+                if (StateStore.versionsOf(tableDir).nonEmpty) {
+                  val store = new StateStore(spark, tableDir.toString)
                   val cur = store.read().get
                   val before = cur.count()
                   val out = dedupe(cur).localCheckpoint(true)
-                  store.write(out, store.latestVersion.getOrElse(-1L) + 1L)
+                  store.writeNext(out)
                   InternalRow(before - out.count())
                 } else {
                   val cur = spark.read.parquet(tableDir.toString)
@@ -814,7 +818,7 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "zorder",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               val xc = input.getUTF8String(1).toString
               val yc = input.getUTF8String(2).toString
               val target = input.getInt(3)
@@ -920,12 +924,10 @@ private[catalog] object LakeProcedures {
                 graft.operators.Layout.zorderLayout(df, col(xc), col(yc), target)
               }
               val result =
-                if (DeletableTable.versionsOf(tableDir).nonEmpty) {
-                  val store = new graft.streaming.StateStore(spark, tableDir.toString)
+                if (StateStore.versionsOf(tableDir).nonEmpty) {
+                  val store = new StateStore(spark, tableDir.toString)
                   val out = rewrite(store.read().get).localCheckpoint(true)
-                  val v = store.latestVersion.getOrElse(-1L) + 1L
-                  store.write(out, v)
-                  InternalRow(v)
+                  InternalRow(store.writeNext(out))
                 } else {
                   val out = rewrite(spark.read.parquet(tableDir.toString))
                   val tmp = tableDir.resolveSibling(
@@ -946,13 +948,14 @@ private[catalog] object LakeProcedures {
       case "purge_keys" =>
         Some(proc(root, "purge_keys",
           Seq("tbl" -> StringType, "key_col" -> StringType, "keys_csv" -> StringType),
-          new StructType().add("rows_removed", LongType)) { (dir, log, args) =>
-          if (!log.isInstanceOf[StoreLog]) throw new UnsupportedOperationException(
-            "purge_keys: manifest-versioned partitioned tables are not " +
-              "supported yet — rewrite history with per-snapshot DELETE + " +
-              "expire_snapshots instead")
-          val store = new graft.streaming.StateStore(
-            SparkSession.active, dir.toString)
+          new StructType().add("rows_removed", LongType)) { (_, log, args) =>
+          val store = log match {
+            case s: StateStore => s
+            case _ => throw new UnsupportedOperationException(
+              "purge_keys: manifest-versioned partitioned tables are not " +
+                "supported yet — rewrite history with per-snapshot DELETE + " +
+                "expire_snapshots instead")
+          }
           val keyCol = args.getUTF8String(1).toString
           val keys: Seq[Any] = args.getUTF8String(2).toString
             .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
@@ -984,7 +987,7 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "vacuum",
-                input.getUTF8String(0).toString, requireVersioned = false)
+                input.getUTF8String(0).toString)
               val cutoff = System.currentTimeMillis() - input.getLong(1)
               val prefix = tableDir.getFileName.toString + ".__"
               val siblings = {
@@ -1090,9 +1093,8 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "analyze",
-                input.getUTF8String(0).toString, requireVersioned = false)
-              val dataDir = DeletableTable.versionsOf(tableDir).lastOption
-                .fold(tableDir)(v => tableDir.resolve(s"v=$v"))
+                input.getUTF8String(0).toString)
+              val dataDir = StateStore.currentDir(tableDir)
               val cols = input.getUTF8String(1).toString
                 .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
               val n = FileStats.analyze(
@@ -1127,9 +1129,8 @@ private[catalog] object LakeProcedures {
             override def isDeterministic: Boolean = false
             override def call(input: InternalRow): java.util.Iterator[Scan] = {
               val tableDir = resolveTableDir(root, "bloom_index",
-                input.getUTF8String(0).toString, requireVersioned = false)
-              val dataDir = DeletableTable.versionsOf(tableDir).lastOption
-                .fold(tableDir)(v => tableDir.resolve(s"v=$v"))
+                input.getUTF8String(0).toString)
+              val dataDir = StateStore.currentDir(tableDir)
               val cols = input.getUTF8String(1).toString
                 .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
               val n = BloomIndex.build(SparkSession.active, tableDir, dataDir,
@@ -1147,8 +1148,10 @@ private[catalog] object LakeProcedures {
     }
   }
 
-  private def resolveTableDir(root: Path, procName: String, tbl: String,
-                              requireVersioned: Boolean): Path = {
+  /** `db.table` → its existing table directory under the catalog
+    * root. */
+  private def resolveTableDir(root: Path, procName: String,
+                              tbl: String): Path = {
     val dir = tbl.split('.') match {
       case Array(db, t) => root.resolve(db).resolve(s"$t.parquet")
       case _ => throw new IllegalArgumentException(
@@ -1156,110 +1159,7 @@ private[catalog] object LakeProcedures {
     }
     if (!Files.isDirectory(dir))
       throw new IllegalArgumentException(s"$procName: no such table '$tbl'")
-    if (requireVersioned && DeletableTable.versionsOf(dir).isEmpty)
-      throw new IllegalArgumentException(
-        s"$procName: '$tbl' is not a versioned (v=<n>) lake table")
     dir
-  }
-
-  /** Layout-polymorphic snapshot lifecycle — the procedures above run
-    * unchanged over BOTH versioned layouts: flat `v=<n>` directory
-    * stores ([[graft.streaming.StateStore]]) and partitioned manifest
-    * logs ([[Snapshots]]). */
-  private[catalog] sealed trait VersionLog {
-    def versions: Seq[Long]
-    def commitMs(v: Long): Option[Long]
-    /** Recorded commit anchor of `v` (both layouts record parents as
-      * of r12; None = first commit or pre-parent manifests). */
-    def parentOf(v: Long): Option[Long]
-    /** Non-destructive rollback: re-commit snapshot `v`'s content as
-      * latest+1; returns the new version. */
-    def rollbackTo(v: Long): Long
-    /** Drop all but the newest `keep` snapshots, never a pinned one;
-      * manifest logs also garbage-collect the data files no retained
-      * snapshot references. */
-    def expire(keep: Int, pinned: Set[Long]): Unit
-  }
-
-  private final class StoreLog(store: graft.streaming.StateStore)
-      extends VersionLog {
-    def versions: Seq[Long] = store.versions
-    def commitMs(v: Long): Option[Long] = store.commitTimeMs(v)
-    def parentOf(v: Long): Option[Long] = store.parentOf(v)
-    def rollbackTo(v: Long): Long = {
-      val df = store.read(v).getOrElse(throw new IllegalArgumentException(
-        s"rollback: no snapshot v=$v (have ${store.versions.mkString(",")})"))
-      val next = store.latestVersion.get + 1L
-      store.write(df, next)
-      next
-    }
-    def expire(keep: Int, pinned: Set[Long]): Unit = store.expire(keep, pinned)
-  }
-
-  private final class ManifestLog(tableDir: Path) extends VersionLog {
-    def versions: Seq[Long] = Snapshots.versions(tableDir)
-    // meta-only reads: the commit stamp / parent chain never need the
-    // segment-resolved file list
-    def commitMs(v: Long): Option[Long] =
-      Snapshots.readMeta(tableDir, v).map(_.commitMs)
-    def parentOf(v: Long): Option[Long] =
-      Snapshots.readMeta(tableDir, v).flatMap(_.parent)
-    def rollbackTo(v: Long): Long = {
-      val s = Snapshots.read(tableDir, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"rollback: no snapshot s-$v (have ${versions.mkString(",")})"))
-      // set-the-list semantics (a rollback REPLACES whatever is
-      // current), validated inside the OCC loop on every retry: the
-      // target manifest must still exist, must not be SCHEDULED for
-      // removal by a retained `expire` commit (the expire's
-      // linearization point precedes its manifest deletions — the
-      // r12 residual window, closed now that expire IS a commit), and
-      // the restored files must still be on disk. A concurrent expire
-      // therefore either linearizes after this rollback (the
-      // rollback's published manifest joins the GC's retained
-      // reachability set) or before it (this validation raises
-      // CommitConflictException) — never a published manifest over
-      // GC'd files.
-      // rolling back to an MV-stamped snapshot CARRIES the stamp: the
-      // rollback's content IS that stamped content, so the watermark
-      // claim stays truthful, the next refresh resumes from it, and
-      // "roll back to the last stamped snapshot" is a real remediation
-      // (a rollback to an UNSTAMPED snapshot stays a foreign write on
-      // an MV table — recreate the MV)
-      val mvStamp = s.summary.get(MaterializedView.SourceVersionKey)
-        .fold(Map.empty[String, Long])(w =>
-          Map(MaterializedView.SourceVersionKey -> w))
-      Snapshots.withSummaryStamp(tableDir, mvStamp) {
-        Snapshots.commit(tableDir, "rollback", _ => s.files,
-          validate = _ => {
-            if (Snapshots.readMeta(tableDir, v).isEmpty)
-              throw new CommitConflictException(
-                s"rollback: snapshot s-$v was dropped by a concurrent " +
-                  "expire_snapshots — no longer restorable")
-            if (Snapshots.droppedByRetainedExpire(tableDir, v))
-              throw new CommitConflictException(
-                s"rollback: snapshot s-$v is scheduled for removal by a " +
-                  "committed expire_snapshots — no longer restorable")
-            val missing = s.files.filterNot(f =>
-              Files.exists(tableDir.resolve(f)))
-            if (missing.nonEmpty) throw new CommitConflictException(
-              s"rollback: ${missing.size} of snapshot s-$v's files were " +
-                s"garbage-collected by a concurrent expire (e.g. " +
-                s"${missing.head}) — the snapshot is no longer restorable")
-          },
-          freshStats = s.stats)
-      }
-    }
-    def expire(keep: Int, pinned: Set[Long]): Unit = {
-      // expiry IS a commit ([[Snapshots.commitExpire]]): the dropped
-      // list publishes through the OCC loop before any deletion, so
-      // racing rollbacks/commits re-validate against it; pins re-read
-      // per retry. `pinned` from the one-shot caller is folded in.
-      val dropped = Snapshots.commitExpire(tableDir, keep,
-        () => pinned ++ Tags.read(tableDir).values.toSet)
-      // persisted changelog dirs of expired versions GC with them
-      ChangelogProducer.dropFor(tableDir, dropped)
-    }
   }
 
   /** The effective tag pins of a table dir: chain-carried for
@@ -1365,7 +1265,7 @@ private[catalog] object LakeProcedures {
     .add("total_files", LongType)
 
   private[catalog] def snapshotAuditRows(dir: Path,
-                                         log: VersionLog): Seq[InternalRow] =
+                                         log: SnapshotReads): Seq[InternalRow] =
     log.versions.map { v =>
       // meta-only read: audit columns come from the manifest list
       // itself (summary carries the file counts) — O(versions) small
@@ -1383,23 +1283,15 @@ private[catalog] object LakeProcedures {
   /** [[snapshotAuditRows]] resolving the log itself (empty for plain
     * tables) — the metadata-table entry point. */
   private[catalog] def snapshotAuditRowsOf(dir: Path): Seq[InternalRow] =
-    versionLogOf(dir).map(snapshotAuditRows(dir, _)).getOrElse(Seq.empty)
-
-  /** The version log of a table dir: manifest for snapshot-versioned
-    * partitioned tables, store for flat `v=<n>` ones; None = plain. */
-  private def versionLogOf(dir: Path): Option[VersionLog] =
-    if (Snapshots.isVersioned(dir)) Some(new ManifestLog(dir))
-    else if (DeletableTable.versionsOf(dir).nonEmpty)
-      Some(new StoreLog(new graft.streaming.StateStore(
-        SparkSession.active, dir.toString)))
-    else None
+    SnapshotReads.of(SparkSession.active, dir.toString)
+      .map(snapshotAuditRows(dir, _)).getOrElse(Seq.empty)
 
   /** Build an UnboundProcedure from a (dir, log, args) → report-rows
     * function. Argument 0 is always `tbl`; the dir resolves against
     * the catalog root and must be versioned in EITHER layout. */
   private def proc(root: Path, procName: String,
                    params: Seq[(String, DataType)], outSchema: StructType)(
-      body: (Path, VersionLog, InternalRow) => Seq[InternalRow]): UnboundProcedure =
+      body: (Path, SnapshotReads, InternalRow) => Seq[InternalRow]): UnboundProcedure =
     new UnboundProcedure {
       override def name(): String = procName
       override def description(): String = s"graft lake maintenance: $procName"
@@ -1411,15 +1303,8 @@ private[catalog] object LakeProcedures {
         override def isDeterministic: Boolean = false
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
           val tbl = input.get(0, StringType).asInstanceOf[UTF8String].toString
-          val dir = tbl.split('.') match {
-            case Array(db, t) => root.resolve(db).resolve(s"$t.parquet")
-            case _ => throw new IllegalArgumentException(
-              s"$procName: tbl must be 'db.table', got '$tbl'")
-          }
-          if (!Files.isDirectory(dir))
-            throw new IllegalArgumentException(
-              s"$procName: no such table '$tbl'")
-          val log = versionLogOf(dir).getOrElse(
+          val dir = resolveTableDir(root, procName, tbl)
+          val log = SnapshotReads.of(SparkSession.active, dir.toString).getOrElse(
             throw new IllegalArgumentException(
               s"$procName: '$tbl' is not a versioned lake table " +
                 "(neither v=<n> snapshots nor a manifest log)"))

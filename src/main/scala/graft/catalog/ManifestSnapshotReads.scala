@@ -22,7 +22,9 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
     s"$tableDir has no branch '$b' " +
       s"(branches: ${Snapshots.branches(tableDir).mkString(",")})"))
 
-  private val logical: org.apache.spark.sql.types.StructType = {
+  // lazy: the snapshot-lifecycle procedures construct this reader
+  // for metadata alone and never pay the sidecar reads
+  private lazy val logical: org.apache.spark.sql.types.StructType = {
     val sidecar = tableDir.resolve("_graft_schema.json")
     require(Files.exists(sidecar),
       s"$tableDir has no declared schema sidecar — corrupt table dir")
@@ -30,12 +32,12 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
       .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
-  private val bucketed: Boolean =
+  private lazy val bucketed: Boolean =
     PartitionSpec.read(tableDir).exists(_.isInstanceOf[PartitionSpec.Bucket])
 
   // rename evolution: files speak the PHYSICAL names; read with those,
   // alias back to logical (partition columns are never renamed)
-  private val renames: Map[String, String] = Evolutions.renames(tableDir)
+  private lazy val renames: Map[String, String] = Evolutions.renames(tableDir)
 
   // main-log or branch-sub-log views of the same machinery (the
   // branch feed is the WAP audit-as-a-stream surface)
@@ -62,17 +64,73 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
     * (A branch's b-0 fork has parent None, so it still emits as the
     * initial load.) */
   override def noopCommit(version: Long): Boolean =
-    metaOf(version).exists(s =>
-      s.summary.get("added-data-files").contains(0L) &&
-        s.summary.get("removed-data-files").contains(0L) &&
-        // a merge-on-read delete commit adds ONLY delete files — it
-        // is content-changing (its rows retract in the feed); same
-        // for a PK table's equality-delete commits
-        s.summary.getOrElse("added-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-eqdelete-files", 0L) == 0L &&
-        s.parent.isDefined)
+    metaOf(version).exists(_.isNoopOverParent)
+
+  // meta-only reads: the commit stamp never needs the segment-resolved
+  // file list
+  override def commitMs(version: Long): Option[Long] =
+    metaOf(version).map(_.commitMs)
+
+  /** Non-destructive rollback on the MAIN log (maintenance never
+    * targets a branch view). */
+  override def rollbackTo(v: Long): Long = {
+    val s = Snapshots.read(tableDir, v).getOrElse(
+      throw new IllegalArgumentException(
+        s"rollback: no snapshot s-$v (have " +
+          s"${Snapshots.versions(tableDir).mkString(",")})"))
+    // set-the-list semantics (a rollback REPLACES whatever is
+    // current), validated inside the OCC loop on every retry: the
+    // target manifest must still exist, must not be SCHEDULED for
+    // removal by a retained `expire` commit (the expire's
+    // linearization point precedes its manifest deletions — the
+    // r12 residual window, closed now that expire IS a commit), and
+    // the restored files must still be on disk. A concurrent expire
+    // therefore either linearizes after this rollback (the
+    // rollback's published manifest joins the GC's retained
+    // reachability set) or before it (this validation raises
+    // CommitConflictException) — never a published manifest over
+    // GC'd files.
+    // rolling back to an MV-stamped snapshot CARRIES the stamp: the
+    // rollback's content IS that stamped content, so the watermark
+    // claim stays truthful, the next refresh resumes from it, and
+    // "roll back to the last stamped snapshot" is a real remediation
+    // (a rollback to an UNSTAMPED snapshot stays a foreign write on
+    // an MV table — recreate the MV)
+    val mvStamp = s.summary.get(MaterializedView.SourceVersionKey)
+      .fold(Map.empty[String, Long])(w =>
+        Map(MaterializedView.SourceVersionKey -> w))
+    Snapshots.withSummaryStamp(tableDir, mvStamp) {
+      Snapshots.commit(tableDir, "rollback", _ => s.files,
+        validate = _ => {
+          if (Snapshots.readMeta(tableDir, v).isEmpty)
+            throw new CommitConflictException(
+              s"rollback: snapshot s-$v was dropped by a concurrent " +
+                "expire_snapshots — no longer restorable")
+          if (Snapshots.droppedByRetainedExpire(tableDir, v))
+            throw new CommitConflictException(
+              s"rollback: snapshot s-$v is scheduled for removal by a " +
+                "committed expire_snapshots — no longer restorable")
+          val missing = s.files.filterNot(f =>
+            Files.exists(tableDir.resolve(f)))
+          if (missing.nonEmpty) throw new CommitConflictException(
+            s"rollback: ${missing.size} of snapshot s-$v's files were " +
+              s"garbage-collected by a concurrent expire (e.g. " +
+              s"${missing.head}) — the snapshot is no longer restorable")
+        },
+        freshStats = s.stats)
+    }
+  }
+
+  /** Expiry IS a commit on the MAIN log ([[Snapshots.commitExpire]]):
+    * the dropped list publishes through the OCC loop before any
+    * deletion, so racing rollbacks/commits re-validate against it;
+    * pins re-read per retry, with the caller's `pinned` folded in. */
+  override def expire(keep: Int, pinned: Set[Long]): Unit = {
+    val dropped = Snapshots.commitExpire(tableDir, keep,
+      () => pinned ++ Tags.read(tableDir).values.toSet)
+    // persisted changelog dirs of expired versions GC with them
+    ChangelogProducer.dropFor(tableDir, dropped)
+  }
 
   /** Zero DATA files in the snapshot — provably empty content from
     * the manifest alone (delete/eq-delete files cannot create rows). */

@@ -92,16 +92,6 @@ object MaterializedView {
 
   private def aggName(c: String, fn: String): String = s"${fn}_$c"
 
-  private def resolveDir(spark: SparkSession, ref: String): Path = {
-    val parts = ref.split('.')
-    require(parts.length == 3, s"expected cat.db.table, got '$ref'")
-    val root = Option(
-      spark.conf.get(s"spark.sql.catalog.${parts(0)}.path", null))
-      .getOrElse(throw new IllegalArgumentException(
-        s"catalog '${parts(0)}' is not configured in this session"))
-    java.nio.file.Paths.get(root, parts(1), s"${parts(2)}.parquet")
-  }
-
   private def writeDef(dir: Path, d: MvDef): Unit = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.createObjectNode()
@@ -178,7 +168,7 @@ object MaterializedView {
   def create(spark: SparkSession, mvRef: String, sourceRef: String,
              keys: Seq[String], groupBy: Seq[String],
              aggs: Seq[(String, String)], buckets: Int = 16): Long = {
-    val srcDir = resolveDir(spark, sourceRef)
+    val srcDir = Catalog.tableDir(spark, sourceRef)
     // PK sources fold the RESOLVED changelog (the snapshot reads
     // resolve latest-per-key), so the retract algebra sees exactly
     // one before/after per key transition — correct by construction
@@ -188,7 +178,7 @@ object MaterializedView {
     fullAggregate(
       spark.sql(s"SELECT * FROM $sourceRef VERSION AS OF $srcV"),
       groupBy, aggs).createOrReplaceTempView("__mv_full")
-    val mvDir = resolveDir(spark, mvRef)
+    val mvDir = Catalog.tableDir(spark, mvRef)
     // the CTAS data commit carries the initial watermark stamp — the
     // manifest is the single source from the first snapshot on
     Snapshots.withSummaryStamp(mvDir, Map(SourceVersionKey -> srcV)) {
@@ -236,8 +226,8 @@ object MaterializedView {
                  joinCols: Seq[String], groupBy: Seq[String],
                  aggs: Seq[(String, String)], buckets: Int = 16)
       : (Long, Long) = {
-    val factDir = resolveDir(spark, factRef)
-    val dimDir = resolveDir(spark, dimRef)
+    val factDir = Catalog.tableDir(spark, factRef)
+    val dimDir = Catalog.tableDir(spark, dimRef)
     val fv = Snapshots.latest(factDir).map(_.version).getOrElse(
       throw new IllegalArgumentException(
         s"$factRef is not a manifest-versioned table"))
@@ -269,7 +259,7 @@ object MaterializedView {
         .join(spark.sql(s"SELECT * FROM $dimRef VERSION AS OF $dv"),
           joinCols, "inner"),
       groupBy, aggs).createOrReplaceTempView("__mv_full")
-    val mvDir = resolveDir(spark, mvRef)
+    val mvDir = Catalog.tableDir(spark, mvRef)
     Snapshots.withSummaryStamp(mvDir,
       Map(SourceVersionKey -> fv, DimVersionKey -> dv)) {
       spark.sql(s"CREATE TABLE $mvRef " +
@@ -323,7 +313,7 @@ object MaterializedView {
     * with ONE `MERGE INTO` over the changed groups; returns
     * (fromVersion, toVersion) — equal means already fresh. */
   def refresh(spark: SparkSession, mvRef: String): (Long, Long) = {
-    val mvDir = resolveDir(spark, mvRef)
+    val mvDir = Catalog.tableDir(spark, mvRef)
     // WAP conf guard: the refresh MERGE would stage on the branch
     // while the watermark sidecar advances GLOBALLY — main would then
     // silently skip those changes forever. Loud, never silent.
@@ -386,7 +376,7 @@ object MaterializedView {
             "double-apply the shared range; re-run the refresh (it " +
             "resumes from the advanced watermark)")
     }
-    val srcDir = resolveDir(spark, d.source)
+    val srcDir = Catalog.tableDir(spark, d.source)
     val to = Snapshots.latest(srcDir).map(_.version).getOrElse(fromV)
     d.dim match {
       case None =>
@@ -410,7 +400,7 @@ object MaterializedView {
           _.copy(version = to))
         (fromV, to)
       case Some(dimRef) =>
-        val dimDir = resolveDir(spark, dimRef)
+        val dimDir = Catalog.tableDir(spark, dimRef)
         val toD = Snapshots.latest(dimDir).map(_.version).getOrElse(fromD)
         if (to <= fromV && toD <= fromD) return (fromV, fromV)
         applyDelta(spark, mvRef, mvDir, d,

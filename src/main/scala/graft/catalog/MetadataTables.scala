@@ -3,12 +3,15 @@ package graft.catalog
 import java.nio.file.{Files, Path}
 import java.util
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.streaming.{SnapshotReads, StateStore}
 
 /** Iceberg-style METADATA TABLES — `SELECT * FROM cat.db.t.history` /
   * `cat.db.t.files`: the table-inspection surface a lakehouse user
@@ -107,15 +110,10 @@ private[catalog] object MetadataTables {
       .add("version", LongType, nullable = false)
       .add("commit_ms", LongType, nullable = true)
     local(s"$cat.${tableDir.getFileName}.tags", schema, { () =>
-      def commitMs(v: Long): Option[Long] =
-        if (Snapshots.isVersioned(tableDir))
-          Snapshots.read(tableDir, v).map(_.commitMs)
-        else new graft.streaming.StateStore(
-          org.apache.spark.sql.SparkSession.active, tableDir.toString)
-          .commitTimeMs(v)
+      val log = SnapshotReads.of(SparkSession.active, tableDir.toString)
       LakeProcedures.pinsOf(tableDir).toSeq.sortBy(_._1).map { case (n, v) =>
         InternalRow(UTF8String.fromString(n), v,
-          commitMs(v).map(Long.box).orNull)
+          log.flatMap(_.commitMs(v)).map(Long.box).orNull)
       }.toArray
     })
   }
@@ -127,31 +125,27 @@ private[catalog] object MetadataTables {
       .add("n_files", LongType, nullable = false)
       .add("size_bytes", LongType, nullable = false)
     local(s"$cat.${tableDir.getFileName}.history", schema, { () =>
-      if (Snapshots.isVersioned(tableDir)) {
-        // manifest log: one row per retained snapshot, sizes summed
-        // over the manifest's file list
-        Snapshots.versions(tableDir)
-          .flatMap(Snapshots.read(tableDir, _)).map { s =>
-            val sizes = s.files.map(f => tableDir.resolve(f))
-              .filter(Files.exists(_)).map(Files.size)
-            InternalRow(s.version, s.commitMs,
-              s.files.size.toLong, sizes.sum)
+      SnapshotReads.of(SparkSession.active, tableDir.toString) match {
+        case Some(_: ManifestSnapshotReads) =>
+          // manifest log: one row per retained snapshot, sizes summed
+          // over the manifest's file list
+          Snapshots.versions(tableDir)
+            .flatMap(Snapshots.read(tableDir, _)).map { s =>
+              val sizes = s.files.map(f => tableDir.resolve(f))
+                .filter(Files.exists(_)).map(Files.size)
+              InternalRow(s.version, s.commitMs,
+                s.files.size.toLong, sizes.sum)
+            }.toArray
+        case Some(store) =>
+          store.versions.map { v =>
+            val files = dataFilesOf(StateStore.versionDir(tableDir, v))
+            InternalRow(v, store.commitMs(v).getOrElse(-1L),
+              files.size.toLong, files.map(Files.size).sum)
           }.toArray
-      } else {
-      val versions = DeletableTable.versionsOf(tableDir)
-      if (versions.isEmpty) {
-        val files = dataFilesOf(tableDir)
-        Array(InternalRow(null, null,
-          files.size.toLong, files.map(Files.size).sum))
-      } else {
-        val store = new graft.streaming.StateStore(
-          org.apache.spark.sql.SparkSession.active, tableDir.toString)
-        versions.map { v =>
-          val files = dataFilesOf(tableDir.resolve(s"v=$v"))
-          InternalRow(v, store.commitTimeMs(v).getOrElse(-1L),
-            files.size.toLong, files.map(Files.size).sum)
-        }.toArray
-      }
+        case None =>
+          val files = dataFilesOf(tableDir)
+          Array(InternalRow(null, null,
+            files.size.toLong, files.map(Files.size).sum))
       }
     })
   }
@@ -169,8 +163,7 @@ private[catalog] object MetadataTables {
       // files of legacy (pre-seq) segments and non-manifest layouts
       .add("committed_seq", LongType, nullable = true)
     local(s"$cat.${tableDir.getFileName}.files", schema, { () =>
-      val dataDir = DeletableTable.versionsOf(tableDir).lastOption
-        .fold(tableDir)(v => tableDir.resolve(s"v=$v"))
+      val dataDir = StateStore.currentDir(tableDir)
       // manifest-versioned tables report the SNAPSHOT's commit-atomic
       // stats (delete-file row counts ride every delete commit there);
       // statsOf falls back to the sidecar for pre-analyze manifests
@@ -239,9 +232,7 @@ private[catalog] object MetadataTables {
               rowsOf(paths))
           }.toArray
       } else if (PartitionSpec.read(tableDir).isEmpty) {
-        val files = dataFilesOf(
-          DeletableTable.versionsOf(tableDir).lastOption
-            .fold(tableDir)(v => tableDir.resolve(s"v=$v")))
+        val files = dataFilesOf(StateStore.currentDir(tableDir))
         Array(InternalRow(null, files.size.toLong,
           files.map(Files.size).sum, rowsOf(files)))
       } else {

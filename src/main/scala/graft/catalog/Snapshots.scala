@@ -136,7 +136,22 @@ private[catalog] object Snapshots {
                             dropped: Seq[Long] = Seq.empty,
                             pins: Map[String, Long] = Map.empty,
                             lastSeq: Long = 0L,
-                            seqs: Map[String, Long] = Map.empty)
+                            seqs: Map[String, Long] = Map.empty) {
+    /** Provably CONTENT-IDENTICAL to its recorded parent: an audit
+      * commit (expire, tag, branch fork) records zero added and removed
+      * data files. Delete and equality-delete files count too — a
+      * merge-on-read or PK delete commit adds ONLY those, and its rows
+      * retract in the feed. A summary without the data-file keys
+      * proves nothing. */
+    def isNoopOverParent: Boolean =
+      parent.isDefined &&
+        summary.get("added-data-files").contains(0L) &&
+        summary.get("removed-data-files").contains(0L) &&
+        summary.getOrElse("added-delete-files", 0L) == 0L &&
+        summary.getOrElse("removed-delete-files", 0L) == 0L &&
+        summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
+        summary.getOrElse("removed-eqdelete-files", 0L) == 0L
+  }
 
   private def dir(tableDir: Path): Path = tableDir.resolve(DirName)
 

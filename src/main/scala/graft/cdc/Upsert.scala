@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -271,14 +271,5 @@ object Upsert {
           state.update(newest)
           Iterator.single((k, newest._2))
       }
-  }
-
-  /** Batch top-1-per-key via window (reference Paimon-dedup batch analog,
-    * `row_number() over (partition by pk order by ts desc) = 1`) — kept
-    * for oracle parity; prefer [[latestByKey]] in plans. */
-  def latestByKeyWindow(df: DataFrame, keys: Seq[String], ord: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 }

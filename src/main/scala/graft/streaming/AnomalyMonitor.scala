@@ -42,17 +42,7 @@ object AnomalyMonitor {
   /** Run the monitor over an event stream into a versioned
     * [[StateStore]] at `dir`. */
   def run(eventStream: DataFrame, dir: String, checkpointDir: String,
-          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = eventStream.sparkSession
-    val store = new StateStore(spark, dir)
-    eventStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = store.versions.filter(_ < batchId).lastOption
-          .flatMap(v => store.read(v))
-        store.write(merge(prev, Analytics.hourlyCounts(batch)), batchId)
-      }
-      .start()
-  }
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    StateStore.foldStream(eventStream, dir, checkpointDir, trigger)(
+      (prev, batch) => merge(prev, Analytics.hourlyCounts(batch)))
 }

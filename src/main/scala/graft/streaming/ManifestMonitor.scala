@@ -49,17 +49,7 @@ object ManifestMonitor {
     * lifecycle: versioned store at `dir`, replayed batchIds rebuild
     * their own version from the pre-batch snapshot). */
   def run(docStream: DataFrame, dir: String, checkpointDir: String,
-          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docStream.sparkSession
-    val store = new StateStore(spark, dir)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = store.versions.filter(_ < batchId).lastOption
-          .flatMap(v => store.read(v))
-        store.write(merge(prev, batchManifest(batch)), batchId)
-      }
-      .start()
-  }
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    StateStore.foldStream(docStream, dir, checkpointDir, trigger)(
+      (prev, batch) => merge(prev, batchManifest(batch)))
 }

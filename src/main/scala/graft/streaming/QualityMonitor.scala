@@ -50,21 +50,7 @@ object QualityMonitor {
     * (the dashboard reads any snapshot; a replayed batchId overwrites
     * its own version — the [[Tiering]] idempotency contract). */
   def run(docStream: DataFrame, dir: String, checkpointDir: String,
-          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docStream.sparkSession
-    val store = new StateStore(spark, dir)
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // merge onto the PRE-batch version (not latest): a replayed
-        // batchId whose own version already committed rebuilds it
-        // from the same input instead of double-merging — the
-        // RecoverySpec exactly-once contract
-        val prev = store.versions.filter(_ < batchId).lastOption
-          .flatMap(v => store.read(v))
-        store.write(merge(prev, batchHistogram(batch)), batchId)
-      }
-      .start()
-  }
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    StateStore.foldStream(docStream, dir, checkpointDir, trigger)(
+      (prev, batch) => merge(prev, batchHistogram(batch)))
 }

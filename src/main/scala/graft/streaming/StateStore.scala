@@ -1,25 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Versioned parquet table state — the engine's stand-in for a Fluss
-  * PK-table's key-value tablet plus its Paimon/Iceberg lake tier
-  * (reference `'table.datalake.enabled'='true'`,
-  * `flink-cdc/sql/tickets-cdc.sql:35-36`; tiering job `deploy:318-358`).
-  *
-  * Each commit writes `dir/v=<version>/` then the reader resolves the
-  * max committed version — snapshot isolation without a table format
-  * dependency. Version = streaming batchId, which makes `foreachBatch`
-  * replay after failure idempotent (re-writing the same version is a
-  * no-op overwrite): checkpoint + idempotent sink = the effective
-  * exactly-once the reference configures
-  * (`'execution.checkpointing.mode'='EXACTLY_ONCE'`, tickets-cdc.sql:3).
-  */
-/** Minimal read surface of a versioned table — what the change feed
-  * and its streaming source need, implemented by BOTH versioned
-  * layouts: the flat `v=<n>` directory store ([[StateStore]]) and the
-  * partitioned manifest log
-  * ([[graft.catalog.ManifestSnapshotReads]]). */
+/** The one interface of a versioned table, implemented by BOTH
+  * versioned layouts: the flat `v=<n>` directory store
+  * ([[StateStore]]) and the partitioned manifest log
+  * ([[graft.catalog.ManifestSnapshotReads]]). The change feed, its
+  * streaming source and the snapshot-lifecycle procedures all run over
+  * it unchanged; [[SnapshotReads.of]] decides which layout a table
+  * directory holds. */
 trait SnapshotReads {
   /** Retained snapshot versions, ascending. */
   def versions: Seq[Long]
@@ -27,12 +17,22 @@ trait SnapshotReads {
   /** Snapshot `version` as a DataFrame; None if never committed or
     * expired. */
   def read(version: Long): Option[DataFrame]
+  /** Commit wall-clock of `version` (epoch ms); None if it is not
+    * retained. */
+  def commitMs(version: Long): Option[Long]
   /** The snapshot `version` was committed AGAINST, when the layout
     * records it (manifest logs do) — the change feed's exact diff
     * anchor, hole-proof under tag-pinned retention. None = unknown
     * (flat `v=<n>` stores, pre-parent manifests): the feed falls back
     * to the listing predecessor. */
   def parentOf(version: Long): Option[Long] = None
+  /** Non-destructive rollback: re-commit snapshot `version`'s content
+    * as latest+1; returns the new version. */
+  def rollbackTo(version: Long): Long
+  /** Drop all but the newest `keep` snapshots, never a pinned one;
+    * manifest logs also garbage-collect the data files no retained
+    * snapshot references. */
+  def expire(keep: Int, pinned: Set[Long]): Unit
   /** Is `version` a provably CONTENT-IDENTICAL commit over its parent
     * (an `expire`/audit snapshot — added=removed=0 in its recorded
     * summary)? The change feed skips the full-table diff join for
@@ -70,102 +70,185 @@ trait SnapshotReads {
       : Option[DataFrame] = None
 }
 
+object SnapshotReads {
+  /** The versioned reader of table directory `dir` — the ONE place
+    * that decides the layout: the manifest log when the directory has
+    * one (optionally a BRANCH sub-log of it), else the flat `v=<n>`
+    * store when it holds committed versions, else None (a plain
+    * table). */
+  def of(spark: SparkSession, dir: String,
+         branch: Option[String] = None): Option[SnapshotReads] =
+    if (graft.catalog.ManifestSnapshotReads.isManifestVersioned(dir))
+      Some(graft.catalog.ManifestSnapshotReads(spark, dir, branch))
+    else if (StateStore.versionsOf(java.nio.file.Paths.get(dir)).isEmpty) None
+    else {
+      require(branch.isEmpty,
+        s"'$dir': branches apply to manifest-versioned tables only")
+      Some(new StateStore(spark, dir))
+    }
+}
+
+/** Versioned parquet table state — the engine's stand-in for a Fluss
+  * PK-table's key-value tablet plus its Paimon/Iceberg lake tier
+  * (reference `'table.datalake.enabled'='true'`,
+  * `flink-cdc/sql/tickets-cdc.sql:35-36`; tiering job `deploy:318-358`).
+  *
+  * Each commit writes `dir/v=<version>/` then the reader resolves the
+  * max committed version — snapshot isolation without a table format
+  * dependency. Version = streaming batchId, which makes `foreachBatch`
+  * replay after failure idempotent (re-writing the same version is a
+  * no-op overwrite): checkpoint + idempotent sink = the effective
+  * exactly-once the reference configures
+  * (`'execution.checkpointing.mode'='EXACTLY_ONCE'`, tickets-cdc.sql:3).
+  *
+  * This class and its companion are the only code that lists,
+  * resolves, stamps or publishes `v=<n>` directories; the catalog
+  * reaches the layout through them. */
 final class StateStore(spark: SparkSession, dir: String)
     extends SnapshotReads {
   private val fs = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
   private val base = new org.apache.hadoop.fs.Path(dir)
 
+  private def path(version: Long): String =
+    s"$dir/${StateStore.dirName(version)}"
+
+  private def manifest(version: Long) =
+    new org.apache.hadoop.fs.Path(path(version), StateStore.CommitManifest)
+
   /** All committed versions, ascending — the snapshot history that
     * time travel navigates. */
   def versions: Seq[Long] =
     if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
+    else fs.listStatus(base).toSeq.filter(_.isDirectory)
+      .flatMap(s => StateStore.versionOf(s.getPath.getName))
       .sorted
 
   def read(): Option[DataFrame] =
-    latestVersion.map(v => spark.read.parquet(s"$dir/v=$v"))
+    latestVersion.map(v => spark.read.parquet(path(v)))
 
   /** Time travel by version (the Paimon/Iceberg `VERSION AS OF`
     * feature): read snapshot `version` exactly; None if it was never
     * committed or has been [[expire]]d. */
   def read(version: Long): Option[DataFrame] =
-    if (versions.contains(version)) Some(spark.read.parquet(s"$dir/v=$version"))
+    if (versions.contains(version)) Some(spark.read.parquet(path(version)))
     else None
 
-  /** Commit wall-clock of a version: the explicit timestamp the commit
-    * stamped into the version's `_graft_commit` manifest. Filesystem
-    * mtime is only the LEGACY fallback (pre-manifest stores): mtime is
-    * an attribute of the copy, not the commit — a rsync'd/restored
-    * lake or a touched directory silently shifts it, while the
-    * manifest's content travels with the data. */
-  def commitTimeMs(version: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/v=$version")
-    if (!fs.exists(p)) None
+  private def manifestText(version: Long): Option[String] = {
+    val m = manifest(version)
+    if (!fs.exists(m)) None
     else {
-      val m = new org.apache.hadoop.fs.Path(p, StateStore.CommitManifest)
-      val manifestText =
-        if (fs.exists(m)) {
-          val in = fs.open(m)
-          try Some(new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally in.close()
-        } else None
-      Some(StateStore.resolveCommitMs(manifestText,
-        fs.getFileStatus(p).getModificationTime))
+      val in = fs.open(m)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
     }
   }
+
+  /** Commit wall-clock of a version: the explicit timestamp the commit
+    * stamped into the version's `_graft_commit` manifest (its FIRST
+    * line). Filesystem mtime is only the LEGACY fallback (pre-manifest
+    * stores): mtime is an attribute of the copy, not the commit — a
+    * rsync'd/restored lake or a touched directory silently shifts it,
+    * while the manifest's content travels with the data. The SQL
+    * `TIMESTAMP AS OF` path resolves through [[versionAsOf]], so SQL
+    * text and [[readAsOf]] consult this one clock. */
+  def commitTimeMs(version: Long): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(path(version))
+    if (!fs.exists(p)) None
+    else Some(manifestText(version)
+      .flatMap(_.trim.linesIterator.nextOption())
+      .flatMap(_.trim.toLongOption)
+      .getOrElse(fs.getFileStatus(p).getModificationTime))
+  }
+
+  override def commitMs(version: Long): Option[Long] = commitTimeMs(version)
+
+  /** The newest version committed at or before `timestampMs`; None if
+    * the store's history starts later. */
+  def versionAsOf(timestampMs: Long): Option[Long] =
+    versions.reverse.find(v => commitTimeMs(v).exists(_ <= timestampMs))
 
   /** Time travel by timestamp (`TIMESTAMP AS OF`): the newest snapshot
     * committed at or before `timestampMs`; None if the store's history
     * starts later. */
   def readAsOf(timestampMs: Long): Option[DataFrame] =
-    versions.reverse
-      .find(v => commitTimeMs(v).exists(_ <= timestampMs))
-      .map(v => spark.read.parquet(s"$dir/v=$v"))
+    versionAsOf(timestampMs).map(v => spark.read.parquet(path(v)))
+
+  /** Stamp `version`'s commit manifest: line 1 the commit millis, line
+    * 2 the PARENT — the change feed's exact diff anchor, so a
+    * tag-pinned retention hole fails loudly on flat stores exactly
+    * like it does on manifest logs. Underscore-prefixed so Spark's
+    * hidden-file filter keeps it out of scans. */
+  private def stamp(version: Long, commitMs: Long,
+                    parent: Option[Long]): Unit = {
+    val out = fs.create(manifest(version), true)
+    try out.write((String.valueOf(commitMs) +
+      parent.fold("")(p => s"\nparent=$p"))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
 
   /** Commit a new version. Overwrite of an existing version (failure
     * replay) is idempotent by construction — the replayed commit
     * re-stamps the manifest, so commit time is always that of the LAST
     * successful commit of the version. The manifest lands after the
     * data (a crash between the two leaves a version readable with the
-    * mtime fallback, never a stamped-but-absent snapshot), underscore-
-    * prefixed so Spark's hidden-file filter keeps it out of scans.
-    * Line 2 records the PARENT (the newest version strictly below this
-    * one at commit time, this version's own prior parent on an
-    * idempotent replay) — the change feed's exact diff anchor, so a
-    * tag-pinned retention hole fails loudly on flat stores exactly
-    * like it does on manifest logs. */
+    * mtime fallback, never a stamped-but-absent snapshot). The parent
+    * is the newest version strictly below this one at commit time, this
+    * version's own prior parent on an idempotent replay. */
   def write(df: DataFrame, version: Long): Unit = {
     // resolve the anchor BEFORE the data write creates v=<version>:
     // replay keeps its original parent, a fresh commit anchors to the
     // newest retained predecessor
     val parent = parentOf(version)
       .orElse(versions.filter(_ < version).lastOption)
-    df.write.mode("overwrite").parquet(s"$dir/v=$version")
-    val m = new org.apache.hadoop.fs.Path(s"$dir/v=$version/${StateStore.CommitManifest}")
-    val out = fs.create(m, true)
-    try out.write((String.valueOf(System.currentTimeMillis()) +
-      parent.fold("")(p => s"\nparent=$p"))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    df.write.mode("overwrite").parquet(path(version))
+    stamp(version, System.currentTimeMillis(), parent)
+  }
+
+  /** Commit `df` as the version after the latest (0 on an empty
+    * store); returns the new version. */
+  def writeNext(df: DataFrame): Long = {
+    val next = latestVersion.fold(0L)(_ + 1L)
+    write(df, next)
+    next
+  }
+
+  /** Publish a fully written STAGED directory as snapshot `version`:
+    * whatever `v=<version>` held is replaced by a move, then the
+    * manifest is stamped (`commitMs`, `parent`) — a crash leaves the
+    * version either whole or fully replaced, never torn. */
+  private def publish(staged: String, version: Long, commitMs: Long,
+                      parent: Option[Long]): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path(version))
+    fs.delete(dst, true)
+    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), dst))
+      throw new java.io.IOException(s"could not publish $staged as $dst")
+    stamp(version, commitMs, parent)
+  }
+
+  /** Commit a staged directory (a copy-on-write rewrite written
+    * outside the store) as the version after the latest, anchored to
+    * it; returns the new version. */
+  def commitStaged(staged: String): Long = {
+    val latest = latestVersion
+    val next = latest.fold(0L)(_ + 1L)
+    publish(staged, next, System.currentTimeMillis(), latest)
+    next
   }
 
   /** The recorded commit anchor of `version` (None: pre-parent
     * manifests, mtime-fallback stores, or the store's first commit). */
-  override def parentOf(version: Long): Option[Long] = {
-    val m = new org.apache.hadoop.fs.Path(
-      s"$dir/v=$version/${StateStore.CommitManifest}")
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      text.linesIterator.find(_.startsWith("parent="))
-        .flatMap(_.stripPrefix("parent=").trim.toLongOption)
-    }
+  override def parentOf(version: Long): Option[Long] =
+    manifestText(version).flatMap(_.linesIterator
+      .find(_.startsWith("parent="))
+      .flatMap(_.stripPrefix("parent=").trim.toLongOption))
+
+  def rollbackTo(version: Long): Long = {
+    val df = read(version).getOrElse(throw new IllegalArgumentException(
+      s"rollback: no snapshot v=$version (have ${versions.mkString(",")})"))
+    writeNext(df)
   }
 
   /** Drop versions older than the newest `keep` (bounded storage; the
@@ -178,15 +261,10 @@ final class StateStore(spark: SparkSession, dir: String)
     * leave a table with history markers but no current content. */
   def expire(keep: Int, pinned: Set[Long]): Unit = {
     require(keep >= 1, s"expire: keep must be >= 1, got $keep")
-    latestVersion.foreach { latest =>
-      fs.listStatus(base).toSeq.map(_.getPath)
-        .filter { p =>
-          p.getName.startsWith("v=") && {
-            val v = p.getName.stripPrefix("v=").toLong
-            v <= latest - keep && !pinned.contains(v)
-          }
-        }
-        .foreach(p => fs.delete(p, true))
+    val vs = versions
+    vs.lastOption.foreach { latest =>
+      vs.filter(v => v <= latest - keep && !pinned.contains(v))
+        .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(path(v)), true))
     }
   }
 
@@ -198,7 +276,7 @@ final class StateStore(spark: SparkSession, dir: String)
     * directory only. No-op on an empty store. */
   def compact(targetFiles: Int = 1): Unit =
     latestVersion.foreach { v =>
-      write(spark.read.parquet(s"$dir/v=$v").coalesce(targetFiles), v + 1)
+      write(spark.read.parquet(path(v)).coalesce(targetFiles), v + 1)
     }
 
   /** Compliance delete ("right to be forgotten"): remove every row
@@ -207,39 +285,28 @@ final class StateStore(spark: SparkSession, dir: String)
     * (a deleted subject must not be readable via `VERSION AS OF`
     * either; the Delta/Iceberg equivalent is rewriting history files
     * before a VACUUM). Version numbering and each snapshot's stamped
-    * commit time are PRESERVED (the purge rewrites data, not history
-    * shape), so `readAsOf` resolution is unchanged.
+    * commit time and parent are PRESERVED (the purge rewrites data,
+    * not history shape), so `readAsOf` resolution is unchanged.
     *
-    * Each version rewrites through a sibling temp directory + rename —
-    * a crash mid-purge leaves that version either whole or fully
-    * rewritten, never torn. Returns the number of rows removed across
+    * Each version rewrites through a sibling staging directory and
+    * [[publish]]. Returns the number of rows removed across
     * versions. */
   def purgeKeys(keyCol: String, keys: Seq[Any]): Long = {
     import org.apache.spark.sql.functions.col
     var removed = 0L
     versions.foreach { v =>
-      val path = s"$dir/v=$v"
-      val before = spark.read.parquet(path)
+      val before = spark.read.parquet(path(v))
       val keep = before.filter(!col(keyCol).isin(keys: _*))
       val n = before.count() - keep.count()
       if (n > 0) {
-        val stamp = commitTimeMs(v)
-        val parent = parentOf(v) // survives the re-stamp below
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/.purge_v=$v")
-        fs.delete(tmp, true)
-        keep.write.mode("overwrite").parquet(tmp.toString)
-        val dst = new org.apache.hadoop.fs.Path(path)
-        fs.delete(dst, true)
-        fs.rename(tmp, dst)
-        // restore the ORIGINAL commit stamp: the purge is not a commit
-        stamp.foreach { ms =>
-          val m = new org.apache.hadoop.fs.Path(dst, StateStore.CommitManifest)
-          val out = fs.create(m, true)
-          try out.write((String.valueOf(ms) +
-            parent.fold("")(p => s"\nparent=$p"))
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        }
+        // the purge is not a commit: the ORIGINAL stamp and parent
+        // survive the re-publish
+        val stampMs = commitTimeMs(v).getOrElse(System.currentTimeMillis())
+        val parent = parentOf(v)
+        val tmp = s"$dir/.purge_${StateStore.dirName(v)}"
+        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        keep.write.mode("overwrite").parquet(tmp)
+        publish(tmp, v, stampMs, parent)
         removed += n
       }
     }
@@ -248,22 +315,61 @@ final class StateStore(spark: SparkSession, dir: String)
 }
 
 object StateStore {
-  /** Per-version commit-timestamp manifest (epoch ms, plain text),
-    * written inside `v=<n>/` so it expires and renames with its
-    * snapshot. Shared with [[graft.catalog.GraftLakeCatalog]]'s
-    * `TIMESTAMP AS OF` resolution, so SQL text and the Scala
-    * [[StateStore#readAsOf]] consult the same clock. */
-  val CommitManifest = "_graft_commit"
+  /** Per-version commit manifest (plain text: epoch ms, then an
+    * optional `parent=<n>` line), written inside `v=<n>/` so it
+    * expires and renames with its snapshot. */
+  private val CommitManifest = "_graft_commit"
 
-  /** THE commit clock, in one place: a stamped manifest's millis win;
-    * directory mtime is only the legacy fallback (pre-manifest
-    * stores). Both the Scala path ([[StateStore#commitTimeMs]]) and
-    * the SQL catalog path (`GraftLakeCatalog.commitMsOf`) MUST
-    * resolve through this helper — a second hand-rolled copy of the
-    * parse/fallback policy is how `TIMESTAMP AS OF` via SQL silently
-    * diverges from `readAsOf`. */
-  def resolveCommitMs(manifestText: Option[String], dirMtimeMs: => Long): Long =
-    // FIRST line only: line 2+ carries the parent pointer
-    manifestText.flatMap(_.trim.linesIterator.nextOption())
-      .flatMap(_.trim.toLongOption).getOrElse(dirMtimeMs)
+  private def dirName(version: Long): String = s"v=$version"
+
+  private def versionOf(name: String): Option[Long] =
+    if (name.startsWith("v=")) name.stripPrefix("v=").toLongOption else None
+
+  /** Committed versions of the flat store at local directory `dir`,
+    * ascending; empty for a plain or manifest-versioned table. The
+    * presence of any `v=<n>` subdirectory is what flips a catalog
+    * table into snapshot semantics. */
+  def versionsOf(dir: java.nio.file.Path): Seq[Long] =
+    if (!java.nio.file.Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = java.nio.file.Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+          .flatMap(p => versionOf(p.getFileName.toString)).toSeq.sorted
+      } finally s.close()
+    }
+
+  /** The directory of snapshot `version` under `dir`. */
+  def versionDir(dir: java.nio.file.Path, version: Long): java.nio.file.Path =
+    dir.resolve(dirName(version))
+
+  /** The directory holding a catalog table's CURRENT rows: the latest
+    * `v=<n>` of a flat store, the table directory itself otherwise —
+    * the default read resolves the latest snapshot, never the union of
+    * all versions a recursive listing would produce. */
+  def currentDir(dir: java.nio.file.Path): java.nio.file.Path =
+    versionsOf(dir).lastOption.fold(dir)(versionDir(dir, _))
+
+  /** Run `stream` into the store at `dir`, one version per
+    * micro-batch: `step(prev, batch)` folds the batch onto the
+    * PRE-batch snapshot (the newest version below `batchId`, not the
+    * latest) and the result commits at `batchId`. A replayed batchId
+    * whose own version already committed so rebuilds it from the same
+    * input instead of double-merging — the RecoverySpec exactly-once
+    * contract the monitors share. */
+  def foldStream(stream: DataFrame, dir: String, checkpointDir: String,
+                 trigger: Trigger)(
+      step: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery = {
+    val store = new StateStore(stream.sparkSession, dir)
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val prev = store.versions.filter(_ < batchId).lastOption
+          .flatMap(v => store.read(v))
+        store.write(step(prev, batch), batchId)
+      }
+      .start()
+  }
 }

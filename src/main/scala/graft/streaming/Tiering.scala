@@ -38,12 +38,4 @@ object Tiering {
     * `revenue-analytics.sql:22`). */
   def readLake(spark: SparkSession, dir: String): Option[DataFrame] =
     new StateStore(spark, dir).read()
-
-  /** Time travel over the tiered history: `VERSION AS OF`. */
-  def readLakeVersion(spark: SparkSession, dir: String, version: Long): Option[DataFrame] =
-    new StateStore(spark, dir).read(version)
-
-  /** Time travel over the tiered history: `TIMESTAMP AS OF`. */
-  def readLakeAsOf(spark: SparkSession, dir: String, timestampMs: Long): Option[DataFrame] =
-    new StateStore(spark, dir).readAsOf(timestampMs)
 }

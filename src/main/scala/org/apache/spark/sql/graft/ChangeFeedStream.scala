@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions.{col, lit, struct}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-/** Streaming CHANGE FEED over a versioned (`v=<n>` snapshot) lake
-  * table — the "downstream job tails the tiered table" surface
-  * (reference `deploy:318-358`) for the snapshot layout that a
-  * single-directory file stream cannot see:
+/** Streaming CHANGE FEED over a versioned lake table (either
+  * [[graft.streaming.SnapshotReads]] layout) — the "downstream job
+  * tails the tiered table" surface (reference `deploy:318-358`) for
+  * the snapshot layouts that a single-directory file stream cannot
+  * see:
   *
   *  - the OFFSET is the committed snapshot version (a pure fact of the
   *    directory layout), checkpointed by Spark's own offset log;
@@ -79,23 +80,19 @@ private[graft] object ChangeFeedSource {
     store.rowSchema
   }
 
-  /** The snapshot reader for `path`: a manifest log for versioned
-    * PARTITIONED tables (optionally a BRANCH sub-log via the `branch`
-    * option — the WAP audit-as-a-stream surface), the flat `v=<n>`
-    * store otherwise — the feed logic above is layout-agnostic through
-    * [[graft.streaming.SnapshotReads]]. */
+  /** The snapshot reader for `path`, as [[graft.streaming.SnapshotReads.of]]
+    * resolves it (the `branch` option selects a manifest BRANCH
+    * sub-log — the WAP audit-as-a-stream surface) — the feed logic
+    * above is layout-agnostic. */
   def storeFor(sqlContext: SQLContext,
                parameters: Map[String, String]): graft.streaming.SnapshotReads = {
     val path = parameters.getOrElse("path", throw new IllegalArgumentException(
       "graft-changefeed: 'path' option is required"))
     val branch = parameters.get("branch").map(_.trim).filter(_.nonEmpty)
-    if (graft.catalog.ManifestSnapshotReads.isManifestVersioned(path))
-      graft.catalog.ManifestSnapshotReads(sqlContext.sparkSession, path, branch)
-    else {
-      require(branch.isEmpty,
-        "graft-changefeed: 'branch' applies to manifest-versioned tables only")
-      new graft.streaming.StateStore(sqlContext.sparkSession, path)
-    }
+    graft.streaming.SnapshotReads.of(sqlContext.sparkSession, path, branch)
+      .getOrElse(throw new IllegalArgumentException(
+        s"graft-changefeed: '$path' has no committed snapshots to " +
+          "stream"))
   }
 
   def keysOf(parameters: Map[String, String]): Seq[String] =

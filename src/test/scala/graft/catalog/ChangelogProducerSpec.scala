@@ -237,4 +237,36 @@ class ChangelogProducerSpec extends SparkSpec {
         "supported")
     }
   }
+
+  test("a no-op version over a tag-pinned retention hole is not provably empty: lazy production raises the computed feed's IllegalStateException and publishes nothing") {
+    withLake("f") { (cat, lake) =>
+      mkTable(cat, "prod", producer = true)
+      mkTable(cat, "plain", producer = false)
+      Seq("prod", "plain").foreach { t =>
+        Seq((1L, "a", 10L)).toDF("k", "v", "x")
+          .write.mode("append").insertInto(s"$cat.m.$t")          // v1
+        Seq((2L, "b", 20L)).toDF("k", "v", "x")
+          .write.mode("append").insertInto(s"$cat.m.$t")          // v2
+        spark.sql(s"CALL $cat.system.tag('m.$t', 'a', 1)")        // v3 no-op over v2
+        spark.sql(s"CALL $cat.system.tag('m.$t', 'b', 3)")        // v4 pins v3
+        Seq((3L, "c", 30L)).toDF("k", "v", "x")
+          .write.mode("append").insertInto(s"$cat.m.$t")          // v5
+        // keep=1 retains data v5, the expire itself and the pinned v1
+        // and v3: v3's recorded parent v2 is gone while v1 survives
+        spark.sql(s"CALL $cat.system.expire_snapshots('m.$t', 1)") // v6
+        assert(ManifestSnapshotReads(spark,
+          lake.resolve(s"m/$t.parquet").toString).versions ==
+          Seq(1L, 3L, 5L, 6L))
+      }
+      // the computed feed refuses to diff v3 against the wrong parent
+      intercept[IllegalStateException](feed(cat, "plain", 1L, 3L))
+      // v3's changelog not yet produced: the first read produces it
+      // lazily, and must fail the same way
+      val dir = lake.resolve("m/prod.parquet")
+      PartitionedWrite.deleteRecursive(ChangelogProducer.dirFor(dir, 3L))
+      intercept[IllegalStateException](feed(cat, "prod", 1L, 3L))
+      assert(!Files.exists(ChangelogProducer.dirFor(dir, 3L)),
+        "no marker-only dir may be published for an unprovable version")
+    }
+  }
 }

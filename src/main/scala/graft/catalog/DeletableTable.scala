@@ -5,7 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform, Expression => V2Expression, Literal => V2Literal}
@@ -34,9 +34,9 @@ import graft.streaming.StateStore
   *    rename — a reader never observes a half-deleted table, and a
   *    crash leaves either the old or the new directory, not a blend.
   *  - **versioned tables** (the `v=<n>` StateStore snapshot layout)
-  *    commit the kept rows as snapshot `latest+1` through the SAME
-  *    [[graft.streaming.StateStore]] commit path the streaming sinks
-  *    use (manifest stamp included) — DELETE is one more commit in the
+  *    stage the kept rows the same way and publish them as snapshot
+  *    `latest+1` by [[graft.streaming.StateStore.commitStaged]]
+  *    (manifest stamp included) — DELETE is one more commit in the
   *    table's history, so `VERSION AS OF` still reads the pre-delete
   *    snapshots exactly. (The deliberate every-snapshot purge lives in
   *    [[graft.streaming.StateStore.purgeKeys]] — compliance deletes
@@ -239,7 +239,7 @@ private[catalog] final class DeletableTable(
         // removes nothing — exact no-op, zero I/O, no new snapshot
         ()
       case Some((candidates, carried)) =>
-        val tmp = stagingDir()
+        val tmp = DeletableTable.stagingDir(tableDir)
         DeletableTable.deleteRecursive(tmp)
         Files.createDirectories(tmp)
         reader.parquet(candidates.map(_.toString): _*)
@@ -253,19 +253,11 @@ private[catalog] final class DeletableTable(
         FileSkipping.refreshAfterRewrite(spark, tableDir, newDataDir,
           carried.map(_.getFileName.toString).toSet)
       case None =>
-        val kept = reader.parquet(dataDir.toString)
-          .filter(not(coalesce(cond, lit(false))))
-        if (StateStore.versionsOf(tableDir).nonEmpty) {
-          // snapshot table: DELETE = one more commit; history intact
-          new StateStore(spark, tableDir.toString).writeNext(kept)
-          spark.catalog.clearCache()
-        } else {
-          // plain table: copy-on-write rewrite + sidecar carry + swap
-          val tmp = stagingDir()
-          DeletableTable.deleteRecursive(tmp)
-          kept.write.mode("overwrite").parquet(tmp.toString)
-          publishRewrite(tmp)
-        }
+        // snapshot table: DELETE = one more commit, history intact;
+        // plain table: copy-on-write rewrite + sidecar carry + swap
+        DeletableTable.rewriteRows(tableDir, reader.parquet(dataDir.toString)
+          .filter(not(coalesce(cond, lit(false)))))
+        ()
     }
   }
 
@@ -378,7 +370,7 @@ private[catalog] final class DeletableTable(
   private def stagedRewriteWrite(winfo: LogicalWriteInfo,
                                  overwriteCond: Option[Column] = None,
                                  carry: () => Seq[Path] = () => Nil): Write = {
-    val tmp = stagingDir()
+    val tmp = DeletableTable.stagingDir(tableDir)
     DeletableTable.deleteRecursive(tmp)
     Files.createDirectories(tmp)
     val stagingSchema = StructType(winfo.schema().fields.map(f =>
@@ -441,11 +433,11 @@ private[catalog] final class DeletableTable(
     }
   }
 
-  private def stagingDir(): Path =
-    tableDir.resolveSibling(tableDir.getFileName.toString + ".__rewrite")
-
+  /** Publish `tmp`; returns the directory now holding the current
+    * rows. */
   private def publishRewrite(tmp: Path): Path =
     DeletableTable.publishStagedRewrite(tableDir, tmp)
+      .fold(tableDir)(StateStore.versionDir(tableDir, _))
 
   private def physName(logical: String): String =
     renames.getOrElse(logical,
@@ -462,12 +454,13 @@ private[catalog] object DeletableTable {
     * every store commit, so `TIMESTAMP AS OF` and the change feed's
     * retention-hole detection cover DML-published versions too);
     * plain tables swap via rename with the schema/mapping sidecars
-    * carried over. Shared by the DML writes and the plain-table
-    * `compact` procedure. */
-  private[catalog] def publishStagedRewrite(tableDir: Path, tmp: Path): Path = {
-    val newDataDir = if (StateStore.versionsOf(tableDir).nonEmpty) {
+    * carried over. Returns the new snapshot version, None for a plain
+    * table. Shared by the DML writes and the rewrite procedures. */
+  private[catalog] def publishStagedRewrite(tableDir: Path,
+                                            tmp: Path): Option[Long] = {
+    val version = if (StateStore.versionsOf(tableDir).nonEmpty) {
       val store = new StateStore(SparkSession.active, tableDir.toString)
-      StateStore.versionDir(tableDir, store.commitStaged(tmp.toString))
+      Some(store.commitStaged(tmp.toString))
     } else {
       val old = tableDir.resolveSibling(tableDir.getFileName.toString + ".__old")
       if (Files.isDirectory(tableDir)) {
@@ -491,12 +484,30 @@ private[catalog] object DeletableTable {
       Files.move(tableDir, old)
       Files.move(tmp, tableDir)
       deleteRecursive(old)
-      tableDir
+      None
     }
     // the inner ParquetTable caches its file listing; drop any cached
     // plans so the next read sees the rewrite
     SparkSession.active.catalog.clearCache()
-    newDataDir
+    version
+  }
+
+  /** The sibling directory an unpartitioned table's rewrite stages
+    * into. */
+  private[catalog] def stagingDir(tableDir: Path): Path =
+    tableDir.resolveSibling(tableDir.getFileName.toString + ".__rewrite")
+
+  /** Replace an unpartitioned table's current rows with `rows`: written
+    * to the staging dir, then [[publishStagedRewrite]] — snapshot
+    * `latest+1` of a flat store (returned, published by an atomic
+    * rename, so readers never list a half-written version), an in-place
+    * swap of a plain table (None). */
+  private[catalog] def rewriteRows(tableDir: Path,
+                                   rows: DataFrame): Option[Long] = {
+    val tmp = stagingDir(tableDir)
+    deleteRecursive(tmp)
+    rows.write.mode("overwrite").parquet(tmp.toString)
+    publishStagedRewrite(tableDir, tmp)
   }
 
   private def withSidecars(dir: Path)(f: Path => Unit): Unit = {

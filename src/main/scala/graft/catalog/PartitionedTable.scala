@@ -5,7 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, SortOrder, Transform}
@@ -41,7 +41,12 @@ private[catalog] object PartitionSpec {
 
   sealed trait Field { def col: String }
   final case class Identity(col: String) extends Field
-  final case class Bucket(col: String, n: Int) extends Field
+  final case class Bucket(col: String, n: Int) extends Field {
+    /** The bucket id of each row, `pmod(hash(physical), n)`: the value
+      * the writer lands in `_gbucket`, given the column's physical
+      * (file) name. */
+    def idOf(physical: Column): Column = pmod(hash(physical), lit(n))
+  }
 
   def write(tableDir: Path, fields: Seq[Field]): Unit = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -780,7 +785,7 @@ private[catalog] final class PartitionedLakeTable(
       PartitionedWrite.deleteRecursive(tmp)
       val kept = df.filter(not(coalesce(cond, lit(false))))
       val staged = bucketOpt.fold(kept)(b =>
-        kept.withColumn(PartitionSpec.BucketDir, pmod(hash(col(b.col)), lit(b.n))))
+        kept.withColumn(PartitionSpec.BucketDir, b.idOf(col(b.col))))
       // rewrites keep the declared write clustering ([[WriteOrder]])
       val order = WriteOrder.read(tableDir)
         .map(physName).filter(staged.columns.contains)
@@ -886,8 +891,7 @@ private[catalog] final class PartitionedLakeTable(
       case Some((cands, _)) if cands.isEmpty =>
         () // every partition provably excludes the condition: no-op
       case Some((cands, _)) =>
-        val tmp = tableDir.resolveSibling(
-          tableDir.getFileName.toString + ".__rewrite")
+        val tmp = DeletableTable.stagingDir(tableDir)
         // candidate subtrees only; basePath keeps partition inference,
         // the hidden bucket column re-derives at write
         stage(spark.read.option("basePath", tableDir.toString)
@@ -899,8 +903,7 @@ private[catalog] final class PartitionedLakeTable(
         PartitionedWrite.mergeInto(tmp, tableDir)
         spark.catalog.clearCache()
       case None =>
-        val tmp = tableDir.resolveSibling(
-          tableDir.getFileName.toString + ".__rewrite")
+        val tmp = DeletableTable.stagingDir(tableDir)
         // indexSchema speaks the files' PHYSICAL names (the condition
         // was translated to match); the hidden bucket column re-derives
         // inside stage()

@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.StructType
   * join, and a wide-range replay opens one file set per version
   * instead of re-diffing every pair of snapshots.
   *
-  * Production is EAGER on the hooked write paths (the batch V2 writer
-  * and the delta DML writer call [[produceMissing]] after their
-  * commit) and LAZY otherwise: the first reader of a version with no
+  * Production is EAGER on the hooked write paths (the one staged-write
+  * commit, [[PartitionedWrite.commitStaged]], calls [[produceMissing]]
+  * after INSERT / overwrite and PRIMARY-KEY delta DML commits) and
+  * LAZY otherwise: the first reader of a version with no
   * persisted file computes the diff once and persists it atomically —
   * so the content law (file-served feed ≡ computed feed) holds by
   * construction: BOTH forms derive from the same immutable snapshots

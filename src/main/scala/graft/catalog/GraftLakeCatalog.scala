@@ -263,11 +263,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
             .getOrElse(throw new IllegalStateException(
               s"$catalogName: ${ident.toString} has a snapshot log but no " +
                 "manifests — corrupt table dir (partial copy/restore?)")))
-      return new PartitionedLakeTable(ident.toString, p,
-        declaredSchema(p).getOrElse(throw new IllegalStateException(
-          s"$catalogName: ${ident.toString} carries a partition sidecar " +
-            s"but no declared schema ($SchemaSidecar) — corrupt table dir")),
-        pspec, snap, writable = true, renames = readEvolution(p).renames)
+      return partitionedTable(ident, p, pspec, snap, writable = true)
     }
     val evo = readEvolution(p)
     val schema = declaredSchema(p)
@@ -283,6 +279,17 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
         with org.apache.spark.sql.connector.catalog.SupportsWrite],
       p, data, evo.renames, physSchema)
   }
+
+  /** The [[PartitionedLakeTable]] at `p` reading `snap` (None = plain
+    * layout); `writable = false` is a time-travel view. */
+  private def partitionedTable(ident: Identifier, p: Path,
+      spec: Seq[PartitionSpec.Field], snap: Option[Snapshots.Snapshot],
+      writable: Boolean): PartitionedLakeTable =
+    new PartitionedLakeTable(ident.toString, p,
+      declaredSchema(p).getOrElse(throw new IllegalStateException(
+        s"$catalogName: ${ident.toString} carries a partition sidecar " +
+          s"but no declared schema ($SchemaSidecar) — corrupt table dir")),
+      spec, snap, writable, readEvolution(p).renames)
 
   /** SQL-text time travel, version form: `SELECT … FROM cat.db.t
     * VERSION AS OF <n>` resolves here (Spark's TimeTravelSpec calls
@@ -301,12 +308,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
           "create with TBLPROPERTIES ('versioned'='true') for snapshot " +
           "time travel")
       def snapTable(snap: Snapshots.Snapshot) =
-        new PartitionedLakeTable(ident.toString, p,
-          declaredSchema(p).getOrElse(throw new IllegalStateException(
-            s"$catalogName: ${ident.toString} carries a partition sidecar " +
-              s"but no declared schema ($SchemaSidecar) — corrupt table dir")),
-          pspec, Some(snap), writable = false,
-          renames = readEvolution(p).renames)
+        partitionedTable(ident, p, pspec, Some(snap), writable = false)
       // non-numeric versions resolve as TAG first (chain-carried pins,
       // legacy sidecar included), then BRANCH head — `VERSION AS OF
       // 'audit'` is the audit query of the WAP flow without touching
@@ -374,12 +376,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
           s"$catalogName: ${ident.toString} has no snapshot at or before " +
             s"timestamp ${ts}ms (earliest commit: " +
             s"${snaps.headOption.fold(-1L)(_.commitMs)}ms)"))
-      return new PartitionedLakeTable(ident.toString, p,
-        declaredSchema(p).getOrElse(throw new IllegalStateException(
-          s"$catalogName: ${ident.toString} carries a partition sidecar " +
-            s"but no declared schema ($SchemaSidecar) — corrupt table dir")),
-        pspec, Some(snap), writable = false,
-        renames = readEvolution(p).renames)
+      return partitionedTable(ident, p, pspec, Some(snap), writable = false)
     }
     val store = new StateStore(SparkSession.active, p.toString)
     val vs = store.versions

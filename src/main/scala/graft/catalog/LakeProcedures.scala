@@ -423,7 +423,7 @@ private[catalog] object LakeProcedures {
           keySchema.fieldNames.toSeq, delField.map(_.dataType))
         // re-scope by the key's own partition dirs (same expressions as
         // the writers) and persist; each segment hive-escaped exactly
-        // like the writers (PkDeltaWriterFactory / pkTargetDir): a raw
+        // like the writers ([[PartitionSpec.dirOf]]): a raw
         // concat would diverge for key values containing '%', '/', '=',
         // … and the merged file's scope would prune away on point
         // lookups — resurrecting deleted keys
@@ -654,13 +654,8 @@ private[catalog] object LakeProcedures {
         Files.getLastModifiedTime(p).toMillis <= cutoff)
       val freed = stale.map(sizeOf).sum
       stale.foreach { p =>
-        if (Files.isRegularFile(p)) {
-          Files.deleteIfExists(p)
-          // local-FS checksum companion
-          Files.deleteIfExists(p.resolveSibling(
-            "." + p.getFileName.toString + ".crc"))
-          ()
-        } else {
+        if (Files.isRegularFile(p)) PartitionedWrite.deleteWithCrc(p)
+        else {
           val s = Files.walk(p)
           try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
           finally s.close()

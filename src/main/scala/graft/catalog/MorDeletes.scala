@@ -634,7 +634,7 @@ private[catalog] final class MorScanRewrite extends Rule[LogicalPlan]
     * replace: a DELETE-CARRYING snapshot read (the anti-join swap), a
     * read that asked for the row-coordinate metadata columns (its
     * placeholder scan is a [[MorDeltaScan]]), or a delta-based
-    * row-level operation's read ([[MorDeltaOperation]] — the relation
+    * row-level operation's read ([[DeltaOperation]] — the relation
     * then carries Spark's `RowLevelOperationTable` wrapper; group-
     * based row-level scans deliberately do NOT match, their group
     * semantics replay whole partitions through their own scan). */

@@ -1,122 +1,72 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** MERGE-ON-READ `UPDATE` / `MERGE INTO` / non-pushable `DELETE` —
-  * the write-side completion of [[MorDeletes]], lifting the
-  * compact-first gate those commands carried while delete files were
-  * pending.
+/** MERGE-ON-READ `UPDATE` / `MERGE INTO` / non-pushable `DELETE`
+  * (`graft.write.mode='merge-on-read'` on a versioned table) — the
+  * POSITION-delete kind of the shared delta write ([[DeltaOperation]]),
+  * the write-side completion of [[MorDeletes]] (reference analog: the
+  * PK-table upsert pipeline is an update-heavy workload by
+  * construction, `flink-cdc/sql/tickets-cdc.sql:68-77`).
   *
-  * This is Spark's own DELTA-BASED row-level plan
-  * ([[org.apache.spark.sql.connector.write.SupportsDelta]] — the
-  * integration surface Iceberg v2 uses for its merge-on-read DML;
-  * reference analog: the PK-table upsert pipeline is an update-heavy
-  * workload by construction, `flink-cdc/sql/tickets-cdc.sql:68-77`):
-  * instead of the group-based copy-on-write rewrite (replace whole
-  * partitions), the analyzer plans per-ROW operations keyed by the
-  * table's row identity — which for this engine is the position-
-  * delete coordinate pair `(_gmor_file, _gmor_pos)` the table exposes
-  * as metadata columns. An UPDATE/MERGE then commits, in ONE
-  * optimistic snapshot commit:
+  * Row id: the position-delete coordinate `(_gmor_file, _gmor_pos)` —
+  * the file's table-relative path and the row's parquet index, which
+  * the table exposes as metadata columns
+  * ([[PartitionedLakeTable.metadataColumns]]) and the [[MorScanRewrite]]
+  * swap materializes with pending deletes applied (so updating a row a
+  * previous MoR DELETE removed can never resurrect it). Matched rows
+  * become the same `_graft_deletes/` coordinate files a MoR DELETE
+  * writes, scoped by the coordinate's parent directory.
   *
-  *   - POSITION-DELETE FILES for every matched row (the same
-  *     `_graft_deletes/` coordinate files a MoR DELETE writes), and
-  *   - APPENDED data files holding the rewritten / newly-inserted
-  *     rows (through the ordinary partitioned staging writer, so
-  *     partition-value-changing updates migrate rows to their new
-  *     `col=value` homes automatically).
-  *
-  * Data files are never rewritten: a MERGE matching 100 rows of a
-  * 1 GB file persists 100 coordinates plus 100 fresh rows. The scan
-  * side rides [[MorScanRewrite]] — the analyzer asks the relation for
-  * the coordinate metadata columns, the rule swaps the V2 scan for
-  * the per-shape parquet read with `(file, pos)` materialized and
-  * pending deletes applied (so updating a row a previous MoR DELETE
-  * removed can never resurrect it). `representUpdateAsDeleteAndInsert`
-  * splits each update into its delete and insert halves (Iceberg's
-  * position-delta layout), which is what lets inserts re-cluster by
-  * partition while deletes cluster by target file.
-  *
-  * Concurrency: the commit validates under
-  * [[Snapshots.validateRewrite]] over the files its coordinates
-  * address — a concurrent rewrite of one of them (compact, CoW DML)
-  * or any concurrently-committed delete file conflicts loudly and the
-  * command re-runs against the new snapshot (Iceberg's snapshot-
-  * isolation posture for row-delta commits). Appends to other files
-  * merge cleanly. */
-private[catalog] final class MorDeltaOperation(
-    tableName: String,
-    tableDir: Path,
-    logicalSchema: StructType,
-    spec: Seq[PartitionSpec.Field],
-    baseFiles: Seq[String],
-    renames: Map[String, String],
-    cmd: RowLevelOperation.Command)
-    extends RowLevelOperation with SupportsDelta {
+  * Validation: [[Snapshots.validateRewrite]] over the files the
+  * coordinates address — a concurrent rewrite of one of them (compact,
+  * CoW DML) or any concurrently-committed delete file conflicts loudly
+  * and the command re-runs against the new snapshot (Iceberg's
+  * snapshot-isolation posture for row-delta commits). Appends to other
+  * files merge cleanly. */
+private[catalog] final class MorDelta(spec: Seq[PartitionSpec.Field])
+    extends DeleteKind {
+  private val coords = Seq(MorDeletes.FileKeyCol, MorDeletes.PosKeyCol)
 
-  override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"$tableName(mor-delta:$cmd)"
+  val label = "mor-delta"
+  def rowId: Array[NamedReference] = coords.map(Expressions.column).toArray
+  def readSchema(logical: StructType): StructType =
+    StructType(logical.fields ++ MorDml.coordFields)
+  def pendingDeletes(baseFiles: Seq[String]): Int =
+    Snapshots.deleteFiles(baseFiles).size
 
-  /** Row identity = the position-delete coordinate: the file's
-    * table-relative path + the row's parquet index. Exposed by
-    * [[PartitionedLakeTable.metadataColumns]], materialized by the
-    * [[MorScanRewrite]] swap. */
-  override def rowId(): Array[NamedReference] = Array(
-    Expressions.column(MorDeletes.FileKeyCol),
-    Expressions.column(MorDeletes.PosKeyCol))
+  /** Cluster on (identity partition cols, target file): insert rows
+    * (null file) converge per partition — one file per partition per
+    * write, the Iceberg hash-distribution default — while delete rows
+    * (null partition cols under delete+insert splitting) converge per
+    * TARGET FILE, so one file's coordinates land in one delete file.
+    * A row-free plan (DELETE command / delete-only MERGE) clusters by
+    * file alone (every row has one); unpartitioned row-carrying plans
+    * skip the shuffle — clustering by file alone would serialize every
+    * inserted row (null file) through one task. */
+  def clustering(rowCols: Set[String]): Seq[String] = {
+    val dataCols = rowCols -- coords
+    val avail = spec.collect { case PartitionSpec.Identity(c) if dataCols(c) => c }
+    if (dataCols.isEmpty) Seq(MorDeletes.FileKeyCol)
+    else if (avail.nonEmpty) avail :+ MorDeletes.FileKeyCol
+    else Seq.empty
+  }
+  /** Deletes land sorted by (file, pos). */
+  def sortTail(rowCols: Set[String]): Seq[String] = coords
 
-  /** Updates split into (delete coordinates, inserted rows): the
-    * insert half re-clusters by its (possibly CHANGED) partition
-    * values while the delete half clusters by target file — exactly
-    * the two write paths below. */
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-
-  /** The row-level read: claims nothing (filters come back as
-    * residuals Spark re-applies; the [[MorScanRewrite]] swap re-pushes
-    * them beneath its coordinate read, where V1 partition pruning and
-    * parquet row-group skipping serve them) and builds a metadata-
-    * complete, execution-guarded scan the rule MUST replace — a
-    * session without the rule fails loudly, it can never feed stale
-    * rows to a row-level write. */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-        with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-      private var required: Option[StructType] = None
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = Some(requiredSchema)
-      override def pushFilters(
-          fs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
-          Seq[org.apache.spark.sql.catalyst.expressions.Expression] = fs
-      override def pushedFilters: Array[Predicate] = Array.empty
-      override def build(): Scan = new MorDeltaScan(tableName,
-        required.getOrElse(StructType(logicalSchema.fields ++
-          MorDml.coordFields)),
-        Snapshots.deleteFiles(baseFiles).size)
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new MorDeltaWrite(
-        tableName, tableDir, spec, info.schema(), renames, baseFiles,
-        cmd match {
-          case RowLevelOperation.Command.UPDATE => "update"
-          case RowLevelOperation.Command.MERGE => "merge"
-          case _ => "delete"
-        })
-    }
+  val stagingTags = ("rowdelta", "rowdeltadel")
+  val dirName = Snapshots.DeleteDirName
+  val filePrefix = "delete"
+  def fileSchema: StructType = MorDeletes.DeleteSchema
+  def router(fileSchema: StructType, timeZoneId: String): DeleteRouter =
+    MorDml.CoordRouter
+  def validate(op: String, referenced: Seq[String], baseFiles: Seq[String],
+               wroteDeletes: Boolean): Seq[String] => Unit =
+    Snapshots.validateRewrite(op, referenced, baseFiles)
+  val producesChangelog = false
 }
 
 private[catalog] object MorDml {
@@ -131,6 +81,42 @@ private[catalog] object MorDml {
   def parentDirOf(rel: String): String = {
     val i = rel.lastIndexOf('/')
     if (i < 0) "" else rel.substring(0, i)
+  }
+
+  /** A delete's target dir is its coordinate's parent directory (the
+    * layout [[MorDeletes.targetDirOf]] prunes statically); it writes
+    * the `(file, pos)` pair. */
+  object CoordRouter extends DeleteRouter {
+    def newTask(): DeleteRouting = new DeleteRouting {
+      private val files = scala.collection.mutable.HashSet.empty[String]
+      // rowId projection field order: resolved from the projecting
+      // row's own schema on first use (declared (file, pos), but the
+      // schema is authoritative)
+      private var fileIdx = 0
+      private var posIdx = 1
+      private var idxResolved = false
+      private val reuse =
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+
+      def route(id: InternalRow): (String, InternalRow) = {
+        if (!idxResolved) {
+          id match {
+            case p: org.apache.spark.sql.catalyst.ProjectingInternalRow =>
+              fileIdx = p.schema.fieldIndex(MorDeletes.FileKeyCol)
+              posIdx = p.schema.fieldIndex(MorDeletes.PosKeyCol)
+            case _ => ()
+          }
+          idxResolved = true
+        }
+        val file = id.getUTF8String(fileIdx)
+        val rel = file.toString
+        files += rel
+        reuse.update(0, file.copy())
+        reuse.update(1, id.getLong(posIdx))
+        (parentDirOf(rel), reuse)
+      }
+      def referenced: Seq[String] = files.toSeq
+    }
   }
 }
 
@@ -149,283 +135,4 @@ private[catalog] final class MorDeltaScan(
         "read without the MorScanRewrite rule — refusing to execute. " +
         "Load the table through GraftLakeCatalog (which attaches the " +
         "rule).")
-}
-
-/** The delta write: inserted rows stage through the ordinary
-  * partitioned writer (one file per partition per task, declared
-  * write-time clustering kept), delete coordinates stream into
-  * partition-scoped delete files — ONE manifest commit publishes
-  * both. */
-private[catalog] final class MorDeltaWrite(
-    tableName: String,
-    tableDir: Path,
-    spec: Seq[PartitionSpec.Field],
-    rowSchema: StructType,
-    renames: Map[String, String],
-    baseFiles: Seq[String],
-    opName: String)
-    extends DeltaWrite with RequiresDistributionAndOrdering {
-
-  private val identityCols: Seq[String] =
-    spec.collect { case PartitionSpec.Identity(c) => c }
-  // the data columns this write actually carries: a pure position-
-  // delete plan (DELETE command / delete-only MERGE) writes no rows,
-  // and distribution/ordering references must resolve against the
-  // delta plan's output — reference only what is there
-  private val rowCols: Set[String] = rowSchema.fieldNames.toSet --
-    Set(MorDeletes.FileKeyCol, MorDeletes.PosKeyCol)
-
-  /** Cluster on (identity partition cols, target file): insert rows
-    * (null file) converge per partition — one file per partition per
-    * write, the Iceberg hash-distribution default — while delete rows
-    * (null partition cols under delete+insert splitting) converge per
-    * TARGET FILE, so one file's coordinates land in one delete file.
-    * A row-free plan clusters by file alone (every row has one);
-    * unpartitioned row-carrying plans skip the shuffle — clustering
-    * by file alone would serialize every inserted row (null file)
-    * through one task. */
-  override def requiredDistribution(): Distribution = {
-    val avail = identityCols.filter(rowCols)
-    val cluster =
-      if (rowCols.isEmpty) Seq(MorDeletes.FileKeyCol)
-      else if (avail.nonEmpty) avail :+ MorDeletes.FileKeyCol
-      else Seq.empty
-    if (cluster.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(cluster.map(c => Expressions.column(c)
-      : org.apache.spark.sql.connector.expressions.Expression).toArray)
-  }
-
-  /** Within-task sort: partition dirs then declared clustering (the
-    * insert half lands write-ordered like any other write), then the
-    * coordinate pair (the delete half lands sorted by (file, pos) —
-    * the order position-delete readers and the minor compactor
-    * like). */
-  override def requiredOrdering(): Array[SortOrder] = {
-    val declared = WriteOrder.read(tableDir).filter(rowCols)
-    val partAndOrder: Seq[org.apache.spark.sql.connector.expressions.Expression] =
-      spec.filter(f => rowCols(f.col)).map {
-        case PartitionSpec.Identity(c) => Expressions.identity(c)
-        case PartitionSpec.Bucket(c, n) => Expressions.bucket(n, c)
-      } ++ declared.map(Expressions.identity)
-    (partAndOrder ++ Seq(
-      Expressions.identity(MorDeletes.FileKeyCol),
-      Expressions.identity(MorDeletes.PosKeyCol)))
-      .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
-  }
-  override def requiredNumPartitions(): Int = 0
-
-  override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-    private val writeId = java.util.UUID.randomUUID().toString.take(8)
-    private val dataStaging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + s".__rowdelta-$writeId")
-    private val delStaging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + s".__rowdeltadel-$writeId")
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DeltaWriterFactory = {
-      PartitionedWrite.deleteRecursive(dataStaging)
-      PartitionedWrite.deleteRecursive(delStaging)
-      Files.createDirectories(dataStaging)
-      Files.createDirectories(delStaging)
-      val spark = SparkSession.active
-      val dataSchema = StructType(
-        rowSchema.fields.filterNot(f => identityCols.contains(f.name)))
-      // files speak PHYSICAL names under rename evolution
-      val fileSchema = StructType(dataSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      val dataJob = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val dataOwf = new ParquetFileFormat().prepareWrite(
-        spark, dataJob, Map.empty[String, String], fileSchema)
-      // delete files carry their own schema — prepareWrite pins the
-      // schema INTO the job conf, so the two writers need two confs
-      val delJob = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val delOwf = new ParquetFileFormat().prepareWrite(
-        spark, delJob, Map.empty[String, String], MorDeletes.DeleteSchema)
-      new MorDeltaWriterFactory(
-        new PartitionedWriterFactory(dataStaging.toString, rowSchema,
-          dataSchema, spec, spark.sessionState.conf.sessionLocalTimeZone,
-          new org.apache.spark.util.SerializableConfiguration(
-            dataJob.getConfiguration),
-          dataOwf, writeId, fileSchema),
-        delStaging.toString,
-        new org.apache.spark.util.SerializableConfiguration(
-          delJob.getConfiguration),
-        delOwf, writeId)
-    }
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val parts = messages.toSeq.collect { case m: MorDeltaCommit => m }
-      val dataRels = parts.flatMap(_.dataFiles)
-      val delRels = parts.flatMap(_.deleteFiles)
-      val referenced = parts.flatMap(_.referenced).distinct
-      if (dataRels.isEmpty && delRels.isEmpty) {
-        abortStaging(); return // matched nothing, inserted nothing
-      }
-      // publish files before the manifest references them (the
-      // ordinary publish-then-commit discipline; aborted-attempt
-      // leftovers die with the staging dirs)
-      PartitionedWrite.publishStaged(dataStaging, tableDir, dataRels)
-      val delDir = tableDir.resolve(Snapshots.DeleteDirName)
-      val movedDels = delRels.map { rel =>
-        val target = delDir.resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(delStaging.resolve(rel), target)
-        s"${Snapshots.DeleteDirName}/$rel"
-      }
-      PartitionedWrite.deleteRecursive(delStaging)
-      val spark = SparkSession.active
-      // ONE commit carrying both halves. Validation: the files our
-      // coordinates address must still be live, and no delete file
-      // may have been committed since the base (its coordinates could
-      // target rows this command rewrote) — conflict and re-run.
-      Snapshots.commitRouted(tableDir, opName,
-        cur => cur ++ movedDels ++ dataRels,
-        Snapshots.validateRewrite(opName.toUpperCase, referenced, baseFiles),
-        freshStats = Snapshots.freshStatsFor(spark, tableDir, dataRels) ++
-          MorDeletes.deleteFileRowStats(tableDir, movedDels))
-      spark.catalog.clearCache()
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      abortStaging()
-
-    private def abortStaging(): Unit = {
-      PartitionedWrite.deleteRecursive(dataStaging)
-      PartitionedWrite.deleteRecursive(delStaging)
-    }
-  }
-}
-
-/** One task's delta output: staged data files (staging-relative),
-  * staged delete files (delete-staging-relative), and the distinct
-  * coordinate-addressed files (the commit's conflict read-set). */
-private[catalog] final case class MorDeltaCommit(
-    dataFiles: Seq[String],
-    deleteFiles: Seq[String],
-    referenced: Seq[String]) extends WriterCommitMessage
-
-/** Executor-side delta writer: `insert` forwards to the ordinary
-  * partitioned data writer; `delete` streams `(file, pos)` into a
-  * parquet delete file per TARGET PARTITION DIRECTORY (derived from
-  * the coordinate's parent path — the layout
-  * [[MorDeletes.targetDirOf]] prunes statically). */
-private[catalog] final class MorDeltaWriterFactory(
-    dataFactory: PartitionedWriterFactory,
-    delStagingRoot: String,
-    delConf: org.apache.spark.util.SerializableConfiguration,
-    delOwf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    writeId: String)
-    extends DeltaWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long):
-      DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
-
-    // lazy: a pure position-delete plan (DELETE command) carries no
-    // row columns, and the partitioned data writer cannot even be
-    // CONSTRUCTED from its row-free schema — nor is it needed
-    private var innerOpt: Option[
-      org.apache.spark.sql.connector.write.DataWriter[InternalRow]] = None
-    private def inner: org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
-      if (innerOpt.isEmpty)
-        innerOpt = Some(dataFactory.createWriter(partitionId, taskId))
-      innerOpt.get
-    }
-
-    private val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      delConf.value,
-      new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graftdel", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, partitionId),
-        (taskId & Int.MaxValue).toInt))
-    private val ext = delOwf.getFileExtension(ctx)
-
-    private val delWriters =
-      scala.collection.mutable.HashMap.empty[String, OutputWriter]
-    private val delWritten =
-      scala.collection.mutable.ArrayBuffer.empty[String]
-    private val referenced = scala.collection.mutable.HashSet.empty[String]
-    private var fileSeq = 0
-    // rowId projection field order: resolved from the projecting
-    // row's own schema on first use (declared (file, pos), but the
-    // schema is authoritative)
-    private var fileIdx = 0
-    private var posIdx = 1
-    private var idxResolved = false
-    private val reuse = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(2)
-
-    private def delWriterFor(tdir: String): OutputWriter =
-      delWriters.getOrElseUpdate(tdir, {
-        fileSeq += 1
-        val seg = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(MorDeletes.TargetDirCol, tdir)
-        val rel =
-          f"$seg/delete-$writeId-$partitionId%05d-$taskId-$fileSeq$ext"
-        delWritten += rel
-        val target = Paths.get(delStagingRoot).resolve(rel)
-        Files.createDirectories(target.getParent)
-        delOwf.newInstance(target.toString, MorDeletes.DeleteSchema, ctx)
-      })
-
-    override def insert(row: InternalRow): Unit = inner.write(row)
-
-    override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-      if (!idxResolved) {
-        id match {
-          case p: org.apache.spark.sql.catalyst.ProjectingInternalRow =>
-            fileIdx = p.schema.fieldIndex(MorDeletes.FileKeyCol)
-            posIdx = p.schema.fieldIndex(MorDeletes.PosKeyCol)
-          case _ => ()
-        }
-        idxResolved = true
-      }
-      val file = id.getUTF8String(fileIdx)
-      val rel = file.toString
-      referenced += rel
-      reuse.update(0, file.copy())
-      reuse.update(1, id.getLong(posIdx))
-      delWriterFor(MorDml.parentDirOf(rel)).write(reuse)
-    }
-
-    override def update(metadata: InternalRow, id: InternalRow,
-                        row: InternalRow): Unit =
-      throw new IllegalStateException(
-        "mor-delta represents updates as delete+insert")
-
-    override def write(row: InternalRow): Unit = inner.write(row)
-
-    override def commit(): WriterCommitMessage = {
-      delWriters.valuesIterator.foreach(_.close()); delWriters.clear()
-      val dataMsg = innerOpt.map(_.commit()) match {
-        case Some(PartitionedCommit(fs)) => fs
-        case _ => Seq.empty
-      }
-      MorDeltaCommit(dataMsg, delWritten.toSeq, referenced.toSeq)
-    }
-
-    override def abort(): Unit = {
-      delWriters.valuesIterator.foreach(w =>
-        try w.close() catch { case _: Throwable => () })
-      delWriters.clear()
-      delWritten.foreach { rel =>
-        try {
-          val f = Paths.get(delStagingRoot).resolve(rel)
-          Files.deleteIfExists(f)
-          Files.deleteIfExists(
-            f.resolveSibling("." + f.getFileName.toString + ".crc"))
-          ()
-        } catch { case _: Throwable => () }
-      }
-      delWritten.clear()
-      innerOpt.foreach(_.abort())
-    }
-
-    override def close(): Unit = {
-      delWriters.valuesIterator.foreach(_.close()); delWriters.clear()
-      innerOpt.foreach(_.close())
-    }
-  }
 }

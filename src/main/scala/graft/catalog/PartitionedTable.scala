@@ -5,19 +5,25 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, Murmur3Hash, Pmod, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{AlwaysTrue, Predicate}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{coalesce, col, hash, lit, not, pmod}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Partition spec sidecar (`_graft_partition.json`) — which transforms
   * a `PARTITIONED BY (...)` declared, in declaration order (= directory
@@ -86,6 +92,30 @@ private[catalog] object PartitionSpec {
   def dirCols(fields: Seq[Field]): Seq[String] = fields.map {
     case Identity(c) => c
     case Bucket(_, _) => BucketDir
+  }
+
+  /** A row's partition directory (`col=v/_gbucket=b`, hive-escaped,
+    * nesting order), given each spec column's value as a Catalyst
+    * expression over the row: identity values cast to string, buckets
+    * as `pmod(murmur3(col), n)` — recomputable in SQL as
+    * `pmod(hash(col), n)`. The data writer, the PK delete routing and
+    * the blind key delete all place rows through this one function. */
+  def dirOf(fields: Seq[Field], valueOf: String => Expression,
+            timeZoneId: String): InternalRow => String = {
+    val tz = Some(timeZoneId)
+    val proj = UnsafeProjection.create(fields.map {
+      case Identity(c) => Cast(valueOf(c), StringType, tz)
+      case Bucket(c, n) =>
+        Cast(Pmod(Murmur3Hash(Seq(valueOf(c)), 42), Literal(n)), StringType, tz)
+    })
+    val names = dirCols(fields)
+    row => {
+      val pv = proj(row)
+      names.indices.map { i =>
+        val v = if (pv.isNullAt(i)) null else pv.getUTF8String(i).toString
+        ExternalCatalogUtils.getPartitionPathString(names(i), v)
+      }.mkString("/")
+    }
   }
 }
 
@@ -269,7 +299,7 @@ private[catalog] final class PartitionedLakeTable(
   /** Row-coordinate METADATA COLUMNS (`_gmor_file` = table-relative
     * file path, `_gmor_pos` = parquet row index) — the row identity
     * the delta-based row-level operations key their position deletes
-    * by ([[MorDeltaOperation.rowId]]), and selectable on ordinary
+    * by ([[MorDelta.rowId]]), and selectable on ordinary
     * reads (Iceberg's `_file`/`_pos`). Versioned tables only: plain
     * layouts physically replace files, so coordinates there are not
     * stable identities. */
@@ -669,8 +699,7 @@ private[catalog] final class PartitionedLakeTable(
         this
       }
       override def build(): Write =
-        new PartitionedWrite(tableName, tableDir, logicalSchema, spec,
-          info.schema(), mode, renames)
+        new PartitionedWrite(tableDir, spec, info.schema(), mode, renames)
     }
   }
 
@@ -715,25 +744,12 @@ private[catalog] final class PartitionedLakeTable(
   /** The target-partition directory a PK value set lives in, as the
     * hive path string — spec columns are a subset of the key (enforced
     * at CREATE), so the blind delete's scope is computable without
-    * reading anything. Same expressions as the data writer
-    * ([[PartitionedWriterFactory]]): identity values cast to string,
-    * buckets as `pmod(murmur3(col), n)`. */
-  private def pkTargetDir(
-      lits: Seq[org.apache.spark.sql.catalyst.expressions.Literal]): String = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal => CLit, Murmur3Hash, Pmod}
-    val byKey = pkDef.get.keys.zip(lits).toMap
-    val tz = Some(SparkSession.active.sessionState.conf.sessionLocalTimeZone)
-    spec.map {
-      case PartitionSpec.Identity(c) =>
-        val v = Cast(byKey(c), org.apache.spark.sql.types.StringType, tz)
-          .eval(null)
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(c, if (v == null) null else v.toString)
-      case PartitionSpec.Bucket(c, n) =>
-        val b = Pmod(Murmur3Hash(Seq(byKey(c)), 42), CLit(n)).eval(null)
-        s"${PartitionSpec.BucketDir}=$b"
-    }.mkString("/")
-  }
+    * reading anything: [[PartitionSpec.dirOf]] evaluated on the
+    * literals. */
+  private def pkTargetDir(lits: Seq[Literal]): String =
+    PartitionSpec.dirOf(spec, pkDef.get.keys.zip(lits).toMap,
+      SparkSession.active.sessionState.conf.sessionLocalTimeZone)(
+      InternalRow.empty)
 
   /** Copy-on-write DELETE that PRESERVES the partition layout.
     * PARTITION-granular ([[PartitionPruning]]): when the condition
@@ -936,28 +952,28 @@ private[catalog] final class PartitionedLakeTable(
       override def build(): RowLevelOperation = {
         // PRIMARY-KEY tables are INHERENTLY merge-on-read: every
         // UPDATE / MERGE / non-blind DELETE plans as the delta write
-        // keyed by the PRIMARY KEY ([[PkDeltaOperation]]) — updates
-        // split into (equality delete of the old key, append of the
-        // new row), deletes write key rows, inserts append; one
-        // optimistic commit, zero data files rewritten. The
-        // group-based copy-on-write path would be WRONG here (it
-        // replays raw partition contents — every shadowed version —
-        // through the replacement projection).
-        if (pkDef.isDefined && snapshot.isDefined)
-          return new PkDeltaOperation(tableName, tableDir, logicalSchema,
-            spec, snapshot.get.files, renames, pkDef.get, info.command())
-        // MERGE-ON-READ DML ([[MorDeltaOperation]]): with
+        // keyed by the PRIMARY KEY ([[PkDelta]]) — updates split into
+        // (equality delete of the old key, append of the new row),
+        // deletes write key rows, inserts append; one optimistic
+        // commit, zero data files rewritten. The group-based
+        // copy-on-write path would be WRONG here (it replays raw
+        // partition contents — every shadowed version — through the
+        // replacement projection).
+        // MERGE-ON-READ DML ([[MorDelta]]): with
         // `graft.write.mode='merge-on-read'` on a versioned table,
-        // UPDATE / MERGE / non-pushable DELETE plan as Spark's
-        // DELTA-based row-level write — one commit of position-delete
-        // files + appended rewritten rows, no data file rewritten,
-        // works with OR without pending delete files. (Pushable
-        // DELETEs still route to the metadata-only deleteWhere.)
-        if (snapshot.isDefined &&
-            MorDeletes.morEnabled(SparkSession.active))
-          return new MorDeltaOperation(tableName, tableDir, logicalSchema,
-            spec, snapshot.get.files, renames, info.command())
-        buildGroupBased()
+        // UPDATE / MERGE / non-pushable DELETE plan as the same delta
+        // write keyed by position-delete coordinates, and work with OR
+        // without pending delete files. (Pushable DELETEs still route
+        // to the metadata-only deleteWhere.)
+        val kind: Option[DeleteKind] =
+          if (snapshot.isEmpty) None
+          else pkDef.map(new PkDelta(tableDir, spec, _)).orElse(
+            if (MorDeletes.morEnabled(SparkSession.active))
+              Some(new MorDelta(spec))
+            else None)
+        kind.fold(buildGroupBased())(new DeltaOperation(tableName,
+          tableDir, logicalSchema, spec, snapshot.get.files, renames, _,
+          info.command()))
       }
 
       private def buildGroupBased(): RowLevelOperation = new RowLevelOperation {
@@ -1086,9 +1102,9 @@ private[catalog] final class PartitionedLakeTable(
           }
         override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder =
           new WriteBuilder {
-            override def build(): Write = new PartitionedRowLevelWrite(
-              tableName, tableDir, spec, winfo.schema(), () => scanned,
-              snapshotFiles, renames)
+            override def build(): Write = new PartitionedWrite(tableDir,
+              spec, winfo.schema(),
+              PartitionedWrite.Rewrite(() => scanned, snapshotFiles), renames)
           }
       }
     }
@@ -1516,109 +1532,6 @@ private[catalog] object RuntimePrunedScan {
   }
 }
 
-/** The row-level rewrite's write: replacement rows stage through the
-  * ordinary hive-layout writer (op slot stripped — see
-  * [[DeletableTable.OpStrippingWriterFactory]]), and commit replaces
-  * exactly the partition directories the group scan covered (or every
-  * data subtree for a whole-table group) before merging the staged
-  * layout in. */
-private[catalog] final class PartitionedRowLevelWrite(
-    tableName: String,
-    tableDir: Path,
-    spec: Seq[PartitionSpec.Field],
-    writeSchema: StructType,
-    candidates: () => Option[Seq[Path]],
-    snapshotFiles: Option[Seq[String]] = None,
-    renames: Map[String, String] = Map.empty)
-    extends Write with RequiresDistributionAndOrdering {
-
-  private val identityCols: Seq[String] =
-    spec.collect { case PartitionSpec.Identity(c) => c }
-
-  override def requiredDistribution(): Distribution =
-    if (identityCols.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      identityCols.map(c => Expressions.column(c)
-        : org.apache.spark.sql.connector.expressions.Expression).toArray)
-  // row-level rewrites keep the declared write clustering too — an
-  // UPDATE must not de-cluster the partitions it replaces
-  override def requiredOrdering(): Array[SortOrder] =
-    WriteOrder.sortOrders(spec,
-      WriteOrder.read(tableDir).filter(writeSchema.fieldNames.contains))
-  override def requiredNumPartitions(): Int = 0
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val staging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + ".__rewrite-" +
-        java.util.UUID.randomUUID().toString.take(8))
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory = {
-      PartitionedWrite.deleteRecursive(staging)
-      Files.createDirectories(staging)
-      val spark = SparkSession.active
-      val dataSchema = StructType(
-        writeSchema.fields.filterNot(f => identityCols.contains(f.name)))
-      // files speak PHYSICAL names under rename evolution
-      val fileSchema = StructType(dataSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      val job = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val owf = new ParquetFileFormat().prepareWrite(
-        spark, job, Map.empty[String, String], fileSchema)
-      new DeletableTable.OpStrippingWriterFactory(
-        new PartitionedWriterFactory(staging.toString, writeSchema, dataSchema,
-          spec, spark.sessionState.conf.sessionLocalTimeZone,
-          new org.apache.spark.util.SerializableConfiguration(
-            job.getConfiguration),
-          owf, staging.getFileName.toString.split('-').last, fileSchema),
-        writeSchema)
-    }
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val committed = PartitionedWrite.committedFiles(messages)
-      snapshotFiles match {
-        case Some(prev) =>
-          // SNAPSHOT rewrite: the group's pre-image files drop from
-          // the manifest, the replacement files join it; nothing is
-          // physically deleted (older snapshots keep reading the
-          // pre-rewrite files)
-          val replaced = candidates() match {
-            case Some(dirs) => Snapshots.filesUnder(prev, dirs)
-            case None => prev
-          }
-          PartitionedWrite.publishStaged(staging, tableDir, committed)
-          // optimistic commit, snapshot isolation: concurrent appends
-          // merge; a concurrent removal/rewrite of a file this group
-          // scan READ conflicts (our replacement embeds its rows)
-          Snapshots.commitRouted(tableDir, "rewrite",
-            cur => cur.diff(replaced) ++ committed,
-            // a delete file committed mid-rewrite would address files
-            // this rewrite replaces — conflict, never resurrect
-            Snapshots.validateRewrite("UPDATE/MERGE", replaced, prev),
-            freshStats = Snapshots.freshStatsFor(
-              SparkSession.active, tableDir, committed))
-        case None =>
-          candidates() match {
-            case Some(dirs) =>
-              dirs.foreach(rel =>
-                PartitionedWrite.deleteRecursive(tableDir.resolve(rel)))
-            case None =>
-              // whole-table group: every data subtree is replaced
-              // (incl. hidden-bucket dirs)
-              PartitionedWrite.dataSubtrees(tableDir)
-                .foreach(PartitionedWrite.deleteRecursive)
-          }
-          PartitionedWrite.publishStaged(staging, tableDir, committed)
-      }
-      SparkSession.active.catalog.clearCache()
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      PartitionedWrite.deleteRecursive(staging)
-  }
-}
-
 private[catalog] object PartitionedWrite {
 
   sealed trait Mode
@@ -1628,6 +1541,87 @@ private[catalog] object PartitionedWrite {
   /** `INSERT OVERWRITE ... PARTITION (c=v, ...)`: replace exactly the
     * partitions matching the equality conjunction. */
   final case class Static(spec: Map[String, String]) extends Mode
+  /** The copy-on-write group rewrite of `UPDATE` / `MERGE INTO`:
+    * replace exactly the partition dirs the group scan covered
+    * (`candidates`, read at commit; None = every data subtree) with
+    * the replacement rows. `snapshotFiles` is the manifest the scan
+    * read (None = plain table). */
+  final case class Rewrite(candidates: () => Option[Seq[Path]],
+                           snapshotFiles: Option[Seq[String]]) extends Mode
+
+  /** The staging sibling `<table>.__<tag>-<writeId>` of a write. */
+  private[catalog] def stagingDir(tableDir: Path, tag: String,
+                                  writeId: String): Path =
+    tableDir.resolveSibling(s"${tableDir.getFileName}.__$tag-$writeId")
+
+  /** A parquet writer factory for `schema`, and the job conf it was
+    * prepared in — `prepareWrite` pins the schema INTO the conf, so
+    * every file schema needs its own pair. */
+  private[catalog] def parquetWriter(schema: StructType)
+      : (OutputWriterFactory, SerializableConfiguration) = {
+    val spark = SparkSession.active
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val owf = new ParquetFileFormat().prepareWrite(
+      spark, job, Map.empty[String, String], schema)
+    (owf, new SerializableConfiguration(job.getConfiguration))
+  }
+
+  /** The executor factory staging `writeSchema` rows under `staging`
+    * in the `spec` layout: identity columns live in the directory
+    * names, not the files, and files speak PHYSICAL names under rename
+    * evolution. */
+  private[catalog] def dataWriterFactory(staging: Path,
+      writeSchema: StructType, spec: Seq[PartitionSpec.Field],
+      renames: Map[String, String],
+      writeId: String): PartitionedWriterFactory = {
+    val identityCols = spec.collect { case PartitionSpec.Identity(c) => c }
+    val dataSchema = StructType(
+      writeSchema.fields.filterNot(f => identityCols.contains(f.name)))
+    val fileSchema = StructType(dataSchema.fields.map(f =>
+      f.copy(name = renames.getOrElse(f.name, f.name))))
+    val (owf, conf) = parquetWriter(fileSchema)
+    new PartitionedWriterFactory(staging.toString, writeSchema, dataSchema,
+      spec, SparkSession.active.sessionState.conf.sessionLocalTimeZone,
+      conf, owf, writeId, fileSchema)
+  }
+
+  /** The one staged-write commit: publish the committed `files` from
+    * `staging`, then ONE optimistic manifest commit (`liveOf` over the
+    * refreshed live list, `validate`d), with the new files' stats
+    * plus `extraStats` riding the commit; `changelog` persists the
+    * commit's changelog (`'changelog-producer'='input'`). */
+  private[catalog] def commitStaged(tableDir: Path, staging: Path,
+      files: Seq[String], op: String, liveOf: Seq[String] => Seq[String],
+      validate: Seq[String] => Unit = _ => (),
+      extraStats: => Map[String, FileStats.FileStat] = Map.empty,
+      changelog: Boolean = false): Unit = {
+    val spark = SparkSession.active
+    publishStaged(staging, tableDir, files)
+    Snapshots.commitRouted(tableDir, op, liveOf, validate,
+      freshStats = Snapshots.freshStatsFor(spark, tableDir, files) ++
+        extraStats)
+    // no-op unless the table declares a persisted changelog
+    if (changelog) ChangelogProducer.produceMissing(spark, tableDir)
+    spark.catalog.clearCache()
+  }
+
+  /** Does a table-relative partition dir fall under a static
+    * overwrite: every `col=value` of the spec among its segments? */
+  private[catalog] def matchesStatic(
+      specMap: Map[String, String]): Path => Boolean = {
+    val wanted = specMap.map { case (c, v) =>
+      ExternalCatalogUtils.getPartitionPathString(c, v)
+    }.toSet
+    dir => wanted.subsetOf(dir.iterator().asScala.map(_.toString).toSet)
+  }
+
+  /** Delete a file and its local-FS checksum sibling (`.<name>.crc`,
+    * ChecksumFileSystem debris). */
+  private[catalog] def deleteWithCrc(f: Path): Unit = {
+    Files.deleteIfExists(f)
+    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    ()
+  }
 
   /** The (identity column → partition-dir value string) map of a
     * conjunction of equality predicates over identity partition
@@ -1810,15 +1804,16 @@ private[catalog] object PartitionedWrite {
   }
 }
 
-/** The distributed partitioned write: executors land parquet files in
-  * a sibling staging dir mirroring the final `col=value` layout (data
-  * columns only inside the files — the hive contract, so the reader's
-  * partition inference owns the partition values), and the driver
-  * publishes the staged layout at commit according to the mode. */
+
+/** The distributed partitioned write — every INSERT / overwrite and
+  * the copy-on-write `UPDATE` / `MERGE` rewrite: executors land
+  * parquet files in a sibling staging dir mirroring the final
+  * `col=value` layout (data columns only inside the files — the hive
+  * contract, so the reader's partition inference owns the partition
+  * values), and the driver publishes the staged layout at commit
+  * according to the mode. */
 private[catalog] final class PartitionedWrite(
-    tableName: String,
     tableDir: Path,
-    logicalSchema: StructType,
     spec: Seq[PartitionSpec.Field],
     writeSchema: StructType,
     mode: PartitionedWrite.Mode,
@@ -1839,7 +1834,8 @@ private[catalog] final class PartitionedWrite(
         : org.apache.spark.sql.connector.expressions.Expression).toArray)
   // declared write-time clustering ([[WriteOrder]]): rows sort on
   // (partition transforms, order columns) before landing, so parquet
-  // row groups carry tight pushdown-prunable ranges. The sidecar
+  // row groups carry tight pushdown-prunable ranges — an UPDATE must
+  // not de-cluster the partitions it replaces either. The sidecar
   // speaks LOGICAL names (the write input's columns); names no longer
   // in the schema (renamed without the sidecar chasing) drop out
   // rather than failing the write.
@@ -1849,119 +1845,119 @@ private[catalog] final class PartitionedWrite(
   override def requiredNumPartitions(): Int = 0
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val staging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + ".__insert-" +
-        java.util.UUID.randomUUID().toString.take(8))
+    private val writeId = java.util.UUID.randomUUID().toString.take(8)
+    private val staging = PartitionedWrite.stagingDir(tableDir,
+      mode match {
+        case _: PartitionedWrite.Rewrite => "rewrite"
+        case _ => "insert"
+      }, writeId)
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DataWriterFactory = {
       PartitionedWrite.deleteRecursive(staging)
       Files.createDirectories(staging)
-      val spark = SparkSession.active
-      val dataSchema = StructType(
-        writeSchema.fields.filterNot(f => identityCols.contains(f.name)))
-      // files speak PHYSICAL names under rename evolution
-      val fileSchema = StructType(dataSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      val job = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val owf = new ParquetFileFormat().prepareWrite(
-        spark, job, Map.empty[String, String], fileSchema)
-      new PartitionedWriterFactory(staging.toString, writeSchema, dataSchema,
-        spec, spark.sessionState.conf.sessionLocalTimeZone,
-        new org.apache.spark.util.SerializableConfiguration(
-          job.getConfiguration),
-        owf, staging.getFileName.toString.split('-').last, fileSchema)
+      val factory = PartitionedWrite.dataWriterFactory(staging, writeSchema,
+        spec, renames, writeId)
+      mode match {
+        // replacement rows carry Spark's operation slot
+        case _: PartitionedWrite.Rewrite =>
+          new DeletableTable.OpStrippingWriterFactory(factory, writeSchema)
+        case _ => factory
+      }
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val committed = PartitionedWrite.committedFiles(messages)
-      if (Snapshots.isVersioned(tableDir)) {
-        // SNAPSHOT commit: nothing is physically deleted — the new
-        // manifest simply stops referencing the replaced files, which
-        // stay on disk for older snapshots until expire_snapshots.
-        // The live list derives from the REFRESHED latest inside the
-        // optimistic-commit loop (not from a pre-read base), so a
-        // concurrent commit to unrelated files merges instead of
-        // being lost; overwrites replace whatever is there at commit
-        // time — last-writer-wins is the declared INSERT OVERWRITE
-        // semantics, so no read-set validation applies
-        val liveOf: Seq[String] => Seq[String] = mode match {
-          case PartitionedWrite.Append => prev => prev ++ committed
-          case PartitionedWrite.Truncate => _ => committed
-          case PartitionedWrite.Dynamic =>
-            val touched = committed
-              .flatMap(rel => Option(Paths.get(rel).getParent))
-              .map(_.toString).toSet
-            prev => prev.filterNot { f =>
-              // replaced partitions drop their data files AND the
-              // merge-on-read delete files SCOPED to them — every
-              // coordinate those hold addresses a file dying in this
-              // commit, and carrying them would keep the table
-              // needlessly dirty ([[MorDeletes]])
-              Option(Paths.get(f).getParent)
-                .exists(p => touched(p.toString)) ||
-                MorDeletes.targetDirOf(f).exists(d => touched(d.toString))
-            } ++ committed
-          case PartitionedWrite.Static(specMap) =>
-            val wanted = specMap.map { case (c, v) =>
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .getPartitionPathString(c, v)
-            }.toSet
-            def replaced(dir: Path): Boolean =
-              wanted.subsetOf(
-                dir.iterator().asScala.map(_.toString).toSet)
-            prev => prev.filterNot { f =>
-              Option(Paths.get(f).getParent).exists(replaced) ||
-                MorDeletes.targetDirOf(f).exists(replaced) // inert deletes
-            } ++ committed
-        }
-        val op = mode match {
-          case PartitionedWrite.Append => "append"
-          case _ => "overwrite"
-        }
-        PartitionedWrite.publishStaged(staging, tableDir, committed)
-        Snapshots.commitRouted(tableDir, op, liveOf,
-          freshStats = Snapshots.freshStatsFor(
-            SparkSession.active, tableDir, committed))
-        // 'changelog-producer'='input': persist this commit's resolved
-        // changelog eagerly (no-op unless the table declares it)
-        ChangelogProducer.produceMissing(SparkSession.active, tableDir)
-        SparkSession.active.catalog.clearCache()
-        return
-      }
       mode match {
-        case PartitionedWrite.Truncate =>
-          // drop every data subtree (incl. hidden-bucket dirs), keep
-          // sidecars
-          PartitionedWrite.dataSubtrees(tableDir)
-            .foreach(PartitionedWrite.deleteRecursive)
+        case PartitionedWrite.Rewrite(candidates, Some(prev)) =>
+          // SNAPSHOT rewrite: the group's pre-image files drop from
+          // the manifest, the replacement files join it; nothing is
+          // physically deleted (older snapshots keep reading the
+          // pre-rewrite files). Optimistic commit, snapshot isolation:
+          // concurrent appends merge; a concurrent removal/rewrite of
+          // a file this group scan READ conflicts (our replacement
+          // embeds its rows), and so does a delete file committed
+          // mid-rewrite (it would address files this rewrite
+          // replaces — conflict, never resurrect)
+          val replaced = candidates().fold(prev)(Snapshots.filesUnder(prev, _))
+          PartitionedWrite.commitStaged(tableDir, staging, committed,
+            "rewrite", cur => cur.diff(replaced) ++ committed,
+            Snapshots.validateRewrite("UPDATE/MERGE", replaced, prev))
+        case PartitionedWrite.Rewrite(_, None) =>
+          publishPlain(committed)
+        case _ if Snapshots.isVersioned(tableDir) =>
+          commitSnapshot(committed)
+        case _ =>
+          publishPlain(committed)
+      }
+    }
+
+    /** SNAPSHOT commit of an insert/overwrite: nothing is physically
+      * deleted — the new manifest simply stops referencing the
+      * replaced files, which stay on disk for older snapshots until
+      * expire_snapshots. The live list derives from the REFRESHED
+      * latest inside the optimistic-commit loop (not from a pre-read
+      * base), so a concurrent commit to unrelated files merges
+      * instead of being lost; overwrites replace whatever is there at
+      * commit time — last-writer-wins is the declared INSERT
+      * OVERWRITE semantics, so no read-set validation applies. */
+    private def commitSnapshot(committed: Seq[String]): Unit = {
+      val liveOf: Seq[String] => Seq[String] = mode match {
+        case PartitionedWrite.Truncate => _ => committed
+        case PartitionedWrite.Dynamic =>
+          val touched = committed
+            .flatMap(rel => Option(Paths.get(rel).getParent))
+            .map(_.toString).toSet
+          prev => prev.filterNot { f =>
+            // replaced partitions drop their data files AND the
+            // merge-on-read delete files SCOPED to them — every
+            // coordinate those hold addresses a file dying in this
+            // commit, and carrying them would keep the table
+            // needlessly dirty ([[MorDeletes]])
+            Option(Paths.get(f).getParent)
+              .exists(p => touched(p.toString)) ||
+              MorDeletes.targetDirOf(f).exists(d => touched(d.toString))
+          } ++ committed
         case PartitionedWrite.Static(specMap) =>
-          // replace exactly the partitions matching the static spec:
+          val replaced = PartitionedWrite.matchesStatic(specMap)
+          prev => prev.filterNot { f =>
+            Option(Paths.get(f).getParent).exists(replaced) ||
+              MorDeletes.targetDirOf(f).exists(replaced) // inert deletes
+          } ++ committed
+        case _ => prev => prev ++ committed
+      }
+      val op = if (mode == PartitionedWrite.Append) "append" else "overwrite"
+      PartitionedWrite.commitStaged(tableDir, staging, committed, op, liveOf,
+        changelog = true)
+    }
+
+    /** PLAIN commit: physically drop the replaced data subtrees, then
+      * move exactly the committed files into place (partition dirs
+      * merge); aborted-attempt leftovers die with the staging dir. */
+    private def publishPlain(committed: Seq[String]): Unit = {
+      val replaced: Seq[Path] = mode match {
+        case PartitionedWrite.Append => Seq.empty
+        // every data subtree (incl. hidden-bucket dirs); sidecars stay
+        case PartitionedWrite.Truncate => PartitionedWrite.dataSubtrees(tableDir)
+        // the group's candidate dirs; a whole-table group replaces
+        // every data subtree
+        case PartitionedWrite.Rewrite(candidates, _) =>
+          candidates().fold(PartitionedWrite.dataSubtrees(tableDir))(
+            _.map(tableDir.resolve))
+        case PartitionedWrite.Static(specMap) =>
           // a leaf dir matches when every (col=value) of the spec
           // appears among its path segments
-          val wanted = specMap.map { case (c, v) =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .getPartitionPathString(c, v)
-          }.toSet
           PartitionedWrite.leafPartitionDirs(tableDir)
-            .filter(rel => wanted.subsetOf(
-              rel.iterator().asScala.map(_.toString).toSet))
-            .foreach(rel =>
-              PartitionedWrite.deleteRecursive(tableDir.resolve(rel)))
+            .filter(PartitionedWrite.matchesStatic(specMap))
+            .map(tableDir.resolve)
         case PartitionedWrite.Dynamic =>
-          // replace exactly the partitions that received COMMITTED
-          // rows (derived from the commit messages, not a staging
-          // listing an aborted attempt could pollute)
-          committed.map(rel =>
-              java.nio.file.Paths.get(rel).getParent)
-            .filter(_ != null).distinct
-            .foreach(rel =>
-              PartitionedWrite.deleteRecursive(tableDir.resolve(rel)))
-        case PartitionedWrite.Append => ()
+          // exactly the partitions that received COMMITTED rows
+          // (derived from the commit messages, not a staging listing
+          // an aborted attempt could pollute)
+          committed.flatMap(rel => Option(Paths.get(rel).getParent))
+            .distinct.map(tableDir.resolve)
       }
-      // move exactly the committed files into place (partition dirs
-      // merge); aborted-attempt leftovers die with the staging dir
+      replaced.foreach(PartitionedWrite.deleteRecursive)
       PartitionedWrite.publishStaged(staging, tableDir, committed)
       SparkSession.active.catalog.clearCache()
     }
@@ -1980,125 +1976,104 @@ private[catalog] final case class PartitionedCommit(files: Seq[String])
     extends WriterCommitMessage
 
 /** Executor-side writer: per incoming row, compute the partition
-  * directory (identity values cast to string hive-escaped; bucket as
-  * `pmod(murmur3(col), n)` — recomputable in SQL as
-  * `pmod(hash(col), n)`), and stream the DATA columns into a parquet
-  * writer opened per distinct partition dir. Open writers are capped;
-  * overflow closes the current set and continues in fresh files
-  * (multiple part files per partition are always valid). */
+  * directory ([[PartitionSpec.dirOf]]), and stream the DATA columns
+  * into the parquet writer [[TaskFileWriters]] keeps open for that
+  * dir. */
 private[catalog] final class PartitionedWriterFactory(
     stagingRoot: String,
     writeSchema: StructType,
     dataSchema: StructType,
     spec: Seq[PartitionSpec.Field],
     timeZoneId: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+    conf: SerializableConfiguration,
+    owf: OutputWriterFactory,
     writeId: String,
     fileSchema: StructType)
     extends DataWriterFactory {
 
-  private val MaxOpenWriters = 64
-
-  override def createWriter(partitionId: Int, taskId: Long):
-      DataWriter[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal => CLit, Murmur3Hash, Pmod, UnsafeProjection}
-
-    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      conf.value,
-      new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graft", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, partitionId),
-        (taskId & Int.MaxValue).toInt))
-    val ext = owf.getFileExtension(ctx)
-
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[InternalRow] = {
     val idx = writeSchema.fieldNames.zipWithIndex.toMap
-    // partition-dir value strings, one per spec field, nesting order
-    val partExprs = spec.map {
-      case PartitionSpec.Identity(c) =>
-        val f = writeSchema(idx(c))
-        Cast(BoundReference(idx(c), f.dataType, f.nullable),
-          org.apache.spark.sql.types.StringType, Some(timeZoneId))
-      case PartitionSpec.Bucket(c, n) =>
-        val f = writeSchema(idx(c))
-        Cast(Pmod(Murmur3Hash(
-            Seq(BoundReference(idx(c), f.dataType, f.nullable)), 42),
-          CLit(n)), org.apache.spark.sql.types.StringType, Some(timeZoneId))
+    def ref(c: String): BoundReference = {
+      val f = writeSchema(idx(c))
+      BoundReference(idx(c), f.dataType, f.nullable)
     }
-    val partNames = spec.map {
-      case PartitionSpec.Identity(c) => c
-      case PartitionSpec.Bucket(_, _) => PartitionSpec.BucketDir
-    }
-    val partProj = UnsafeProjection.create(partExprs)
-    val dataProj = UnsafeProjection.create(
-      dataSchema.fieldNames.toSeq.map { c =>
-        val f = writeSchema(idx(c))
-        BoundReference(idx(c), f.dataType, f.nullable)
-      })
+    val dirOf = PartitionSpec.dirOf(spec, ref, timeZoneId)
+    val dataProj = UnsafeProjection.create(dataSchema.fieldNames.toSeq.map(ref))
+    // fileSchema = dataSchema with PHYSICAL names (rows are positional;
+    // only the parquet field names differ). writeId (per-write UUID)
+    // makes the name globally unique — taskAttemptId alone restarts at
+    // 0 in a new SparkContext, so a second session appending the
+    // same-shaped job would otherwise reproduce identical names and
+    // collide at publish
+    val files = new TaskFileWriters(stagingRoot, conf, owf, fileSchema,
+      partitionId, taskId)((dir, seq, ext) =>
+      f"$dir/part-$partitionId%05d-$taskId-$writeId-$seq$ext")
 
     new DataWriter[InternalRow] {
-      private val writers = scala.collection.mutable.HashMap.empty[String, OutputWriter]
-      // staging-relative paths THIS ATTEMPT opened: published on
-      // commit, deleted on abort — a failed/speculative attempt never
-      // leaks partial files into the table
-      private val written = scala.collection.mutable.ArrayBuffer.empty[String]
-      private var fileSeq = 0
-
-      private def writerFor(dir: String): OutputWriter =
-        writers.getOrElseUpdate(dir, {
-          if (writers.size >= MaxOpenWriters) {
-            writers.valuesIterator.foreach(_.close()); writers.clear()
-          }
-          fileSeq += 1
-          // writeId (per-write UUID) makes the name globally unique —
-          // taskAttemptId alone restarts at 0 in a new SparkContext, so
-          // a second session appending the same-shaped job would
-          // otherwise reproduce identical names and collide at publish
-          val fname = f"part-$partitionId%05d-$taskId-$writeId-$fileSeq$ext"
-          val rel = s"$dir/$fname"
-          written += rel
-          // fileSchema = dataSchema with PHYSICAL names (rows are
-          // positional; only the parquet field names differ)
-          owf.newInstance(s"$stagingRoot/$rel", fileSchema, ctx)
-        })
-
-      override def write(row: InternalRow): Unit = {
-        val pv = partProj(row)
-        val dir = partNames.indices.map { i =>
-          val v = if (pv.isNullAt(i)) null else pv.getUTF8String(i).toString
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(partNames(i), v)
-        }.mkString("/")
-        writerFor(dir).write(dataProj(row))
-      }
-      override def commit(): WriterCommitMessage = {
-        writers.valuesIterator.foreach(_.close()); writers.clear()
-        PartitionedCommit(written.toSeq)
-      }
-      override def abort(): Unit = {
-        writers.valuesIterator.foreach(w =>
-          try w.close() catch { case _: Throwable => () })
-        writers.clear()
-        // remove this attempt's files — commit() publishing only
-        // message-listed files is the backstop, but leaving them would
-        // still waste staging space until the driver-side cleanup
-        written.foreach { rel =>
-          try {
-            val f = Paths.get(stagingRoot).resolve(rel)
-            Files.deleteIfExists(f)
-            // local-FS checksum companion (ChecksumFileSystem debris)
-            Files.deleteIfExists(
-              f.resolveSibling("." + f.getFileName.toString + ".crc"))
-            ()
-          } catch { case _: Throwable => () }
-        }
-        written.clear()
-      }
-      override def close(): Unit = {
-        writers.valuesIterator.foreach(_.close()); writers.clear()
-      }
+      override def write(row: InternalRow): Unit =
+        files.writerFor(dirOf(row)).write(dataProj(row))
+      override def commit(): WriterCommitMessage =
+        PartitionedCommit(files.commit())
+      override def abort(): Unit = files.abort()
+      override def close(): Unit = files.close()
     }
   }
+}
+
+/** One task attempt's parquet files under a staging root — the
+  * executor core of every staged writer: the Hadoop task context, one
+  * open [[OutputWriter]] per directory key (capped; overflow closes
+  * the set and continues in fresh files — several files per directory
+  * are always valid), and the staging-relative paths this attempt
+  * opened: returned by `commit` for publishing, deleted by `abort`, so
+  * a failed or speculative attempt never leaks partial files into the
+  * table. `relPath(key, fileSeq, extension)` names each new file. */
+private[catalog] final class TaskFileWriters(
+    root: String,
+    conf: SerializableConfiguration,
+    owf: OutputWriterFactory,
+    schema: StructType,
+    partitionId: Int,
+    taskId: Long)(relPath: (String, Int, String) => String) {
+
+  private val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+    conf.value,
+    new TaskAttemptID(
+      new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId),
+      (taskId & Int.MaxValue).toInt))
+  private val ext = owf.getFileExtension(ctx)
+  private val writers = scala.collection.mutable.HashMap.empty[String, OutputWriter]
+  private val written = scala.collection.mutable.ArrayBuffer.empty[String]
+  private var fileSeq = 0
+
+  def writerFor(key: String): OutputWriter =
+    writers.getOrElseUpdate(key, {
+      if (writers.size >= TaskFileWriters.MaxOpenWriters) close()
+      fileSeq += 1
+      val rel = relPath(key, fileSeq, ext)
+      written += rel
+      owf.newInstance(s"$root/$rel", schema, ctx)
+    })
+
+  /** Close every open writer and return the files this attempt wrote. */
+  def commit(): Seq[String] = { close(); written.toSeq }
+
+  def close(): Unit = {
+    writers.valuesIterator.foreach(_.close()); writers.clear()
+  }
+
+  def abort(): Unit = {
+    writers.valuesIterator.foreach(w =>
+      try w.close() catch { case _: Throwable => () })
+    writers.clear()
+    written.foreach(rel =>
+      try PartitionedWrite.deleteWithCrc(Paths.get(root).resolve(rel))
+      catch { case _: Throwable => () })
+    written.clear()
+  }
+}
+
+private[catalog] object TaskFileWriters {
+  val MaxOpenWriters = 64
 }

@@ -1,384 +1,114 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Path
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, SupportsDelta, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** `UPDATE` / `MERGE INTO` / non-blind `DELETE` on PRIMARY-KEY lake
-  * tables ([[PkTables]]) — Spark's delta row-level plan with the
-  * PRIMARY KEY as the row identity (the Paimon PK-table DML model;
-  * reference analog: the CDC upsert pipeline's staging tables are
-  * exactly such tables, `flink-cdc/sql/tickets-cdc.sql:23-37`):
+  * tables ([[PkTables]]) — the EQUALITY-delete kind of the shared delta
+  * write ([[DeltaOperation]]), the Paimon PK-table DML model
+  * (reference analog: the CDC upsert pipeline's staging tables are
+  * exactly such tables, `flink-cdc/sql/tickets-cdc.sql:23-37`).
   *
-  *   - DELETE rows become EQUALITY-DELETE key rows
-  *     (`_graft_eqdeletes/…`, applying to every file with a strictly
-  *     lower birth sequence);
-  *   - INSERT rows append through the ordinary partitioned staging
-  *     writer;
-  *   - UPDATE splits into (equality delete of the OLD key, append of
-  *     the NEW row) — `representUpdateAsDeleteAndInsert` — so a
-  *     key-changing UPDATE retires the old key and lands the new one
-  *     in the same commit; the appended rows share the commit's
-  *     sequence with the equality delete and deletes apply only to
-  *     STRICTLY LOWER sequences, so a command can never eat its own
-  *     inserts.
+  * Row id: the PRIMARY KEY (plain data columns — declared NOT NULL at
+  * CREATE, which the delta resolver requires), plus the declared
+  * `'sequence.field'` when present. Deleted rows become equality-delete
+  * key rows (`_graft_eqdeletes/…`, applying to every file with a
+  * strictly lower birth sequence), scoped by the key's own partition
+  * dirs — spec columns are a key subset by construction, so the scope
+  * is computable from the key alone. An update's appended row shares
+  * the commit's sequence with its equality delete, and deletes apply
+  * only to STRICTLY LOWER sequences, so a command can never eat its
+  * own inserts. The read side resolves latest-per-key BEFORE the
+  * command's condition applies ([[MorScanRewrite.swapPk]]), so
+  * UPDATE/MERGE conditions see exactly the rows a SELECT sees.
   *
-  * The read side resolves latest-per-key BEFORE the command's
-  * condition applies ([[MorScanRewrite.swapPk]]), so UPDATE/MERGE
-  * conditions see exactly the rows a SELECT sees.
-  *
-  * Concurrency: a commit that wrote equality deletes under a
-  * predicate validates NO DATA FILE was added since its base
+  * Validation: a commit that wrote equality deletes under a predicate
+  * validates NO DATA FILE was added since its base
   * ([[PkTables.validateNoNewData]]) — a concurrent upsert could have
   * landed a newer version of a matched key the predicate never saw.
   * Pure-insert commits (append-only MERGE) validate nothing and merge
-  * cleanly with anything. */
-private[catalog] final class PkDeltaOperation(
-    tableName: String,
+  * cleanly with anything. The commit persists its changelog when the
+  * table declares `'changelog-producer'='input'`. */
+private[catalog] final class PkDelta(
     tableDir: Path,
-    logicalSchema: StructType,
     spec: Seq[PartitionSpec.Field],
-    baseFiles: Seq[String],
-    renames: Map[String, String],
-    pk: PkTables.PkDef,
-    cmd: RowLevelOperation.Command)
-    extends RowLevelOperation with SupportsDelta {
-
-  override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"$tableName(pk-delta:$cmd)"
-
-  /** Row identity = the PRIMARY KEY (plain data columns — declared
-    * NOT NULL at CREATE, which the delta resolver requires), plus the
-    * declared `'sequence.field'` when present: delete records then
-    * carry the RETIRED row's field value, so the written equality
-    * delete kills by the `(field, seq)` ladder — a late replay of an
-    * older version stays dead, a genuinely newer version revives. */
-  override def rowId(): Array[NamedReference] =
+    pk: PkTables.PkDef) extends DeleteKind {
+  val label = "pk-delta"
+  /** With a `'sequence.field'`, delete records carry the RETIRED row's
+    * field value, so the written equality delete kills by the
+    * `(field, seq)` ladder — a late replay of an older version stays
+    * dead, a genuinely newer version revives. */
+  def rowId: Array[NamedReference] =
     (pk.keys ++ pk.seqField).map(Expressions.column).toArray
-
-  override def representUpdateAsDeleteAndInsert(): Boolean = true
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder
-        with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-        with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-      private var required: Option[StructType] = None
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = Some(requiredSchema)
-      override def pushFilters(
-          fs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
-          Seq[org.apache.spark.sql.catalyst.expressions.Expression] = fs
-      override def pushedFilters: Array[Predicate] = Array.empty
-      override def build(): Scan = new MorDeltaScan(tableName,
-        required.getOrElse(logicalSchema),
-        PkTables.eqDeleteFiles(baseFiles).size)
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new PkDeltaWrite(
-        tableName, tableDir, spec, info.schema(), renames, baseFiles, pk,
-        cmd match {
-          case RowLevelOperation.Command.UPDATE => "update"
-          case RowLevelOperation.Command.MERGE => "merge"
-          case _ => "delete"
-        })
-    }
-}
-
-/** The PK delta write: inserted rows stage through the ordinary
-  * partitioned writer; equality-delete keys stream into key-schema
-  * parquet per TARGET PARTITION (the key's own bucket/identity dirs —
-  * spec columns are a key subset by construction, so the scope is
-  * computable from the key alone); ONE manifest commit publishes
-  * both. */
-private[catalog] final class PkDeltaWrite(
-    tableName: String,
-    tableDir: Path,
-    spec: Seq[PartitionSpec.Field],
-    rowSchema: StructType,
-    renames: Map[String, String],
-    baseFiles: Seq[String],
-    pk: PkTables.PkDef,
-    opName: String)
-    extends DeltaWrite with RequiresDistributionAndOrdering {
-
-  private val rowCols: Set[String] = rowSchema.fieldNames.toSet
+  def readSchema(logical: StructType): StructType = logical
+  def pendingDeletes(baseFiles: Seq[String]): Int =
+    PkTables.eqDeleteFiles(baseFiles).size
 
   /** Cluster on the KEY: same-key rows (delete and insert halves
     * alike — both carry the key columns) converge, and under a
     * bucket-by-key layout so do their partition targets. */
-  override def requiredDistribution(): Distribution = {
-    val avail = pk.keys.filter(rowCols)
-    if (avail.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(avail.map(c => Expressions.column(c)
-      : org.apache.spark.sql.connector.expressions.Expression).toArray)
-  }
+  def clustering(rowCols: Set[String]): Seq[String] = pk.keys.filter(rowCols)
+  /** Inserts land write-ordered, equality-delete files key-sorted. */
+  def sortTail(rowCols: Set[String]): Seq[String] = pk.keys.filter(rowCols)
 
-  /** Within-task sort: partition transforms, declared clustering,
-    * then the key — inserts land write-ordered, equality-delete files
-    * land key-sorted. */
-  override def requiredOrdering(): Array[SortOrder] = {
-    val declared = WriteOrder.read(tableDir).filter(rowCols)
-    val partAndOrder: Seq[org.apache.spark.sql.connector.expressions.Expression] =
-      spec.filter(f => rowCols(f.col)).map {
-        case PartitionSpec.Identity(c) => Expressions.identity(c)
-        case PartitionSpec.Bucket(c, n) => Expressions.bucket(n, c)
-      } ++ declared.map(Expressions.identity)
-    (partAndOrder ++ pk.keys.filter(rowCols).map(Expressions.identity))
-      .map(e => Expressions.sort(e, SortDirection.ASCENDING)).toArray
-  }
-  override def requiredNumPartitions(): Int = 0
-
-  override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-    private val writeId = java.util.UUID.randomUUID().toString.take(8)
-    private val dataStaging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + s".__pkdelta-$writeId")
-    private val eqStaging = tableDir.resolveSibling(
-      tableDir.getFileName.toString + s".__pkeqdel-$writeId")
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DeltaWriterFactory = {
-      PartitionedWrite.deleteRecursive(dataStaging)
-      PartitionedWrite.deleteRecursive(eqStaging)
-      Files.createDirectories(dataStaging)
-      Files.createDirectories(eqStaging)
-      val spark = SparkSession.active
-      val identityCols = spec.collect { case PartitionSpec.Identity(c) => c }
-      val dataSchema = StructType(
-        rowSchema.fields.filterNot(f => identityCols.contains(f.name)))
-      val fileSchema = StructType(dataSchema.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      val dataJob = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val dataOwf = new ParquetFileFormat().prepareWrite(
-        spark, dataJob, Map.empty[String, String], fileSchema)
-      val keySchema = PkTables.keyFileSchema(tableDir, pk.keys)
-      // `'sequence.field'` tables persist the retired row's field
-      // value beside the key ([[PkTables.DelFieldCol]])
-      val eqFileSchema = StructType(keySchema.fields ++
-        PkTables.delFieldOf(tableDir, pk).map(f =>
-          org.apache.spark.sql.types.StructField(
-            PkTables.DelFieldCol, f.dataType, nullable = true)).toSeq)
-      val eqJob = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      val eqOwf = new ParquetFileFormat().prepareWrite(
-        spark, eqJob, Map.empty[String, String], eqFileSchema)
-      new PkDeltaWriterFactory(
-        new PartitionedWriterFactory(dataStaging.toString, rowSchema,
-          dataSchema, spec, spark.sessionState.conf.sessionLocalTimeZone,
-          new org.apache.spark.util.SerializableConfiguration(
-            dataJob.getConfiguration),
-          dataOwf, writeId, fileSchema),
-        eqStaging.toString,
-        new org.apache.spark.util.SerializableConfiguration(
-          eqJob.getConfiguration),
-        eqOwf, writeId, pk.keys ++ pk.seqField, eqFileSchema, spec,
-        spark.sessionState.conf.sessionLocalTimeZone)
-    }
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val parts = messages.toSeq.collect { case m: PkDeltaCommit => m }
-      val dataRels = parts.flatMap(_.dataFiles)
-      val eqRels = parts.flatMap(_.eqDeleteFiles)
-      if (dataRels.isEmpty && eqRels.isEmpty) {
-        abortStaging(); return // matched nothing, inserted nothing
-      }
-      PartitionedWrite.publishStaged(dataStaging, tableDir, dataRels)
-      val eqDir = tableDir.resolve(PkTables.EqDeleteDirName)
-      val movedEq = eqRels.map { rel =>
-        val target = eqDir.resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(eqStaging.resolve(rel), target)
-        s"${PkTables.EqDeleteDirName}/$rel"
-      }
-      PartitionedWrite.deleteRecursive(eqStaging)
-      val spark = SparkSession.active
-      // pure-insert commits are BLIND (validate nothing); a delete-
-      // carrying commit conflicts when data files appeared since the
-      // base — a newer version the predicate never evaluated could
-      // otherwise be silently deleted
-      val validate: Seq[String] => Unit =
-        if (movedEq.isEmpty) _ => ()
-        else PkTables.validateNoNewData(opName.toUpperCase, baseFiles)
-      Snapshots.commitRouted(tableDir, opName,
-        cur => cur ++ movedEq ++ dataRels,
-        validate,
-        freshStats = Snapshots.freshStatsFor(spark, tableDir, dataRels) ++
-          MorDeletes.deleteFileRowStats(tableDir, movedEq))
-      // 'changelog-producer'='input': persist this commit's resolved
-      // changelog eagerly (no-op unless the table declares it)
-      ChangelogProducer.produceMissing(spark, tableDir)
-      spark.catalog.clearCache()
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      abortStaging()
-
-    private def abortStaging(): Unit = {
-      PartitionedWrite.deleteRecursive(dataStaging)
-      PartitionedWrite.deleteRecursive(eqStaging)
-    }
-  }
+  val stagingTags = ("pkdelta", "pkeqdel")
+  val dirName = PkTables.EqDeleteDirName
+  val filePrefix = "eqdelete"
+  /** The key columns, plus the retired row's `'sequence.field'` value
+    * ([[PkTables.DelFieldCol]]) when the table declares one. */
+  def fileSchema: StructType =
+    StructType(PkTables.keyFileSchema(tableDir, pk.keys).fields ++
+      PkTables.delFieldOf(tableDir, pk).map(f =>
+        StructField(PkTables.DelFieldCol, f.dataType, nullable = true)).toSeq)
+  def router(fileSchema: StructType, timeZoneId: String): DeleteRouter =
+    PkDml.KeyRouter(pk.keys ++ pk.seqField, fileSchema, spec, timeZoneId)
+  def validate(op: String, referenced: Seq[String], baseFiles: Seq[String],
+               wroteDeletes: Boolean): Seq[String] => Unit =
+    if (wroteDeletes) PkTables.validateNoNewData(op, baseFiles) else _ => ()
+  val producesChangelog = true
 }
 
-/** One task's PK-delta output: staged data files and staged
-  * equality-delete files (each staging-relative). */
-private[catalog] final case class PkDeltaCommit(
-    dataFiles: Seq[String],
-    eqDeleteFiles: Seq[String]) extends WriterCommitMessage
+private[catalog] object PkDml {
 
-/** Executor-side PK delta writer: `insert` forwards to the ordinary
-  * partitioned data writer; `delete` streams the KEY VALUES into a
-  * key-schema parquet file per TARGET PARTITION DIRECTORY, derived
-  * from the key itself with the SAME expressions the data writer uses
-  * (identity cast-to-string, `pmod(murmur3(col), n)`). */
-private[catalog] final class PkDeltaWriterFactory(
-    dataFactory: PartitionedWriterFactory,
-    eqStagingRoot: String,
-    eqConf: org.apache.spark.util.SerializableConfiguration,
-    eqOwf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    writeId: String,
-    keys: Seq[String],
-    keySchema: StructType,
-    spec: Seq[PartitionSpec.Field],
-    timeZoneId: String)
-    extends DeltaWriterFactory {
+  /** A delete's target dir is the key's own partition dir
+    * ([[PartitionSpec.dirOf]] over the row id — the data writer's
+    * placement); it writes the row-id values in `keySchema` order. */
+  final case class KeyRouter(
+      keys: Seq[String],
+      keySchema: StructType,
+      spec: Seq[PartitionSpec.Field],
+      timeZoneId: String) extends DeleteRouter {
 
-  override def createWriter(partitionId: Int, taskId: Long):
-      DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal => CLit, Murmur3Hash, Pmod, UnsafeProjection}
+    def newTask(): DeleteRouting = new DeleteRouting {
+      // projections over the rowId row, resolved from its own schema
+      // on first use (field order declared = pk order, but the schema
+      // is authoritative)
+      private var keyProj: UnsafeProjection = null
+      private var dirOf: InternalRow => String = null
 
-    private var innerOpt: Option[
-      org.apache.spark.sql.connector.write.DataWriter[InternalRow]] = None
-    private def inner: org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
-      if (innerOpt.isEmpty)
-        innerOpt = Some(dataFactory.createWriter(partitionId, taskId))
-      innerOpt.get
-    }
-
-    private val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-      eqConf.value,
-      new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("grafteq", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, partitionId),
-        (taskId & Int.MaxValue).toInt))
-    private val ext = eqOwf.getFileExtension(ctx)
-
-    private val eqWriters =
-      scala.collection.mutable.HashMap.empty[String, OutputWriter]
-    private val eqWritten =
-      scala.collection.mutable.ArrayBuffer.empty[String]
-    private var fileSeq = 0
-
-    // projections over the rowId row, resolved from its own schema on
-    // first use (field order declared = pk order, but the schema is
-    // authoritative): key values in keySchema order, and the
-    // partition-dir value strings
-    private var keyProj: UnsafeProjection = null
-    private var partProj: UnsafeProjection = null
-    private var partNames: Seq[String] = Seq.empty
-    private def resolve(id: InternalRow): Unit = {
-      if (keyProj != null) return
-      val schema = id match {
-        case p: org.apache.spark.sql.catalyst.ProjectingInternalRow => p.schema
-        case _ => StructType(keys.zip(keySchema.fields).map { case (k, f) =>
-          f.copy(name = k) })
+      def route(id: InternalRow): (String, InternalRow) = {
+        if (keyProj == null) {
+          val schema = id match {
+            case p: org.apache.spark.sql.catalyst.ProjectingInternalRow =>
+              p.schema
+            case _ => StructType(keys.zip(keySchema.fields).map {
+              case (k, f) => f.copy(name = k) })
+          }
+          def ref(k: String): BoundReference = {
+            val i = schema.fieldIndex(k)
+            BoundReference(i, schema(i).dataType, schema(i).nullable)
+          }
+          keyProj = UnsafeProjection.create(keys.map(ref))
+          dirOf = PartitionSpec.dirOf(spec, ref, timeZoneId)
+        }
+        // keyProj returns a REUSED UnsafeRow
+        (dirOf(id), keyProj(id))
       }
-      def ref(k: String): BoundReference = {
-        val i = schema.fieldIndex(k)
-        BoundReference(i, schema(i).dataType, schema(i).nullable)
-      }
-      keyProj = UnsafeProjection.create(keys.map(ref))
-      val partExprs = spec.map {
-        case PartitionSpec.Identity(c) =>
-          Cast(ref(c), org.apache.spark.sql.types.StringType, Some(timeZoneId))
-        case PartitionSpec.Bucket(c, n) =>
-          Cast(Pmod(Murmur3Hash(Seq(ref(c)), 42), CLit(n)),
-            org.apache.spark.sql.types.StringType, Some(timeZoneId))
-      }
-      partNames = spec.map {
-        case PartitionSpec.Identity(c) => c
-        case PartitionSpec.Bucket(_, _) => PartitionSpec.BucketDir
-      }
-      partProj = UnsafeProjection.create(partExprs)
-    }
-
-    private def eqWriterFor(tdir: String): OutputWriter =
-      eqWriters.getOrElseUpdate(tdir, {
-        fileSeq += 1
-        val seg = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(MorDeletes.TargetDirCol, tdir)
-        val rel =
-          f"$seg/eqdelete-$writeId-$partitionId%05d-$taskId-$fileSeq$ext"
-        eqWritten += rel
-        val target = Paths.get(eqStagingRoot).resolve(rel)
-        Files.createDirectories(target.getParent)
-        eqOwf.newInstance(target.toString, keySchema, ctx)
-      })
-
-    override def insert(row: InternalRow): Unit = inner.write(row)
-
-    override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-      resolve(id)
-      val pv = partProj(id)
-      val tdir = partNames.indices.map { i =>
-        val v = if (pv.isNullAt(i)) null else pv.getUTF8String(i).toString
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .getPartitionPathString(partNames(i), v)
-      }.mkString("/")
-      // keyProj returns a REUSED UnsafeRow; the parquet writer copies
-      // field values during write, so no defensive copy is needed
-      eqWriterFor(tdir).write(keyProj(id))
-    }
-
-    override def update(metadata: InternalRow, id: InternalRow,
-                        row: InternalRow): Unit =
-      throw new IllegalStateException(
-        "pk-delta represents updates as delete+insert")
-
-    override def write(row: InternalRow): Unit = inner.write(row)
-
-    override def commit(): WriterCommitMessage = {
-      eqWriters.valuesIterator.foreach(_.close()); eqWriters.clear()
-      val dataMsg = innerOpt.map(_.commit()) match {
-        case Some(PartitionedCommit(fs)) => fs
-        case _ => Seq.empty
-      }
-      PkDeltaCommit(dataMsg, eqWritten.toSeq)
-    }
-
-    override def abort(): Unit = {
-      eqWriters.valuesIterator.foreach(w =>
-        try w.close() catch { case _: Throwable => () })
-      eqWriters.clear()
-      eqWritten.foreach { rel =>
-        try {
-          val f = Paths.get(eqStagingRoot).resolve(rel)
-          Files.deleteIfExists(f)
-          Files.deleteIfExists(
-            f.resolveSibling("." + f.getFileName.toString + ".crc"))
-          ()
-        } catch { case _: Throwable => () }
-      }
-      eqWritten.clear()
-      innerOpt.foreach(_.abort())
-    }
-
-    override def close(): Unit = {
-      eqWriters.valuesIterator.foreach(_.close()); eqWriters.clear()
-      innerOpt.foreach(_.close())
+      def referenced: Seq[String] = Seq.empty
     }
   }
 }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.StructType
   *    equality `DELETE` is a BLIND key delete: one row written, zero
   *    rows read — the CDC-at-scale delete.
   *  - `UPDATE`/`MERGE INTO` plan through Spark's own delta row-level
-  *    write ([[PkDeltaOperation]]) with the PRIMARY KEY as the row
+  *    write ([[PkDelta]]) with the PRIMARY KEY as the row
   *    identity: updates split into (equality delete of the old key,
   *    append of the new row), inserts append — one optimistic commit.
   *  - `CALL compact` is KEY-AWARE: it rewrites the RESOLVED rows (one

@@ -1266,7 +1266,8 @@ private[catalog] object Snapshots {
       val (snap, newSegs) = compose(tableDir, prev,
         prev.fold(Seq.empty[String])(_.files), "expire", Map.empty, dropped)
       if (tryPublishIn(tableDir, bd, snap, newSegs)) {
-        gcAfterExpireBranch(tableDir, bd, name, dropped)
+        gcAfterExpire(tableDir, dropped, readIn(tableDir, bd, _),
+          v => Files.deleteIfExists(bd.resolve(s"s-$v.json")))
         return dropped
       }
       if (attempt >= MaxAttempts) throw new CommitConflictException(
@@ -1276,42 +1277,6 @@ private[catalog] object Snapshots {
         .nextLong(1L, 5L * attempt))
     }
     Seq.empty // unreachable
-  }
-
-  /** Post-commit branch-expire cleanup — the branch twin of
-    * [[gcAfterExpire]]: delete the dropped BRANCH manifests, then GC
-    * exactly `droppedRefs − retained` where the retained reachability
-    * set spans main AND every branch (content the branch shares with
-    * the fork, or that another ref still reads, always survives). */
-  private def gcAfterExpireBranch(tableDir: Path, bd: Path, name: String,
-                                  dropped: Seq[Long]): Unit = {
-    val droppedSnaps = dropped.flatMap(readIn(tableDir, bd, _))
-    val droppedRefs = droppedSnaps.flatMap(_.files).toSet
-    val droppedSegs = droppedSnaps.flatMap(_.segments).toSet
-    dropped.foreach(v => Files.deleteIfExists(bd.resolve(s"s-$v.json")))
-    val live = referencedFiles(tableDir)
-    droppedRefs.diff(live).toSeq.sorted
-      .map(Paths.get(_))
-      .foreach { rel =>
-        Files.deleteIfExists(tableDir.resolve(rel))
-        val crc = tableDir.resolve(rel).resolveSibling(
-          "." + rel.getFileName.toString + ".crc")
-        Files.deleteIfExists(crc)
-      }
-    val liveSegs = referencedSegments(tableDir)
-    droppedSegs.diff(liveSegs).foreach { ref =>
-      Files.deleteIfExists(dir(tableDir).resolve(ref)); ()
-    }
-    leafDirsOf(droppedRefs.toSeq).map(tableDir.resolve).foreach { d =>
-      var cur = d
-      while (cur != tableDir && Files.isDirectory(cur) && {
-        val s = Files.list(cur)
-        try !s.iterator().hasNext finally s.close()
-      }) {
-        Files.delete(cur)
-        cur = cur.getParent
-      }
-    }
   }
 
   /** Was `v` scheduled for removal by a still-retained `expire`
@@ -1404,7 +1369,8 @@ private[catalog] object Snapshots {
       val (s, newSegs) = compose(tableDir, prev,
         prev.fold(Seq.empty[String])(_.files), "expire", Map.empty, dropped)
       if (tryPublish(tableDir, s, newSegs)) {
-        gcAfterExpire(tableDir, dropped)
+        gcAfterExpire(tableDir, dropped, read(tableDir, _),
+          delete(tableDir, _))
         return dropped
       }
       if (attempt >= MaxAttempts)
@@ -1418,29 +1384,28 @@ private[catalog] object Snapshots {
     Seq.empty // unreachable
   }
 
-  /** Post-commit expire cleanup: delete the dropped manifests, then
-    * GC exactly `droppedRefs -- retainedRefs` — never "unreferenced on
+  /** Post-commit expire cleanup, for main and branch logs alike
+    * (`readDropped`/`deleteDropped` read and delete one dropped
+    * manifest of that log): delete the dropped manifests, then GC
+    * exactly `droppedRefs -- retainedRefs` — never "unreferenced on
     * disk" (an in-flight commit publishes data files and segments
     * BEFORE its manifest, so a just-published file is momentarily
     * referenced by nothing; files from dropped manifests are provably
     * snapshot-aged, true orphans are vacuum's age-guarded job). The
-    * retained set is listed AFTER the deletions, so commits that
-    * landed after the expire's linearization point only ADD
-    * protection. */
-  private def gcAfterExpire(tableDir: Path, dropped: Seq[Long]): Unit = {
-    val droppedSnaps = dropped.flatMap(read(tableDir, _))
+    * retained set spans main AND every branch (content a branch shares
+    * with its fork, or that another ref still reads, always survives),
+    * and is listed AFTER the deletions, so commits that landed after
+    * the expire's linearization point only ADD protection. */
+  private def gcAfterExpire(tableDir: Path, dropped: Seq[Long],
+                            readDropped: Long => Option[Snapshot],
+                            deleteDropped: Long => Unit): Unit = {
+    val droppedSnaps = dropped.flatMap(readDropped)
     val droppedRefs = droppedSnaps.flatMap(_.files).toSet
     val droppedSegs = droppedSnaps.flatMap(_.segments).toSet
-    dropped.foreach(delete(tableDir, _))
+    dropped.foreach(deleteDropped)
     val live = referencedFiles(tableDir)
     droppedRefs.diff(live).toSeq.sorted
-      .map(Paths.get(_))
-      .foreach { rel =>
-        Files.deleteIfExists(tableDir.resolve(rel))
-        val crc = tableDir.resolve(rel).resolveSibling(
-          "." + rel.getFileName.toString + ".crc")
-        Files.deleteIfExists(crc)
-      }
+      .foreach(rel => PartitionedWrite.deleteWithCrc(tableDir.resolve(rel)))
     val liveSegs = referencedSegments(tableDir)
     droppedSegs.diff(liveSegs).foreach { ref =>
       Files.deleteIfExists(dir(tableDir).resolve(ref)); ()

@@ -712,7 +712,7 @@ object Bucketing2 {
   }
 
   /** MERGE-ON-READ DML lifecycle end-to-end (r14,
-    * [[graft.catalog.MorDeltaOperation]] — Spark's delta-based
+    * [[graft.catalog.DeltaOperation]] — Spark's delta-based
     * row-level plan, the Iceberg v2 MoR UPDATE/MERGE model): with
     * `graft.write.mode='merge-on-read'`, UPDATE and MERGE commit
     * (position-delete files for matched rows) + (appended rewritten

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.cdc.Upsert
 import graft.operators.Revenue
+import graft.sources.CdcSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -112,14 +113,10 @@ object CdcPipeline {
         try {
           // per-table staging upsert, touched-bucket granularity
           val touchedByTable = tables.map { spec =>
-            val slice = cached.filter(col("table") === spec.name)
-            // pass the source sequence through when the wire carries one
-            // (equal-ts_ms tie-break in Upsert.applyChangelog)
-            val seqCol =
-              if (slice.columns.contains("seq")) Seq(col("seq")) else Seq.empty
-            val envelope = slice.select(Seq(col("op"), col("ts_ms")) ++ seqCol ++ Seq(
-              from_json(col("before"), spec.schema).as("before"),
-              from_json(col("after"), spec.schema).as("after")): _*).cache()
+            // the source sequence passes through when the wire carries
+            // one (equal-ts_ms tie-break in Upsert.applyChangelog)
+            val envelope =
+              CdcSource.jsonEnvelope(cached, spec.name, spec.schema).cache()
             try {
               val store = stores(spec.name)
               // both sides' distribution keys: an update that moves a

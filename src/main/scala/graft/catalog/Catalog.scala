@@ -70,40 +70,26 @@ object Catalog {
     require(!Snapshots.isVersioned(dir),
       s"'$ref' is a manifest-versioned partitioned table — stream its " +
         "commits as a change feed via readStreamTable(spark, ref, keys)")
-    if (pspec.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      val bucketed = pspec.exists(_.isInstanceOf[PartitionSpec.Bucket])
-      // rename-evolved: files speak the PHYSICAL names; stream with
-      // those and alias back (partition columns are never renamed)
-      val renames = readRenames(dir)
-      val phys = org.apache.spark.sql.types.StructType(logical.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      val streamSchema =
-        if (!bucketed) phys
-        else org.apache.spark.sql.types.StructType(phys.fields :+
-          org.apache.spark.sql.types.StructField(PartitionSpec.BucketDir,
-            org.apache.spark.sql.types.IntegerType, nullable = true))
-      val raw = spark.readStream.schema(streamSchema).parquet(dir.toString)
-      val unbucketed = if (bucketed) raw.drop(PartitionSpec.BucketDir) else raw
-      return if (renames.isEmpty) unbucketed
-      else unbucketed.select(logical.fields.map(f =>
-        col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
-    }
-    // a rename-evolved table's FILES carry the physical (pre-rename)
-    // column names; streaming with the logical schema would match
-    // renamed columns by-name-miss and emit all-NULL silently. Stream
-    // with the PHYSICAL schema, alias back to logical at the boundary
-    // (the same translation MappedTable does for the batch path).
+    import org.apache.spark.sql.functions.col
+    val bucketed = pspec.exists(_.isInstanceOf[PartitionSpec.Bucket])
+    // rename-evolved: files speak the PHYSICAL names; stream with those
+    // and alias back (partition columns are never renamed) — streaming
+    // the logical schema would match renamed columns by-name-miss and
+    // emit all-NULL silently. Unpartitioned tables are the same read
+    // with no directory columns.
     val renames = readRenames(dir)
-    if (renames.isEmpty) spark.readStream.schema(logical).parquet(dir.toString)
-    else {
-      import org.apache.spark.sql.functions.col
-      val phys = org.apache.spark.sql.types.StructType(logical.fields.map(f =>
-        f.copy(name = renames.getOrElse(f.name, f.name))))
-      spark.readStream.schema(phys).parquet(dir.toString)
-        .select(logical.fields.map(f =>
-          col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
-    }
+    val phys = org.apache.spark.sql.types.StructType(logical.fields.map(f =>
+      f.copy(name = renames.getOrElse(f.name, f.name))))
+    val streamSchema =
+      if (!bucketed) phys
+      else org.apache.spark.sql.types.StructType(phys.fields :+
+        org.apache.spark.sql.types.StructField(PartitionSpec.BucketDir,
+          org.apache.spark.sql.types.IntegerType, nullable = true))
+    val raw = spark.readStream.schema(streamSchema).parquet(dir.toString)
+    val unbucketed = if (bucketed) raw.drop(PartitionSpec.BucketDir) else raw
+    if (renames.isEmpty) unbucketed
+    else unbucketed.select(logical.fields.map(f =>
+      col(renames.getOrElse(f.name, f.name)).as(f.name)): _*)
   }
 
   /** Streaming CHANGE FEED of a VERSIONED lake-catalog table: each
@@ -169,40 +155,17 @@ object Catalog {
     * cheaper form over wide ranges. */
   def readPkTableChanges(spark: SparkSession, ref: String,
                          from: Long, to: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce => co, col, lit, struct, when}
     val dir = tableDir(spark, ref)
     val pk = PkTables.read(dir).getOrElse(throw new IllegalArgumentException(
       s"'$ref' is not a PRIMARY-KEY table — use readTableChanges for " +
         "the file-level feed"))
     require(from <= to, s"from=$from must be <= to=$to")
-    val a = spark.sql(s"SELECT * FROM $ref VERSION AS OF $from")
-    val b = spark.sql(s"SELECT * FROM $ref VERSION AS OF $to")
-    val cols = a.columns.toSeq
-    val keyCols = pk.keys
-    val aa = a.select(cols.map(c => col(c).as(s"__a_$c")): _*)
-    val bb = b.select(cols.map(c => col(c).as(s"__b_$c")): _*)
-    // keys are NOT NULL by construction: plain equi-join, which the
-    // bucket-by-key layout co-locates
-    val joined = aa.join(bb,
-      keyCols.map(k => aa(s"__a_$k") === bb(s"__b_$k")).reduce(_ && _),
-      "full_outer")
-    val aKey = co(keyCols.map(k => col(s"__a_$k").isNotNull)
-      .reduce(_ && _), lit(false))
-    val bKey = co(keyCols.map(k => col(s"__b_$k").isNotNull)
-      .reduce(_ && _), lit(false))
-    val changed = cols.map(c =>
-      !(col(s"__a_$c") <=> col(s"__b_$c"))).reduce(_ || _)
-    val before = struct(cols.map(c => col(s"__a_$c").as(c)): _*)
-    val after = struct(cols.map(c => col(s"__b_$c").as(c)): _*)
-    joined
-      .withColumn("op",
-        when(!aKey, lit(graft.cdc.ChangeEvent.OpCreate))
-          .when(!bKey, lit(graft.cdc.ChangeEvent.OpDelete))
-          .when(changed, lit(graft.cdc.ChangeEvent.OpUpdate)))
-      .filter(col("op").isNotNull) // identical keys drop
-      .select(col("op"),
-        when(aKey, before).as("before"),
-        when(bKey, after).as("after"))
+    // keys are NOT NULL by construction: the diff's keyed full-outer
+    // join is a plain equi-join, which the bucket-by-key layout
+    // co-locates
+    graft.streaming.ChangeFeed.diff(
+      spark.sql(s"SELECT * FROM $ref VERSION AS OF $from"),
+      spark.sql(s"SELECT * FROM $ref VERSION AS OF $to"), pk.keys)
   }
 
   /** The table directory of `cat.db.table`, a `GraftLakeCatalog` name

@@ -148,15 +148,10 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     * declared schema (merge-on-read: parquet files missing a declared
     * column yield NULLs); absent → schema is inferred from the files,
     * the original layout contract. */
-  private val SchemaSidecar = "_graft_schema.json"
+  private val SchemaSidecar = Evolutions.SchemaSidecar
 
-  private def declaredSchema(p: Path): Option[org.apache.spark.sql.types.StructType] = {
-    val sidecar = p.resolve(SchemaSidecar)
-    if (Files.isDirectory(p) && Files.exists(sidecar))
-      Some(org.apache.spark.sql.types.DataType.fromJson(Files.readString(sidecar))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    else None
-  }
+  private def declaredSchema(p: Path): Option[org.apache.spark.sql.types.StructType] =
+    if (Files.isDirectory(p)) Evolutions.declaredSchema(p) else None
 
   /** Rename/drop evolution sidecar next to the schema sidecar:
     * `renames` maps each RENAMED column's current logical name to its

@@ -789,13 +789,10 @@ private[catalog] object LakeProcedures {
     val tmp = dir.resolveSibling(dir.getFileName.toString + ".__rewrite-" +
       java.util.UUID.randomUUID().toString.take(8))
     PartitionedWrite.deleteRecursive(tmp)
-    // the shared live-row read: per-spec-shape union with the EXPLICIT
-    // declared schema (inference-typed dir values could coerce across
-    // the union and rewrite data)
-    val rows = pkOpt match {
-      case Some(pk) => PkTables.resolvedRows(spark, dir, s, pk)
-      case None => MorDeletes.liveRows(spark, dir, s.files)
-    }
+    // the one resolved read — the rows SQL returns for `s`: per-spec-
+    // shape union with the EXPLICIT declared schema (inference-typed
+    // dir values could coerce across the union and rewrite data)
+    val rows = MorDeletes.resolvedRows(spark, MorDeletes.ReadScope.of(dir, s))
     layout(withBucketId(rows, spec), dirCols)
       .write.partitionBy(dirCols: _*).parquet(tmp.toString)
     val staged = PartitionedWrite.mergeIntoReturning(tmp, dir)
@@ -895,9 +892,7 @@ private[catalog] object LakeProcedures {
         s"$procName: '$colName' is rename-evolved (its files carry a " +
           "different physical name) — partition directory names bind " +
           "to physical columns; compact/recreate before promoting it")
-    val schema = DataType.fromJson(
-      Files.readString(dir.resolve("_graft_schema.json")))
-      .asInstanceOf[StructType]
+    val schema = Evolutions.requireDeclaredSchema(dir)
     val field = schema.fields.find(_.name.equalsIgnoreCase(colName))
       .getOrElse(throw new IllegalArgumentException(
         s"$procName: no such column '$colName'"))

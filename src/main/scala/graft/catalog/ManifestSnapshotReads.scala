@@ -24,13 +24,8 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
 
   // lazy: the snapshot-lifecycle procedures construct this reader
   // for metadata alone and never pay the sidecar reads
-  private lazy val logical: org.apache.spark.sql.types.StructType = {
-    val sidecar = tableDir.resolve("_graft_schema.json")
-    require(Files.exists(sidecar),
-      s"$tableDir has no declared schema sidecar — corrupt table dir")
-    org.apache.spark.sql.types.DataType.fromJson(Files.readString(sidecar))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-  }
+  private lazy val logical: org.apache.spark.sql.types.StructType =
+    Evolutions.requireDeclaredSchema(tableDir)
 
   private lazy val bucketed: Boolean =
     PartitionSpec.read(tableDir).exists(_.isInstanceOf[PartitionSpec.Bucket])
@@ -194,19 +189,16 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
           java.util.List.of[org.apache.spark.sql.Row](), logical)
       else {
         import org.apache.spark.sql.functions.col
-        // the shared live-row read ([[MorDeletes.liveRows]]): per-
+        // the one resolved read ([[MorDeletes.resolvedRows]]): per-
         // spec-shape union with the explicit physical schema (one
         // parquet read cannot mix directory shapes; inference-typed
-        // dir values could coerce across the union), merge-on-read
-        // delete files anti-joined away — so the feed diffs LIVE rows
-        // per version, and a MoR delete commit emits its rows as
-        // retractions like any other delete. PK tables read RESOLVED
-        // ([[PkTables.resolvedRows]] — equality deletes applied,
-        // latest version per key).
-        val raw = pkDef match {
-          case Some(pk) => PkTables.resolvedRows(spark, tableDir, s, pk)
-          case None => MorDeletes.liveRows(spark, tableDir, s.files)
-        }
+        // dir values could coerce across the union), pending deletes
+        // applied — so the feed diffs LIVE rows per version, and a MoR
+        // delete commit emits its rows as retractions like any other
+        // delete. PK tables read RESOLVED (equality deletes applied,
+        // latest version per key), the rows SQL returns.
+        val raw = MorDeletes.resolvedRows(spark,
+          MorDeletes.ReadScope.of(tableDir, s))
         val unbucketed =
           if (bucketed) raw.drop(PartitionSpec.BucketDir) else raw
         // ALWAYS project to logical order, rename evolution or not:

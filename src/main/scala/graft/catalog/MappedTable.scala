@@ -20,6 +20,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 private[catalog] object Evolutions {
 
   val MappingSidecar = "_graft_mapping.json"
+  val SchemaSidecar = "_graft_schema.json"
+
+  /** The declared LOGICAL schema of a table dir (the CREATE/ALTER-time
+    * `_graft_schema.json` sidecar); None when the sidecar is absent. */
+  def declaredSchema(tableDir: java.nio.file.Path)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val f = tableDir.resolve(SchemaSidecar)
+    if (!java.nio.file.Files.exists(f)) None
+    else Some(org.apache.spark.sql.types.DataType
+      .fromJson(java.nio.file.Files.readString(f))
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
+
+  /** [[declaredSchema]] of a VERSIONED table dir, where the sidecar is
+    * mandatory: absent means the directory is corrupt. */
+  def requireDeclaredSchema(tableDir: java.nio.file.Path)
+      : org.apache.spark.sql.types.StructType = {
+    val s = declaredSchema(tableDir)
+    require(s.isDefined,
+      s"$tableDir has no declared schema sidecar — corrupt table dir")
+    s.get
+  }
 
   /** logical → physical column renames of a table dir; empty when the
     * sidecar is absent. */

@@ -385,16 +385,8 @@ object MaterializedView {
           spark, d.source, d.keys, fromV, to)
         // the signed delta fold (applyChangelogAggregateRetract's
         // algebra, plus the group-liveness row delta)
-        val afterRows = changes
-          .filter(col("op") =!= graft.cdc.ChangeEvent.OpDelete &&
-            col("after").isNotNull)
-          .select(col("after.*") +: Seq(lit(1L).as("__w")): _*)
-        val beforeRows = changes
-          .filter(col("op") =!= graft.cdc.ChangeEvent.OpCreate &&
-            col("before").isNotNull)
-          .select(col("before.*") +: Seq(lit(-1L).as("__w")): _*)
         applyDelta(spark, mvRef, mvDir, d,
-          afterRows.unionByName(beforeRows),
+          graft.cdc.Upsert.signedRows(changes),
           () => spark.sql(s"SELECT * FROM ${d.source} VERSION AS OF $to"),
           Map(SourceVersionKey -> to), foreignGuard,
           _.copy(version = to))
@@ -451,13 +443,7 @@ object MaterializedView {
       else Some(Catalog.readTableChanges(spark, d.source, d.keys,
         fromF, toF).localCheckpoint(true))
     val factLegs = changes.toSeq.map { ch =>
-      val fu = ch.filter(col("op") =!= graft.cdc.ChangeEvent.OpDelete &&
-          col("after").isNotNull).select(col("after.*"))
-        .withColumn("__w", lit(1L))
-        .unionByName(
-          ch.filter(col("op") =!= graft.cdc.ChangeEvent.OpCreate &&
-            col("before").isNotNull).select(col("before.*"))
-          .withColumn("__w", lit(-1L)))
+      val fu = graft.cdc.Upsert.signedRows(ch)
       if (fromD == toD) fu.join(dimTo, d.joinCols, "inner")
       else fu.join(dimBoth, d.joinCols, "inner")
         .filter(col("__w") === col("__st")).drop("__st")

@@ -5,9 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, Join, JoinHint, LogicalPlan, MergeIntoTable, Project, UpdateTable}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, substring_index}
@@ -35,23 +34,27 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *    with it (new files have new names, so old coordinates cannot
   *    address them — the property Iceberg needs sequence numbers for,
   *    position deletes get by construction).
-  *  - READ: a snapshot that carries delete files cannot be served by
-  *    a bare parquet scan — [[MorScanRewrite]] (attached to the
-  *    session's optimizer by [[PartitionedLakeTable]] the moment a
-  *    delete-carrying table is loaded) swaps the scan relation for a
-  *    distributed plan: per-shape parquet read of the DATA files with
-  *    `(basename(_metadata.file_path), _metadata.row_index)`
-  *    materialized, LEFT ANTI joined against the delete files on the
-  *    coordinate pair, projected back to the relation's own output
-  *    attributes. The delete side is a small parquet relation, so the
-  *    join plans as a broadcast anti-join — the fact scan never
-  *    shuffles; pushed filters re-attach beneath the join so data
-  *    skipping survives. Nothing is collected on the driver.
-  *  - MAINTENANCE: `CALL compact` (and `zorder`) reads the live rows
-  *    (deletes applied), rewrites, and commits a manifest WITHOUT the
-  *    delete files — materializing the deletes and restoring the
-  *    plain fast path (metadata-only aggregates, SPJ, exact numRows),
-  *    which stay gated while deletes are pending.
+  *  - READ: ONE resolved read, [[resolve]], is what every reader of a
+  *    delete-carrying or primary-key snapshot sees — SQL scans
+  *    ([[MorScanRewrite]], attached to the session's optimizer by
+  *    [[PartitionedLakeTable]] the moment such a table is loaded,
+  *    splices it in place of the scan relation), `CALL compact`/
+  *    `zorder` and the change feed's per-version read
+  *    ([[resolvedRows]]), and both DELETE modes. Over a per-shape
+  *    parquet read of the DATA files with `(file, pos)` coordinates
+  *    materialized it applies position deletes (a broadcast deletion
+  *    vector under [[VectorMaxConf]], else a LeftAnti join on the
+  *    coordinates), then — primary-key tables — equality deletes and
+  *    latest-per-key ([[PkTables]]). The same snapshot reads the same rows
+  *    through every surface, and the read `CALL compact` rewrites is
+  *    the read SQL returns. Pushed filters re-attach on the data side,
+  *    so data skipping survives. Nothing is collected on the driver
+  *    beyond the ceiling-bounded vectors.
+  *  - MAINTENANCE: `CALL compact` (and `zorder`) rewrites the resolved
+  *    rows and commits a manifest WITHOUT the delete files —
+  *    materializing the deletes and restoring the plain fast path
+  *    (metadata-only aggregates, SPJ, exact numRows), which stay gated
+  *    while deletes are pending.
   *
   * Rewrites that replace data files validate under
   * [[Snapshots.validateRewrite]]: a delete file committed
@@ -176,36 +179,154 @@ private[catalog] object MorDeletes {
     }.reduce(_ unionByName _)
   }
 
-  /** Anti-join the pending deletes away; coordinates stay available
-    * on the output (callers drop them when done). */
-  def applyDeletes(spark: SparkSession, tableDir: Path,
-                   dataWithCoords: DataFrame,
-                   deletes: Seq[String],
-                   hasRootData: Boolean = false): DataFrame =
-    if (deletes.isEmpty) dataWithCoords
-    else {
-      val del = readDeletes(spark, tableDir, deletes, hasRootData)
-      dataWithCoords.join(del,
-        dataWithCoords(FileKeyCol) === del(FileKeyCol) &&
-          dataWithCoords(PosKeyCol) === del(PosKeyCol),
-        "left_anti")
+  /** What the resolved read needs to know about the snapshot it reads:
+    * the table dir and file list (root-level data files decide how a
+    * legacy basename coordinate maps, [[readDeletes]]), the per-file
+    * birth sequences and stats (delete-file row counts size the
+    * deletion vector from metadata), the logical→physical renames, and
+    * the primary key with whether the snapshot needs latest-per-key
+    * resolution (`pkDirty` — false when [[PkTables.resolvedClean]]). */
+  final case class ReadScope(tableDir: Path, files: Seq[String],
+                             seqs: Map[String, Long],
+                             stats: Map[String, FileStats.FileStat],
+                             renames: Map[String, String],
+                             pk: Option[PkTables.PkDef], pkDirty: Boolean) {
+    def hasRootData: Boolean =
+      Snapshots.dataFiles(files).exists(!_.contains('/'))
+  }
+
+  object ReadScope {
+    def of(tableDir: Path, s: Snapshots.Snapshot): ReadScope = {
+      val pk = PkTables.read(tableDir)
+      ReadScope(tableDir, s.files, s.seqs,
+        if (Snapshots.deleteFiles(s.files).isEmpty) Map.empty
+        else Snapshots.statsOf(tableDir, s),
+        Evolutions.renames(tableDir), pk,
+        pk.isDefined && !PkTables.resolvedClean(tableDir, s))
+    }
+  }
+
+  /** THE RESOLVED READ — the one place pending deletes and
+    * latest-per-key resolution apply, for SQL scans
+    * ([[MorScanRewrite]]), compact/zorder, the change feed's
+    * per-version read and merge-on-read DML alike. `data` carries the
+    * row coordinates ([[readDataWithCoords]], or the bucket-local base
+    * of [[PkBucketResolve.tryBase]], which also carries the birth
+    * sequence); `posDels`/`eqDels` are the delete files that can touch
+    * it (already pruned by the caller). In order:
+    *  - position deletes ([[withoutPositionDeletes]]): the broadcast
+    *    deletion vector under [[VectorMaxConf]], else the anti-join;
+    *  - PRIMARY-KEY tables only: the birth sequence
+    *    ([[PkTables.SeqCol]]), then equality deletes — the scan-local
+    *    [[PkBucketResolve.eqVectorFilter]] under the same ceiling, else
+    *    the anti-join against [[PkTables.canonicalEqDeletes]] under
+    *    [[PkTables.eqKillCond]];
+    *  - latest-per-key ([[PkTables.PkDef.ladder]]/`pick`, one partial-
+    *    aggregatable hash aggregate by key over `values` — default:
+    *    every non-key, non-helper column), skipped when the snapshot
+    *    is provably one-version-per-key.
+    * Output: the key and value columns when resolved by key, else
+    * `data`'s columns (helpers included); callers select by name. */
+  def resolve(spark: SparkSession, scope: ReadScope, data: DataFrame,
+              posDels: Seq[String], eqDels: Seq[String],
+              values: Option[Seq[String]] = None): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val live = withoutPositionDeletes(spark, scope, data, posDels)
+    scope.pk.fold(live) { pk =>
+      val tableDir = scope.tableDir
+      val physKeys = pk.keys.map(k => scope.renames.getOrElse(k, k))
+      val delField = PkTables.delFieldOf(tableDir, pk)
+      val keySchema = PkTables.keyFileSchema(tableDir, pk.keys)
+      lazy val seqBc = PkTables.seqBroadcastFor(spark, tableDir, scope.seqs)
+      val sequenced =
+        if (live.columns.contains(PkTables.SeqCol)) live
+        else live.withColumn(PkTables.SeqCol,
+          PkTables.seqColumnFor(seqBc, col(FileKeyCol)))
+      val eqApplied =
+        if (eqDels.isEmpty) sequenced
+        else PkBucketResolve.eqVectorFilter(spark, tableDir, eqDels,
+            keySchema, scope.seqs, delField, attrsOf(sequenced)) match {
+          case Some(keep) =>
+            sequenced.filter(org.apache.spark.sql.GraftBridge.column(keep))
+          case None =>
+            val ed = PkTables.canonicalEqDeletes(
+              PkTables.readEqDeletes(spark, tableDir, eqDels, keySchema,
+                seqBc, delField),
+              keySchema.fieldNames.toSeq, delField.map(_.dataType))
+            sequenced.join(ed,
+              physKeys.map(k => sequenced(k) === ed(k)).reduce(_ && _) &&
+                PkTables.eqKillCond(delField.map(f => sequenced(f.name)),
+                  sequenced(PkTables.SeqCol),
+                  delField.map(_ => ed(PkTables.DelFieldCol)),
+                  ed(PkTables.DelSeqCol)),
+              "left_anti")
+        }
+      if (!scope.pkDirty) eqApplied
+      else {
+        val ord = pk.ladder(delField.map(f => col(f.name)),
+          col(PkTables.SeqCol), col(FileKeyCol), col(PosKeyCol))
+        // field-agg declarations key by LOGICAL names
+        val toLogical = scope.renames.map(_.swap)
+        def pick(name: String, c: org.apache.spark.sql.Column) =
+          pk.pick(toLogical.getOrElse(name, name), c, ord)
+        val helpers = Set(FileKeyCol, PosKeyCol, PkTables.SeqCol)
+        val valueCols = values
+          .getOrElse(eqApplied.columns.toSeq.filterNot(helpers))
+          .distinct.filterNot(physKeys.contains)
+        val aggCols =
+          if (valueCols.isEmpty) Seq(pick("_gpk_d", lit(1)).as("_gpk_d"))
+          else valueCols.map(c => pick(c, col(c)).as(c))
+        eqApplied.groupBy(physKeys.map(col): _*)
+          .agg(aggCols.head, aggCols.tail: _*)
+      }
+    }
+  }
+
+  /** Pending POSITION deletes applied to a coordinate-carrying frame:
+    * the broadcast deletion vector as a scan-local filter (no join
+    * operator, immune to broadcast-threshold degradation — one
+    * churn-heavy partition can never make the fact side shuffle) when
+    * the coordinate count fits [[VectorMaxConf]], the LeftAnti join
+    * on `(file, pos)` past it. */
+  def withoutPositionDeletes(spark: SparkSession, scope: ReadScope,
+                             data: DataFrame, dels: Seq[String]): DataFrame =
+    if (dels.isEmpty) data
+    else vectorFor(spark, scope.tableDir, dels,
+        b => scope.stats.get(b).flatMap(_.rows), scope.hasRootData) match {
+      case Some(bc) =>
+        val attr = attrsOf(data)
+        data.filter(org.apache.spark.sql.GraftBridge.column(
+          org.apache.spark.sql.catalyst.expressions.Not(
+            DeleteVectorContains(bc, attr(FileKeyCol), attr(PosKeyCol)))))
+      case None =>
+        val del = readDeletes(spark, scope.tableDir, dels, scope.hasRootData)
+        data.join(del,
+          data(FileKeyCol) === del(FileKeyCol) &&
+            data(PosKeyCol) === del(PosKeyCol),
+          "left_anti")
     }
 
-  /** The LIVE rows of a snapshot's `files` in physical names, pending
-    * deletes applied, coordinate columns dropped — the shared read
-    * every maintenance rewrite (compact / zorder / copy-on-write DML)
-    * builds on. */
-  def liveRows(spark: SparkSession, tableDir: Path,
-               files: Seq[String]): DataFrame = {
-    val dels = Snapshots.deleteFiles(files)
-    if (dels.isEmpty)
-      // clean snapshot: the shared per-shape read, no coordinate cost
-      Snapshots.readFiles(spark, tableDir, files).drop(Snapshots.FileCol)
-    else
-      applyDeletes(spark, tableDir,
-        readDataWithCoords(spark, tableDir, files), dels,
-        hasRootData = Snapshots.dataFiles(files).exists(!_.contains('/')))
-        .drop(FileKeyCol, PosKeyCol)
+  /** A frame's analyzed output attributes by case-insensitive name. */
+  private[catalog] def attrsOf(df: DataFrame): String => Attribute = {
+    val byName = df.queryExecution.analyzed.output
+      .map(a => a.name.toLowerCase -> a).toMap
+    n => byName(n.toLowerCase)
+  }
+
+  /** The RESOLVED rows of every file in `scope`, physical names, helper
+    * columns dropped — the rows compact/zorder rewrite, the change
+    * feed diffs per version and copy-on-write DELETE restages. A scope
+    * with nothing to resolve reads without coordinates. */
+  def resolvedRows(spark: SparkSession, scope: ReadScope): DataFrame = {
+    val posDels = Snapshots.deleteFiles(scope.files)
+    val eqDels = PkTables.eqDeleteFiles(scope.files)
+    if (posDels.isEmpty && eqDels.isEmpty && !scope.pkDirty)
+      Snapshots.readFiles(spark, scope.tableDir, scope.files)
+        .drop(Snapshots.FileCol)
+    else resolve(spark, scope,
+        readDataWithCoords(spark, scope.tableDir, scope.files),
+        posDels, eqDels)
+      .drop(FileKeyCol, PosKeyCol, PkTables.SeqCol, "_gpk_d")
   }
 
   /** ONE-PASS version diff of a plain (non-PK) merge-on-read table
@@ -382,28 +503,36 @@ private[catalog] object MorDeletes {
       .otherwise(lit(""))
   }
 
-  /** Persist a `(file, pos, target-dir)` hit set as delete files,
-    * one file set per TARGET PARTITION DIRECTORY, returning the
+  /** Persist a `(file, pos, target-dir)` hit set as delete files
+    * (`delete-` basenames), coordinates sorted by `(file, pos)` — the
+    * order readers and the minor compactor
+    * (rewrite_position_delete_files) like. */
+  def writeDeleteFiles(spark: SparkSession, tableDir: Path,
+                       hits: DataFrame): Seq[String] =
+    writeScoped(tableDir, hits.toDF("file", "pos", TargetDirCol),
+      Seq(TargetDirCol, "file", "pos"), Snapshots.DeleteDirName,
+      "delete", ".__mordel-")
+
+  /** Persist `rows` (carrying [[TargetDirCol]]) as delete files under
+    * `dirName`, ONE file set per TARGET PARTITION DIRECTORY, each part
+    * named `<prefix>-<write id>-<i>.parquet`, returning the
     * table-relative paths to commit. Files land before the manifest
     * references them (the ordinary publish-then-commit discipline);
-    * `delete-` basenames keep them recognizable by name alone. */
-  def writeDeleteFiles(spark: SparkSession, tableDir: Path,
-                       hits: DataFrame): Seq[String] = {
-    val tmp = tableDir.resolveSibling(
-      tableDir.getFileName.toString + ".__mordel-" +
-        java.util.UUID.randomUUID().toString.take(8))
+    * the prefix keeps them recognizable by name alone. */
+  def writeScoped(tableDir: Path, rows: DataFrame, sortCols: Seq[String],
+                  dirName: String, prefix: String,
+                  stagingTag: String): Seq[String] = {
+    val tmp = tableDir.resolveSibling(tableDir.getFileName.toString +
+      stagingTag + java.util.UUID.randomUUID().toString.take(8))
     PartitionedWrite.deleteRecursive(tmp)
-    // converge each target partition's coordinates onto one task —
-    // without this, partitionBy opens a writer per (scan task ×
-    // target dir) and a broad delete commits task-count × partitions
-    // tiny files into the manifest
-    hits.toDF("file", "pos", TargetDirCol)
-      .repartition(col(TargetDirCol))
-      // coordinates land sorted by (file, pos) — the order readers
-      // and the minor compactor (rewrite_position_delete_files) like
-      .sortWithinPartitions(col(TargetDirCol), col("file"), col("pos"))
+    // converge each target partition's rows onto one task — without
+    // this, partitionBy opens a writer per (scan task × target dir)
+    // and a broad delete commits task-count × partitions tiny files
+    // into the manifest
+    rows.repartition(col(TargetDirCol))
+      .sortWithinPartitions(sortCols.map(col): _*)
       .write.partitionBy(TargetDirCol).parquet(tmp.toString)
-    val delDir = tableDir.resolve(Snapshots.DeleteDirName)
+    val delDir = tableDir.resolve(dirName)
     Files.createDirectories(delDir)
     val parts = {
       val s = Files.walk(tmp)
@@ -415,13 +544,12 @@ private[catalog] object MorDeletes {
     }
     val writeId = java.util.UUID.randomUUID().toString.take(12)
     val moved = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"delete-$writeId-$i.parquet"
+      val name = s"$prefix-$writeId-$i.parquet"
       val sub = Option(tmp.relativize(p).getParent) // _gmor_tdir=<esc>
       val destDir = sub.fold(delDir)(d => delDir.resolve(d.toString))
       Files.createDirectories(destDir)
       Files.move(p, destDir.resolve(name))
-      sub.fold(s"${Snapshots.DeleteDirName}/$name")(d =>
-        s"${Snapshots.DeleteDirName}/$d/$name")
+      sub.fold(s"$dirName/$name")(d => s"$dirName/$d/$name")
     }
     PartitionedWrite.deleteRecursive(tmp)
     moved
@@ -585,21 +713,23 @@ private[catalog] object MorDeletes {
 
 /** The read-side half of merge-on-read (see [[MorDeletes]]): an
   * optimizer rule that replaces every scan relation over a
-  * delete-carrying snapshot with
+  * delete-carrying (or unresolved primary-key) snapshot with
   *
   * {{{
   *   Project(relation output attrs,
-  *     Join(LeftAnti, on (file, pos),
+  *     MorDeletes.resolve(
   *       [Filter(pushed predicate)]          // re-attached data-side
-  *       per-shape parquet read of the DATA files + row coordinates,
-  *       parquet read of the DELETE files))
+  *       per-shape parquet read of the DATA files + row coordinates))
   * }}}
   *
-  * The output attributes keep the relation's exprIds, so the
-  * enclosing plan is untouched. Pushed filters re-attach beneath the
-  * anti-join (V2 pushdown saw the dirty scan refuse them, so the full
-  * predicate is still in the Filter above) — parquet row-group
-  * skipping and V1 partition pruning run as if the table were clean.
+  * The rule owns only what belongs to the plan: the conjunct split and
+  * the physical-name remap, delete-file pruning, the bucket-local
+  * [[PkBucketResolve]] base, and the splice. The output attributes
+  * keep the relation's exprIds, so the enclosing plan is untouched.
+  * Pushed filters re-attach beneath the delete application (V2
+  * pushdown saw the dirty scan refuse them, so the full predicate is
+  * still in the Filter above) — parquet row-group skipping and V1
+  * partition pruning run as if the table were clean.
   * Row-level command targets are left alone: DELETE handles pending
   * deletes itself and UPDATE/MERGE are gated until compaction
   * ([[PartitionedLakeTable.newRowLevelOperationBuilder]]). The rule
@@ -631,7 +761,7 @@ private[catalog] final class MorScanRewrite extends Rule[LogicalPlan]
     }
 
   /** The (table, delete files) of a scan relation this rule must
-    * replace: a DELETE-CARRYING snapshot read (the anti-join swap), a
+    * replace: a DELETE-CARRYING snapshot read (the resolved-read swap), a
     * read that asked for the row-coordinate metadata columns (its
     * placeholder scan is a [[MorDeltaScan]]), or a delta-based
     * row-level operation's read ([[DeltaOperation]] — the relation
@@ -669,34 +799,14 @@ private[catalog] final class MorScanRewrite extends Rule[LogicalPlan]
     case Filter(cond, r: DataSourceV2ScanRelation)
         if dirtyOf(r).isDefined =>
       // subquery plans inside the condition rewrite first (they may
-      // scan dirty tables themselves); a condition that CARRIES a
-      // subquery stays ABOVE the swap (pushing it beneath would need
-      // outer-reference remapping inside the subquery plan)
+      // scan dirty tables themselves); [[swap]] splits the rest
       val cond2 = cond.transform {
         case se: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
           se.withNewPlan(rewrite(se.plan))
       }
-      val (table, dels) = dirtyOf(r).get
-      if (table.pkInfo.isDefined)
-        // PRIMARY-KEY resolution owns the conjunct split itself:
-        // key-only conjuncts push beneath the dedup, the rest (and
-        // every subquery conjunct) stay above
-        swapPk(r, Some(cond2), table, dels)
-      else {
-        val hasSubq = cond2.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])
-        // re-attach the full pushed predicate BENEATH the anti-join
-        // when it only speaks this relation's columns (correlated
-        // outer references stay above — correct, just unpushed)
-        if (!hasSubq && cond2.deterministic &&
-            cond2.references.subsetOf(r.outputSet))
-          swap(r, Some(cond2))
-        else Filter(cond2, swap(r, None))
-      }
+      swap(r, Some(cond2))
     case r: DataSourceV2ScanRelation if dirtyOf(r).isDefined =>
-      val (table, dels) = dirtyOf(r).get
-      if (table.pkInfo.isDefined) swapPk(r, None, table, dels)
-      else swap(r, None)
+      swap(r, None)
     case other =>
       other.mapChildren(rewrite).transformExpressions {
         case se: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
@@ -704,272 +814,132 @@ private[catalog] final class MorScanRewrite extends Rule[LogicalPlan]
       }
   }
 
+  private def physNames(r: DataSourceV2ScanRelation,
+                        scope: ReadScope): Map[String, String] =
+    r.output.map(o => o.name -> scope.renames.getOrElse(o.name, o.name)).toMap
+
+  /** `e` over the relation's attributes, re-pointed at `df`'s columns
+    * of the same physical name. */
+  private def remap(r: DataSourceV2ScanRelation, physOf: Map[String, String],
+                    df: DataFrame)(e: Expression): Expression = {
+    val names = r.output.map(a => a.exprId -> a.name).toMap
+    val attr = attrsOf(df)
+    e.transform {
+      case a: AttributeReference if names.contains(a.exprId) =>
+        attr(physOf(names(a.exprId)))
+    }
+  }
+
+  /** The resolved frame in place of relation `r`, projected to the
+    * relation's own output attributes (exprIds kept, so the enclosing
+    * plan is untouched). The spliced subtree is ANALYZED-but-not-
+    * optimized, and the enclosing plan is already past the optimizer's
+    * finish-analysis batch — RuntimeReplaceable expressions (the
+    * coordinate key's url_decode) must be replaced here or codegen
+    * meets the unreplaced form and fails. */
+  private def splice(r: DataSourceV2ScanRelation, physOf: Map[String, String],
+                     resolved: DataFrame): LogicalPlan = {
+    val plan = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
+      resolved.queryExecution.analyzed)
+    val outBy = plan.output.map(a => a.name.toLowerCase -> a).toMap
+    Project(r.output.map(o =>
+      Alias(outBy(physOf(o.name).toLowerCase), o.name)(exprId = o.exprId,
+        qualifier = o.qualifier)), plan)
+  }
+
+  /** Swap the relation for
+    *
+    * {{{
+    *   [Filter(conjuncts kept above)]
+    *   Project(relation output attrs,
+    *     MorDeletes.resolve(                  // deletes (+ PK dedup)
+    *       [Filter(pushed conjuncts)]         // data side
+    *       per-shape parquet read + (file, pos)))
+    * }}}
+    *
+    * Pushed: deterministic, subquery-free conjuncts over the relation's
+    * own columns (a subquery conjunct would need outer-reference
+    * remapping inside its plan; correlated outer references stay above
+    * — correct, just unpushed) — and on PRIMARY-KEY tables only
+    * KEY-ONLY ones: dropping a whole key never changes another key's
+    * winner, but filtering an old version away before the dedup would
+    * resurrect the version beneath it. Pushed conjuncts drive
+    * partition pruning, parquet pushdown and static pruning of BOTH
+    * delete kinds: they are laid out by target partition
+    * ([[TargetDirCol]]), so the proof that prunes data directories
+    * prunes delete FILES too — a one-partition query reads one
+    * partition's delete churn. The proof runs over the PHYSICALLY
+    * remapped predicate (the name space the partition spec and
+    * `_gmor_tdir` values speak), never the logical names, which could
+    * diverge under rename evolution. */
   private def swap(r: DataSourceV2ScanRelation,
                    cond: Option[Expression]): LogicalPlan = {
     val (table, allDels) = dirtyOf(r).get
-    val (tableDir, files, renames, spec) = table.morReadInfo
+    val (scope, spec) = table.morReadInfo
     val spark = SparkSession.active
-    val physOf: Map[String, String] =
-      r.output.map(o => o.name -> renames.getOrElse(o.name, o.name)).toMap
-    // the spliced subtree is ANALYZED-but-not-optimized, and the
-    // enclosing plan is already past the optimizer's finish-analysis
-    // batch — RuntimeReplaceable expressions (the coordinate key's
-    // url_decode) must be replaced here or codegen meets the
-    // unreplaced form and fails
-    val dataPlan = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
-      readDataWithCoords(spark, tableDir, files,
-        Some(r.output.map(o => physOf(o.name)))).queryExecution.analyzed)
-    val byPhys: Map[String, Attribute] =
-      dataPlan.output.map(a => a.name.toLowerCase -> a).toMap
-    def attrFor(logicalName: String): Attribute =
-      byPhys(physOf.getOrElse(logicalName, logicalName).toLowerCase)
-    // the relation's attrs -> the fresh data-side attrs, by exprId
+    val physOf = physNames(r, scope)
+    val physKeys = scope.pk.map(_.keys.map(k => scope.renames.getOrElse(k, k)))
     val names = r.output.map(a => a.exprId -> a.name).toMap
-    val remapped = cond.map(_.transform {
-      case a: AttributeReference if names.contains(a.exprId) =>
-        attrFor(names(a.exprId))
-    })
-    // static partition pruning of the DELETE side: coordinates are
-    // laid out by target partition ([[TargetDirCol]]), so the same
-    // predicate proof that prunes data directories prunes delete
-    // FILES — a one-partition query at 100 TB reads one partition's
-    // delete churn, not the table's. The proof runs over the
-    // PHYSICALLY remapped predicate (the name space the partition
-    // spec and `_gmor_tdir` directory values actually speak), the
-    // same expression the data side filters with — never the logical
-    // names, which could diverge under rename evolution.
-    val dels = remapped.fold(allDels)(c =>
-      pruneDeleteFiles(allDels, spec, Seq(c)))
-    val filtered = remapped.fold(dataPlan)(Filter(_, dataPlan))
-    // every delete target provably outside the predicate's partitions:
-    // no join at all — the read degrades to the plain pruned scan.
-    // Otherwise prefer the READER-LEVEL form: a broadcast deletion
-    // vector applied as a scan-local Filter (no join operator at all,
-    // immune to broadcast-threshold degradation — one churn-heavy
-    // partition can never make the FACT side shuffle); only a
-    // coordinate count past [[VectorMaxConf]] falls back to the
-    // LeftAnti join.
-    val hasRootData = Snapshots.dataFiles(files).exists(!_.contains('/'))
-    val joined = applyPosDeletes(spark, tableDir, filtered, dels,
-      byPhys, table, hasRootData)
-    Project(r.output.map(o =>
-      Alias(attrFor(o.name), o.name)(exprId = o.exprId,
-        qualifier = o.qualifier)), joined)
-  }
-
-  /** Pending POSITION deletes over an already-built data-side plan:
-    * the broadcast deletion-vector filter (scan-local, zero join) when
-    * the coordinate count fits the ceiling, the LeftAnti join past it.
-    * Shared by the plain merge-on-read swap and the PK resolution. */
-  private def applyPosDeletes(spark: SparkSession, tableDir: Path,
-                              filtered: LogicalPlan, dels: Seq[String],
-                              byPhys: Map[String, Attribute],
-                              table: PartitionedLakeTable,
-                              hasRootData: Boolean): LogicalPlan =
-    if (dels.isEmpty) filtered
-    else vectorFor(spark, tableDir, dels,
-      b => table.morStats.get(b).flatMap(_.rows), hasRootData) match {
-      case Some(bc) =>
-        Filter(org.apache.spark.sql.catalyst.expressions.Not(
-          DeleteVectorContains(bc,
-            byPhys(FileKeyCol.toLowerCase),
-            byPhys(PosKeyCol.toLowerCase))), filtered)
-      case None =>
-        // the spliced delete read carries RuntimeReplaceable exprs
-        // (url_decode in the legacy-key migration) — replace here,
-        // past the finish-analysis batch, or codegen fails
-        val delPlan = org.apache.spark.sql.catalyst.optimizer
-          .ReplaceExpressions(
-            readDeletes(spark, tableDir, dels, hasRootData)
-              .queryExecution.analyzed)
-        val joinCond = And(
-          EqualTo(byPhys(FileKeyCol.toLowerCase), delPlan.output.head),
-          EqualTo(byPhys(PosKeyCol.toLowerCase), delPlan.output(1)))
-        Join(filtered, delPlan, LeftAnti, Some(joinCond), JoinHint.NONE)
-    }
-
-  /** PRIMARY-KEY scan resolution ([[PkTables]]): swap the relation for
-    *
-    * {{{
-    *   [Filter(non-key conjuncts)]                    // post-dedup
-    *   Project(relation output attrs,
-    *     Aggregate(group by KEY,
-    *       max_by(col, struct(seq, file, pos)) per selected column,
-    *       [LeftAnti Join eq-deletes ON keys equal AND seq < del-seq]
-    *         [position deletes: vector filter / anti-join]
-    *           [Filter(KEY-ONLY conjuncts)]           // pre-dedup
-    *           per-shape parquet read + (file, pos) + broadcast-
-    *           looked-up birth sequence))
-    * }}}
-    *
-    * KEY-ONLY conjuncts are safe beneath the dedup (dropping a whole
-    * key never changes another key's winner) and they drive partition
-    * pruning / delete-file pruning / parquet pushdown exactly like the
-    * plain path; every other conjunct MUST wait above the aggregate —
-    * filtering an old version away pre-dedup would resurrect the
-    * version beneath it. The aggregate is partial-aggregatable
-    * (map-side combine: one candidate per key per task). A snapshot a
-    * key-aware compact left provably one-version-per-key skips the
-    * aggregate entirely (and clean tables never reach this rule). */
-  private def swapPk(r: DataSourceV2ScanRelation, cond: Option[Expression],
-                     table: PartitionedLakeTable,
-                     allDels: Seq[String]): LogicalPlan = {
-    import org.apache.spark.sql.functions.{lit, struct}
-    val (tableDir, files, renames, spec) = table.morReadInfo
-    val (pk, seqs) = table.pkInfo.get
-    val spark = SparkSession.active
-    val physOf: Map[String, String] =
-      r.output.map(o => o.name -> renames.getOrElse(o.name, o.name)).toMap
-    val physKeys = pk.keys.map(k => renames.getOrElse(k, k))
-    val names = r.output.map(a => a.exprId -> a.name).toMap
-    def isPkOnly(e: Expression): Boolean =
+    def pushable(e: Expression): Boolean =
       e.deterministic &&
         !e.exists(_.isInstanceOf[
           org.apache.spark.sql.catalyst.expressions.SubqueryExpression]) &&
         e.references.subsetOf(r.outputSet) &&
-        e.references.forall(a => names.get(a.exprId)
-          .exists(n => physKeys.contains(physOf.getOrElse(n, n))))
-    val conjuncts = cond.toSeq.flatMap(splitConjunctivePredicates)
-    val (pkConj, restConj) = conjuncts.partition(isPkOnly)
+        physKeys.forall(ks => e.references.forall(a => names.get(a.exprId)
+          .exists(n => ks.contains(physOf.getOrElse(n, n)))))
+    val (pushed, kept) =
+      cond.toSeq.flatMap(splitConjunctivePredicates).partition(pushable)
     // data read: the relation's columns plus the key (the dedup needs
     // it even when the query never asked) and the declared sequence
     // field (the ladder orders by it), coordinates ride along
-    val delField = PkTables.delFieldOf(tableDir, pk)
-    val selCols = (r.output.map(o => physOf(o.name)) ++ physKeys ++
+    val delField = scope.pk.flatMap(PkTables.delFieldOf(scope.tableDir, _))
+    val values = r.output.map(o => physOf(o.name))
+    val selCols = (values ++ physKeys.getOrElse(Nil) ++
       delField.map(_.name)).distinct
-    val eqAll = PkTables.eqDeleteFiles(files)
-    // BUCKET-LOCAL fast base ([[PkBucketResolve]]): a dirty read over
-    // the required partition-by-key layout resolves per leaf with NO
-    // shuffle Exchange — one key-grouped partition per identity/bucket
-    // leaf dir, equality deletes as a scan-local broadcast filter.
-    // Key conjuncts over IDENTITY PARTITION columns ride along (they
-    // prune whole dirs exactly — identity values live in dir names,
-    // never in files, so no parquet pushdown is lost); conjuncts
-    // touching stored key columns keep the pruned+pushed plan below
-    // (their post-filter exchange is already tiny); any structural
-    // miss falls back too.
+    val eqAll = PkTables.eqDeleteFiles(scope.files)
+    // BUCKET-LOCAL fast base ([[PkBucketResolve]]): a dirty PK read
+    // over the required partition-by-key layout resolves per leaf with
+    // NO shuffle Exchange — one key-grouped partition per identity/
+    // bucket leaf dir, equality deletes as a scan-local broadcast
+    // filter. Key conjuncts over IDENTITY PARTITION columns ride along
+    // (they prune whole dirs exactly — identity values live in dir
+    // names, never in files, so no parquet pushdown is lost);
+    // conjuncts touching stored key columns keep the pruned+pushed
+    // read below (their post-filter exchange is already tiny); any
+    // structural miss falls back too.
     val identityCols = spec.collect {
       case PartitionSpec.Identity(c) => c.toLowerCase
     }.toSet
-    val pkConjIdentityOnly = pkConj.forall(_.references.forall(a =>
+    val identityOnly = pushed.forall(_.references.forall(a =>
       names.get(a.exprId).exists(n =>
         identityCols(physOf.getOrElse(n, n).toLowerCase))))
-    val fastBase: Option[LogicalPlan] =
-      if (table.pkDirty && allDels.isEmpty && pkConjIdentityOnly)
-        PkBucketResolve.tryBase(spark, tableDir, table.name(), files,
-          seqs, spec, selCols, eqAll, pk, table.morStats, delField,
-          table, r.relation.catalog,
-          partFilter = byName => pkConj.reduceOption(And).map(_.transform {
-            case a: AttributeReference if names.contains(a.exprId) =>
-              byName(physOf(names(a.exprId)))
-          }))
-      else None
-    val eqApplied = fastBase.getOrElse {
-      val bc = PkTables.seqBroadcastFor(spark, tableDir, seqs)
-      val base = readDataWithCoords(spark, tableDir, files, Some(selCols))
-        .withColumn(PkTables.SeqCol,
-          PkTables.seqColumnFor(bc, org.apache.spark.sql.functions.col(FileKeyCol)))
-      val dataPlan = org.apache.spark.sql.catalyst.optimizer
-        .ReplaceExpressions(base.queryExecution.analyzed)
-      val byPhys: Map[String, Attribute] =
-        dataPlan.output.map(a => a.name.toLowerCase -> a).toMap
-      val remappedPk = pkConj.reduceOption(And).map(_.transform {
-        case a: AttributeReference if names.contains(a.exprId) =>
-          byPhys(physOf(names(a.exprId)).toLowerCase)
-      })
-      // both delete families prune statically off the key predicate
-      // (they share the _gmor_tdir= target layout)
-      val dels = remappedPk.fold(allDels)(c =>
-        pruneDeleteFiles(allDels, spec, Seq(c)))
-      val eqDels = remappedPk.fold(eqAll)(c =>
-        pruneDeleteFiles(eqAll, spec, Seq(c)))
-      val filtered = remappedPk.fold(dataPlan: LogicalPlan)(Filter(_, dataPlan))
-      val hasRootData = Snapshots.dataFiles(files).exists(!_.contains('/'))
-      val posApplied = applyPosDeletes(spark, tableDir, filtered, dels,
-        byPhys, table, hasRootData)
-      if (eqDels.isEmpty) posApplied
-      // prefer the SCAN-LOCAL broadcast vector (no join operator — the
-      // point lookup's pruned churn rides a codegen'd filter like
-      // position-delete vectors); only churn past the shared ceiling
-      // keeps the LeftAnti join
-      else PkBucketResolve.eqVectorFilter(spark, tableDir, eqDels,
-          PkTables.keyFileSchema(tableDir, pk.keys), seqs, delField,
-          n => byPhys(n.toLowerCase)) match {
-        case Some(keep) => Filter(keep, posApplied)
-        case None =>
-        // CANONICAL thresholds first ([[PkTables.canonicalEqDeletes]]):
-        // the anti-join must apply the same per-key two-family-max law
-        // as the vector and the merged files, or a stale superseded
-        // field delete kills a live same-commit row past the ceiling
-        val edPlan = org.apache.spark.sql.catalyst.optimizer
-          .ReplaceExpressions(
-            PkTables.canonicalEqDeletes(
-              PkTables.readEqDeletes(spark, tableDir, eqDels,
-                PkTables.keyFileSchema(tableDir, pk.keys), bc, delField),
-              PkTables.keyFileSchema(tableDir, pk.keys).fieldNames.toSeq,
-              delField.map(_.dataType))
-              .queryExecution.analyzed)
-        val edBy = edPlan.output.map(a => a.name.toLowerCase -> a).toMap
-        val keyEq: Seq[Expression] = physKeys.map(k =>
-          EqualTo(byPhys(k.toLowerCase), edBy(k.toLowerCase)))
-        val seq = byPhys(PkTables.SeqCol.toLowerCase)
-        val dseq = edBy(PkTables.DelSeqCol.toLowerCase)
-        import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, IsNotNull, IsNull, LessThan, Literal, Not, Or}
-        // the kill law ([[PkTables.eqKillCond]]) in catalyst form:
-        // blind deletes (null field) compare by commit seq; field-
-        // carrying deletes compare the (field, seq) ladder with the
-        // same-commit exclusion (a field-lowering update must not eat
-        // its own insert) — struct field names pinned identical on
-        // both sides (comparison requires same types including names)
-        val kill = delField match {
-          case None => LessThan(seq, dseq)
-          case Some(f) =>
-            val dataF = byPhys(f.name.toLowerCase)
-            val edF = edBy(PkTables.DelFieldCol.toLowerCase)
-            def pair(a: Expression, b: Expression) =
-              CreateNamedStruct(Seq(Literal("f"), a, Literal("s"), b))
-            Or(And(IsNull(edF), LessThan(seq, dseq)),
-              And(IsNotNull(edF),
-                And(Not(EqualTo(seq, dseq)),
-                  LessThan(pair(dataF, seq), pair(edF, dseq)))))
-        }
-        Join(posApplied, edPlan, LeftAnti,
-          Some((keyEq :+ kill).reduce(And)), JoinHint.NONE)
-      }
+    val fastBase: Option[LogicalPlan] = scope.pk
+      .filter(_ => scope.pkDirty && allDels.isEmpty && identityOnly)
+      .flatMap(pk => PkBucketResolve.tryBase(spark, scope.tableDir,
+        table.name(), scope.files, scope.seqs, spec, selCols, eqAll, pk,
+        scope.stats, delField, table, r.relation.catalog,
+        partFilter = byName => pushed.reduceOption(And).map(_.transform {
+          case a: AttributeReference if names.contains(a.exprId) =>
+            byName(physOf(names(a.exprId)))
+        })))
+    val resolved = fastBase match {
+      case Some(base) =>
+        resolve(spark, scope,
+          org.apache.spark.sql.GraftBridge.ofRows(spark, base),
+          Nil, Nil, Some(values))
+      case None =>
+        val data = readDataWithCoords(spark, scope.tableDir, scope.files,
+          Some(selCols))
+        val remapped = pushed.reduceOption(And).map(remap(r, physOf, data))
+        def pruned(fs: Seq[String]) =
+          remapped.fold(fs)(c => pruneDeleteFiles(fs, spec, Seq(c)))
+        resolve(spark, scope,
+          remapped.fold(data)(c =>
+            data.filter(org.apache.spark.sql.GraftBridge.column(c))),
+          pruned(allDels), pruned(eqAll), Some(values))
     }
-    // latest-per-key — skipped when this snapshot is provably
-    // one-version-per-key (a PK delta read over a freshly compacted
-    // table lands here with pkDirty=false)
-    val resolvedPlan =
-      if (!table.pkDirty) eqApplied
-      else {
-        val df = org.apache.spark.sql.GraftBridge.ofRows(spark, eqApplied)
-        val ord = pk.ladder(
-          delField.map(f => org.apache.spark.sql.functions.col(f.name)),
-          org.apache.spark.sql.functions.col(PkTables.SeqCol),
-          org.apache.spark.sql.functions.col(FileKeyCol),
-          org.apache.spark.sql.functions.col(PosKeyCol))
-        // field-agg declarations key by LOGICAL names
-        val toLogical = renames.map(_.swap)
-        def pick(name: String, c: org.apache.spark.sql.Column) =
-          pk.pick(toLogical.getOrElse(name, name), c, ord)
-        val valueCols = r.output.map(o => physOf(o.name)).distinct
-          .filterNot(physKeys.contains)
-        val aggCols =
-          if (valueCols.isEmpty) Seq(pick("_gpk_d", lit(1)).as("_gpk_d"))
-          else valueCols.map(c =>
-            pick(c, org.apache.spark.sql.functions.col(c)).as(c))
-        val agg = df.groupBy(
-            physKeys.map(org.apache.spark.sql.functions.col): _*)
-          .agg(aggCols.head, aggCols.tail: _*)
-        org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(
-          agg.queryExecution.analyzed)
-      }
-    val outBy = resolvedPlan.output.map(a => a.name.toLowerCase -> a).toMap
-    val proj = Project(r.output.map(o =>
-      Alias(outBy(physOf(o.name).toLowerCase), o.name)(exprId = o.exprId,
-        qualifier = o.qualifier)), resolvedPlan)
-    restConj.reduceOption(And).fold(proj: LogicalPlan)(Filter(_, proj))
+    val proj = splice(r, physOf, resolved)
+    kept.reduceOption(And).fold(proj: LogicalPlan)(Filter(_, proj))
   }
 }
 

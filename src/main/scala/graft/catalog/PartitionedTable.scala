@@ -277,15 +277,21 @@ private[catalog] final class PartitionedLakeTable(
   private[catalog] def morDeleteFiles: Seq[String] =
     snapshot.fold(Seq.empty[String])(s => Snapshots.deleteFiles(s.files))
 
-  /** (table dir, snapshot file list, logical→physical renames,
-    * partition spec) for [[MorScanRewrite]]'s data-side rebuild and
-    * delete-side pruning. */
+  /** This view's snapshot as the resolved read's scope
+    * ([[MorDeletes.resolve]]), and the partition spec
+    * [[MorScanRewrite]] prunes delete files with. */
   private[catalog] def morReadInfo
-      : (Path, Seq[String], Map[String, String], Seq[PartitionSpec.Field]) =
-    (tableDir, snapshot.fold(Seq.empty[String])(_.files), renames, spec)
+      : (MorDeletes.ReadScope, Seq[PartitionSpec.Field]) = (morScope, spec)
+
+  private lazy val morScope: MorDeletes.ReadScope =
+    MorDeletes.ReadScope(tableDir, snapshot.fold(Seq.empty[String])(_.files),
+      snapshot.fold(Map.empty[String, Long])(_.seqs),
+      // delete-file row counts ride every delete commit's stats block:
+      // the deletion vector sizes from manifest metadata alone
+      manifestStats.getOrElse(Map.empty), renames, pkDef, pkDirty)
 
   // every manifest-versioned view needs the read-side rewrite
-  // available: delete-carrying snapshots (the anti-join swap), scans
+  // available: delete-carrying snapshots (the resolved-read swap), scans
   // that ask for the row-coordinate metadata columns, and delta-based
   // row-level DML reads all plan through it. Attach BEFORE the query
   // that loaded this table optimizes (loadTable runs at analysis;
@@ -332,12 +338,6 @@ private[catalog] final class PartitionedLakeTable(
   private lazy val manifestStats: Option[Map[String, FileStats.FileStat]] =
     snapshot.map(s => Snapshots.statsOf(tableDir, s))
 
-  /** This view's per-file stats for [[MorScanRewrite]] — the deletion
-    * vector's metadata-only sizing source (delete-file row counts ride
-    * every delete commit's stats block). */
-  private[catalog] def morStats: Map[String, FileStats.FileStat] =
-    manifestStats.getOrElse(Map.empty)
-
   /** PRIMARY-KEY declaration ([[PkTables]]): present when the table
     * was created with `'primary-key'` / `'merge-engine'`. */
   private[catalog] lazy val pkDef: Option[PkTables.PkDef] =
@@ -350,11 +350,6 @@ private[catalog] final class PartitionedLakeTable(
   private[catalog] lazy val pkDirty: Boolean =
     pkDef.isDefined &&
       snapshot.exists(s => !PkTables.resolvedClean(tableDir, s))
-
-  /** (definition, per-file birth sequences) for
-    * [[MorScanRewrite.swapPk]]. */
-  private[catalog] def pkInfo: Option[(PkTables.PkDef, Map[String, Long])] =
-    pkDef.map(d => (d, snapshot.fold(Map.empty[String, Long])(_.seqs)))
 
   override def name(): String = tableName
   override def schema(): StructType = logicalSchema
@@ -838,10 +833,9 @@ private[catalog] final class PartitionedLakeTable(
         // match candidate basenames; same static proof as the read).
         val relevantDels = pendingDels.filter(f =>
           MorDeletes.targetDirOf(f).fold(true)(d => candDirSet(d.toString)))
-        val rows = MorDeletes.applyDeletes(spark, tableDir,
+        val rows = MorDeletes.resolve(spark, morScope,
           MorDeletes.readDataWithCoords(spark, tableDir, candFiles),
-          relevantDels,
-          hasRootData = dataF.exists(!_.contains('/')))
+          relevantDels, Nil)
         // the coordinate key IS the table-relative path, so the
         // target partition dir (which scopes the delete files the
         // read side prunes statically) is just its parent — no
@@ -886,7 +880,8 @@ private[catalog] final class PartitionedLakeTable(
       val tmp = tableDir.resolveSibling(
         tableDir.getFileName.toString + ".__rewrite-" +
           java.util.UUID.randomUUID().toString.take(8))
-      stage(MorDeletes.liveRows(spark, tableDir, candFiles ++ pendingDels)
+      stage(MorDeletes.resolvedRows(spark,
+          morScope.copy(files = candFiles ++ pendingDels))
         .drop(PartitionSpec.BucketDir), tmp)
       val staged = PartitionedWrite.mergeIntoReturning(tmp, tableDir)
       // optimistic commit under snapshot isolation: concurrent appends

@@ -159,16 +159,6 @@ private[catalog] object PkBucketResolve {
         PkFile(abs.toString, Files.size(abs), f,
           seqs.getOrElse(Snapshots.basename(f), 0L))
     }
-    // equality deletes → bounded broadcast vector, or bail
-    val keySchema = PkTables.keyFileSchema(tableDir, pk.keys)
-    val eqVec =
-      if (eqDels.isEmpty) None
-      else eqVectorFor(spark, tableDir, eqDels, keySchema, seqs,
-          delField) match {
-        case None => return None // over ceiling: keep the join plan
-        case some => some
-      }
-
     // schema split: identity columns ride as per-leaf constants
     val fileCols = selCols.filterNot(idSet)
     val fileFields = fileCols.map(c => phys(phys.fieldIndex(c)))
@@ -242,25 +232,27 @@ private[catalog] object PkBucketResolve {
     if (kgp.exists(_.isEmpty)) return None
     val rel: LogicalPlan =
       rel0.copy(keyGroupedPartitioning = Some(kgp.map(_.get)))
-    val eqApplied = eqVec.fold(rel) { case (keyTypes, bc) =>
-      val keyStruct = org.apache.spark.sql.catalyst.expressions
-        .CreateStruct(keySchema.fieldNames.map(byName(_)).toSeq)
-      org.apache.spark.sql.catalyst.plans.logical.Filter(
-        org.apache.spark.sql.catalyst.expressions.Not(
-          EqDeleteVectorKilled(bc, keyTypes, keyStruct,
-            byName(PkTables.SeqCol),
-            delField.map(f => byName(f.name)))), rel)
-    }
+    // equality deletes → bounded broadcast vector, or bail (over the
+    // ceiling: the caller keeps the join plan)
+    val eqApplied =
+      if (eqDels.isEmpty) rel
+      else eqVectorFilter(spark, tableDir, eqDels,
+          PkTables.keyFileSchema(tableDir, pk.keys), seqs, delField,
+          byName) match {
+        case Some(keep) =>
+          org.apache.spark.sql.catalyst.plans.logical.Filter(keep, rel)
+        case None => return None
+      }
     Some(residual.fold(eqApplied)(c =>
       org.apache.spark.sql.catalyst.plans.logical.Filter(c, eqApplied)))
   }
 
-  /** The scan-local equality-delete filter over an ALREADY-BUILT data
-    * plan (the V1 coordinate read of the audited fallback path) —
-    * point lookups and other pushed-read shapes then apply their
-    * (bucket-pruned) eq churn as a broadcast vector instead of a join
-    * operator, exactly like position-delete vectors. None when the
-    * churn exceeds the shared ceiling (callers keep the anti-join). */
+  /** The scan-local equality-delete filter over a data plan whose
+    * columns `attrOf` names — the bucket-local base and the resolved
+    * read ([[MorDeletes.resolve]]) apply their (pruned) eq churn as a
+    * broadcast vector instead of a join operator, exactly like
+    * position-delete vectors. None when the churn exceeds the shared
+    * ceiling (callers keep the anti-join). */
   def eqVectorFilter(spark: SparkSession, tableDir: Path,
                      eqDels: Seq[String], keySchema: StructType,
                      seqs: Map[String, Long],

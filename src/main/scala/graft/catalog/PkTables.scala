@@ -50,17 +50,19 @@ import org.apache.spark.sql.types.StructType
   *    entirely and every gated fast path (metadata-only aggregates,
   *    storage-partitioned joins, exact row counts) serves again.
   *
-  * Read-side plan shape ([[MorScanRewrite.swapPk]]): per-shape parquet
-  * read of the data files with `(file, pos)` coordinates and the
-  * broadcast-looked-up birth sequence, PK-ONLY predicate conjuncts
-  * pushed beneath (a key-determined filter can never change a key's
-  * winner; non-key predicates must wait for the dedup — filtering an
-  * old version away BEFORE dedup would resurrect the one beneath it),
-  * equality deletes anti-joined by (key equal, seq <), then ONE
-  * hash aggregate `max_by(col, struct(seq, file, pos))` per selected
-  * column, grouped by the key. The aggregate is partial-aggregatable
-  * (map-side combine ships one candidate row per key per task), and
-  * the bucket-by-key layout keeps each key's versions co-located. */
+  * Read side: ONE resolved read ([[MorDeletes.resolve]]) serves SQL
+  * scans ([[MorScanRewrite]]), key-aware compact and the change feed —
+  * per-shape parquet read of the data files with `(file, pos)`
+  * coordinates and the broadcast-looked-up birth sequence, PK-ONLY
+  * predicate conjuncts pushed beneath on SQL scans (a key-determined
+  * filter can never change a key's winner; non-key predicates must
+  * wait for the dedup — filtering an old version away BEFORE dedup
+  * would resurrect the one beneath it), equality deletes under
+  * [[eqKillCond]], then ONE hash aggregate `max_by(col, struct(seq,
+  * file, pos))` per selected column, grouped by the key. The aggregate
+  * is partial-aggregatable (map-side combine ships one candidate row
+  * per key per task), and the bucket-by-key layout keeps each key's
+  * versions co-located. */
 object PkTables {
 
   /** Table properties (CREATE TABLE … TBLPROPERTIES). */
@@ -412,10 +414,11 @@ object PkTables {
     * union exactly), the FIELD family keeps the lex-max `(field, seq)`
     * pair. This is THE kill-law normal form, shared by every consumer:
     * the broadcast vector ([[EqDeleteVectorKilled]]) folds to it on the
-    * driver, `rewrite_eqdelete_files` persists it, and the join-form
-    * readers ([[resolvedRows]], the [[MorDeletes.MorScanRewrite]]
-    * anti-join fallback) MUST reduce to it before applying
-    * [[eqKillCond]] — testing a row against every raw pair diverges:
+    * driver, `rewrite_eqdelete_files` persists it, and the one resolved
+    * read ([[MorDeletes.resolve]] — every SQL scan, compact, the change
+    * feed) reduces to it before its anti-join applies [[eqKillCond]]
+    * past the vector ceiling — testing a row against every raw pair
+    * diverges:
     * with two pending field deletes (5,s2) and (10,s3), the row the
     * s3 update itself inserted at a LOWERED field (2,s3) survives the
     * lex-max pair via the same-commit exclusion, but the stale (5,s2)
@@ -480,44 +483,14 @@ object PkTables {
   }
 
   /** Persist a key-set DataFrame (key columns in [[keyFileSchema]]
-    * order + [[MorDeletes.TargetDirCol]]) as equality-delete files,
-    * one set per target partition directory — the twin of
-    * [[MorDeletes.writeDeleteFiles]], returning table-relative paths
-    * to commit. */
+    * order + [[MorDeletes.TargetDirCol]]) as equality-delete files
+    * ([[MorDeletes.writeScoped]], `eqdelete-` basenames). */
   def writeEqDeleteFiles(spark: SparkSession, tableDir: Path,
-                         keys: DataFrame): Seq[String] = {
-    val tmp = tableDir.resolveSibling(
-      tableDir.getFileName.toString + ".__eqdel-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    PartitionedWrite.deleteRecursive(tmp)
-    keys
-      .repartition(col(MorDeletes.TargetDirCol))
-      .sortWithinPartitions(
-        keys.columns.filterNot(_ == MorDeletes.TargetDirCol).map(col) :+
-          col(MorDeletes.TargetDirCol): _*)
-      .write.partitionBy(MorDeletes.TargetDirCol).parquet(tmp.toString)
-    val delDir = tableDir.resolve(EqDeleteDirName)
-    Files.createDirectories(delDir)
-    val parts = {
-      val s = Files.walk(tmp)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq.sortBy(_.toString)
-      finally s.close()
-    }
-    val writeId = java.util.UUID.randomUUID().toString.take(12)
-    val moved = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"eqdelete-$writeId-$i.parquet"
-      val sub = Option(tmp.relativize(p).getParent) // _gmor_tdir=<esc>
-      val destDir = sub.fold(delDir)(d => delDir.resolve(d.toString))
-      Files.createDirectories(destDir)
-      Files.move(p, destDir.resolve(name))
-      sub.fold(s"$EqDeleteDirName/$name")(d => s"$EqDeleteDirName/$d/$name")
-    }
-    PartitionedWrite.deleteRecursive(tmp)
-    moved
-  }
+                         keys: DataFrame): Seq[String] =
+    MorDeletes.writeScoped(tableDir, keys,
+      keys.columns.toSeq.filterNot(_ == MorDeletes.TargetDirCol) :+
+        MorDeletes.TargetDirCol,
+      EqDeleteDirName, "eqdelete", ".__eqdel-")
 
   /** Commit validation for commits that WRITE equality deletes under a
     * predicate evaluated at `base`: any DATA file that appeared since
@@ -554,62 +527,11 @@ object PkTables {
           s"file(s) this $operation did not read — re-run")
   }
 
-  // ---- the resolved read (maintenance surface) ----------------------
-
-  /** The RESOLVED rows of a PK snapshot in PHYSICAL names — position
-    * deletes applied, equality deletes applied by sequence, one
-    * version per key — the read key-aware `CALL compact` rewrites.
-    * Column set: the full physical schema (helper columns dropped). */
-  def resolvedRows(spark: SparkSession, tableDir: Path,
-                   snap: Snapshots.Snapshot, pk: PkDef): DataFrame = {
-    import org.apache.spark.sql.functions.{struct, lit}
-    val files = snap.files
-    val posDels = Snapshots.deleteFiles(files)
-    val eqDels = eqDeleteFiles(files)
-    val renames = Evolutions.renames(tableDir)
-    val physKeys = pk.keys.map(k => renames.getOrElse(k, k))
-    val hasRoot = Snapshots.dataFiles(files).exists(!_.contains('/'))
-    val bc = seqBroadcastFor(spark, tableDir, snap.seqs)
-    var df = MorDeletes.readDataWithCoords(spark, tableDir, files)
-    df = MorDeletes.applyDeletes(spark, tableDir, df, posDels, hasRoot)
-    df = df.withColumn(SeqCol, seqColumnFor(bc, col(MorDeletes.FileKeyCol)))
-    val delField = delFieldOf(tableDir, pk)
-    val physField = delField.map(_.name)
-    if (eqDels.nonEmpty) {
-      val ed = canonicalEqDeletes(
-        readEqDeletes(spark, tableDir, eqDels,
-          keyFileSchema(tableDir, pk.keys), bc, delField),
-        keyFileSchema(tableDir, pk.keys).fieldNames.toSeq,
-        delField.map(_.dataType))
-      val cond = physKeys.map(k => df(k) === ed(k)).reduce(_ && _) &&
-        eqKillCond(physField.map(df(_)), df(SeqCol),
-          delField.map(_ => ed(DelFieldCol)), ed(DelSeqCol))
-      df = df.join(ed, cond, "left_anti")
-    }
-    val ord = pk.ladder(physField.map(col), col(SeqCol),
-      col(MorDeletes.FileKeyCol), col(MorDeletes.PosKeyCol))
-    // field-agg declarations key by LOGICAL names; this read speaks
-    // PHYSICAL — translate back (helper columns fold positionally,
-    // which for coords/bucket means last_non_null under aggregation:
-    // a single representative value, dropped or recomputed anyway)
-    val toLogical = renames.map(_.swap)
-    def pick(name: String, c: Column): Column =
-      pk.pick(toLogical.getOrElse(name, name), c, ord)
-    val valueCols = df.columns.toSeq
-      .filterNot(c => physKeys.contains(c) || c == SeqCol)
-    val aggCols =
-      if (valueCols.isEmpty) Seq(pick("_gpk_d", lit(1)).as("_gpk_d"))
-      else valueCols.map(c => pick(c, col(c)).as(c))
-    df.groupBy(physKeys.map(col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .drop(MorDeletes.FileKeyCol, MorDeletes.PosKeyCol, "_gpk_d")
-  }
-
   /** ONE-PASS version diff of a PK table (optimization guide §1.2/§2.4
     * — fix the distributed algorithm, remove shuffles outright): the
     * changelog of `prev → snap` computed as a SINGLE scan + SINGLE
-    * key shuffle, instead of `diff(resolvedRows(prev),
-    * resolvedRows(snap))`'s two scans + two resolution shuffles + a
+    * key shuffle, instead of the diff of the two snapshots' resolved
+    * reads ([[MorDeletes.resolvedRows]]) — two scans + two resolution shuffles + a
     * full-outer join (whose struct-extracted keys defeat partitioning
     * reuse — four exchanges total). Because resolution is PER KEY,
     * both states' images derive in ONE aggregate: every row carries
@@ -643,7 +565,7 @@ object PkTables {
                   prev: Snapshots.Snapshot, snap: Snapshots.Snapshot,
                   pk: PkDef, logical: StructType,
                   renames: Map[String, String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{lit, max, struct, when}
+    import org.apache.spark.sql.functions.{coalesce, lit, max, struct, when}
     val filesV = snap.files
     if (Snapshots.deleteFiles(filesV).nonEmpty) return None
     if (Snapshots.dataFiles(filesV).isEmpty) return None
@@ -745,17 +667,14 @@ object PkTables {
           physKeys.map(k => df(k) === col(s"_gpk_ck_$k")).reduce(_ && _),
           "left")
           .drop(physKeys.map(k => s"_gpk_ck_$k"): _*)
-        // the kill law over the canonical thresholds — the same
-        // disjunction [[eqKillCond]] applies via the anti-join form
+        // the kill law over each family's canonical threshold — a
+        // state with no threshold (NULL) kills nothing
         def killed(bl: Column, pr: Option[Column]): Column = {
-          val blind = bl.isNotNull && col(SeqCol) < bl
-          pr match {
-            case None => blind
-            case Some(p) =>
-              blind || (p.isNotNull && col(SeqCol) =!= p.getField("s") &&
-                struct(physField.map(col).get.as("f"),
-                  col(SeqCol).as("s")) < p)
-          }
+          val blind = coalesce(eqKillCond(None, col(SeqCol), None, bl),
+            lit(false))
+          pr.fold(blind)(p => blind || coalesce(
+            eqKillCond(physField.map(col), col(SeqCol),
+              Some(p.getField("f")), p.getField("s")), lit(false)))
         }
         (killed(col("_gpk_bl_b"),
            fld.map(_ => col("_gpk_pr_b"))),

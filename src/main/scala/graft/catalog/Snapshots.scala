@@ -945,12 +945,7 @@ private[catalog] object Snapshots {
     * `col=00123` to int, and a union would rewrite values). */
   def physicalReadSchema(tableDir: Path):
       org.apache.spark.sql.types.StructType = {
-    val sidecar = tableDir.resolve("_graft_schema.json")
-    require(Files.exists(sidecar),
-      s"$tableDir has no declared schema sidecar — corrupt table dir")
-    val logical = org.apache.spark.sql.types.DataType
-      .fromJson(Files.readString(sidecar))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val logical = Evolutions.requireDeclaredSchema(tableDir)
     val renames = Evolutions.renames(tableDir)
     val phys = org.apache.spark.sql.types.StructType(logical.fields.map(f =>
       f.copy(name = renames.getOrElse(f.name, f.name))))

@@ -201,6 +201,18 @@ object Upsert {
         .select(col("after.*")),
       keys, aggs)
 
+  /** A `op, before, after` changelog flattened to SIGNED rows: every
+    * after-image (c/u) with weight `__w` = +1, every before-image
+    * (u/d) with `__w` = −1 — the retraction algebra every signed fold
+    * (the retractable aggregate, the MV refreshes) consumes. */
+  def signedRows(changes: DataFrame): DataFrame =
+    changes
+      .filter(col("op") =!= ChangeEvent.OpDelete && col("after").isNotNull)
+      .select(col("after.*")).withColumn("__w", lit(1L))
+      .unionByName(changes
+        .filter(col("op") =!= ChangeEvent.OpCreate && col("before").isNotNull)
+        .select(col("before.*")).withColumn("__w", lit(-1L)))
+
   /** Retractable [[applyChangelogAggregate]] — consumes the FULL
     * changelog (c/u/d), the Paimon aggregation engine with
     * `changelog-producer` retraction inputs: an update subtracts its
@@ -226,19 +238,13 @@ object Upsert {
     val bad = aggs.collect { case (c, fn) if fn != "sum" && fn != "count" => s"$c:$fn" }
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"retractable aggregation supports sum|count only (not invertible: ${bad.mkString(",")})")
-    val afterRows = changes
-      .filter(col("op") =!= ChangeEvent.OpDelete && col("after").isNotNull)
-      .select(col("after.*") +: Seq(lit(1L).as("__w")): _*)
-    val beforeRows = changes
-      .filter(col("op") =!= ChangeEvent.OpCreate && col("before").isNotNull)
-      .select(col("before.*") +: Seq(lit(-1L).as("__w")): _*)
     val signedAggs = aggs.map { case (c, fn) =>
       (fn match {
         case "sum"   => sum(col(c) * col("__w"))
         case "count" => sum(when(col(c).isNotNull, col("__w")).otherwise(0L))
       }).as(c)
     }
-    val pre = afterRows.unionByName(beforeRows)
+    val pre = signedRows(changes)
       .groupBy(keys.map(col): _*).agg(signedAggs.head, signedAggs.tail: _*)
     val mergeAggs = aggs.map { case (c, _) => sum(col(c)).as(c) }
     state.fold(pre)(s => s.unionByName(pre)

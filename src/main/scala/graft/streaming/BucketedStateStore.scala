@@ -141,8 +141,9 @@ final class BucketedStateStore(spark: SparkSession, dir: String, val buckets: In
   def writeBuckets(df: DataFrame, keys: Seq[String], touched: Seq[Int],
                    version: Long, appliedBatch: Option[(String, Long)] = None): Unit = {
     if (touched.isEmpty) return
-    val ledger = (batchLedger ++ appliedBatch.map { case (t, b) =>
-      t -> math.max(b, batchLedger.getOrElse(t, Long.MinValue)) }).toSeq.sorted
+    val prior = batchLedger
+    val ledger = (prior ++ appliedBatch.map { case (t, b) =>
+      t -> math.max(b, prior.getOrElse(t, Long.MinValue)) }).toSeq.sorted
     val commit = math.max(version, versionsDesc.headOption.map(_ + 1).getOrElse(0L))
     df.withColumn("__b", bucketOf(keys.map(col)))
       .write.mode("overwrite").partitionBy("__b")

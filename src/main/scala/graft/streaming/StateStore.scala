@@ -102,8 +102,10 @@ object SnapshotReads {
   * (`'execution.checkpointing.mode'='EXACTLY_ONCE'`, tickets-cdc.sql:3).
   *
   * This class and its companion are the only code that lists,
-  * resolves, stamps or publishes `v=<n>` directories; the catalog
-  * reaches the layout through them. */
+  * resolves, stamps or publishes the FLAT `v=<n>` layout; the catalog
+  * reaches it through them. [[BucketedStateStore]] keeps its own
+  * `v=<n>/__b=<b>` layout (listed by its `versionsDesc`, committed by
+  * its `_graft_manifest`). */
 final class StateStore(spark: SparkSession, dir: String)
     extends SnapshotReads {
   private val fs = org.apache.hadoop.fs.FileSystem.get(

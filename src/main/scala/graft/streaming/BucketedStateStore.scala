@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed versioned state — the scale evolution of [[StateStore]],
   * mirroring the reference's `'bucket.num'='4'` hash distribution
@@ -66,14 +67,33 @@ final class BucketedStateStore(spark: SparkSession, dir: String, val buckets: In
     }
   }
 
-  /** Committed versions only (manifest present). */
-  private def committedDesc: Seq[(Long, Set[Int])] =
-    versionsDesc.flatMap(v => readManifest(v).map { case (b, _) => v -> b })
+  /** What one listing and one read of every live manifest show:
+    * every `v=<n>` dir, newest first, and the committed ones (manifest
+    * present) with their claimed buckets and ledger lines. */
+  private final class View(val versions: Seq[Long],
+                           val committed: Seq[(Long, Set[Int], Seq[(String, Long)])]) {
+    /** The newest committed version claiming bucket `b`. */
+    def holder(b: Int): Option[Long] =
+      committed.collectFirst { case (v, m, _) if m.contains(b) => v }
 
-  /** Greatest batch id per token across live manifests. */
-  private def batchLedger: Map[String, Long] =
-    versionsDesc.flatMap(v => readManifest(v).toSeq.flatMap(_._2))
-      .groupBy(_._1).map { case (t, ids) => t -> ids.map(_._2).max }
+    /** Greatest batch id per token across live manifests. */
+    def ledger: Map[String, Long] =
+      committed.flatMap(_._3).groupBy(_._1).map { case (t, ids) => t -> ids.map(_._2).max }
+
+    /** This view plus a commit newer than every version in it. */
+    def withCommit(v: Long, claimed: Set[Int], lines: Seq[(String, Long)]): View =
+      new View(v +: versions, (v, claimed, lines) +: committed)
+  }
+
+  private def view(): View = {
+    val vs = versionsDesc
+    new View(vs, vs.flatMap(v => readManifest(v).map { case (b, l) => (v, b, l) }))
+  }
+
+  /** Data schema of each version this instance wrote, or read alone
+    * cold. A version's files never change once committed, so these
+    * stay exact for its lifetime; [[expire]] drops the dead ones. */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[Long, StructType]
 
   /** Greatest changelog batch id a committed version records for this
     * token — the replay guard: `foreachBatch` is at-least-once, so a
@@ -83,37 +103,42 @@ final class BucketedStateStore(spark: SparkSession, dir: String, val buckets: In
     * fold would double-count — so [[CdcPipeline]] skips any batch with
     * `id <= lastAppliedBatch(token)`. Scanned over live manifests
     * (bounded by [[expire]]); [[compact]] carries the ledger forward. */
-  def lastAppliedBatch(token: String): Option[Long] = batchLedger.get(token)
+  def lastAppliedBatch(token: String): Option[Long] = view().ledger.get(token)
 
   private def bucketPath(v: Long, b: Int) = new Path(s"$dir/v=$v/__b=$b")
 
-  /** For each requested bucket: the data path in the newest version
-    * claiming it (no path if that version holds it empty). */
-  private def latestPaths(ids: Seq[Int]): Seq[Path] = {
-    val committed = committedDesc
-    ids.flatMap { b =>
-      committed.collectFirst { case (v, m) if m.contains(b) => v }
-        .flatMap { v =>
-          val p = bucketPath(v, b)
-          if (fs.exists(p)) Some(p) else None   // claimed-but-empty bucket
-        }
-    }
-  }
-
+  /** The requested buckets' current content. Buckets held by
+    * different versions — commits before and after a schema evolution
+    * (added column) — read as the superset schema with old rows
+    * null-filled, exactly Paimon/Iceberg add-column semantics.
+    *
+    * The schema comes from [[schemas]] when every holding version is
+    * in it, merged the way parquet `mergeSchema` merges footers, so the
+    * per-trigger hot path runs no Spark job before its own. A holding
+    * version this instance neither wrote nor read alone (another
+    * writer's, or any version of a cold store) may have changed the
+    * schema, so that read infers it from the footers as before: one
+    * footer job, merged across versions when it spans several. */
   def readBuckets(ids: Seq[Int]): Option[DataFrame] = {
-    val paths = latestPaths(ids).map(_.toString)
-    if (paths.isEmpty) None
+    val current = view()
+    // per requested bucket, the newest version claiming it; no path
+    // when that version holds it empty (claimed-but-empty bucket)
+    val held = ids.flatMap(b => current.holder(b).map(v => v -> bucketPath(v, b)))
+      .filter { case (_, p) => fs.exists(p) }
+    if (held.isEmpty) None
     else {
-      // mergeSchema when the buckets are held by DIFFERENT versions —
-      // commits before and after a schema evolution (added column) then
-      // read as the superset schema with old rows null-filled, exactly
-      // Paimon/Iceberg add-column semantics. Single-version reads (the
-      // steady state, and always post-compaction) skip the footer-merge
-      // job entirely, so the per-trigger hot path pays nothing.
-      val spansVersions =
-        paths.map(_.split("/v=")(1).takeWhile(_ != '/')).distinct.length > 1
-      Some(spark.read.option("mergeSchema", spansVersions.toString)
-        .parquet(paths: _*))
+      val paths = held.map(_._2.toString)
+      val versions = held.map(_._1).distinct.sorted
+      val known = versions.flatMap(schemas.get)
+      Some(
+        if (known.size == versions.size)
+          spark.read.schema(known.reduceLeft(GraftBridge.mergeSchemas)).parquet(paths: _*)
+        else {
+          val df = spark.read.option("mergeSchema", (versions.size > 1).toString)
+            .parquet(paths: _*)
+          if (versions.size == 1) schemas(versions.head) = df.schema
+          df
+        })
     }
   }
 
@@ -141,30 +166,34 @@ final class BucketedStateStore(spark: SparkSession, dir: String, val buckets: In
   def writeBuckets(df: DataFrame, keys: Seq[String], touched: Seq[Int],
                    version: Long, appliedBatch: Option[(String, Long)] = None): Unit = {
     if (touched.isEmpty) return
-    val prior = batchLedger
-    val ledger = (prior ++ appliedBatch.map { case (t, b) =>
-      t -> math.max(b, prior.getOrElse(t, Long.MinValue)) }).toSeq.sorted
-    val commit = math.max(version, versionsDesc.headOption.map(_ + 1).getOrElse(0L))
+    val prior = view()
+    val priorLedger = prior.ledger
+    val ledger = (priorLedger ++ appliedBatch.map { case (t, b) =>
+      t -> math.max(b, priorLedger.getOrElse(t, Long.MinValue)) }).toSeq.sorted
+    val commit = math.max(version, prior.versions.headOption.map(_ + 1).getOrElse(0L))
     df.withColumn("__b", bucketOf(keys.map(col)))
       .write.mode("overwrite").partitionBy("__b")
       .parquet(s"$dir/v=$commit")
+    schemas(commit) = df.schema
     val body = (touched.sorted.mkString(",") +:
       ledger.map { case (t, b) => s"batch=$t:$b" }).mkString("\n")
     val out = fs.create(manifestPath(commit), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
-    expire()
+    expire(prior.withCommit(commit, touched.toSet, ledger))
   }
 
-  /** Versions older than every bucket's current holder are dead. */
-  def expire(): Unit = {
-    val committed = committedDesc
-    if (committed.size < 2) return
-    val needed = (0 until buckets).flatMap(b =>
-      committed.collectFirst { case (v, m) if m.contains(b) => v })
+  /** Versions older than every bucket's current holder are dead.
+    * `current` is the commit's own view of the store, so expiring
+    * costs no second listing or manifest read. */
+  private def expire(current: View): Unit = {
+    if (current.committed.size < 2) return
+    val needed = (0 until buckets).flatMap(current.holder)
     if (needed.nonEmpty) {
       val floor = needed.min
-      versionsDesc.filter(_ < floor)
-        .foreach(v => fs.delete(new Path(s"$dir/v=$v"), true))
+      current.versions.filter(_ < floor).foreach { v =>
+        fs.delete(new Path(s"$dir/v=$v"), true)
+        schemas.remove(v)
+      }
     }
   }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.cdc.Upsert
 import graft.operators.Revenue
 import graft.sources.CdcSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -29,12 +30,21 @@ import org.apache.spark.sql.types.StructType
   * hash-bucketed by its DISTRIBUTION key (`TableSpec.dist`), which for
   * the fact table is the AGGREGATION key (movie_id), not the PK. Facts,
   * dimension and MV then share one bucket space, so a micro-batch
-  *   1. rewrites only the staging buckets its keys touch, and
-  *   2. recomputes the MV only for those buckets — a co-located
+  *   1. finds every table's touched buckets in one Spark job,
+  *   2. rewrites only the staging buckets its keys touch, and
+  *   3. recomputes the MV only for those buckets — a co-located
   *      bucket-local join+agg, exact retraction semantics included
   * — per-trigger cost tracks the change rate, not accumulated history
   * (the reference's `'bucket.num'='4'`, tickets-cdc.sql:34, plays the
   * same role for Fluss).
+  *
+  * Per-trigger cost is mostly driver work: planning, listing, commit
+  * and manifest IO around a few small jobs. The staging applies of
+  * step 2 touch disjoint stores (the reference runs them as separate
+  * Flink jobs), so they run concurrently, one thread per table, and
+  * their driver work and jobs overlap. The MV recompute waits for all
+  * of them: it joins the tickets and movies state those applies just
+  * committed, so it may not start before they have.
   */
 object CdcPipeline {
 
@@ -111,27 +121,14 @@ object CdcPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
         try {
-          // per-table staging upsert, touched-bucket granularity
-          val touchedByTable = tables.map { spec =>
-            // the source sequence passes through when the wire carries
-            // one (equal-ts_ms tie-break in Upsert.applyChangelog)
-            val envelope =
-              CdcSource.jsonEnvelope(cached, spec.name, spec.schema).cache()
-            try {
+          val touchedByTable = touchedBuckets(spark, cached, tables, stores)
+          // per-table staging upserts, touched-bucket granularity: each
+          // table has its own store, so the applies are independent
+          // (the reference runs them as separate Flink jobs) and overlap
+          inParallel(tables.filter(t => touchedByTable(t.name).nonEmpty).map {
+            spec => () =>
               val store = stores(spec.name)
-              // both sides' distribution keys: an update that moves a
-              // row across buckets must touch source AND target bucket
-              // (same bare-column shapes as writeBuckets' bucketOf —
-              // xxhash64(k1, k2) != xxhash64(struct(k1, k2))). ONE job
-              // for both sides — per-trigger cost here is Spark job
-              // scheduling overhead, not data volume, so the two
-              // per-side collect jobs it replaces were pure latency.
-              val touched = envelope.select(explode(array(
-                  Seq("after", "before").map(side =>
-                    when(col(side).isNotNull, store.bucketOf(
-                      spec.distKeys.map(k => col(s"$side.$k"))))): _*)).as("b"))
-                .filter(col("b").isNotNull)
-                .distinct().collect().map(_.getInt(0)).toSeq
+              val touched = touchedByTable(spec.name)
               // Replay guard (exactly-once): foreachBatch is
               // at-least-once — after a crash between the sink commit
               // and the checkpoint commit, the restarted stream
@@ -143,26 +140,25 @@ object CdcPipeline {
               // NEW corrupted version. The store's manifest records
               // the batch each commit applied; a batch the ledger
               // already covers is skipped for every engine.
-              val replayed = store.lastAppliedBatch(ledgerToken).exists(_ >= batchId)
-              if (touched.nonEmpty && !replayed) {
+              if (!store.lastAppliedBatch(ledgerToken).exists(_ >= batchId)) {
+                // the source sequence passes through when the wire
+                // carries one (equal-ts_ms tie-break in Upsert.applyChangelog)
+                val envelope = CdcSource.jsonEnvelope(cached, spec.name, spec.schema)
+                val state = store.readBuckets(touched)
                 val newTouched = spec.engine match {
-                  case MergeEngine.Deduplicate => Upsert.applyChangelog(
-                    store.readBuckets(touched), envelope, spec.keys)
-                  case MergeEngine.PartialUpdate => Upsert.applyChangelogPartial(
-                    store.readBuckets(touched), envelope, spec.keys)
+                  case MergeEngine.Deduplicate =>
+                    Upsert.applyChangelog(state, envelope, spec.keys)
+                  case MergeEngine.PartialUpdate =>
+                    Upsert.applyChangelogPartial(state, envelope, spec.keys)
                   case MergeEngine.Aggregation(aggs, false) =>
-                    Upsert.applyChangelogAggregate(
-                      store.readBuckets(touched), envelope, spec.keys, aggs)
+                    Upsert.applyChangelogAggregate(state, envelope, spec.keys, aggs)
                   case MergeEngine.Aggregation(aggs, true) =>
-                    Upsert.applyChangelogAggregateRetract(
-                      store.readBuckets(touched), envelope, spec.keys, aggs)
+                    Upsert.applyChangelogAggregateRetract(state, envelope, spec.keys, aggs)
                 }
                 store.writeBuckets(newTouched, spec.distKeys, touched, batchId,
                   appliedBatch = Some(ledgerToken -> batchId))
               }
-              spec.name -> touched
-            } finally { envelope.unpersist(); () }
-          }.toMap
+          })
 
           // MV refresh. Incremental (bucket-local) ONLY when facts and
           // dimension share the movie_id bucket space — otherwise the
@@ -204,4 +200,45 @@ object CdcPipeline {
       .start()
     new Handle(query, stores, mvStore)
   }
+
+  /** Every table's touched buckets from ONE job over the batch: each
+    * row yields the bucket of its after- and before-image under its
+    * own table's schema and distribution keys. Both sides count — an
+    * update that moves a row across buckets must touch source AND
+    * target bucket. The bucket expressions have writeBuckets' bare-
+    * column shape (xxhash64(k1, k2) != xxhash64(struct(k1, k2))).
+    * Partitions deduplicate their own (table, bucket) pairs, so no
+    * shuffle (and no second job) is needed. */
+  private def touchedBuckets(spark: SparkSession, batch: DataFrame, tables: Seq[TableSpec],
+                             stores: Map[String, BucketedStateStore]): Map[String, Seq[Int]] = {
+    import spark.implicits._
+    val sides = for (spec <- tables; side <- Seq("after", "before")) yield {
+      val row = from_json(col(side), spec.schema)
+      when(col("table") === spec.name && row.isNotNull,
+        stores(spec.name).bucketOf(spec.distKeys.map(row.getField)))
+    }
+    val pairs = batch.select(col("table"), explode(array(sides: _*)).as("b"))
+      .filter(col("b").isNotNull)
+      .as[(String, Int)].mapPartitions(_.toSet.iterator)
+      .collect().toSet
+    tables.map(t => t.name -> pairs.collect { case (n, b) if n == t.name => b }.toSeq.sorted).toMap
+  }
+
+  /** Run `tasks` at once, one pool thread each, and return only when
+    * all have finished; the first failure is rethrown after that, so
+    * no task outlives the call. Each thread carries the calling (stream)
+    * thread's Spark local properties and active session, so the
+    * stream's job group, which `query.stop()` cancels, covers the
+    * tasks' jobs too. */
+  private def inParallel(tasks: Seq[() => Unit]): Unit =
+    if (tasks.nonEmpty) {
+      val pool = GraftBridge.daemonPool(tasks.size, "graft-cdc-apply")
+      val first = new AtomicReference[Throwable]
+      try {
+        tasks.map(t => GraftBridge.withThreadLocalCaptured(SparkSession.active, pool) {
+          try t() catch { case e: Throwable => first.compareAndSet(null, e); throw e }
+        }).foreach(f => scala.util.Try(f.join()))
+      } finally pool.shutdown()
+      Option(first.get).foreach(e => throw e)
+    }
 }

@@ -47,6 +47,27 @@ object GraftBridge {
       case _ => None
     }
 
+  /** Run `body` on a thread of `exec` that carries the calling thread's
+    * Spark local properties (job group and job tags included) and active
+    * session. `SQLExecution.withThreadLocalCaptured` takes the classic
+    * session type. */
+  def withThreadLocalCaptured[T](spark: SparkSession,
+                                 exec: java.util.concurrent.ExecutorService)(
+      body: => T): java.util.concurrent.CompletableFuture[T] =
+    execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], exec)(body)
+
+  /** A fixed pool of named daemon threads (`ThreadUtils` is
+    * `private[spark]`). */
+  def daemonPool(threads: Int, prefix: String): java.util.concurrent.ExecutorService =
+    org.apache.spark.util.ThreadUtils.newDaemonFixedThreadPool(threads, prefix)
+
+  /** Spark's own schema merge (`StructType.merge` is `private[sql]`),
+    * the one parquet `mergeSchema` applies to file footers: fields of
+    * `a` first, then those only `b` has; incompatible types throw. */
+  def mergeSchemas(a: types.StructType, b: types.StructType): types.StructType =
+    a.merge(b, internal.SQLConf.get.caseSensitiveAnalysis)
+
   /** The persisted RDD behind a `localCheckpoint`ed Dataset, if any —
     * the handle needed to RELEASE checkpoint storage explicitly
     * (`rdd.unpersist()`): `Dataset.unpersist` only touches

@@ -116,7 +116,7 @@ private[catalog] object BloomIndex {
             (probes, bs)).toMap)
         } ++ prev.view.filterKeys(f => !entries.contains(f)).toMap
       }
-      Snapshots.commit(tableDir, "bloom", identity, freshStats = merged)
+      Snapshots.commit(tableDir, Snapshots.Op.Bloom, identity, freshStats = merged)
       ()
     }
     entries.size.toLong

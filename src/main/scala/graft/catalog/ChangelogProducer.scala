@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.{ChangeFeed, SnapshotReads}
+
 /** PERSISTED changelog files — Paimon's `'changelog-producer'='input'`
   * (the reference's generated Paimon sink declares it,
   * `flink-gen.sh:140`): a PRIMARY-KEY table that opts in materializes
@@ -54,55 +56,32 @@ object ChangelogProducer {
 
   /** Serve version `ver`'s feed from its persisted files, producing
     * them first if absent. None = schema evolved since the files were
-    * written (the caller recomputes — correctness over memoization).
-    * `compute` supplies the canonical diff (the versionFeed algebra
-    * with persistence disabled, so production can never recurse). */
-  def serveOrProduce(spark: SparkSession, tableDir: Path, ver: Long,
-                     row: StructType, compute: () => DataFrame)
-      : Option[DataFrame] = {
+    * written (the caller recomputes — correctness over memoization). */
+  def serveOrProduce(spark: SparkSession, tableDir: Path,
+                     store: SnapshotReads, ver: Long, keys: Seq[String],
+                     row: StructType): Option[DataFrame] = {
     val target = dirFor(tableDir, ver)
-    if (!Files.isDirectory(target)) produce(spark, tableDir, ver, row,
-      compute)
+    if (!Files.isDirectory(target)) produce(tableDir, store, ver, keys, row)
     serve(spark, tableDir, ver, row)
   }
 
-  /** Version `ver`'s feed is provably EMPTY from manifest metadata
-    * alone — no Spark job needed to derive it: an audit/no-op commit
-    * ([[Snapshots.Snapshot.isNoopOverParent]]) whose recorded parent
-    * is still retained, or an empty snapshot whose parent state is
-    * empty too (the CREATE version: a diff of two empty states).
-    * Production then publishes a MARKER-ONLY version dir; [[serve]]
-    * reads zero files under the explicit feed schema — the same empty
-    * feed the computed path derives, at zero planning/job cost per
-    * covered commit. Fails closed: a no-op over an EXPIRED parent is
-    * not provably empty (the computed feed re-derives it as an
-    * initial load, or raises on a tag-pinned retention hole — exactly
-    * [[graft.streaming.ChangeFeed.versionFeed]]'s rule). */
-  private def provablyEmptyFeed(tableDir: Path, ver: Long): Boolean =
-    Snapshots.read(tableDir, ver).exists { s =>
-      // retention check last: non-noop commits never list the log
-      def noop = s.isNoopOverParent &&
-        s.parent.exists(Snapshots.versions(tableDir).contains)
-      def emptyNow = Snapshots.dataFiles(s.files).isEmpty
-      def parentEmpty = s.parent match {
-        case None => true // earliest retained: initial load of ∅
-        case Some(p) => Snapshots.read(tableDir, p).exists(ps =>
-          Snapshots.dataFiles(ps.files).isEmpty) // expired parent: unprovable
-      }
-      noop || (emptyNow && parentEmpty)
-    }
-
   /** Materialize version `ver`'s feed at `target` (atomic; loser of a
-    * racing production discards). */
-  private def produce(spark: SparkSession, tableDir: Path, ver: Long,
-                      row: StructType, compute: () => DataFrame): Unit = {
+    * racing production discards). A feed that is provably EMPTY from
+    * the manifests ([[SnapshotReads.provablyEmptyFeed]]: compaction,
+    * metadata and ref commits, unchanged file sets, the CREATE
+    * version) publishes a MARKER-ONLY version dir with no Spark job;
+    * [[serve]] reads zero files under the explicit feed schema — the
+    * same empty feed the computed path derives. Anything else derives
+    * the canonical diff (the versionFeed algebra with persistence
+    * disabled, so production can never recurse). */
+  private def produce(tableDir: Path, store: SnapshotReads, ver: Long,
+                      keys: Seq[String], row: StructType): Unit = {
     val target = dirFor(tableDir, ver)
     val tmp = tableDir.resolve(DirName).resolve(
       s".tmp-v$ver-${java.util.UUID.randomUUID().toString.take(8)}")
     Files.createDirectories(tmp.getParent)
     try {
-      if (provablyEmptyFeed(tableDir, ver))
-        // marker-only dir: the empty feed, no Spark job
+      if (store.provablyEmptyFeed(ver))
         Files.createDirectories(tmp)
       else
         // REBALANCE before the write (guide §6 — size-adaptive output
@@ -110,7 +89,8 @@ object ChangelogProducer {
         // file for a small commit's feed instead of one per shuffle
         // partition (observed 10 KB-sized files per version), full
         // parallel fan-out for a bulk load's advisory-sized many
-        compute().select(col("op"), col("before"), col("after"))
+        ChangeFeed.versionFeed(store, ver, keys, row, persisted = false)
+          .select(col("op"), col("before"), col("after"))
           .hint("rebalance")
           .write.parquet(tmp.toString)
       Files.writeString(tmp.resolve(SchemaMarker), row.json)
@@ -167,11 +147,7 @@ object ChangelogProducer {
       val row = store.rowSchema
       val missing = store.versions.filterNot(v =>
         Files.isDirectory(dirFor(tableDir, v)))
-      missing.foreach { v =>
-        produce(spark, tableDir, v, row, () =>
-          graft.streaming.ChangeFeed.versionFeed(store, v,
-            pk.get.keys, row, persisted = false))
-      }
+      missing.foreach(produce(tableDir, store, _, pk.get.keys, row))
     } catch {
       case scala.util.control.NonFatal(_) => () // lazy path heals
     }

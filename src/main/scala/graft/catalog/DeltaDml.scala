@@ -133,9 +133,9 @@ private[catalog] final class DeltaOperation(
       override def build(): DeltaWrite = new DeltaDmlWrite(
         tableDir, spec, info.schema(), renames, baseFiles, kind,
         cmd match {
-          case RowLevelOperation.Command.UPDATE => "update"
-          case RowLevelOperation.Command.MERGE => "merge"
-          case _ => "delete"
+          case RowLevelOperation.Command.UPDATE => Snapshots.Op.Update
+          case RowLevelOperation.Command.MERGE => Snapshots.Op.Merge
+          case _ => Snapshots.Op.Delete
         })
     }
 }
@@ -152,7 +152,7 @@ private[catalog] final class DeltaDmlWrite(
     renames: Map[String, String],
     baseFiles: Seq[String],
     kind: DeleteKind,
-    opName: String)
+    op: Snapshots.Op)
     extends DeltaWrite with RequiresDistributionAndOrdering {
 
   // distribution/ordering references must resolve against the delta
@@ -225,9 +225,9 @@ private[catalog] final class DeltaDmlWrite(
       PartitionedWrite.deleteRecursive(sideStaging)
       // ONE commit carrying both halves; delete-file row counts
       // (footer reads, no data pages) ride the stats block
-      PartitionedWrite.commitStaged(tableDir, dataStaging, dataRels, opName,
+      PartitionedWrite.commitStaged(tableDir, dataStaging, dataRels, op,
         cur => cur ++ moved ++ dataRels,
-        kind.validate(opName.toUpperCase,
+        kind.validate(op.name.toUpperCase,
           parts.flatMap(_.referenced).distinct, baseFiles, moved.nonEmpty),
         MorDeletes.deleteFileRowStats(tableDir, moved),
         kind.producesChangelog)

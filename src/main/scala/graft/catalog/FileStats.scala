@@ -116,7 +116,7 @@ private[catalog] object FileStats {
         f -> fs.copy(blooms = prev.get(f).fold(
           Map.empty[String, (Int, Array[Byte])])(_.blooms))
       }
-      Snapshots.commit(tableDir, "analyze", identity, freshStats = merged)
+      Snapshots.commit(tableDir, Snapshots.Op.Analyze, identity, freshStats = merged)
       ()
     }
     entries.size.toLong

@@ -242,7 +242,8 @@ private[catalog] object LakeProcedures {
       while (sweeps < 3 && {
         val stragglers = listAll().diff(Snapshots.latest(dir).get.files)
         if (stragglers.nonEmpty)
-          Snapshots.commit(dir, "migrate", cur => cur ++ stragglers)
+          Snapshots.commit(dir, Snapshots.Op.Migrate,
+            cur => cur ++ stragglers)
         stragglers.nonEmpty
       }) sweeps += 1
       Seq(InternalRow(v, files.size.toLong))
@@ -375,7 +376,7 @@ private[catalog] object LakeProcedures {
         // must still be referenced — a concurrent major compact already
         // materialized them, and merging this rewrite would
         // re-introduce dropped coordinates
-        val v = Snapshots.commit(dir, "rewrite-deletes",
+        val v = Snapshots.commit(dir, Snapshots.Op.RewriteDeletes,
           cur => cur.diff(rewrite) ++ fresh,
           Snapshots.validateFilesLive(
             "rewrite_position_delete_files", rewrite),
@@ -440,7 +441,7 @@ private[catalog] object LakeProcedures {
           .getOrElse(org.apache.spark.sql.functions.lit(""))
         val fresh = PkTables.writeEqDeleteFiles(spark, dir,
           merged.withColumn(MorDeletes.TargetDirCol, tdir))
-        val v = Snapshots.commit(dir, "rewrite-eqdeletes",
+        val v = Snapshots.commit(dir, Snapshots.Op.RewriteEqDeletes,
           cur => cur.diff(rewrite) ++ fresh,
           Snapshots.validateFilesLive("rewrite_eqdelete_files", rewrite),
           freshStats = MorDeletes.deleteFileRowStats(dir, fresh))
@@ -467,7 +468,7 @@ private[catalog] object LakeProcedures {
           // compacting an empty snapshot: nothing to rewrite
           case Some(s) if s.files.isEmpty => Some(s.version)
           case Some(s) =>
-            Some(rewriteSnapshot("compact", dir, s)(compactLayout(dir, target)))
+            Some(rewriteSnapshot(Snapshots.Op.Compact, dir, s)(compactLayout(dir, target)))
           case None =>
             val tmp = DeletableTable.stagingDir(dir)
             PartitionedWrite.deleteRecursive(tmp)
@@ -549,7 +550,7 @@ private[catalog] object LakeProcedures {
                 "('versioned'='true') or use compact")
           val snap = Snapshots.latest(dir).get
           if (snap.files.isEmpty) Some(snap.version)
-          else Some(rewriteSnapshot("zorder", dir, snap) { (rows, dirCols) =>
+          else Some(rewriteSnapshot(Snapshots.Op.Zorder, dir, snap) { (rows, dirCols) =>
             requireCols(rows)
             rows
               .withColumn("_z", graft.operators.Layout.mortonCode(
@@ -780,7 +781,8 @@ private[catalog] object LakeProcedures {
     * rows (latest per key, equality deletes applied): a key-blind
     * rewrite would restamp every version at ONE sequence and equal-seq
     * ties would then pick wrong winners. */
-  private def rewriteSnapshot(op: String, dir: Path, s: Snapshots.Snapshot)(
+  private def rewriteSnapshot(op: Snapshots.Op, dir: Path,
+      s: Snapshots.Snapshot)(
       layout: (DataFrame, Seq[String]) => DataFrame): Long = {
     val spark = SparkSession.active
     val spec = PartitionSpec.read(dir)
@@ -807,11 +809,11 @@ private[catalog] object LakeProcedures {
     // rewrite would neuter it (lost delete) without the third.
     val validate: Seq[String] => Unit =
       if (pkOpt.isDefined) cur => {
-        Snapshots.validateRewrite(op, s.files, s.files)(cur)
-        PkTables.validateNoNewData(op, s.files)(cur)
-        PkTables.validateNoFreshEqDeletes(op, s.files)(cur)
+        Snapshots.validateRewrite(op.name, s.files, s.files)(cur)
+        PkTables.validateNoNewData(op.name, s.files)(cur)
+        PkTables.validateNoFreshEqDeletes(op.name, s.files)(cur)
       }
-      else Snapshots.validateRewrite(op, s.files, s.files)
+      else Snapshots.validateRewrite(op.name, s.files, s.files)
     val v = Snapshots.commit(dir, op,
       // s.files includes any delete files (both kinds): the diff drops
       // them (their rows are gone from the rewritten output)

@@ -54,12 +54,29 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
   override def parentOf(version: Long): Option[Long] =
     metaOf(version).flatMap(_.parent)
 
-  /** Audit commits (expire, branch forks) record added=removed=0:
-    * provably content-identical — the feed can skip their diff join.
-    * (A branch's b-0 fork has parent None, so it still emits as the
-    * initial load.) */
-  override def noopCommit(version: Long): Boolean =
-    metaOf(version).exists(_.isNoopOverParent)
+  /** The feed is provably EMPTY from the two manifests when the
+    * recorded parent is retained and the commit kept the rows: its
+    * kind is not [[Snapshots.CommitKind.Content]] (compaction,
+    * metadata, refs), or it kept the parent's exact file set, or
+    * neither side holds a data file. Without a recorded parent it is
+    * empty only as the earliest retained version with no data files
+    * (the CREATE version, or the fork of an empty head: an initial
+    * load of nothing). Summary counters are never read. Fails closed:
+    * over an EXPIRED parent the feed derives normally (an initial
+    * load, or the retention-hole error). */
+  override def provablyEmptyFeed(version: Long): Boolean =
+    snapOf(version).exists { s =>
+      def dataless(x: Snapshots.Snapshot) = Snapshots.dataFiles(x.files).isEmpty
+      s.parent match {
+        case Some(p) =>
+          def keptRows = s.kind != Snapshots.CommitKind.Content ||
+            snapOf(p).exists(before => s.files.toSet == before.files.toSet ||
+              (dataless(s) && dataless(before)))
+          // retention check last: content commits rarely list the log
+          keptRows && versionsOf.contains(p)
+        case None => dataless(s) && !versionsOf.exists(_ < version)
+      }
+    }
 
   // meta-only reads: the commit stamp never needs the segment-resolved
   // file list
@@ -95,7 +112,7 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
       .fold(Map.empty[String, Long])(w =>
         Map(MaterializedView.SourceVersionKey -> w))
     Snapshots.withSummaryStamp(tableDir, mvStamp) {
-      Snapshots.commit(tableDir, "rollback", _ => s.files,
+      Snapshots.commit(tableDir, Snapshots.Op.Rollback, _ => s.files,
         validate = _ => {
           if (Snapshots.readMeta(tableDir, v).isEmpty)
             throw new CommitConflictException(
@@ -151,9 +168,8 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
                              row: org.apache.spark.sql.types.StructType)
       : Option[DataFrame] =
     if (branch.nonEmpty || !pkDef.exists(_.producesChangelog)) None
-    else ChangelogProducer.serveOrProduce(spark, tableDir, ver, row,
-      () => graft.streaming.ChangeFeed.versionFeed(this, ver, keys, row,
-        persisted = false))
+    else ChangelogProducer.serveOrProduce(spark, tableDir, this, ver, keys,
+      row)
 
   /** ONE-PASS version diff ([[PkTables.versionDiff]] for PK tables,
     * [[MorDeletes.versionDiffMor]] under the caller's key identity

@@ -63,12 +63,16 @@ object MaterializedView {
     * both or neither; there is no torn half-advanced state). */
   val DimVersionKey = "mv-dim-version"
 
-  /** Engine maintenance operations that legally commit to an MV table
-    * without a watermark stamp (content-preserving); anything else
-    * unstamped is a FOREIGN write and fails the next refresh loudly. */
-  private val MaintenanceOps = Set("compact", "zorder", "expire",
-    "tag", "untag", "rewrite", "rewrite-deletes", "rewrite-eqdeletes",
-    "bloom", "analyze", "create")
+  /** A commit on the MV table is STAMPED when it carries a watermark
+    * (a refresh wrote it — its MERGE is content-changing, so the stamp
+    * is checked first) and FOREIGN when it is unstamped and
+    * content-changing ([[Snapshots.CommitKind.Content]]): a direct
+    * write that fails the next refresh loudly. Anything else
+    * (compaction, stats, tags, expire) kept the rows. */
+  private def isStamped(m: Snapshots.Snapshot): Boolean =
+    m.summary.contains(SourceVersionKey)
+  private def isForeign(m: Snapshots.Snapshot): Boolean =
+    !isStamped(m) && m.kind == Snapshots.CommitKind.Content
   /** The group-liveness column every MV carries: rows per group —
     * when a refresh drives it to zero the group's MV row deletes. */
   val RowsCol = "mv_rows"
@@ -293,11 +297,11 @@ object MaterializedView {
     var foreign = List.empty[(Long, String)]
     vs.foreach { v =>
       Snapshots.readMeta(mvDir, v) match {
-        case Some(m) if m.summary.contains(SourceVersionKey) =>
+        case Some(m) if isStamped(m) =>
           if (foreign.nonEmpty) failForeign(foreign)
           return (m.summary(SourceVersionKey),
             m.summary.getOrElse(DimVersionKey, 0L), v)
-        case Some(m) if !MaintenanceOps(m.operation) =>
+        case Some(m) if isForeign(m) =>
           foreign = (v, m.operation) :: foreign
         case _ => ()
       }
@@ -355,9 +359,8 @@ object MaterializedView {
       val above = Snapshots.versions(mvDir)
         .filter(v => v > stampV && v <= latest)
         .flatMap(v => Snapshots.readMeta(mvDir, v).map(v -> _))
-        .filterNot { case (_, m) => MaintenanceOps(m.operation) }
-      val (stamped, foreign) =
-        above.partition(_._2.summary.contains(SourceVersionKey))
+      val stamped = above.filter(vm => isStamped(vm._2))
+      val foreign = above.filter(vm => isForeign(vm._2))
       if (foreign.nonEmpty)
         throw new CommitConflictException(
           s"$mvRef: ${foreign.size} foreign commit(s) landed on the " +
@@ -607,7 +610,8 @@ object MaterializedView {
     if (matDeltas.isEmpty) {
       Snapshots.withCommitCheck(mvDir)(foreignGuard) {
         Snapshots.withSummaryStamp(mvDir, stamps) {
-          Snapshots.commit(mvDir, "mv-watermark", identity[Seq[String]])
+          Snapshots.commit(mvDir, Snapshots.Op.MvWatermark,
+            identity[Seq[String]])
         }
       }
       writeDef(mvDir, advance(d).copy(
@@ -658,7 +662,8 @@ object MaterializedView {
         val stamped = Snapshots.latest(mvDir).exists(s =>
           stamps.forall { case (k, v) => s.summary.get(k).contains(v) })
         if (!stamped)
-          Snapshots.commit(mvDir, "mv-watermark", identity[Seq[String]])
+          Snapshots.commit(mvDir, Snapshots.Op.MvWatermark,
+            identity[Seq[String]])
         ()
       }
     }

@@ -779,7 +779,7 @@ private[catalog] final class PartitionedLakeTable(
           StructField(MorDeletes.TargetDirCol,
             org.apache.spark.sql.types.StringType)))
       val moved = PkTables.writeEqDeleteFiles(spark, tableDir, df)
-      Snapshots.commitRouted(tableDir, "delete",
+      Snapshots.commitRouted(tableDir, Snapshots.Op.Delete,
         cur => cur ++ moved,
         freshStats = MorDeletes.deleteFileRowStats(tableDir, moved))
       spark.catalog.clearCache()
@@ -855,7 +855,7 @@ private[catalog] final class PartitionedLakeTable(
         // and LOSE this delete; conflict and re-run instead. Con-
         // current MoR deletes compose (anti-join is idempotent), and
         // appends merge (new files, new names, never addressed here).
-        Snapshots.commitRouted(tableDir, "delete",
+        Snapshots.commitRouted(tableDir, Snapshots.Op.Delete,
           cur => cur ++ moved,
           Snapshots.validateFilesLive("DELETE", candFiles),
           // delete-file row counts (footer reads, no data pages) ride
@@ -889,7 +889,7 @@ private[catalog] final class PartitionedLakeTable(
       // that removed/rewrote one of OUR read files — or added a delete
       // file we did not apply — conflicts (keeping `staged` would
       // resurrect rows that commit deleted)
-      Snapshots.commitRouted(tableDir, "delete",
+      Snapshots.commitRouted(tableDir, Snapshots.Op.Delete,
         cur => cur.diff(candFiles).diff(inertDels) ++ staged,
         Snapshots.validateRewrite("DELETE", candFiles, s.files),
         freshStats = Snapshots.freshStatsFor(spark, tableDir, staged))
@@ -1586,7 +1586,8 @@ private[catalog] object PartitionedWrite {
     * plus `extraStats` riding the commit; `changelog` persists the
     * commit's changelog (`'changelog-producer'='input'`). */
   private[catalog] def commitStaged(tableDir: Path, staging: Path,
-      files: Seq[String], op: String, liveOf: Seq[String] => Seq[String],
+      files: Seq[String], op: Snapshots.Op,
+      liveOf: Seq[String] => Seq[String],
       validate: Seq[String] => Unit = _ => (),
       extraStats: => Map[String, FileStats.FileStat] = Map.empty,
       changelog: Boolean = false): Unit = {
@@ -1876,7 +1877,7 @@ private[catalog] final class PartitionedWrite(
           // replaces — conflict, never resurrect)
           val replaced = candidates().fold(prev)(Snapshots.filesUnder(prev, _))
           PartitionedWrite.commitStaged(tableDir, staging, committed,
-            "rewrite", cur => cur.diff(replaced) ++ committed,
+            Snapshots.Op.Rewrite, cur => cur.diff(replaced) ++ committed,
             Snapshots.validateRewrite("UPDATE/MERGE", replaced, prev))
         case PartitionedWrite.Rewrite(_, None) =>
           publishPlain(committed)
@@ -1921,7 +1922,9 @@ private[catalog] final class PartitionedWrite(
           } ++ committed
         case _ => prev => prev ++ committed
       }
-      val op = if (mode == PartitionedWrite.Append) "append" else "overwrite"
+      val op =
+        if (mode == PartitionedWrite.Append) Snapshots.Op.Append
+        else Snapshots.Op.Overwrite
       PartitionedWrite.commitStaged(tableDir, staging, committed, op, liveOf,
         changelog = true)
     }

@@ -3,6 +3,7 @@ package graft.catalog
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.language.implicitConversions
 
 /** A concurrent committer lost the optimistic-concurrency race and the
   * operation's read set changed underneath it (or the retry budget ran
@@ -88,14 +89,85 @@ private[catalog] object Snapshots {
     * same next version number until the budget burns out. */
   private val MaxAttempts = 20
 
+  /** What a commit did to the table's ROWS — the one meaning every
+    * metadata short-circuit reads (Paimon's `CommitKind`, Iceberg's
+    * snapshot `operation`):
+    *  - [[CommitKind.Content]]: rows may have changed — the feed must
+    *    be derived;
+    *  - [[CommitKind.Replace]]: the same resolved rows in new files
+    *    (compaction); its commit validation rejects any concurrent
+    *    change to the files it read, so the feed is provably empty;
+    *  - [[CommitKind.Meta]]: the same files, new table metadata
+    *    (stats, Bloom bits, an MV watermark, the create/fork marker);
+    *  - [[CommitKind.Ref]]: the same files, new ref state (tags) or
+    *    retention (expire) — not a data commit for retention counts. */
+  sealed trait CommitKind
+  object CommitKind {
+    case object Content extends CommitKind
+    case object Replace extends CommitKind
+    case object Meta extends CommitKind
+    case object Ref extends CommitKind
+  }
+
+  /** The closed set of operations a commit records. `name` is the
+    * persisted `operation` string (manifests, `$snapshots`); [[Op.parse]]
+    * is the one map from a name back to an operation. A name this
+    * engine never writes (a legacy or foreign manifest) parses as
+    * [[Op.Other]], kind Content: an unknown commit may have changed
+    * rows, so every short-circuit fails closed. */
+  sealed abstract class Op(val name: String, val kind: CommitKind)
+  object Op {
+    import CommitKind._
+    case object Append extends Op("append", Content)
+    case object Overwrite extends Op("overwrite", Content)
+    case object Delete extends Op("delete", Content)
+    case object Update extends Op("update", Content)
+    case object Merge extends Op("merge", Content)
+    /** Copy-on-write UPDATE/MERGE: replacement rows differ. */
+    case object Rewrite extends Op("rewrite", Content)
+    case object Rollback extends Op("rollback", Content)
+    case object CherryPick extends Op("cherry_pick", Content)
+    case object FastForward extends Op("fast_forward", Content)
+    case object Migrate extends Op("migrate", Content)
+    case object Compact extends Op("compact", Replace)
+    case object Zorder extends Op("zorder", Replace)
+    case object RewriteDeletes extends Op("rewrite-deletes", Replace)
+    case object RewriteEqDeletes extends Op("rewrite-eqdeletes", Replace)
+    case object Create extends Op("create", Meta)
+    case object Branch extends Op("branch", Meta)
+    case object Analyze extends Op("analyze", Meta)
+    case object Bloom extends Op("bloom", Meta)
+    case object MvWatermark extends Op("mv-watermark", Meta)
+    case object Tag extends Op("tag", Ref)
+    case object Untag extends Op("untag", Ref)
+    case object Expire extends Op("expire", Ref)
+    final case class Other(raw: String) extends Op(raw, Content)
+
+    val written: Seq[Op] = Seq(Append, Overwrite, Delete, Update, Merge,
+      Rewrite, Rollback, CherryPick, FastForward, Migrate, Compact, Zorder,
+      RewriteDeletes, RewriteEqDeletes, Create, Branch, Analyze, Bloom,
+      MvWatermark, Tag, Untag, Expire)
+    private val byName: Map[String, Op] = written.map(o => o.name -> o).toMap
+
+    def parse(name: String): Op = byName.getOrElse(name, Other(name))
+
+    /** A caller holding a persisted name commits the operation it
+      * parses to. */
+    implicit def fromName(name: String): Op = parse(name)
+  }
+
   /** `parent` is the snapshot this one was committed AGAINST (None for
     * the initial snapshot and pre-parent manifests): the change feed
     * diffs a version against its RECORDED parent, so a retention hole
     * (expire keeping a pinned older snapshot but dropping the middle)
     * is detected instead of silently diffing against the wrong
-    * predecessor. `operation`/`summary` record WHAT produced the
-    * snapshot (append/overwrite/delete/rewrite/compact/…) — the audit
-    * surface Iceberg exposes per snapshot. `stats` is the commit-atomic
+    * predecessor. `op` records WHAT produced the snapshot: its
+    * persisted NAME (`operation`: append/overwrite/delete/rewrite/
+    * compact/… — the audit surface Iceberg exposes per snapshot) and
+    * its KIND ([[CommitKind]]), the one meaning every short-circuit
+    * reads (change-feed emptiness, MV foreign-write detection,
+    * retention counting) — never the name. `summary` counts the files
+    * it added and removed. `stats` is the commit-atomic
     * per-file min/max/count block (empty until the table is analyzed;
     * keyed by file BASENAME — per-write UUID names make those unique).
     * `segments` is the manifest-LIST view (r13, the Iceberg
@@ -129,7 +201,7 @@ private[catalog] object Snapshots {
     * sidecar-file tag could never close. */
   final case class Snapshot(version: Long, commitMs: Long,
                             files: Seq[String], parent: Option[Long] = None,
-                            operation: String = "",
+                            op: Op = Op.Other(""),
                             summary: Map[String, Long] = Map.empty,
                             stats: Map[String, FileStats.FileStat] = Map.empty,
                             segments: Seq[String] = Seq.empty,
@@ -137,26 +209,11 @@ private[catalog] object Snapshots {
                             pins: Map[String, Long] = Map.empty,
                             lastSeq: Long = 0L,
                             seqs: Map[String, Long] = Map.empty) {
-    /** Provably CONTENT-IDENTICAL to its recorded parent: an audit
-      * commit (expire, tag, branch fork) records zero added and removed
-      * data files. Delete and equality-delete files count too — a
-      * merge-on-read or PK delete commit adds ONLY those, and its rows
-      * retract in the feed. A summary without the data-file keys
-      * proves nothing. */
-    def isNoopOverParent: Boolean =
-      parent.isDefined &&
-        summary.get("added-data-files").contains(0L) &&
-        summary.get("removed-data-files").contains(0L) &&
-        summary.getOrElse("added-delete-files", 0L) == 0L &&
-        summary.getOrElse("removed-delete-files", 0L) == 0L &&
-        summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
-        summary.getOrElse("removed-eqdelete-files", 0L) == 0L
+    def operation: String = op.name
+    def kind: CommitKind = op.kind
   }
 
   private def dir(tableDir: Path): Path = tableDir.resolve(DirName)
-
-  private def manifest(tableDir: Path, v: Long): Path =
-    dir(tableDir).resolve(s"s-$v.json")
 
   // ---- branches (Iceberg refs, the write-audit-publish surface) ----
   //
@@ -238,7 +295,7 @@ private[catalog] object Snapshots {
       s"branch '$name' already exists — drop_branch first")
     Files.createDirectories(bd)
     val s = Snapshot(0L, System.currentTimeMillis(), head.files, None,
-      "branch",
+      Op.Branch,
       Map("fork-main-version" -> head.version,
         "added-data-files" -> 0L, "removed-data-files" -> 0L,
         "total-data-files" -> head.files.size.toLong),
@@ -356,7 +413,7 @@ private[catalog] object Snapshots {
         val b = basename(f); st.get(b).map(b -> _)
       }.toMap
     }
-    commit(tableDir, "cherry_pick",
+    commit(tableDir, Op.CherryPick,
       cur => cur.diff(removed) ++ added.filterNot(cur.toSet),
       validateFilesLive("cherry_pick", guarded.distinct),
       freshStats = pickedStats)
@@ -367,9 +424,7 @@ private[catalog] object Snapshots {
       throw new IllegalArgumentException(
         s"fast_forward: no branch '$name' " +
           s"(branches: ${branches(tableDir).mkString(",")})"))
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    occ(tableDir, dir(tableDir), Op.FastForward) { main =>
       // the branch head is re-read PER ATTEMPT, and re-checked after
       // the win below — a branch commit racing the publish must never
       // be silently excluded from a "successful" fast_forward
@@ -378,17 +433,14 @@ private[catalog] object Snapshots {
           s"fast_forward: branch '$name' vanished mid-publish " +
             "(concurrent drop_branch?) — re-run"))
       val headVersion = branchVersions(tableDir, name).last
-      val main = latest(tableDir)
       // CONTENT-based fast-forward check, not version numbers: ref
       // and audit operations (tag/untag/expire) are commits too now,
       // so main's version advancing with an UNCHANGED file set must
       // not strand every staged branch — compare main's live files to
       // the fork content the branch's b-0 recorded (which survives
       // even when the fork manifest itself expired)
-      val forkFiles = readBranch(tableDir, name, 0L)
-        .fold(Seq.empty[String])(_.files).sorted
-      val mainFiles = main.fold(Seq.empty[String])(_.files).sorted
-      if (mainFiles != forkFiles)
+      val forkFiles = filesOf(readBranch(tableDir, name, 0L)).sorted
+      if (filesOf(main).sorted != forkFiles)
         throw new CommitConflictException(
           s"fast_forward: main's content advanced past the fork point " +
             s"(forked at s-$fork, main is at " +
@@ -400,15 +452,10 @@ private[catalog] object Snapshots {
       if (missing.nonEmpty) throw new CommitConflictException(
         s"fast_forward: ${missing.size} branch file(s) were " +
           s"garbage-collected (e.g. ${missing.head}) — re-stage")
-      val prevFiles = main.fold(Seq.empty[String])(_.files)
       val s = Snapshot(main.fold(0L)(_.version + 1L),
         System.currentTimeMillis(), head.files,
-        main.map(_.version), "fast_forward",
-        Map("added-data-files" ->
-          head.files.diff(prevFiles).size.toLong,
-          "removed-data-files" ->
-            prevFiles.diff(head.files).size.toLong,
-          "total-data-files" -> head.files.size.toLong),
+        main.map(_.version), Op.FastForward,
+        summaryOf(tableDir, filesOf(main), head.files),
         head.stats, head.segments,
         // MAIN's ref state carries — the branch's pin copy is inert
         pins = main.fold(Map.empty[String, Long])(_.pins),
@@ -416,7 +463,7 @@ private[catalog] object Snapshots {
         // content check above proved main assigned no competing
         // numbers since the fork, so adopting is collision-free
         lastSeq = head.lastSeq, seqs = head.seqs)
-      if (tryPublishIn(tableDir, dir(tableDir), s)) {
+      Right(Publish((s, Seq.empty), _ => {
         // a branch commit that landed between the head read and the
         // main link is NOT lost (it stays staged on the branch) but it
         // is NOT published either — report loudly instead of letting
@@ -428,14 +475,9 @@ private[catalog] object Snapshots {
               "landed during the publish and is NOT included — it " +
               "remains staged on the branch; re-create the branch from " +
               "the new main head and re-stage it")
-        return s.version
-      }
-      if (attempt >= MaxAttempts) throw new CommitConflictException(
-        s"fast_forward: lost the commit race $MaxAttempts times — re-run")
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(1L, 5L * attempt))
+        s.version
+      }))
     }
-    -1L // unreachable
   }
 
   /** One immutable manifest segment: a slice of the live-file list
@@ -508,9 +550,9 @@ private[catalog] object Snapshots {
     * (an empty versioned table is version 0 and readable). */
   def init(tableDir: Path): Unit = {
     Files.createDirectories(dir(tableDir))
-    if (!tryPublish(tableDir,
+    if (!tryPublishIn(tableDir, dir(tableDir),
         Snapshot(0L, System.currentTimeMillis(), Seq.empty,
-          operation = "create",
+          op = Op.Create,
           summary = Map("added-data-files" -> 0L,
             "removed-data-files" -> 0L, "total-data-files" -> 0L))))
       throw new CommitConflictException(
@@ -577,7 +619,7 @@ private[catalog] object Snapshots {
         Option(node.get("files")).toSeq
           .flatMap(_.elements().asScala.toSeq).map(_.asText()),
         Option(node.get("parent")).filterNot(_.isNull).map(_.asLong()),
-        Option(node.get("operation")).fold("")(_.asText()),
+        Op.parse(Option(node.get("operation")).fold("")(_.asText())),
         Option(node.get("summary")).fold(Map.empty[String, Long])(
           _.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap),
         Option(node.get("stats")).fold(Map.empty[String, FileStats.FileStat])(
@@ -612,11 +654,11 @@ private[catalog] object Snapshots {
     *    has never been analyzed). Carried live files keep their
     *    parent entries; dead files' entries drop with them. */
   def commit(tableDir: Path,
-             operation: String,
+             op: Op,
              transform: Seq[String] => Seq[String],
              validate: Seq[String] => Unit = _ => (),
              freshStats: => Map[String, FileStats.FileStat] = Map.empty): Long =
-    commitIn(tableDir, dir(tableDir), operation, transform, validate, freshStats)
+    commitIn(tableDir, dir(tableDir), op, transform, validate, freshStats)
 
   /** TABLE-WRITE commit: routes to the session's active write branch
     * ([[BranchConf]]) when one is set — the WAP staging path. Data
@@ -625,13 +667,13 @@ private[catalog] object Snapshots {
     * [[commit]], so a staging session cannot accidentally expire or
     * rewrite the branch it is auditing. */
   def commitRouted(tableDir: Path,
-                   operation: String,
+                   op: Op,
                    transform: Seq[String] => Seq[String],
                    validate: Seq[String] => Unit = _ => (),
                    freshStats: => Map[String, FileStats.FileStat] = Map.empty): Long = {
     val logDir = activeWriteBranch(tableDir)
       .map(branchDir(tableDir, _)).getOrElse(dir(tableDir))
-    commitIn(tableDir, logDir, operation, transform, validate, freshStats)
+    commitIn(tableDir, logDir, op, transform, validate, freshStats)
   }
 
   // ---- summary stamping --------------------------------------------
@@ -691,33 +733,60 @@ private[catalog] object Snapshots {
   }
 
   private def commitIn(tableDir: Path, logDir: Path,
-                       operation: String,
+                       op: Op,
                        transform: Seq[String] => Seq[String],
                        validate: Seq[String] => Unit,
                        freshStats: => Map[String, FileStats.FileStat]): Long = {
     lazy val fresh = freshStats // at most one evaluation across retries
-    var attempt = 0
+    occ(tableDir, logDir, op) { prev =>
+      validate(filesOf(prev))
+      Right(Publish(compose(tableDir, prev, transform(filesOf(prev)), op,
+        fresh), _.version))
+    }
+  }
+
+  /** What one OCC attempt publishes: the next snapshot with the
+    * segments it introduces ([[compose]]), and the commit's result once
+    * the publish wins. */
+  private final case class Publish[+T](next: (Snapshot, Seq[(String, String)]),
+                                       won: Snapshot => T)
+
+  private def filesOf(s: Option[Snapshot]): Seq[String] =
+    s.fold(Seq.empty[String])(_.files)
+
+  /** The ONE optimistic-concurrency loop every manifest commit runs.
+    * Per attempt it re-reads the latest snapshot of `logDir`, applies
+    * this thread's commit check ([[withCommitCheck]]), and lets
+    * `attempt` validate against that latest and derive the next
+    * snapshot: `Left` ends without a commit (nothing to do), `Right`
+    * publishes it with atomic create-if-absent. A lost race re-runs
+    * the attempt against the new latest after a jittered backoff,
+    * at most [[MaxAttempts]] times. */
+  private def occ[T](tableDir: Path, logDir: Path, op: Op)(
+      attempt: Option[Snapshot] => Either[T, Publish[T]]): T = {
+    val check = commitChecks.get.get(tableDir.toAbsolutePath.toString)
+    var n = 0
     while (true) {
-      attempt += 1
+      n += 1
       val prev = versionsIn(logDir).lastOption
         .flatMap(readIn(tableDir, logDir, _))
-      commitChecks.get.get(tableDir.toAbsolutePath.toString)
-        .foreach(_(prev))
-      val prevFiles = prev.fold(Seq.empty[String])(_.files)
-      validate(prevFiles)
-      val files = transform(prevFiles)
-      val (s, newSegs) = compose(tableDir, prev, files, operation, fresh)
-      if (tryPublishIn(tableDir, logDir, s, newSegs)) return s.version
-      if (attempt >= MaxAttempts)
+      check.foreach(_(prev))
+      attempt(prev) match {
+        case Left(done) => return done
+        case Right(Publish((s, segs), won))
+            if tryPublishIn(tableDir, logDir, s, segs) => return won(s)
+        case Right(_) => ()
+      }
+      if (n >= MaxAttempts)
         throw new CommitConflictException(
           s"$tableDir: lost the commit race $MaxAttempts times " +
-            s"(operation=$operation) — giving up; re-run the operation")
+            s"(operation=${op.name}) — giving up; re-run the operation")
       // jittered linear backoff: desynchronize the losing herd
       Thread.sleep(
         java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(1L, 5L * attempt))
+          .nextLong(1L, 5L * n))
     }
-    -1L // unreachable
+    throw new IllegalStateException("unreachable")
   }
 
   /** Compose the next snapshot's SEGMENT structure from its parent —
@@ -732,7 +801,7 @@ private[catalog] object Snapshots {
     * the resolved in-memory files/stats view) plus the (name, json)
     * payloads of segments this commit introduces. */
   private def compose(tableDir: Path, prev: Option[Snapshot],
-                      files: Seq[String], operation: String,
+                      files: Seq[String], op: Op,
                       fresh: Map[String, FileStats.FileStat],
                       dropped: Seq[Long] = Seq.empty,
                       pinsOverride: Option[Map[String, Long]] = None)
@@ -788,42 +857,9 @@ private[catalog] object Snapshots {
     val segRefs = carried.map(_._1) ++ newSeg.map(_._1)
     val allStats = (carried.iterator.flatMap(_._2.stats) ++ deltaStats).toMap
     val allSeqs = (carried.iterator.flatMap(_._2.seqs) ++ deltaSeqs).toMap
-    val added = files.diff(prevFiles)
-    val removed = prevFiles.diff(files)
-    // data and merge-on-read delete files count separately (the
-    // Iceberg snapshot-summary split); delete keys appear only when
-    // the commit or its parent actually involves delete files, so
-    // clean tables keep their compact summaries. The change-feed
-    // no-op check reads BOTH families ([[ManifestSnapshotReads
-    // .noopCommit]]) — a delete-file-only commit is content-changing.
-    // (added/removed are subsets of files/prevFiles, so the two-term
-    // check covers them.)
-    val delKeys =
-      if (deleteFiles(files).isEmpty && deleteFiles(prevFiles).isEmpty)
-        Map.empty[String, Long]
-      else Map(
-        "added-delete-files" -> deleteFiles(added).size.toLong,
-        "removed-delete-files" -> deleteFiles(removed).size.toLong,
-        "total-delete-files" -> deleteFiles(files).size.toLong)
-    // equality deletes (PK tables) count separately too
-    val eqKeys =
-      if (PkTables.eqDeleteFiles(files).isEmpty &&
-          PkTables.eqDeleteFiles(prevFiles).isEmpty)
-        Map.empty[String, Long]
-      else Map(
-        "added-eqdelete-files" ->
-          PkTables.eqDeleteFiles(added).size.toLong,
-        "removed-eqdelete-files" ->
-          PkTables.eqDeleteFiles(removed).size.toLong,
-        "total-eqdelete-files" ->
-          PkTables.eqDeleteFiles(files).size.toLong)
     val s = Snapshot(prev.fold(0L)(_.version + 1L),
-      System.currentTimeMillis(), files, prev.map(_.version), operation,
-      Map("added-data-files" -> dataFiles(added).size.toLong,
-        "removed-data-files" -> dataFiles(removed).size.toLong,
-        "total-data-files" -> dataFiles(files).size.toLong) ++ delKeys ++
-        eqKeys ++ stampFor(tableDir),
-      allStats, segRefs, dropped,
+      System.currentTimeMillis(), files, prev.map(_.version), op,
+      summaryOf(tableDir, prevFiles, files), allStats, segRefs, dropped,
       // the tag ref state carries forward on EVERY commit (the
       // Iceberg refs-in-current-metadata model); tag/untag commits
       // supply the modified map
@@ -832,10 +868,29 @@ private[catalog] object Snapshots {
     (s, newSeg.toSeq)
   }
 
-  /** Blind set-the-file-list commit — rollback/restore semantics where
-    * the new list is NOT derived from the concurrent state. */
-  def commit(tableDir: Path, files: Seq[String]): Long =
-    commit(tableDir, "overwrite", _ => files)
+  /** The summary of a commit from `prevFiles` to `files`: data,
+    * merge-on-read delete and equality-delete files count separately
+    * (the Iceberg snapshot-summary split), plus this thread's stamp
+    * ([[withSummaryStamp]]). A delete family's keys appear only when
+    * the commit or its parent holds files of it, so clean tables keep
+    * compact summaries. Audit surface only: no short-circuit reads
+    * these counters (change-feed emptiness compares the two file
+    * lists, [[graft.streaming.SnapshotReads.provablyEmptyFeed]]). */
+  private def summaryOf(tableDir: Path, prevFiles: Seq[String],
+                        files: Seq[String]): Map[String, Long] = {
+    val added = files.diff(prevFiles)
+    val removed = prevFiles.diff(files)
+    def counts(family: Seq[String] => Seq[String], tag: String) =
+      Map(s"added-$tag-files" -> family(added).size.toLong,
+        s"removed-$tag-files" -> family(removed).size.toLong,
+        s"total-$tag-files" -> family(files).size.toLong)
+    def ifHeld(family: Seq[String] => Seq[String], tag: String) =
+      if (family(files).isEmpty && family(prevFiles).isEmpty)
+        Map.empty[String, Long]
+      else counts(family, tag)
+    counts(dataFiles, "data") ++ ifHeld(deleteFiles, "delete") ++
+      ifHeld(PkTables.eqDeleteFiles, "eqdelete") ++ stampFor(tableDir)
+  }
 
   /** Read-set validation for copy-on-write rewrites (snapshot
     * isolation, the Iceberg default): every file the rewrite READ at
@@ -873,10 +928,6 @@ private[catalog] object Snapshots {
         s"concurrent commit added ${fresh.size} merge-on-read delete " +
           s"file(s) this $operation did not read (e.g. ${fresh.head}) — " +
           "re-run the operation against the new snapshot")
-  }
-
-  def delete(tableDir: Path, v: Long): Unit = {
-    Files.deleteIfExists(manifest(tableDir, v)); ()
   }
 
   /** Every file referenced by ANY retained snapshot — MAIN and every
@@ -1100,15 +1151,10 @@ private[catalog] object Snapshots {
     * usually shares anyway — never a torn manifest), then hard-link
     * the manifest list into place — atomic create-if-absent on POSIX
     * (two writers racing to the same version number: exactly one link
-    * succeeds). Returns false when another writer already published
-    * this version. */
-  private def tryPublish(tableDir: Path, s: Snapshot,
-                         newSegs: Seq[(String, String)] = Seq.empty): Boolean =
-    tryPublishIn(tableDir, dir(tableDir), s, newSegs)
-
-  /** [[tryPublish]] against an explicit log dir: segments always land
-    * in the table's SHARED pool (`_graft_snapshots/m-*.json`), only
-    * the manifest list goes to the (main or branch) log. */
+    * succeeds). Segments always land in the table's SHARED pool
+    * (`_graft_snapshots/m-*.json`); only the manifest list goes to the
+    * (main or branch) log `logDir`. Returns false when another writer
+    * already published this version. */
   private def tryPublishIn(tableDir: Path, logDir: Path, s: Snapshot,
                            newSegs: Seq[(String, String)] = Seq.empty): Boolean = {
     writeSegments(dir(tableDir), newSegs)
@@ -1168,11 +1214,8 @@ private[catalog] object Snapshots {
     * commits to, and the winning link publishes the updated ref state
     * atomically — either the tag lands with its snapshot provably
     * pinned, or it raises [[CommitConflictException]]. */
-  def commitTag(tableDir: Path, name: String, v: Long): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prev = latest(tableDir)
+  def commitTag(tableDir: Path, name: String, v: Long): Long =
+    occ(tableDir, dir(tableDir), Op.Tag) { prev =>
       // same union effectivePins derives, without re-listing the log
       // and re-parsing the manifest `prev` just read
       val pins = Tags.read(tableDir) ++
@@ -1185,44 +1228,23 @@ private[catalog] object Snapshots {
         throw new CommitConflictException(
           s"tag: snapshot v=$v is scheduled for removal by a committed " +
             "expire_snapshots — re-run against a retained snapshot")
-      val (s, segs) = compose(tableDir, prev,
-        prev.fold(Seq.empty[String])(_.files), "tag", Map.empty,
+      Right(Publish(compose(tableDir, prev, filesOf(prev), Op.Tag, Map.empty,
         pinsOverride = Some(prev.fold(Map.empty[String, Long])(_.pins) +
-          (name -> v)))
-      if (tryPublish(tableDir, s, segs)) return v
-      if (attempt >= MaxAttempts) throw new CommitConflictException(
-        s"$tableDir: lost the commit race $MaxAttempts times " +
-          "(operation=tag) — re-run")
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(1L, 5L * attempt))
+          (name -> v))), _ => v))
     }
-    -1L // unreachable
-  }
 
   /** Tag removal as an OCC commit; legacy sidecar-file tags fall back
     * to the file drop. Returns the version the tag pinned, None if
     * absent. */
-  def commitDropTag(tableDir: Path, name: String): Option[Long] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prev = latest(tableDir)
+  def commitDropTag(tableDir: Path, name: String): Option[Long] =
+    occ(tableDir, dir(tableDir), Op.Untag) { prev =>
       prev.map(_.pins).filter(_.contains(name)) match {
-        case None => return Tags.drop(tableDir, name) // legacy sidecar
+        case None => Left(Tags.drop(tableDir, name)) // legacy sidecar
         case Some(pins) =>
-          val (s, segs) = compose(tableDir, prev,
-            prev.fold(Seq.empty[String])(_.files), "untag", Map.empty,
-            pinsOverride = Some(pins - name))
-          if (tryPublish(tableDir, s, segs)) return Some(pins(name))
-          if (attempt >= MaxAttempts) throw new CommitConflictException(
-            s"$tableDir: lost the commit race $MaxAttempts times " +
-              "(operation=untag) — re-run")
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-            .nextLong(1L, 5L * attempt))
+          Right(Publish(compose(tableDir, prev, filesOf(prev), Op.Untag,
+            Map.empty, pinsOverride = Some(pins - name)), _ => Some(pins(name))))
       }
     }
-    None // unreachable
-  }
 
   /** BRANCH-scoped snapshot expiry (the retention half long-lived
     * audit branches need — main-pinned `expire_snapshots` never walks
@@ -1242,36 +1264,11 @@ private[catalog] object Snapshots {
     if (!Files.isDirectory(bd)) throw new IllegalArgumentException(
       s"expire_branch: no branch '$name' " +
         s"(branches: ${branches(tableDir).mkString(",")})")
-    val refOps = Set("tag", "untag", "expire")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val vs = versionsIn(bd)
-      val prev = vs.lastOption.flatMap(readIn(tableDir, bd, _))
-      val metas: Map[Long, Option[Snapshot]] =
-        vs.map(v => v -> readMetaIn(bd, v)).toMap
-      // b-0 is the FORK MARKER, never a data commit to expire
-      val dataVs = vs.filter(v => v != 0L &&
-        metas(v).forall(s => !refOps(s.operation)))
-      val cutoff = dataVs.takeRight(keep).headOption
-        .getOrElse(Long.MinValue)
-      val retained = vs.filter(v => v == 0L || v >= cutoff)
-      val dropped = vs.filterNot(retained.contains)
-      if (dropped.isEmpty) return Seq.empty
-      val (snap, newSegs) = compose(tableDir, prev,
-        prev.fold(Seq.empty[String])(_.files), "expire", Map.empty, dropped)
-      if (tryPublishIn(tableDir, bd, snap, newSegs)) {
-        gcAfterExpire(tableDir, dropped, readIn(tableDir, bd, _),
-          v => Files.deleteIfExists(bd.resolve(s"s-$v.json")))
-        return dropped
-      }
-      if (attempt >= MaxAttempts) throw new CommitConflictException(
-        s"$tableDir: lost the commit race $MaxAttempts times " +
-          "(operation=expire_branch) — re-run")
-      Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-        .nextLong(1L, 5L * attempt))
-    }
-    Seq.empty // unreachable
+    // b-0 is the FORK MARKER: always retained, never a data commit to
+    // count; the branch's pin map is main's inert copy
+    commitExpireIn(tableDir, bd, _ => Set(0L), (dataVs, _) =>
+      dataVs.filter(_ != 0L).takeRight(keep).headOption
+        .getOrElse(Long.MinValue))
   }
 
   /** Was `v` scheduled for removal by a still-retained `expire`
@@ -1283,7 +1280,7 @@ private[catalog] object Snapshots {
   def droppedByRetainedExpire(tableDir: Path, v: Long): Boolean =
     versions(tableDir).reverseIterator
       .flatMap(readMeta(tableDir, _))
-      .exists(s => s.operation == "expire" && s.dropped.contains(v))
+      .exists(s => s.op == Op.Expire && s.dropped.contains(v))
 
   /** Snapshot expiry as an OPTIMISTIC COMMIT (the Iceberg
     * metadata-pointer-CAS discipline, expressed in this log's
@@ -1303,7 +1300,7 @@ private[catalog] object Snapshots {
   def commitExpire(tableDir: Path, keep: Int,
                    pinnedOf: () => Set[Long]): Seq[Long] = {
     require(keep >= 1, "expire_snapshots: keep must be >= 1")
-    commitExpireWith(tableDir, pinnedOf,
+    commitExpireIn(tableDir, dir(tableDir), mainPins(pinnedOf),
       (dataVs, _) => dataVs.takeRight(keep).headOption.getOrElse(Long.MinValue))
   }
 
@@ -1315,7 +1312,8 @@ private[catalog] object Snapshots {
   def commitExpireOlderThan(tableDir: Path, cutoffMs: Long, keepLast: Int,
                             pinnedOf: () => Set[Long]): Seq[Long] = {
     require(keepLast >= 1, "expire_age: keep_last must be >= 1")
-    commitExpireWith(tableDir, pinnedOf, (dataVs, metaOf) => {
+    commitExpireIn(tableDir, dir(tableDir), mainPins(pinnedOf),
+      (dataVs, metaOf) => {
       val byAge = dataVs.find(v =>
         metaOf(v).exists(_.commitMs >= cutoffMs))
         .getOrElse(Long.MaxValue) // nothing young enough: count rules
@@ -1325,25 +1323,27 @@ private[catalog] object Snapshots {
     })
   }
 
-  /** The shared expire loop: `cutoffOf` maps the refreshed DATA
-    * version list (plus the per-attempt meta cache — no second
-    * manifest parse) to the version threshold — everything at or
-    * after it is retained (interleaved ref commits included). */
-  private def commitExpireWith(tableDir: Path,
-                               pinnedOf: () => Set[Long],
-                               cutoffOf: (Seq[Long], Long => Option[Snapshot])
-                                 => Long): Seq[Long] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prev = latest(tableDir)
-      val vs = versions(tableDir)
-      // chain-carried pins read from the SAME refreshed latest this
-      // attempt will commit against — linearized with racing
-      // tag/untag commits by construction; `pinnedOf` adds the legacy
-      // sidecar tags (re-read per retry)
-      val pinned = pinnedOf() ++
-        prev.fold(Set.empty[Long])(_.pins.values.toSet)
+  /** Main-log pins: the chain-carried ones of the SAME refreshed
+    * latest the attempt commits against — linearized with racing
+    * tag/untag commits by construction — plus `pinnedOf` (legacy
+    * sidecar tags, re-read per retry). */
+  private def mainPins(pinnedOf: () => Set[Long]): Option[Snapshot] => Set[Long] =
+    prev => pinnedOf() ++ prev.fold(Set.empty[Long])(_.pins.values.toSet)
+
+  /** The shared expire commit of a main or branch log: `cutoffOf`
+    * maps the refreshed DATA version list (plus the per-attempt meta
+    * cache — no second manifest parse) to the version threshold;
+    * everything at or after it, and every version `pinnedOf` the
+    * refreshed latest, is retained. The `expire` commit records the
+    * dropped list; only after it wins do the dropped manifests delete
+    * and their unreferenced files GC. */
+  private def commitExpireIn(tableDir: Path, logDir: Path,
+                             pinnedOf: Option[Snapshot] => Set[Long],
+                             cutoffOf: (Seq[Long], Long => Option[Snapshot])
+                               => Long): Seq[Long] =
+    occ(tableDir, logDir, Op.Expire) { prev =>
+      val vs = versionsIn(logDir)
+      val pinned = pinnedOf(prev)
       // retention counts DATA history, not ref bookkeeping: tag/untag/
       // expire commits are content-identical audit records — counting
       // them would silently eat the user's time-travel window (three
@@ -1351,33 +1351,20 @@ private[catalog] object Snapshots {
       // data snapshot). Everything at or after the cutoff is retained,
       // interleaved ref commits included (the latest must survive
       // anyway).
-      val refOps = Set("tag", "untag", "expire")
-      // one meta parse per version per attempt, shared with cutoffOf
       val metas: Map[Long, Option[Snapshot]] =
-        vs.map(v => v -> readMeta(tableDir, v)).toMap
+        vs.map(v => v -> readMetaIn(logDir, v)).toMap
       val dataVs = vs.filter(v =>
-        metas(v).forall(s => !refOps(s.operation)))
+        metas(v).forall(_.kind != CommitKind.Ref))
       val cutoff = cutoffOf(dataVs, v => metas.getOrElse(v, None))
-      val retained = (vs.filter(_ >= cutoff) ++ vs.filter(pinned)).distinct
-      val dropped = vs.filterNot(retained.contains)
-      if (dropped.isEmpty) return Seq.empty
-      val (s, newSegs) = compose(tableDir, prev,
-        prev.fold(Seq.empty[String])(_.files), "expire", Map.empty, dropped)
-      if (tryPublish(tableDir, s, newSegs)) {
-        gcAfterExpire(tableDir, dropped, read(tableDir, _),
-          delete(tableDir, _))
-        return dropped
-      }
-      if (attempt >= MaxAttempts)
-        throw new CommitConflictException(
-          s"$tableDir: lost the commit race $MaxAttempts times " +
-            "(operation=expire) — giving up; re-run the operation")
-      Thread.sleep(
-        java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(1L, 5L * attempt))
+      val dropped = vs.filterNot(v => v >= cutoff || pinned(v))
+      if (dropped.isEmpty) Left(Seq.empty)
+      else Right(Publish(compose(tableDir, prev, filesOf(prev), Op.Expire,
+          Map.empty, dropped), _ => {
+        gcAfterExpire(tableDir, dropped, readIn(tableDir, logDir, _),
+          v => Files.deleteIfExists(logDir.resolve(s"s-$v.json")))
+        dropped
+      }))
     }
-    Seq.empty // unreachable
-  }
 
   /** Post-commit expire cleanup, for main and branch logs alike
     * (`readDropped`/`deleteDropped` read and delete one dropped
@@ -1443,7 +1430,7 @@ private[catalog] object Snapshots {
           Seq((segmentName(json), json))
         }
       segs.foreach { case (n, j) => Files.writeString(tmp.resolve(n), j); () }
-      val s = Snapshot(0L, System.currentTimeMillis(), files, None, "migrate",
+      val s = Snapshot(0L, System.currentTimeMillis(), files, None, Op.Migrate,
         Map("added-data-files" -> files.size.toLong,
           "removed-data-files" -> 0L,
           "total-data-files" -> files.size.toLong),

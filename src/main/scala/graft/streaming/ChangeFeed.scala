@@ -54,13 +54,10 @@ object ChangeFeed {
   def versionFeed(store: SnapshotReads, ver: Long, keys: Seq[String],
                   row: org.apache.spark.sql.types.StructType,
                   persisted: Boolean = true): DataFrame = {
+    // compaction, metadata and ref commits, and any commit that kept
+    // its parent's exact file set: the empty feed without a diff join
+    if (store.provablyEmptyFeed(ver)) return emptyFeed(row)
     val vs = store.versions
-    // audit commits (expire: added=removed=0 recorded in the manifest)
-    // are provably content-identical to their parent — emit the empty
-    // feed without paying a full-table diff join per covered expire
-    if (store.noopCommit(ver) &&
-        store.parentOf(ver).exists(vs.contains))
-      return emptyFeed(row)
     // persisted changelog files ('changelog-producer'='input'): serve
     // the memoized form — same rows, no diff join. `persisted=false`
     // is the PRODUCER's own computation path (never recurses).

@@ -9,7 +9,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ([[graft.catalog.ManifestSnapshotReads]]). The change feed, its
   * streaming source and the snapshot-lifecycle procedures all run over
   * it unchanged; [[SnapshotReads.of]] decides which layout a table
-  * directory holds. */
+  * directory holds. What a layout can prove from metadata alone
+  * ([[provablyEmptyFeed]], [[emptyVersion]], [[fastDiff]]) lets the
+  * feed skip work; every default is "unknown", so the feed derives the
+  * audited diff. */
 trait SnapshotReads {
   /** Retained snapshot versions, ascending. */
   def versions: Seq[Long]
@@ -33,11 +36,12 @@ trait SnapshotReads {
     * manifest logs also garbage-collect the data files no retained
     * snapshot references. */
   def expire(keep: Int, pinned: Set[Long]): Unit
-  /** Is `version` a provably CONTENT-IDENTICAL commit over its parent
-    * (an `expire`/audit snapshot — added=removed=0 in its recorded
-    * summary)? The change feed skips the full-table diff join for
-    * these; false = unknown, derive normally. */
-  def noopCommit(version: Long): Boolean = false
+  /** Is `version`'s feed provably EMPTY from metadata alone? The one
+    * no-op predicate of the change feed ([[ChangeFeed.versionFeed]])
+    * and the persisted changelog
+    * ([[graft.catalog.ChangelogProducer]]): both then emit the empty
+    * feed with no Spark job. false = unknown, derive normally. */
+  def provablyEmptyFeed(version: Long): Boolean = false
   /** Is snapshot `version` provably EMPTY (zero data files) from
     * metadata alone? A diff AGAINST an empty state is the initial-load
     * shape (every row of the other side as an insert), so the change

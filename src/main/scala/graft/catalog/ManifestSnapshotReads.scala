@@ -171,32 +171,19 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
     else ChangelogProducer.serveOrProduce(spark, tableDir, this, ver, keys,
       row)
 
-  /** ONE-PASS version diff ([[PkTables.versionDiff]] for PK tables,
-    * [[MorDeletes.versionDiffMor]] under the caller's key identity
-    * otherwise) — one scan + one key shuffle when the commit was
-    * purely additive; None falls back to the two-snapshot diff
-    * join. */
+  /** The one-pass version diff: the two-state resolved read
+    * ([[MorDeletes.versionDiff]]) of `from → to`, one scan and one key
+    * shuffle when the commit was purely additive. Its gates — a
+    * primary-key table diffs only under its own key — are the read's
+    * own; None falls back to the two-snapshot diff join. */
   override def fastDiff(from: Long, to: Long, keys: Seq[String])
       : Option[DataFrame] =
-    (snapOf(from), snapOf(to)) match {
-      case (Some(p), Some(v)) =>
-        pkDef match {
-          // the one-pass PK diff derives identity from pk.keys; a
-          // caller diffing a PK table under a DIFFERENT key identity
-          // (readTableChanges / the stream source accept arbitrary
-          // keys) must fall back to the two-snapshot diff, which
-          // honors the caller's keys — otherwise a changed-key row
-          // would emit 'u' where the caller-keyed diff emits 'd'+'c'
-          case Some(pk) if keys.toSet == pk.keys.toSet =>
-            PkTables.versionDiff(spark, tableDir, p, v, pk, logical,
-              renames)
-          case Some(_) => None
-          case None =>
-            MorDeletes.versionDiffMor(spark, tableDir, p, v, keys,
-              logical, renames)
-        }
-      case _ => None
-    }
+    for {
+      p <- snapOf(from)
+      v <- snapOf(to)
+      d <- MorDeletes.versionDiff(spark, MorDeletes.ReadScope.of(tableDir, v),
+        p, keys, logical)
+    } yield d
 
   override def read(version: Long): Option[DataFrame] =
     snapOf(version).map { s =>

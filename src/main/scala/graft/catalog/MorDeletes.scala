@@ -4,13 +4,13 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, substring_index}
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** MERGE-ON-READ row-level deletes for manifest-versioned partitioned
   * lake tables — the Iceberg v2 position-delete model (Delta calls
@@ -49,7 +49,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   *    through every surface, and the read `CALL compact` rewrites is
   *    the read SQL returns. Pushed filters re-attach on the data side,
   *    so data skipping survives. Nothing is collected on the driver
-  *    beyond the ceiling-bounded vectors.
+  *    beyond the ceiling-bounded vectors. The change feed's one-pass
+  *    version diff is the same read evaluated for two states in one
+  *    aggregate ([[versionDiff]]): the same pick and kills, per state.
   *  - MAINTENANCE: `CALL compact` (and `zorder`) rewrites the resolved
   *    rows and commits a manifest WITHOUT the delete files —
   *    materializing the deletes and restoring the plain fast path
@@ -263,19 +265,15 @@ private[catalog] object MorDeletes {
         }
       if (!scope.pkDirty) eqApplied
       else {
-        val ord = pk.ladder(delField.map(f => col(f.name)),
-          col(PkTables.SeqCol), col(FileKeyCol), col(PosKeyCol))
-        // field-agg declarations key by LOGICAL names
-        val toLogical = scope.renames.map(_.swap)
-        def pick(name: String, c: org.apache.spark.sql.Column) =
-          pk.pick(toLogical.getOrElse(name, name), c, ord)
+        val pick = lawOf(scope, delField)
         val helpers = Set(FileKeyCol, PosKeyCol, PkTables.SeqCol)
         val valueCols = values
           .getOrElse(eqApplied.columns.toSeq.filterNot(helpers))
           .distinct.filterNot(physKeys.contains)
         val aggCols =
-          if (valueCols.isEmpty) Seq(pick("_gpk_d", lit(1)).as("_gpk_d"))
-          else valueCols.map(c => pick(c, col(c)).as(c))
+          if (valueCols.isEmpty)
+            Seq(pick("_gpk_d", lit(1), lit(true)).as("_gpk_d"))
+          else valueCols.map(c => pick(c, col(c), lit(true)).as(c))
         eqApplied.groupBy(physKeys.map(col): _*)
           .agg(aggCols.head, aggCols.tail: _*)
       }
@@ -329,143 +327,288 @@ private[catalog] object MorDeletes {
       .drop(FileKeyCol, PosKeyCol, PkTables.SeqCol, "_gpk_d")
   }
 
-  /** ONE-PASS version diff of a plain (non-PK) merge-on-read table
-    * under the caller's `keys` row identity — the non-PK twin of
-    * [[PkTables.versionDiff]] (guide §1.2/§2.4): the changelog of
-    * `prev → snap` as one scan + one key shuffle instead of two
-    * live-row materializations + a full-outer join. Per-state
-    * liveness: `aliveBefore` = the row's data file is in the parent
-    * snapshot AND no parent-state delete coordinate hits it;
-    * `aliveAfter` = no current delete coordinate hits it (coordinates
-    * only accumulate on the additive path). Images pick
-    * deterministically by `(file, pos)` per state.
+  /** The resolution law [[resolve]] and [[versionDiff]] pick through:
+    * `(physical column, value, state guard) → pick`. Primary-key tables
+    * pick by [[PkTables.PkDef.pick]] under [[PkTables.PkDef.ladder]]
+    * `(sequence field?, commit seq, file, pos)`, keyed by the LOGICAL
+    * name the field-agg declarations use; a plain table picks
+    * latest-by-`(file, pos)`, the deduplicate pick over the row
+    * coordinates alone. */
+  private def lawOf(scope: ReadScope, field: Option[StructField])
+      : (String, Column, Column) => Column = {
+    val (pk, ord) = scope.pk match {
+      case Some(pk) => (pk, pk.ladder(field.map(f => col(f.name)),
+        col(PkTables.SeqCol), col(FileKeyCol), col(PosKeyCol)))
+      case None => (PkTables.PkDef(Nil, PkTables.EngineDedup),
+        org.apache.spark.sql.functions.struct(col(FileKeyCol), col(PosKeyCol)))
+    }
+    val toLogical = scope.renames.map(_.swap)
+    (name, c, alive) => pk.pick(toLogical.getOrElse(name, name), c, ord, alive)
+  }
+
+  /** THE TWO-STATE RESOLVED READ — the one-pass version diff of `prev`
+    * → the snapshot of `scope`: [[resolve]] evaluated for BOTH states
+    * in ONE aggregate, instead of two resolutions and a full-outer
+    * join (two scans, four exchanges). One coordinate read of the
+    * child's files carries two state flags:
+    *  - `aliveBefore`: the row's file is in `prev` (an exact basename
+    *    set probe, never a birth-sequence comparison — unstamped legacy
+    *    files all report seq 0) and no parent-state delete kills it;
+    *  - `aliveAfter`: no current-state delete kills it.
+    * The kills are the ones [[resolve]] applies, per state: position-
+    * delete hits on plain tables ([[positionKills]]), the canonical
+    * equality-delete thresholds under the `(field, seq)` kill law on
+    * primary-key tables ([[equalityKills]]). Every value column then
+    * picks twice through the one law ([[lawOf]]), once per state
+    * guard, so a key's images are the rows the resolved read returns
+    * for it at each state; the images classify to `c`/`u`/`d`. At
+    * 100 TB this is what makes `'changelog-producer'='input'`
+    * affordable: a commit's changelog reads the table once and
+    * shuffles its data once.
     *
-    * SEMANTICS: exact for the key-identity contract every feed
-    * consumer already assumes (one live row per key per state — the
-    * same contract the MV fold and `applyChangelog` require).
-    * NULL-KEYED rows are handled exactly like the full-outer join
-    * they replace: a null key matches nothing, so such a row emits
-    * `d` from the before-state and `c` from the after-state,
-    * ungrouped. Gated to purely-additive commits (appends, MoR
-    * DELETE/UPDATE/MERGE); copy-on-write rewrites and compactions
-    * replace files and fall back. */
-  def versionDiffMor(spark: SparkSession, tableDir: Path,
-                     prev: Snapshots.Snapshot, snap: Snapshots.Snapshot,
-                     keys: Seq[String], logical: StructType,
-                     renames: Map[String, String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{lit, max, max_by, struct, when}
-    val filesV = snap.files
-    if (keys.isEmpty ||
-        !keys.forall(logical.fieldNames.contains)) return None
-    if (PkTables.eqDeleteFiles(filesV).nonEmpty) return None
-    if (Snapshots.dataFiles(filesV).isEmpty) return None
+    * Gates (None = not provable, the caller derives the audited
+    * two-snapshot diff): the commit is purely additive (`prev.files ⊆
+    * scope.files` — appends, delta DML, merge-on-read DELETE/UPDATE/
+    * MERGE; compaction and copy-on-write replace files) and the child
+    * holds a data file. A primary-key table has no position deletes
+    * and `keys` is its key: a caller diffing under another identity
+    * must see a changed-key row as `d`+`c`, never `u`. A plain table's
+    * `keys` are logical columns and it has no equality deletes.
+    *
+    * Plain tables diff under the caller's key identity, the contract
+    * every feed consumer already assumes (one live row per key per
+    * state). A NULL-keyed row matches nothing, as in the full-outer
+    * join this replaces: it groups as a singleton under its own
+    * coordinates and emits `d` from the before-state and `c` from the
+    * after-state. Primary keys are NOT NULL, so PK rows group by the
+    * key alone, and the data side keeps its one key exchange (the
+    * threshold join reuses it; pinned by PkFastDiffSpec).
+    *
+    * Output: `op, before, after` with images in the LOGICAL schema —
+    * [[graft.streaming.ChangeFeed.diff]]'s contract. */
+  def versionDiff(spark: SparkSession, scope: ReadScope,
+                  prev: Snapshots.Snapshot, keys: Seq[String],
+                  logical: StructType): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.{array, coalesce, explode, lit, max, struct, when}
+    val files = scope.files
     val prevSet = prev.files.toSet
-    if (!prevSet.subsetOf(filesV.toSet)) return None
-    val physKeys = keys.map(k => renames.getOrElse(k, k))
-    val membBc = PkTables.seqBroadcastFor(spark, tableDir,
+    val provable = Snapshots.dataFiles(files).nonEmpty &&
+      prevSet.subsetOf(files.toSet) && (scope.pk match {
+        case Some(pk) =>
+          Snapshots.deleteFiles(files).isEmpty && keys.toSet == pk.keys.toSet
+        case None =>
+          keys.nonEmpty && keys.forall(logical.fieldNames.contains) &&
+            PkTables.eqDeleteFiles(files).isEmpty
+      })
+    if (!provable) return None
+    val physKeys = scope.pk.fold(keys)(_.keys)
+      .map(k => scope.renames.getOrElse(k, k))
+    // parent-state membership: basename → 1 for every file of `prev`
+    val membBc = PkTables.seqBroadcastFor(spark, scope.tableDir,
       prev.files.map(f => Snapshots.basename(f) -> 1L).toMap)
-    def inPrev(fileCol: org.apache.spark.sql.Column) =
-      PkTables.seqColumnFor(membBc, fileCol) === 1L
-    var df = readDataWithCoords(spark, tableDir, filesV)
-      .withColumn("_gmv_inprev", inPrev(col(FileKeyCol)))
-    // per-state delete-coordinate hits: parent-state coordinates come
-    // from the parent's OWN delete files, current-state from all —
-    // read the two slices with a state flag and fold to one (file,
-    // pos) → hit-state frame, joined once
-    val delV = Snapshots.deleteFiles(filesV)
-    val (aliveB, aliveA) =
-      if (delV.isEmpty) (col("_gmv_inprev"), lit(true))
+    def inPrev(file: Column): Column =
+      PkTables.seqColumnFor(membBc, file) === 1L
+    val field = scope.pk.flatMap(PkTables.delFieldOf(scope.tableDir, _))
+    val data = readDataWithCoords(spark, scope.tableDir, files)
+      .withColumn("_gvd_inprev", inPrev(col(FileKeyCol)))
+    val (killed, killedB, killedA) = scope.pk match {
+      case Some(pk) =>
+        equalityKills(spark, scope, pk, field, prevSet, physKeys, inPrev, data)
+      case None => positionKills(spark, scope, prevSet, data)
+    }
+    val alive = killed
+      .withColumn("_gvd_ab", col("_gvd_inprev") && !killedB)
+      .withColumn("_gvd_aa", !killedA)
+    // NULL-keyed rows (plain tables) ride the SAME aggregate as
+    // singletons under their coordinates (a separate union branch
+    // would re-execute the scan per branch, measured 3x the whole
+    // diff); the extra group columns are NULL for keyed rows, so their
+    // groups are unchanged
+    val singletons: Seq[(String, Column)] =
+      if (scope.pk.isDefined) Nil
       else {
-        val hasRoot = Snapshots.dataFiles(filesV).exists(!_.contains('/'))
-        val delPrev = delV.filter(prevSet)
-        val delFresh = delV.filterNot(prevSet)
-        val slices =
-          (if (delPrev.isEmpty) Seq.empty[DataFrame]
-           else Seq(readDeletes(spark, tableDir, delPrev, hasRoot)
-             .withColumn("_gmv_dprev", lit(1)))) ++
-          (if (delFresh.isEmpty) Seq.empty[DataFrame]
-           else Seq(readDeletes(spark, tableDir, delFresh, hasRoot)
-             .withColumn("_gmv_dprev", lit(0))))
-        val hits = slices.reduce(_ unionByName _)
-          .groupBy(col(FileKeyCol).as("_gmv_hf"),
-            col(PosKeyCol).as("_gmv_hp"))
-          .agg(max(col("_gmv_dprev")).as("_gmv_dprev"))
-          .withColumn("_gmv_hit", lit(1))
-        df = df.join(hits,
-          df(FileKeyCol) === col("_gmv_hf") &&
-            df(PosKeyCol) === col("_gmv_hp"), "left")
-          .drop("_gmv_hf", "_gmv_hp")
-        // coalesce: an unmatched left-join row reads NULL flags, and
-        // NULL && / ! would poison the liveness conditions
-        val hit = org.apache.spark.sql.functions
-          .coalesce(col("_gmv_hit"), lit(0)) === 1
-        val hitPrev = org.apache.spark.sql.functions
-          .coalesce(col("_gmv_dprev"), lit(0)) === 1
-        (col("_gmv_inprev") && !(hit && hitPrev), !hit)
+        val anyKeyNull = physKeys.map(col(_).isNull).reduce(_ || _)
+        Seq("_gvd_gf" -> when(anyKeyNull, col(FileKeyCol)),
+          "_gvd_gp" -> when(anyKeyNull, col(PosKeyCol)))
       }
-    df = df.withColumn("_gmv_ab", aliveB).withColumn("_gmv_aa", aliveA)
-    val ord = struct(col(FileKeyCol), col(PosKeyCol))
+    val grouped = alive.withColumns(singletons.toMap)
+    val pick = lawOf(scope, field)
+    val (ab, aa) = (col("_gvd_ab"), col("_gvd_aa"))
+    // images only for the LOGICAL value columns: helper and bucket
+    // columns never reach the feed envelope
     val physVals = logical.fields.toSeq
-      .map(f => renames.getOrElse(f.name, f.name))
+      .map(f => scope.renames.getOrElse(f.name, f.name))
       .filterNot(physKeys.contains)
-    def imgOf(prefix: String): org.apache.spark.sql.Column =
-      struct(logical.fields.map { f =>
-        val p = renames.getOrElse(f.name, f.name)
-        (if (physKeys.contains(p)) col(p) else col(s"_gmv_${prefix}_$p"))
-          .as(f.name)
-      }.toSeq: _*)
-    // NULL-keyed rows ride the SAME aggregate (one pass — a separate
-    // union branch would re-execute the scan+join subtree per branch,
-    // measured 3x the whole diff): they group as SINGLETONS under
-    // their own coordinates (the extra group columns are NULL for
-    // keyed rows, so those groups are unchanged), and a singleton
-    // alive in both states emits the full-outer's d+c churn via the
-    // exploded array below — a null key matches nothing.
-    val anyKeyNull = physKeys.map(col(_).isNull).reduce(_ || _)
-    df = df
-      .withColumn("_gmv_gf", when(anyKeyNull, col(FileKeyCol)))
-      .withColumn("_gmv_gp", when(anyKeyNull, col(PosKeyCol)))
     val imgCols = physVals.flatMap { c =>
-      Seq(max_by(col(c), when(col("_gmv_ab"), ord)).as(s"_gmv_b_$c"),
-        max_by(col(c), when(col("_gmv_aa"), ord)).as(s"_gmv_a_$c"))
+      Seq(pick(c, col(c), ab).as(s"_gvd_b_$c"),
+        pick(c, col(c), aa).as(s"_gvd_a_$c"))
     } ++ Seq(
-      max(when(col("_gmv_ab"), 1).otherwise(0)).as("_gmv_eb"),
-      max(when(col("_gmv_aa"), 1).otherwise(0)).as("_gmv_ea"))
-    val g = df
-      .groupBy((physKeys.map(col) :+ col("_gmv_gf") :+ col("_gmv_gp")): _*)
+      max(when(ab, 1).otherwise(0)).as("_gvd_eb"),
+      max(when(aa, 1).otherwise(0)).as("_gvd_ea"))
+    val g = grouped.groupBy((physKeys ++ singletons.map(_._1)).map(col): _*)
       .agg(imgCols.head, imgCols.tail: _*)
-    val before = imgOf("b")
-    val after = imgOf("a")
-    val eb = col("_gmv_eb") === 1
-    val ea = col("_gmv_ea") === 1
-    val isNullGrp = col("_gmv_gf").isNotNull
-    def entry(op: String, b: org.apache.spark.sql.Column,
-              a: org.apache.spark.sql.Column) =
+    def img(state: String): Column = struct(logical.fields.map { f =>
+      val p = scope.renames.getOrElse(f.name, f.name)
+      (if (physKeys.contains(p)) col(p) else col(s"_gvd_${state}_$p"))
+        .as(f.name)
+    }.toSeq: _*)
+    val (before, after) = (img("b"), img("a"))
+    val (eb, ea) = (col("_gvd_eb") === 1, col("_gvd_ea") === 1)
+    val none = lit(null).cast(logical)
+    def entry(op: String, b: Column, a: Column) =
       struct(lit(op).as("op"), b.as("before"), a.as("after"))
-    val nullB = lit(null).cast(logical)
+    // a singleton alive in both states is the full-outer's d+c churn
+    val singleton =
+      singletons.headOption.fold(lit(false))(g => col(g._1).isNotNull)
     val entries =
-      when(isNullGrp && eb && ea,
-        org.apache.spark.sql.functions.array(
-          entry("d", before, nullB), entry("c", nullB, after)))
-      .when(!eb && ea,
-        org.apache.spark.sql.functions.array(entry("c", nullB, after)))
-      .when(eb && !ea,
-        org.apache.spark.sql.functions.array(entry("d", before, nullB)))
-      .when(eb && ea && before =!= after,
-        org.apache.spark.sql.functions.array(entry("u", before, after)))
+      when(singleton && eb && ea,
+        array(entry("d", before, none), entry("c", none, after)))
+      .when(!eb && ea, array(entry("c", none, after)))
+      .when(eb && !ea, array(entry("d", before, none)))
+      .when(eb && ea && before =!= after, array(entry("u", before, after)))
+    val entryType = ArrayType(StructType(Seq(StructField("op", StringType),
+      StructField("before", logical), StructField("after", logical))))
     Some(g
-      .select(org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.coalesce(entries,
-          org.apache.spark.sql.functions.array().cast(
-            org.apache.spark.sql.types.ArrayType(
-              StructType(Seq(
-                org.apache.spark.sql.types.StructField("op", StringType),
-                org.apache.spark.sql.types.StructField("before", logical),
-                org.apache.spark.sql.types.StructField("after", logical)))))))
-        .as("_gmv_e"))
-      .select(col("_gmv_e.op").as("op"),
-        col("_gmv_e.before").as("before"),
-        col("_gmv_e.after").as("after")))
+      .select(explode(coalesce(entries, array().cast(entryType))).as("_gvd_e"))
+      .select(col("_gvd_e.op").as("op"), col("_gvd_e.before").as("before"),
+        col("_gvd_e.after").as("after")))
+  }
+
+  /** Per-state POSITION-delete kills of [[versionDiff]]: parent-state
+    * coordinates come from the parent's own delete files, current-state
+    * ones from all (coordinates only accumulate on the additive path).
+    * The two slices are read with a state flag and folded to one
+    * `(file, pos)` → hit-state frame, joined once. */
+  private def positionKills(spark: SparkSession, scope: ReadScope,
+                            prevSet: Set[String], data: DataFrame)
+      : (DataFrame, Column, Column) = {
+    import org.apache.spark.sql.functions.{coalesce, lit, max}
+    val dels = Snapshots.deleteFiles(scope.files)
+    if (dels.isEmpty) (data, lit(false), lit(false))
+    else {
+      val slices = Seq(dels.filter(prevSet) -> 1, dels.filterNot(prevSet) -> 0)
+        .collect { case (fs, state) if fs.nonEmpty =>
+          readDeletes(spark, scope.tableDir, fs, scope.hasRootData)
+            .withColumn("_gvd_dprev", lit(state))
+        }
+      val hits = slices.reduce(_ unionByName _)
+        .groupBy(col(FileKeyCol).as("_gvd_hf"), col(PosKeyCol).as("_gvd_hp"))
+        .agg(max(col("_gvd_dprev")).as("_gvd_dprev"))
+        .withColumn("_gvd_hit", lit(1))
+      val joined = data.join(hits,
+        data(FileKeyCol) === col("_gvd_hf") &&
+          data(PosKeyCol) === col("_gvd_hp"), "left")
+        .drop("_gvd_hf", "_gvd_hp")
+      // an unmatched row reads NULL flags, and NULL would poison the
+      // liveness conditions
+      val hit = coalesce(col("_gvd_hit"), lit(0)) === 1
+      val hitPrev = coalesce(col("_gvd_dprev"), lit(0)) === 1
+      (joined, hit && hitPrev, hit)
+    }
+  }
+
+  /** Per-state EQUALITY-delete kills of [[versionDiff]] on a primary-key
+    * table, over the rows it needs:
+    *  - the birth sequence ([[PkTables.SeqCol]]);
+    *  - the TOUCHED-KEY restriction: a key in no fresh data file and no
+    *    fresh eq-delete file has identical rows and thresholds in both
+    *    states, so it emits nothing — semi-joining the scan to the
+    *    commit's own keys makes the shuffle O(delta), not O(table).
+    *    Only when fresh bytes are ≤ 25% of the table: for bulk loads
+    *    the extra fresh-file scan and join cost more than they save;
+    *  - the canonical thresholds PER STATE from one read of the current
+    *    eq files (pure-additive ⇒ the parent's are a subset): the blind
+    *    family's max seq and the field family's lex-max `(field, seq)`
+    *    pair ([[PkTables.canonicalEqDeletes]]'s normal form), one
+    *    aggregate with membership guards, killed under
+    *    [[PkTables.eqKillCond]]. Keyed by the PK, so the join reuses
+    *    the data side's key exchange even as a sort-merge join. */
+  private def equalityKills(spark: SparkSession, scope: ReadScope,
+                            pk: PkTables.PkDef,
+                            field: Option[StructField],
+                            prevSet: Set[String], physKeys: Seq[String],
+                            inPrev: Column => Column, data: DataFrame)
+      : (DataFrame, Column, Column) = {
+    import org.apache.spark.sql.functions.{coalesce, lit, max, struct, when}
+    import PkTables.{DelFieldCol, DelSeqCol, SeqCol}
+    val tableDir = scope.tableDir
+    val files = scope.files
+    val bc = PkTables.seqBroadcastFor(spark, tableDir, scope.seqs)
+    val keySchema = PkTables.keyFileSchema(tableDir, pk.keys)
+    val sequenced =
+      data.withColumn(SeqCol, PkTables.seqColumnFor(bc, col(FileKeyCol)))
+    val freshData = Snapshots.dataFiles(files).filterNot(prevSet)
+    val eqV = PkTables.eqDeleteFiles(files)
+    val freshEq = eqV.filterNot(prevSet)
+    // an unreadable size makes the gate UNDECIDABLE — disable the
+    // restriction for this commit rather than undercount freshBytes
+    // and semi-join a bulk load (the case the 25% gate exists for)
+    def bytesOf(fs: Seq[String]): Option[Long] =
+      fs.foldLeft(Option(0L)) { (acc, f) =>
+        acc.flatMap(a =>
+          try Some(a + Files.size(tableDir.resolve(f)))
+          catch { case _: Exception => None })
+      }
+    val freshBytes = bytesOf(freshData ++ freshEq)
+    val totalBytes = for {
+      d <- bytesOf(Snapshots.dataFiles(files))
+      e <- bytesOf(eqV)
+    } yield d + e
+    val touched =
+      if (prevSet.isEmpty || !totalBytes.exists(_ > 0) ||
+          !freshBytes.exists(_ * 4 <= totalBytes.get)) None
+      else {
+        val keyAliases = physKeys.map(k => col(k).as(s"_gvd_tk_$k"))
+        ((if (freshData.isEmpty) Seq.empty[DataFrame]
+          else Seq(readDataWithCoords(spark, tableDir, freshData,
+            select = Some(physKeys)).select(keyAliases: _*))) ++
+         (if (freshEq.isEmpty) Seq.empty[DataFrame]
+          else Seq(PkTables.readEqDeletes(spark, tableDir, freshEq,
+            keySchema, bc, field).select(keyAliases: _*))))
+          .reduceOption(_ unionByName _).map(_.distinct())
+      }
+    val df = touched.fold(sequenced)(t => sequenced.join(t,
+      physKeys.map(k => sequenced(k) === t(s"_gvd_tk_$k")).reduce(_ && _),
+      "left_semi"))
+    if (eqV.isEmpty) (df, lit(false), lit(false))
+    else {
+      val edPrev = col("_gvd_edprev")
+      val fld = field.map(_ => col(DelFieldCol))
+      def blindOf(guard: Column) = max(when(guard, col(DelSeqCol)))
+      def pairOf(guard: Column) = max(when(guard,
+        struct(col(DelFieldCol).as("f"), col(DelSeqCol).as("s"))))
+      val aggs = fld match {
+        case None => Seq(
+          blindOf(edPrev).as("_gvd_bl_b"), blindOf(lit(true)).as("_gvd_bl_a"))
+        case Some(f) => Seq(
+          blindOf(edPrev && f.isNull).as("_gvd_bl_b"),
+          blindOf(f.isNull).as("_gvd_bl_a"),
+          pairOf(edPrev && f.isNotNull).as("_gvd_pr_b"),
+          pairOf(f.isNotNull).as("_gvd_pr_a"))
+      }
+      // canonical keys aliased so the joined frame keeps ONE
+      // unambiguous copy of each key column (the data side's)
+      val canon = PkTables.readEqDeletes(spark, tableDir, eqV, keySchema, bc,
+          field)
+        .withColumn("_gvd_edprev", inPrev(col("_metadata.file_path")))
+        .groupBy(physKeys.map(k => col(k).as(s"_gvd_ck_$k")): _*)
+        .agg(aggs.head, aggs.tail: _*)
+      val joined = df.join(canon,
+        physKeys.map(k => df(k) === col(s"_gvd_ck_$k")).reduce(_ && _), "left")
+        .drop(physKeys.map(k => s"_gvd_ck_$k"): _*)
+      // the kill law over each family's canonical threshold — a state
+      // with no threshold (NULL) kills nothing
+      def killed(state: String): Column = {
+        val blind = coalesce(PkTables.eqKillCond(None, col(SeqCol), None,
+          col(s"_gvd_bl_$state")), lit(false))
+        fld.fold(blind) { _ =>
+          val p = col(s"_gvd_pr_$state")
+          blind || coalesce(PkTables.eqKillCond(field.map(f => col(f.name)),
+            col(SeqCol), Some(p.getField("f")), p.getField("s")), lit(false))
+        }
+      }
+      (joined, killed("b"), killed("a"))
+    }
   }
 
   /** The partition-scope column delete files are laid out by: each

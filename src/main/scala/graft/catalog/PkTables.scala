@@ -62,7 +62,11 @@ import org.apache.spark.sql.types.StructType
   * file, pos))` per selected column, grouped by the key. The aggregate
   * is partial-aggregatable (map-side combine ships one candidate row
   * per key per task), and the bucket-by-key layout keeps each key's
-  * versions co-located. */
+  * versions co-located. The change feed's one-pass version diff is the
+  * same read for two states ([[MorDeletes.versionDiff]]): one
+  * aggregate, every column picked once per state through the same
+  * ladder and [[PkDef.pick]], equality deletes killed per state under
+  * [[eqKillCond]]. */
 object PkTables {
 
   /** Table properties (CREATE TABLE … TBLPROPERTIES). */
@@ -153,16 +157,15 @@ object PkTables {
       * LOGICAL column name the field-agg declaration keys by. */
     def pick(name: String, c: org.apache.spark.sql.Column,
              ord: org.apache.spark.sql.Column,
-             alive: org.apache.spark.sql.Column =
-               org.apache.spark.sql.functions.lit(true))
+             alive: org.apache.spark.sql.Column)
         : org.apache.spark.sql.Column = {
       import org.apache.spark.sql.functions.{array_join, array_sort, bool_and, bool_or, collect_list, max, max_by, min, min_by, product, size, struct, sum, transform, when}
-      // `alive` restricts the pick to one STATE's rows (the one-pass
-      // version diff computes before/after images in one aggregate);
-      // the default literal true folds away, so plain resolved reads
-      // keep their exact prior expressions. Ladder picks mask the
-      // ORDERING (a null ordering row never wins); folds mask the
-      // VALUE (aggregates skip nulls) — both exclude non-state rows.
+      // `alive` restricts the pick to one STATE's rows (the two-state
+      // read, [[MorDeletes.versionDiff]], computes before/after images
+      // in one aggregate); the one-state read passes a literal true,
+      // which folds away. Ladder picks mask the ORDERING (a null
+      // ordering row never wins); folds mask the VALUE (aggregates
+      // skip nulls) — both exclude non-state rows.
       def g(x: org.apache.spark.sql.Column) = when(alive, x)
       engine match {
         case EngineFirstRow => min_by(c, g(ord))
@@ -525,198 +528,6 @@ object PkTables {
       throw new CommitConflictException(
         s"concurrent commit added ${fresh.size} equality-delete " +
           s"file(s) this $operation did not read — re-run")
-  }
-
-  /** ONE-PASS version diff of a PK table (optimization guide §1.2/§2.4
-    * — fix the distributed algorithm, remove shuffles outright): the
-    * changelog of `prev → snap` computed as a SINGLE scan + SINGLE
-    * key shuffle, instead of the diff of the two snapshots' resolved
-    * reads ([[MorDeletes.resolvedRows]]) — two scans + two resolution shuffles + a
-    * full-outer join (whose struct-extracted keys defeat partitioning
-    * reuse — four exchanges total). Because resolution is PER KEY,
-    * both states' images derive in ONE aggregate: every row carries
-    * `aliveBefore` / `aliveAfter` state flags (file membership in the
-    * parent snapshot × the [[eqKillCond]] kill law against each
-    * state's own canonical thresholds), and every column picks twice
-    * through the SAME [[PkDef.pick]] the resolved read uses — one
-    * law, two guards. At 100 TB this is what makes
-    * `'changelog-producer'='input'` affordable: a commit's changelog
-    * production reads the table once, not twice, and shuffles once,
-    * not four times.
-    *
-    * Applies only when the commit was PURELY ADDITIVE (`prev.files ⊆
-    * snap.files` — appends, delta DML; compact/rewrite/expire replace
-    * files and fall back to the audited two-snapshot diff) and no
-    * position-delete files are present. Returns `op, before, after`
-    * rows in the LOGICAL schema — exactly [[graft.streaming
-    * .ChangeFeed.diff]]'s contract; None = shape not provable, caller
-    * falls back.
-    *
-    * The eq-delete CONDITION on the "one shuffle" claim: when
-    * equality-delete files are present, the canonical-thresholds
-    * aggregate adds one shuffle of the EQ rows (O(deleted keys) —
-    * bounded by compaction) and a join back to the data frame. The
-    * DATA side is still shuffled exactly once even when that join
-    * cannot broadcast: the canon join and the final two-image
-    * aggregate are both keyed by the PK, so they REUSE the data
-    * scan's one key exchange (pinned by PkFastDiffSpec's planted
-    * eq-backlog test with broadcast disabled). */
-  def versionDiff(spark: SparkSession, tableDir: Path,
-                  prev: Snapshots.Snapshot, snap: Snapshots.Snapshot,
-                  pk: PkDef, logical: StructType,
-                  renames: Map[String, String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{coalesce, lit, max, struct, when}
-    val filesV = snap.files
-    if (Snapshots.deleteFiles(filesV).nonEmpty) return None
-    if (Snapshots.dataFiles(filesV).isEmpty) return None
-    val prevSet = prev.files.toSet
-    if (!prevSet.subsetOf(filesV.toSet)) return None
-    val physKeys = pk.keys.map(k => renames.getOrElse(k, k))
-    val bc = seqBroadcastFor(spark, tableDir, snap.seqs)
-    // parent-state membership: basename → 1 for every file (data AND
-    // equality-delete) of `prev` — an exact set probe, deliberately
-    // NOT a birth-sequence comparison (legacy unstamped files all
-    // report seq 0 and would alias into the wrong state)
-    val membBc = seqBroadcastFor(spark, tableDir,
-      prev.files.map(f => Snapshots.basename(f) -> 1L).toMap)
-    def inPrev(fileCol: Column): Column =
-      seqColumnFor(membBc, fileCol) === 1L
-    val delField = delFieldOf(tableDir, pk)
-    val physField = delField.map(_.name)
-    var df = MorDeletes.readDataWithCoords(spark, tableDir, filesV)
-      .withColumn(SeqCol, seqColumnFor(bc, col(MorDeletes.FileKeyCol)))
-      .withColumn("_gpk_inprev", inPrev(col(MorDeletes.FileKeyCol)))
-    // TOUCHED-KEY restriction (guide §2.3 — shuffle fewer bytes): a
-    // key in no fresh data file and no fresh eq-delete file has
-    // identical rows AND identical kill thresholds in both states, so
-    // its images are equal and it emits nothing — semi-joining the
-    // scan to the commit's own keys makes the diff's shuffle O(delta)
-    // instead of O(table). Only when the commit is small relative to
-    // the table (fresh bytes ≤ 25%): for bulk loads the extra
-    // fresh-file scan + join would exceed what it saves.
-    val freshData = Snapshots.dataFiles(filesV).filterNot(prevSet)
-    val freshEq = eqDeleteFiles(filesV).filterNot(prevSet)
-    // an unreadable size makes the gate UNDECIDABLE — disable the
-    // restriction for this commit rather than undercount freshBytes
-    // and semi-join a bulk load (the case the 25% gate exists for)
-    def bytesOf(fs: Seq[String]): Option[Long] =
-      fs.foldLeft(Option(0L)) { (acc, f) =>
-        acc.flatMap(a =>
-          try Some(a + Files.size(tableDir.resolve(f)))
-          catch { case _: Exception => None })
-      }
-    val freshBytes = bytesOf(freshData ++ freshEq)
-    val totalBytes = for {
-      d <- bytesOf(Snapshots.dataFiles(filesV))
-      e <- bytesOf(eqDeleteFiles(filesV))
-    } yield d + e
-    if (prevSet.nonEmpty && totalBytes.exists(_ > 0) &&
-        freshBytes.exists(_ * 4 <= totalBytes.get)) {
-      val keyAliases = physKeys.map(k => col(k).as(s"_gpk_tk_$k"))
-      val freshKeyFrames =
-        (if (freshData.isEmpty) Seq.empty[DataFrame]
-         else Seq(MorDeletes.readDataWithCoords(spark, tableDir,
-           freshData, select = Some(physKeys)).select(keyAliases: _*))) ++
-        (if (freshEq.isEmpty) Seq.empty[DataFrame]
-         else Seq(readEqDeletes(spark, tableDir, freshEq,
-           keyFileSchema(tableDir, pk.keys), bc, delField)
-           .select(keyAliases: _*)))
-      freshKeyFrames.reduceOption(_ unionByName _).foreach { tk =>
-        val touched = tk.distinct()
-        df = df.join(touched,
-          physKeys.map(k => df(k) === touched(s"_gpk_tk_$k"))
-            .reduce(_ && _),
-          "left_semi")
-      }
-    }
-    // canonical eq-delete thresholds PER STATE, from one read of the
-    // current eq files (pure-additive ⇒ prev's eq files ⊆ snap's):
-    // the blind family's max seq and the field family's lex-max
-    // (field, seq) pair — [[canonicalEqDeletes]]'s normal form,
-    // computed once per state with membership guards
-    val eqV = eqDeleteFiles(filesV)
-    val (killedB, killedA): (Column, Column) =
-      if (eqV.isEmpty) (lit(false), lit(false))
-      else {
-        val edRaw = readEqDeletes(spark, tableDir, eqV,
-          keyFileSchema(tableDir, pk.keys), bc, delField)
-          .withColumn("_gpk_edprev", inPrev(col("_metadata.file_path")))
-        val edPrev = col("_gpk_edprev")
-        val fld = delField.map(_ => col(DelFieldCol))
-        def blindOf(guard: Column) = max(when(guard, col(DelSeqCol)))
-        def pairOf(guard: Column) = max(when(guard,
-          struct(col(DelFieldCol).as("f"), col(DelSeqCol).as("s"))))
-        val aggs = fld match {
-          case None => Seq(
-            blindOf(edPrev).as("_gpk_bl_b"), blindOf(lit(true)).as("_gpk_bl_a"))
-          case Some(f) => Seq(
-            blindOf(edPrev && f.isNull).as("_gpk_bl_b"),
-            blindOf(f.isNull).as("_gpk_bl_a"),
-            pairOf(edPrev && f.isNotNull).as("_gpk_pr_b"),
-            pairOf(f.isNotNull).as("_gpk_pr_a"))
-        }
-        // canonical keys aliased so the post-join frame keeps ONE
-        // unambiguous copy of each key column (the data side's)
-        val canon = edRaw.groupBy(physKeys.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .select(physKeys.map(k => col(k).as(s"_gpk_ck_$k")) ++
-            aggs.indices.map(i =>
-              col(Seq("_gpk_bl_b", "_gpk_bl_a", "_gpk_pr_b",
-                "_gpk_pr_a")(i))): _*)
-        df = df.join(canon,
-          physKeys.map(k => df(k) === col(s"_gpk_ck_$k")).reduce(_ && _),
-          "left")
-          .drop(physKeys.map(k => s"_gpk_ck_$k"): _*)
-        // the kill law over each family's canonical threshold — a
-        // state with no threshold (NULL) kills nothing
-        def killed(bl: Column, pr: Option[Column]): Column = {
-          val blind = coalesce(eqKillCond(None, col(SeqCol), None, bl),
-            lit(false))
-          pr.fold(blind)(p => blind || coalesce(
-            eqKillCond(physField.map(col), col(SeqCol),
-              Some(p.getField("f")), p.getField("s")), lit(false)))
-        }
-        (killed(col("_gpk_bl_b"),
-           fld.map(_ => col("_gpk_pr_b"))),
-         killed(col("_gpk_bl_a"),
-           fld.map(_ => col("_gpk_pr_a"))))
-      }
-    val aliveB = col("_gpk_inprev") && !killedB
-    val aliveA = !killedA
-    val ord = pk.ladder(physField.map(col), col(SeqCol),
-      col(MorDeletes.FileKeyCol), col(MorDeletes.PosKeyCol))
-    val toLogical = renames.map(_.swap)
-    // images only for the LOGICAL value columns — helper/bucket
-    // columns never reach the feed envelope
-    val physVals = logical.fields.toSeq
-      .map(f => renames.getOrElse(f.name, f.name))
-      .filterNot(physKeys.contains)
-    val imgCols = physVals.flatMap { c =>
-      val n = toLogical.getOrElse(c, c)
-      Seq(pk.pick(n, col(c), ord, aliveB).as(s"_gpk_b_$c"),
-        pk.pick(n, col(c), ord, aliveA).as(s"_gpk_a_$c"))
-    } ++ Seq(
-      max(when(aliveB, 1).otherwise(0)).as("_gpk_eb"),
-      max(when(aliveA, 1).otherwise(0)).as("_gpk_ea"))
-    val g = df.groupBy(physKeys.map(col): _*)
-      .agg(imgCols.head, imgCols.tail: _*)
-    def img(prefix: String): Column = struct(logical.fields.map { f =>
-      val p = renames.getOrElse(f.name, f.name)
-      (if (physKeys.contains(p)) col(p) else col(s"_gpk_${prefix}_$p"))
-        .as(f.name)
-    }.toSeq: _*)
-    val before = img("b")
-    val after = img("a")
-    val eb = col("_gpk_eb") === 1
-    val ea = col("_gpk_ea") === 1
-    Some(g
-      .select(
-        when(!eb && ea, lit("c"))
-          .when(eb && !ea, lit("d"))
-          .when(eb && ea && before =!= after, lit("u")).as("op"),
-        when(eb, before).as("before"),
-        when(ea, after).as("after"))
-      .filter(col("op").isNotNull))
   }
 }
 

@@ -99,10 +99,12 @@ object ChangeFeed {
       // one-pass diff's key shuffle + two-image aggregate
       case Some(prev) if store.emptyVersion(prev) => initialLoad
       case Some(prev) =>
-        // one-pass diff when the layout proves the shape (PK manifest
+        // one-pass diff when the layout proves the shape (manifest
         // tables, purely-additive commit): one scan + one key shuffle
         // instead of two snapshot resolutions + a full-outer join —
-        // same rows by the shared pick/kill law (PkFastDiffSpec)
+        // same rows, because it is the resolved read's own pick/kill
+        // law evaluated for both states (MorDeletes.versionDiff;
+        // PkFastDiffSpec, MorFastDiffSpec, VersionDiffSpec)
         store.fastDiff(prev, ver, keys)
           .getOrElse(between(store, prev, ver, keys))
           .select(col("op"), lit(ver).as("version"),

@@ -62,14 +62,13 @@ trait SnapshotReads {
                     row: org.apache.spark.sql.types.StructType)
       : Option[DataFrame] = None
   /** ONE-PASS diff `from → to` when the layout can prove the shape
-    * (manifest tables whose commit was purely additive —
-    * [[graft.catalog.PkTables.versionDiff]] for PK tables,
-    * [[graft.catalog.MorDeletes.versionDiffMor]] for plain
-    * merge-on-read tables, keyed by the caller's `keys` identity):
-    * `op, before, after` rows, one scan + one key shuffle instead of
-    * two snapshot resolutions + a full-outer join. None = not
-    * provable; the caller derives via the audited two-snapshot
-    * diff. */
+    * (manifest tables whose commit was purely additive, keyed by the
+    * caller's `keys` identity — a PK table's only when they are its
+    * key): the two-state resolved read
+    * ([[graft.catalog.MorDeletes.versionDiff]]), `op, before, after`
+    * rows from one scan + one key shuffle instead of two snapshot
+    * resolutions + a full-outer join. None = not provable; the caller
+    * derives via the audited two-snapshot diff. */
   def fastDiff(from: Long, to: Long, keys: Seq[String])
       : Option[DataFrame] = None
 }

@@ -182,18 +182,15 @@ private[catalog] object BloomIndex {
       // the driver probe's Literal(i.toLong, LongType)
       val posCols = (0 until probes).map(i =>
         pmod(xxhash64(canon, lit(i.toLong)), lit(bits.toLong)).cast(IntegerType))
-      val fileCol =
-        if (df.columns.contains(Snapshots.FileCol)) col(Snapshots.FileCol)
-        else col("_metadata.file_path")
       val perFile = df
         .filter(col(c).isNotNull)
-        .select(fileCol.as("__file"),
+        .select(FileStats.fileNameCol(df).as("__file"),
           explode(sqlArray(posCols: _*)).as("__pos"))
         .groupBy(col("__file"))
         .agg(collect_set(col("__pos")).as("__bits"))
         .collect()
       perFile.foldLeft(acc) { (m, r) =>
-        val file = r.getAs[String]("__file").split('/').last
+        val file = r.getAs[String]("__file")
         val bs = new Array[Byte](bits / 8)
         r.getSeq[Int](1).foreach(p => bs(p >>> 3) = (bs(p >>> 3) | (1 << (p & 7))).toByte)
         m.updated(file, m.getOrElse(file, Map.empty).updated(c, bs))

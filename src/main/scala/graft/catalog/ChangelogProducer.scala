@@ -42,10 +42,22 @@ import graft.streaming.{ChangeFeed, SnapshotReads}
   *  - branch reads never consult the files (they are keyed by MAIN
   *    log versions).
   *
-  * At 100 TB: the persisted feed costs one keyed diff per commit
-  * (only on tables that DECLARE the producer — the Paimon trade:
-  * write-side work buys read-side amortization), written once and
-  * scanned by every consumer thereafter. */
+  * Cost: production runs at most three Spark jobs per commit (only on
+  * tables that DECLARE the producer — the Paimon trade: write-side
+  * work buys read-side amortization), written once and scanned by
+  * every consumer thereafter:
+  *  - one bounded driver collect of the keys of the commit's fresh data
+  *    files (none for a pure delete);
+  *  - the one-pass diff's key aggregate ([[MorDeletes.versionDiff]]),
+  *    whose shuffle stage is one job and whose result stage is the
+  *    parquet write — no rebalance exchange of its own.
+  * It builds three broadcasts on the driver: the parent-state and
+  * child-state equality-delete vectors (the parent's is normally cached
+  * by the previous commit's production, the child's costs one collect
+  * when the commit adds eq-delete files) and the touched-key set. Its
+  * reads index the manifest's file list, so no listing job runs. Above
+  * `graft.mor.vector.max-coords` the vectors and the key set fall back
+  * to joins, and the budget no longer holds. */
 object ChangelogProducer {
 
   val DirName = "_graft_changelog"
@@ -84,14 +96,11 @@ object ChangelogProducer {
       if (store.provablyEmptyFeed(ver))
         Files.createDirectories(tmp)
       else
-        // REBALANCE before the write (guide §6 — size-adaptive output
-        // files): AQE packs the feed into advisory-sized files — ONE
-        // file for a small commit's feed instead of one per shuffle
-        // partition (observed 10 KB-sized files per version), full
-        // parallel fan-out for a bulk load's advisory-sized many
+        // written straight from the diff's key aggregate: AQE coalesces
+        // its shuffle partitions, so a small commit's feed lands in one
+        // file without a rebalance exchange of its own
         ChangeFeed.versionFeed(store, ver, keys, row, persisted = false)
           .select(col("op"), col("before"), col("after"))
-          .hint("rebalance")
           .write.parquet(tmp.toString)
       Files.writeString(tmp.resolve(SchemaMarker), row.json)
       try {

@@ -162,6 +162,18 @@ private[catalog] object FileStats {
     * `{col: "k:<base64 bits>"}`. */
   private val BloomKey = "__bloom__"
 
+  /** The file NAME of each row of `df` — the key per-file stats and
+    * Bloom bitsets are filed under. Manifest readers pre-materialize the
+    * file path (it can't cross their per-shape union); direct reads use
+    * the metadata column. Cut to the name before any exchange: the
+    * absolute path would ship the table's location through the shuffle
+    * (bytes that depend on where the lake lives, not on the data). */
+  private[catalog] def fileNameCol(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.substring_index(
+      if (df.columns.contains(Snapshots.FileCol)) col(Snapshots.FileCol)
+      else col("_metadata.file_path"), "/", -1)
+
   private[catalog] def collectRanges(df: org.apache.spark.sql.DataFrame,
                                      cols: Seq[String]): Map[String, FileStat] = {
     val aggs = cols.flatMap(c =>
@@ -169,16 +181,11 @@ private[catalog] object FileStats {
         org.apache.spark.sql.functions.count(col(c)).as(s"__nn_$c"))) :+
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("__rows")
-    // manifest readers pre-materialize the file path (it can't cross
-    // their per-shape union); direct reads use the metadata column
-    val fileCol =
-      if (df.columns.contains(Snapshots.FileCol)) col(Snapshots.FileCol)
-      else col("_metadata.file_path")
-    df.groupBy(fileCol.as("__file"))
+    df.groupBy(fileNameCol(df).as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
-        r.getAs[String]("__file").split('/').last ->
+        r.getAs[String]("__file") ->
           FileStat(Some(r.getAs[Long]("__rows")),
             cols.map(c => c -> ColStat(
               Option(r.getAs[Any](s"__min_$c")),

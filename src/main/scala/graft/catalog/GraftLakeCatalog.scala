@@ -816,6 +816,11 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     // later change must not leave the ALTER partially applied
     var order: Seq[String] = WriteOrder.read(p)
     var orderChanged = false
+    // the primary-key sidecar's per-column declarations
+    // ('fields.<c>.aggregate-function', 'sequence.field') speak logical
+    // names too: they chase renames the same way
+    val pkBefore = PkTables.read(p)
+    var pk = pkBefore
     // every physical name in use or retired — fresh-slot allocation
     // must dodge all of them
     def physInUse: Set[String] =
@@ -885,6 +890,10 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
             if (c.equalsIgnoreCase(old)) r.newName else c)
           orderChanged = true
         }
+        def chase(c: String) = if (c.equalsIgnoreCase(old)) r.newName else c
+        pk = pk.map(d => d.copy(
+          fieldAggs = d.fieldAggs.map { case (c, f) => chase(c) -> f },
+          seqField = d.seqField.map(chase)))
       case d: TableChange.DeleteColumn =>
         if (d.fieldNames.length != 1)
           throw new UnsupportedOperationException(
@@ -959,6 +968,7 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     if (orderChanged) {
       if (order.isEmpty) WriteOrder.drop(p) else WriteOrder.write(p, order)
     }
+    if (pk != pkBefore) pk.foreach(PkTables.write(p, _))
     loadTable(ident)
   }
 

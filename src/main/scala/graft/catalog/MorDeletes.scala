@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, CreateStruct, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, Filter, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
@@ -97,13 +98,15 @@ private[catalog] object MorDeletes {
     * exactly the coordinates' parent directory. A scopeless legacy
     * coordinate in a table whose data files all live under partition
     * dirs is unmappable — refuse LOUDLY (`hasRootData` = the caller
-    * saw root-level data files, where basename IS the rel path). */
+    * saw root-level data files, where basename IS the rel path). The
+    * read is indexed from the manifest's list ([[Snapshots.readListed]]):
+    * no existence-check pool, no listing job. */
   def readDeletes(spark: SparkSession, tableDir: Path,
                   deletes: Seq[String],
                   hasRootData: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{concat, concat_ws, lit, raise_error, regexp_extract, regexp_replace, url_decode, when}
-    val raw = spark.read.schema(DeleteSchema)
-      .parquet(deletes.map(f => tableDir.resolve(f).toString): _*)
+    val raw = Snapshots.readListed(spark, tableDir, deletes, DeleteSchema,
+      basePath = false)
     // the file's own target-partition segment, hive-unescaped (the
     // escaping is %XX; literal '+' pre-escapes, or url_decode would
     // turn it into a space — same discipline as the coordinate read)
@@ -141,7 +144,11 @@ private[catalog] object MorDeletes {
     * (scheme-agnostic: works for `file:` and remote URIs alike, plain
     * substring search, no per-row regex); `select` (physical
     * names) prunes each shape's projection BEFORE the union so the
-    * parquet scans never read columns the query did not ask for. */
+    * parquet scans never read columns the query did not ask for. Each
+    * shape's scan is indexed from the manifest's list
+    * ([[Snapshots.readListed]]) and still reports those files as its
+    * `rootPaths`/`inputFiles`: no existence-check pool, no listing job
+    * however many files the snapshot holds. */
   def readDataWithCoords(spark: SparkSession, tableDir: Path,
                          files: Seq[String],
                          select: Option[Seq[String]] = None): DataFrame = {
@@ -166,9 +173,8 @@ private[catalog] object MorDeletes {
     val dirPrefix = new java.net.URI(null, null,
       tableDir.toAbsolutePath.toString + "/", null).getRawPath
     Snapshots.groupByShape(Snapshots.dataFiles(files)).map { case (_, fs) =>
-      val raw = spark.read.option("basePath", tableDir.toString)
-        .schema(schema)
-        .parquet(fs.map(f => tableDir.resolve(f).toString): _*)
+      val raw = Snapshots.readListed(spark, tableDir, fs, schema,
+          basePath = true)
         .withColumn(FileKeyCol,
           org.apache.spark.sql.functions.url_decode(
             org.apache.spark.sql.functions.regexp_replace(
@@ -184,8 +190,8 @@ private[catalog] object MorDeletes {
   /** What the resolved read needs to know about the snapshot it reads:
     * the table dir and file list (root-level data files decide how a
     * legacy basename coordinate maps, [[readDeletes]]), the per-file
-    * birth sequences and stats (delete-file row counts size the
-    * deletion vector from metadata), the logical→physical renames, and
+    * birth sequences and stats (row counts, the bucket-local base's
+    * statistics), the logical→physical renames, and
     * the primary key with whether the snapshot needs latest-per-key
     * resolution (`pkDirty` — false when [[PkTables.resolvedClean]]). */
   final case class ReadScope(tableDir: Path, files: Seq[String],
@@ -289,8 +295,7 @@ private[catalog] object MorDeletes {
   def withoutPositionDeletes(spark: SparkSession, scope: ReadScope,
                              data: DataFrame, dels: Seq[String]): DataFrame =
     if (dels.isEmpty) data
-    else vectorFor(spark, scope.tableDir, dels,
-        b => scope.stats.get(b).flatMap(_.rows), scope.hasRootData) match {
+    else vectorFor(spark, scope.tableDir, dels, scope.hasRootData) match {
       case Some(bc) =>
         val attr = attrsOf(data)
         data.filter(org.apache.spark.sql.GraftBridge.column(
@@ -381,8 +386,9 @@ private[catalog] object MorDeletes {
     * join this replaces: it groups as a singleton under its own
     * coordinates and emits `d` from the before-state and `c` from the
     * after-state. Primary keys are NOT NULL, so PK rows group by the
-    * key alone, and the data side keeps its one key exchange (the
-    * threshold join reuses it; pinned by PkFastDiffSpec).
+    * key alone, and the data side keeps its one key exchange: the kills
+    * are scan-local vector filters, and above the vector ceiling the
+    * threshold join reuses that exchange (pinned by PkFastDiffSpec).
     *
     * Output: `op, before, after` with images in the LOGICAL schema —
     * [[graft.streaming.ChangeFeed.diff]]'s contract. */
@@ -510,19 +516,27 @@ private[catalog] object MorDeletes {
   /** Per-state EQUALITY-delete kills of [[versionDiff]] on a primary-key
     * table, over the rows it needs:
     *  - the birth sequence ([[PkTables.SeqCol]]);
-    *  - the TOUCHED-KEY restriction: a key in no fresh data file and no
-    *    fresh eq-delete file has identical rows and thresholds in both
-    *    states, so it emits nothing — semi-joining the scan to the
-    *    commit's own keys makes the shuffle O(delta), not O(table).
-    *    Only when fresh bytes are ≤ 25% of the table: for bulk loads
-    *    the extra fresh-file scan and join cost more than they save;
-    *  - the canonical thresholds PER STATE from one read of the current
-    *    eq files (pure-additive ⇒ the parent's are a subset): the blind
-    *    family's max seq and the field family's lex-max `(field, seq)`
-    *    pair ([[PkTables.canonicalEqDeletes]]'s normal form), one
-    *    aggregate with membership guards, killed under
-    *    [[PkTables.eqKillCond]]. Keyed by the PK, so the join reuses
-    *    the data side's key exchange even as a sort-merge join. */
+    *  - the per-state kills: the broadcast vectors [[resolve]] applies
+    *    ([[PkBucketResolve.eqVectorFor]]), one over the parent's eq
+    *    files (usually cached by the previous commit's production or
+    *    read) and one over the child's, each a scan-local filter term;
+    *  - the TOUCHED-KEY restriction: a key in no fresh data file whose
+    *    thresholds are equal in both vectors has identical rows and
+    *    kills in both states, so it emits nothing. Filtering the scan to
+    *    the other keys — a driver-collected set ([[KeySetContains]]) —
+    *    makes the shuffle O(delta), not O(table). Only when fresh bytes
+    *    are ≤ 25% of the table: for bulk loads the extra fresh-file read
+    *    costs more than it saves.
+    * Above the [[VectorMaxConf]] ceiling (either vector, or the fresh
+    * data keys' footer count) both steps run as joins: the restriction
+    * semi-joins the keys of the fresh data and fresh eq files, and the
+    * canonical thresholds PER STATE come from one read of the current
+    * eq files (pure-additive ⇒ the parent's are a subset) — the blind
+    * family's max seq and the field family's lex-max `(field, seq)`
+    * pair ([[PkTables.canonicalEqDeletes]]'s normal form), one
+    * aggregate with membership guards, killed under
+    * [[PkTables.eqKillCond]]. Keyed by the PK, so that join reuses the
+    * data side's key exchange even as a sort-merge join. */
   private def equalityKills(spark: SparkSession, scope: ReadScope,
                             pk: PkTables.PkDef,
                             field: Option[StructField],
@@ -530,6 +544,7 @@ private[catalog] object MorDeletes {
                             inPrev: Column => Column, data: DataFrame)
       : (DataFrame, Column, Column) = {
     import org.apache.spark.sql.functions.{coalesce, lit, max, struct, when}
+    import org.apache.spark.sql.GraftBridge.column
     import PkTables.{DelFieldCol, DelSeqCol, SeqCol}
     val tableDir = scope.tableDir
     val files = scope.files
@@ -537,12 +552,13 @@ private[catalog] object MorDeletes {
     val keySchema = PkTables.keyFileSchema(tableDir, pk.keys)
     val sequenced =
       data.withColumn(SeqCol, PkTables.seqColumnFor(bc, col(FileKeyCol)))
+    val attr = attrsOf(sequenced)
     val freshData = Snapshots.dataFiles(files).filterNot(prevSet)
     val eqV = PkTables.eqDeleteFiles(files)
     val freshEq = eqV.filterNot(prevSet)
     // an unreadable size makes the gate UNDECIDABLE — disable the
     // restriction for this commit rather than undercount freshBytes
-    // and semi-join a bulk load (the case the 25% gate exists for)
+    // and restrict a bulk load (the case the 25% gate exists for)
     def bytesOf(fs: Seq[String]): Option[Long] =
       fs.foldLeft(Option(0L)) { (acc, f) =>
         acc.flatMap(a =>
@@ -554,60 +570,122 @@ private[catalog] object MorDeletes {
       d <- bytesOf(Snapshots.dataFiles(files))
       e <- bytesOf(eqV)
     } yield d + e
-    val touched =
-      if (prevSet.isEmpty || !totalBytes.exists(_ > 0) ||
-          !freshBytes.exists(_ * 4 <= totalBytes.get)) None
+    val restrict = prevSet.nonEmpty && totalBytes.exists(_ > 0) &&
+      freshBytes.exists(_ * 4 <= totalBytes.get)
+    def freshKeys(fs: Seq[String]): DataFrame =
+      readDataWithCoords(spark, tableDir, fs, select = Some(physKeys))
+        .select(physKeys.map(col): _*)
+    // per-state vectors, None inside for a state without eq files; the
+    // parent's is normally cached by the previous commit's production
+    // or read
+    def vectorOf(eqs: Seq[String],
+                 extending: => Option[(Option[PkBucketResolve.EqVector],
+                   Array[InternalRow])] = None)
+        : Option[Option[PkBucketResolve.EqVector]] =
+      if (eqs.isEmpty) Some(None)
+      else PkBucketResolve.eqVectorFor(spark, tableDir, eqs, keySchema,
+        scope.seqs, field, extending).map(Some(_))
+    val before = vectorOf(eqV.filter(prevSet))
+    // ONE bounded collect of the fresh rows the diff needs: the fresh
+    // data files' keys (the restriction) and, unless the child's vector
+    // is built already, the fresh eq rows it extends the parent's with
+    val withData = restrict && freshData.nonEmpty
+    val extend = freshEq.nonEmpty && before.isDefined &&
+      !PkBucketResolve.eqVectorCached(spark, tableDir, eqV)
+    val fresh =
+      if (!withData && !extend) Some(Array.empty[InternalRow])
       else {
+        val padding = field.map(f => lit(null).cast(f.dataType).as(DelFieldCol)).toSeq
+        collectUnderCeiling(spark, tableDir,
+          (if (withData) freshData else Nil) ++ (if (extend) freshEq else Nil),
+          ((if (withData) Seq(freshKeys(freshData).select(physKeys.map(col) ++
+              padding :+ lit(null).cast(LongType).as(DelSeqCol) :+
+              lit(false).as("_gvd_eqrow"): _*)) else Nil) ++
+           (if (extend) Seq(PkTables.readEqDeletes(spark, tableDir, freshEq,
+              keySchema, bc, field).withColumn("_gvd_eqrow", lit(true))) else Nil))
+            .reduce(_ unionByName _))
+      }
+    val (eqRows, dataRows) = fresh.getOrElse(Array.empty[InternalRow])
+      .partition(_.getBoolean(physKeys.size + field.size + 1))
+    val after = vectorOf(eqV,
+      if (extend) fresh.map(_ => (before.flatten, eqRows)) else None)
+    // (parent-state vector, child-state vector); None when either is
+    // over the ceiling
+    val vectors = for { a <- after; b <- before } yield (b, a)
+    // the touched keys: the fresh data files' and those whose
+    // thresholds differ between the two vectors
+    val keySet = vectors.filter(_ => restrict && fresh.isDefined).map {
+      case (b, a) =>
+        val keyTypes = keySchema.fields.map(_.dataType).toSeq
+        val proj = UnsafeProjection.create(keyTypes.toArray)
+        val set = new java.util.HashSet[UnsafeRow]()
+        dataRows.foreach(r => set.add(proj(r).copy()))
+        a.foreach { av =>
+          val prior = b.fold(
+            new java.util.HashMap[UnsafeRow, Array[AnyRef]]())(_.slots.value)
+          av.slots.value.forEach((k, slots) =>
+            if (!java.util.Arrays.equals(slots, prior.get(k))) set.add(k))
+        }
+        KeySetContains(spark.sparkContext.broadcast(set), keyTypes,
+          CreateStruct(keySchema.fieldNames.toSeq.map(attr)))
+    }
+    val df = keySet match {
+      case Some(touched) => sequenced.filter(column(touched))
+      case None if restrict =>
         val keyAliases = physKeys.map(k => col(k).as(s"_gvd_tk_$k"))
         ((if (freshData.isEmpty) Seq.empty[DataFrame]
-          else Seq(readDataWithCoords(spark, tableDir, freshData,
-            select = Some(physKeys)).select(keyAliases: _*))) ++
+          else Seq(freshKeys(freshData).select(keyAliases: _*))) ++
          (if (freshEq.isEmpty) Seq.empty[DataFrame]
           else Seq(PkTables.readEqDeletes(spark, tableDir, freshEq,
             keySchema, bc, field).select(keyAliases: _*))))
           .reduceOption(_ unionByName _).map(_.distinct())
-      }
-    val df = touched.fold(sequenced)(t => sequenced.join(t,
-      physKeys.map(k => sequenced(k) === t(s"_gvd_tk_$k")).reduce(_ && _),
-      "left_semi"))
-    if (eqV.isEmpty) (df, lit(false), lit(false))
-    else {
-      val edPrev = col("_gvd_edprev")
-      val fld = field.map(_ => col(DelFieldCol))
-      def blindOf(guard: Column) = max(when(guard, col(DelSeqCol)))
-      def pairOf(guard: Column) = max(when(guard,
-        struct(col(DelFieldCol).as("f"), col(DelSeqCol).as("s"))))
-      val aggs = fld match {
-        case None => Seq(
-          blindOf(edPrev).as("_gvd_bl_b"), blindOf(lit(true)).as("_gvd_bl_a"))
-        case Some(f) => Seq(
-          blindOf(edPrev && f.isNull).as("_gvd_bl_b"),
-          blindOf(f.isNull).as("_gvd_bl_a"),
-          pairOf(edPrev && f.isNotNull).as("_gvd_pr_b"),
-          pairOf(f.isNotNull).as("_gvd_pr_a"))
-      }
-      // canonical keys aliased so the joined frame keeps ONE
-      // unambiguous copy of each key column (the data side's)
-      val canon = PkTables.readEqDeletes(spark, tableDir, eqV, keySchema, bc,
-          field)
-        .withColumn("_gvd_edprev", inPrev(col("_metadata.file_path")))
-        .groupBy(physKeys.map(k => col(k).as(s"_gvd_ck_$k")): _*)
-        .agg(aggs.head, aggs.tail: _*)
-      val joined = df.join(canon,
-        physKeys.map(k => df(k) === col(s"_gvd_ck_$k")).reduce(_ && _), "left")
-        .drop(physKeys.map(k => s"_gvd_ck_$k"): _*)
-      // the kill law over each family's canonical threshold — a state
-      // with no threshold (NULL) kills nothing
-      def killed(state: String): Column = {
-        val blind = coalesce(PkTables.eqKillCond(None, col(SeqCol), None,
-          col(s"_gvd_bl_$state")), lit(false))
-        fld.fold(blind) { _ =>
-          val p = col(s"_gvd_pr_$state")
-          blind || coalesce(PkTables.eqKillCond(field.map(f => col(f.name)),
-            col(SeqCol), Some(p.getField("f")), p.getField("s")), lit(false))
+          .fold(sequenced)(t => sequenced.join(t,
+            physKeys.map(k => sequenced(k) === t(s"_gvd_tk_$k")).reduce(_ && _),
+            "left_semi"))
+      case None => sequenced
+    }
+    vectors match {
+      case Some((before, after)) =>
+        def kills(v: Option[PkBucketResolve.EqVector]): Column =
+          v.fold(lit(false))(x => column(x.killed(keySchema, field, attr)))
+        (df, kills(before), kills(after))
+      case None =>
+        val edPrev = col("_gvd_edprev")
+        val fld = field.map(_ => col(DelFieldCol))
+        def blindOf(guard: Column) = max(when(guard, col(DelSeqCol)))
+        def pairOf(guard: Column) = max(when(guard,
+          struct(col(DelFieldCol).as("f"), col(DelSeqCol).as("s"))))
+        val aggs = fld match {
+          case None => Seq(
+            blindOf(edPrev).as("_gvd_bl_b"), blindOf(lit(true)).as("_gvd_bl_a"))
+          case Some(f) => Seq(
+            blindOf(edPrev && f.isNull).as("_gvd_bl_b"),
+            blindOf(f.isNull).as("_gvd_bl_a"),
+            pairOf(edPrev && f.isNotNull).as("_gvd_pr_b"),
+            pairOf(f.isNotNull).as("_gvd_pr_a"))
         }
-      }
-      (joined, killed("b"), killed("a"))
+        // canonical keys aliased so the joined frame keeps ONE
+        // unambiguous copy of each key column (the data side's)
+        val canon = PkTables.readEqDeletes(spark, tableDir, eqV, keySchema, bc,
+            field)
+          .withColumn("_gvd_edprev", inPrev(col("_metadata.file_path")))
+          .groupBy(physKeys.map(k => col(k).as(s"_gvd_ck_$k")): _*)
+          .agg(aggs.head, aggs.tail: _*)
+        val joined = df.join(canon,
+          physKeys.map(k => df(k) === col(s"_gvd_ck_$k")).reduce(_ && _), "left")
+          .drop(physKeys.map(k => s"_gvd_ck_$k"): _*)
+        // the kill law over each family's canonical threshold — a state
+        // with no threshold (NULL) kills nothing
+        def killed(state: String): Column = {
+          val blind = coalesce(PkTables.eqKillCond(None, col(SeqCol), None,
+            col(s"_gvd_bl_$state")), lit(false))
+          fld.fold(blind) { _ =>
+            val p = col(s"_gvd_pr_$state")
+            blind || coalesce(PkTables.eqKillCond(field.map(f => col(f.name)),
+              col(SeqCol), Some(p.getField("f")), p.getField("s")), lit(false))
+          }
+        }
+        (joined, killed("b"), killed("a"))
     }
   }
 
@@ -739,24 +817,44 @@ private[catalog] object MorDeletes {
   /** Per-file ROW COUNTS for freshly committed delete files, read
     * from their parquet FOOTERS driver-side (K footer opens per
     * commit, no data pages) and folded into the commit's stats block
-    * keyed by basename — so the read side can size its deletion
-    * vector from MANIFEST METADATA alone (and `.files` reports rows
-    * for delete entries too). Failure degrades to a missing entry
-    * (the vector path falls back to its bounded probe), never to a
-    * wrong count. */
+    * keyed by basename — so `.files` reports rows for delete entries
+    * too. Failure degrades to a missing entry, never to a wrong
+    * count. */
   def deleteFileRowStats(tableDir: Path,
-                         moved: Seq[String]): Map[String, FileStats.FileStat] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    moved.flatMap { rel =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(tableDir.resolve(rel).toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Some(Snapshots.basename(rel) ->
-          FileStats.FileStat(Some(r.getRecordCount), Map.empty))
-        finally r.close()
-      } catch { case _: Exception => None }
-    }.toMap
+                         moved: Seq[String]): Map[String, FileStats.FileStat] =
+    moved.flatMap(rel => footerRows(tableDir.resolve(rel)).map(n =>
+      Snapshots.basename(rel) -> FileStats.FileStat(Some(n), Map.empty))).toMap
+
+  /** A parquet file's row count from its footer (a driver-side read, no
+    * Spark job); None when the footer is unreadable. */
+  def footerRows(file: Path): Option[Long] =
+    try {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(file))
+      try Some(r.getRecordCount) finally r.close()
+    } catch { case _: Exception => None }
+
+  /** The [[VectorMaxConf]] ceiling of the session. */
+  def vectorMax(spark: SparkSession): Long =
+    spark.conf.get(VectorMaxConf, VectorMaxDefault.toString).toLong
+
+  /** `df`'s rows on the driver in ONE job, when the footer row counts of
+    * `files` (every file `df` reads, unfiltered) fit the
+    * [[VectorMaxConf]] ceiling — a bound known before reading, so the
+    * collect needs no `limit` probe (whose incremental partition scan
+    * runs several jobs). None over the ceiling, with vectors disabled
+    * (0, or at/above `Int.MaxValue`: uncollectable), or when a footer is
+    * unreadable; callers keep their join plans. */
+  def collectUnderCeiling(spark: SparkSession, tableDir: Path,
+                          files: Seq[String], df: DataFrame)
+      : Option[Array[InternalRow]] = {
+    val max = vectorMax(spark)
+    if (max <= 0L || max >= Int.MaxValue.toLong) return None
+    val rows = files.foldLeft(Option(0L)) { (acc, f) =>
+      acc.flatMap(n => footerRows(tableDir.resolve(f)).map(n + _))
+    }
+    if (!rows.exists(_ <= max)) None
+    else Some(df.queryExecution.executedPlan.executeCollect())
   }
 
   /** Ceiling on the total pending coordinates the read side will
@@ -786,57 +884,34 @@ private[catalog] object MorDeletes {
   /** The pending deletes of `dels` as a broadcast per-file
     * sorted-positions vector, when their total coordinate count fits
     * the [[VectorMaxConf]] ceiling — None above it (the caller falls
-    * back to the anti-join). The sizing decision is METADATA-ONLY when
-    * the manifest carries the delete files' row counts (`knownRows`);
-    * otherwise the probe and the build are ONE bounded job over the
-    * (small) delete parquet. Cached per immutable delete-file set. */
+    * back to the anti-join). The delete files' footer row counts decide
+    * before any read, and the build is ONE bounded collect over the
+    * (small) delete parquet ([[collectUnderCeiling]]). Cached per
+    * immutable delete-file set. */
   def vectorFor(spark: SparkSession, tableDir: Path, dels: Seq[String],
-                knownRows: String => Option[Long] = _ => None,
                 hasRootData: Boolean = false)
       : Option[org.apache.spark.broadcast.Broadcast[
         java.util.HashMap[org.apache.spark.unsafe.types.UTF8String, Array[Long]]]] = {
-    val max = spark.conf.get(VectorMaxConf, VectorMaxDefault.toString).toLong
-    if (max <= 0L || dels.isEmpty) return None
-    // a ceiling at/above Int.MaxValue is uncollectable (the probe's
-    // limit would clamp at Int.MaxValue and the over-ceiling check
-    // below could never trip — a silently TRUNCATED vector resurrects
-    // rows): degrade to the always-correct anti-join instead
-    if (max >= Int.MaxValue.toLong) return None
+    if (dels.isEmpty) return None
     // applicationId in the key: broadcast handles die with their
     // SparkContext — after a spark.stop()/restart in the same JVM
     // (test harnesses, long-lived services) a stale hit would return
-    // a broadcast of a dead context and fail at execution
-    val key = spark.sparkContext.applicationId + "\u0000" +
-      tableDir.toString + "\u0000" + dels.sorted.mkString("\u0000")
+    // a broadcast of a dead context and fail at execution; the ceiling
+    // too: lowering it (0 disables vectors) must reach the join plan
+    val key = spark.sparkContext.applicationId + "\u0000" + vectorMax(spark) +
+      "\u0000" + tableDir.toString + "\u0000" + dels.sorted.mkString("\u0000")
     val cached = vectorCache.get(key)
     if (cached != null) return cached
-    // METADATA-ONLY over-ceiling detection: every delete commit since
-    // r14 records its files' row counts in the manifest stats block,
-    // so a churn-heavy table degrades to the anti-join without
-    // touching a byte (per-file counts are upper bounds for the
-    // deduped vector, so this can only route to the join early,
-    // never under-build the vector)
-    val metaCounts = dels.map(f => knownRows(Snapshots.basename(f)))
-    if (metaCounts.forall(_.isDefined) && metaCounts.flatten.sum > max) {
-      vectorCache.put(key, None)
-      return None
-    }
-    // limit(max+1): the probe IS the build — one small job; an
-    // over-the-ceiling set is detected without reading it fully
-    val rows = readDeletes(spark, tableDir, dels, hasRootData)
-      .limit((max + 1L).toInt).collect()
-    val built =
-      if (rows.length > max) None
-      else {
+    val built = collectUnderCeiling(spark, tableDir, dels,
+        readDeletes(spark, tableDir, dels, hasRootData))
+      .map { rows =>
         val byFile = new java.util.HashMap[
           org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
-        rows.groupBy(_.getString(0)).foreach { case (f, rs) =>
-          byFile.put(
-            org.apache.spark.unsafe.types.UTF8String.fromString(f),
-            rs.map(_.getLong(1)).distinct.sorted)
+        rows.groupBy(_.getUTF8String(0)).foreach { case (f, rs) =>
+          byFile.put(f, rs.map(_.getLong(1)).distinct.sorted)
           ()
         }
-        Some(spark.sparkContext.broadcast(byFile))
+        spark.sparkContext.broadcast(byFile)
       }
     vectorCache.put(key, built)
     built

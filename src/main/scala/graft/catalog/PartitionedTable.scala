@@ -600,11 +600,11 @@ private[catalog] final class PartitionedLakeTable(
                 shapes.map { case (shape, fs) =>
                   RuntimePrunedScan.scanOver(tableName, tableDir,
                     indexSchema, fs, required, filters,
-                    s"spec:${shape.mkString("/")}")
+                    s"spec:${shape.mkString("/")}", listed = true)
                 }, identity)
             else RuntimePrunedScan.scanOver(tableName, tableDir, indexSchema,
               skipped, required, filters,
-              s"snapshot:v=${s.version}:${skipped.size}f")
+              s"snapshot:v=${s.version}:${skipped.size}f", listed = true)
           case None =>
             // PLAIN layout: Spark's native scan prunes identity
             // partitions from the pushed filters itself; the custom
@@ -1037,14 +1037,14 @@ private[catalog] final class PartitionedLakeTable(
               def snapshotScan(files: Seq[String], label: String)
                   : org.apache.spark.sql.connector.read.Scan = {
                 // data files only (defensive: row-level ops are gated
-                // while merge-on-read deletes are pending)
+                // while merge-on-read deletes are pending); indexed from
+                // the manifest's list, in path order
                 val groups = Snapshots.groupByShape(
                     Snapshots.dataFiles(files)).map { case (shape, fs) =>
-                  pruneAndBuild(ParquetTable(
+                  pruneAndBuild(org.apache.spark.sql.GraftReadBridge.listedTable(
                     s"$tableName($label:${shape.mkString("/")})",
-                    SparkSession.active, opts,
-                    fs.map(f => tableDir.resolve(f).toString),
-                    Some(indexSchema), classOf[ParquetFileFormat])
+                    SparkSession.active, Snapshots.listedStatuses(tableDir, fs),
+                    indexSchema, Map("basePath" -> tableDir.toString))
                     .newScanBuilder(opts))
                 }
                 if (groups.size == 1) groups.head
@@ -1225,10 +1225,12 @@ private[catalog] final class RuntimePrunedScan(
           if (shapes.size > 1)
             new ShapeUnionScan(tableName, shapes.map { case (shape, fs) =>
               RuntimePrunedScan.scanOver(tableName, tableDir, indexSchema,
-                fs, required, pushed, s"dpp-spec:${shape.mkString("/")}")
+                fs, required, pushed, s"dpp-spec:${shape.mkString("/")}",
+                listed = snapshotFiles.isDefined)
             }, identity)
           else RuntimePrunedScan.scanOver(tableName, tableDir,
-            indexSchema, skipped, required, pushed, s"dpp:${cands.size}")
+            indexSchema, skipped, required, pushed, s"dpp:${cands.size}",
+            listed = snapshotFiles.isDefined)
       case _ => () // nothing provably excluded: keep the static scan
     }
   }
@@ -1493,9 +1495,12 @@ private[catalog] final class ShapeUnionScan(
 private[catalog] object RuntimePrunedScan {
 
   /** A parquet scan over only the given table-relative partition dirs
-    * (basePath keeps partition-value inference), with the original
-    * column pruning and pushed filters re-applied so the read schema
-    * and row filtering match the scan it replaces. */
+    * or files (basePath keeps partition-value inference), with the
+    * original column pruning and pushed filters re-applied so the read
+    * schema and row filtering match the scan it replaces. `listed`:
+    * `cands` are a manifest's files, and the scan's index is built from
+    * that list ([[Snapshots.listedStatuses]]) — no existence-check pool
+    * and no listing job; otherwise Spark lists the paths. */
   private[catalog] def scanOver(
       tableName: String,
       tableDir: Path,
@@ -1503,14 +1508,21 @@ private[catalog] object RuntimePrunedScan {
       cands: Seq[Path],
       required: Option[StructType],
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      label: String): org.apache.spark.sql.connector.read.Scan = {
+      label: String,
+      listed: Boolean = false): org.apache.spark.sql.connector.read.Scan = {
+    val spark = SparkSession.active
+    val name = s"$tableName($label)"
     val opts = new CaseInsensitiveStringMap(
       util.Map.of("basePath", tableDir.toString))
-    val b = ParquetTable(s"$tableName($label)",
-      SparkSession.active, opts,
-      cands.map(r => tableDir.resolve(r).toString),
-      Some(indexSchema), classOf[ParquetFileFormat])
-      .newScanBuilder(opts)
+    val table =
+      if (listed)
+        org.apache.spark.sql.GraftReadBridge.listedTable(name, spark,
+          Snapshots.listedStatuses(tableDir, cands.map(_.toString)),
+          indexSchema, Map("basePath" -> tableDir.toString))
+      else ParquetTable(name, spark, opts,
+        cands.map(r => tableDir.resolve(r).toString),
+        Some(indexSchema), classOf[ParquetFileFormat])
+    val b = table.newScanBuilder(opts)
     required.foreach { s =>
       b match {
         case c: org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns =>

@@ -261,108 +261,137 @@ private[catalog] object PkBucketResolve {
                        .expressions.Attribute)
       : Option[Expression] =
     eqVectorFor(spark, tableDir, eqDels, keySchema, seqs, delField)
-      .map { case (keyTypes, bc) =>
-        org.apache.spark.sql.catalyst.expressions.Not(
-          EqDeleteVectorKilled(bc, keyTypes,
-            org.apache.spark.sql.catalyst.expressions.CreateStruct(
-              keySchema.fieldNames.toSeq.map(attrOf)),
-            attrOf(PkTables.SeqCol),
-            delField.map(f => attrOf(f.name))))
-      }
+      .map(v => org.apache.spark.sql.catalyst.expressions.Not(
+        v.killed(keySchema, delField, attrOf)))
 
-  // (appId, ceiling, tableDir, eq-file set) → per-key threshold
-  // broadcast, None cached for over-ceiling sets — the vectorFor
-  // caching model. Slots per key: (blind max seq | null, field value |
-  // null, that field delete's seq | null) — the two delete families of
-  // [[PkTables.eqKillCond]]. Eviction UNPERSISTS the broadcast (up to
-  // VectorMax entries each — executors must not accumulate dead delete
-  // vectors under ongoing churn across many tables); unpersist, never
-  // destroy, because an already-planned query may still hold the
-  // handle and lazily re-broadcasts on its next execution.
+  /** A driver-built equality-delete vector ([[eqVectorFor]]): per key
+    * (an [[UnsafeRow]] of `keyTypes`) the two delete families'
+    * thresholds — (blind max seq | null, field value | null, that field
+    * delete's seq | null), the normal form of
+    * [[PkTables.canonicalEqDeletes]]. */
+  final case class EqVector(keyTypes: Seq[DataType],
+                            slots: org.apache.spark.broadcast.Broadcast[
+                              java.util.HashMap[UnsafeRow, Array[AnyRef]]]) {
+    /** The kill predicate ([[EqDeleteVectorKilled]]) over the key, birth
+      * sequence and sequence-field columns `attrOf` names. */
+    def killed(keySchema: StructType, delField: Option[StructField],
+               attrOf: String => org.apache.spark.sql.catalyst.expressions
+                 .Attribute): Expression =
+      EqDeleteVectorKilled(slots, keyTypes,
+        org.apache.spark.sql.catalyst.expressions.CreateStruct(
+          keySchema.fieldNames.toSeq.map(attrOf)),
+        attrOf(PkTables.SeqCol), delField.map(f => attrOf(f.name)))
+  }
+
+  // (appId, ceiling, tableDir, eq-file set) → vector, None cached for
+  // over-ceiling sets — the vectorFor caching model. Eviction
+  // UNPERSISTS the broadcast (up to VectorMax entries each — executors
+  // must not accumulate dead delete vectors under ongoing churn across
+  // many tables); unpersist, never destroy, because an already-planned
+  // query may still hold the handle and lazily re-broadcasts on its
+  // next execution.
   private val eqVecCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String,
-        Option[(Seq[DataType], org.apache.spark.broadcast.Broadcast[
-          java.util.HashMap[UnsafeRow, Array[AnyRef]]])]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Option[EqVector]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            Option[(Seq[DataType], org.apache.spark.broadcast.Broadcast[
-              java.util.HashMap[UnsafeRow, Array[AnyRef]]])]]): Boolean = {
+          e: java.util.Map.Entry[String, Option[EqVector]]): Boolean = {
         val evict = size() > 8
-        if (evict) e.getValue.foreach { case (_, bc) =>
-          try bc.unpersist(false) catch { case _: Exception => () }
+        if (evict) e.getValue.foreach { v =>
+          try v.slots.unpersist(false) catch { case _: Exception => () }
         }
         evict
       }
     })
 
-  /** Driver-built `key → max(delete threshold)` broadcast over the
-    * pending equality-delete files, bounded by the shared vector
-    * ceiling (`limit(max+1)` — never an unbounded collect). None =
+  // the ceiling is part of the key: lowering the conf must route new
+  // plans to the join path even when a larger vector was built
+  private def eqVecKey(spark: SparkSession, tableDir: Path,
+                       eqDels: Seq[String]): String =
+    spark.sparkContext.applicationId + "\u0000" + MorDeletes.vectorMax(spark) +
+      "\u0000" + tableDir.toString + "\u0000" + eqDels.sorted.mkString("\u0000")
+
+  /** Is the vector over `eqDels` already built (or known over the
+    * ceiling)? */
+  private[catalog] def eqVectorCached(spark: SparkSession, tableDir: Path,
+                                      eqDels: Seq[String]): Boolean =
+    eqVecCache.containsKey(eqVecKey(spark, tableDir, eqDels))
+
+  /** The vector over the pending equality-delete files `eqDels`, built
+    * on the driver from ONE bounded collect
+    * ([[MorDeletes.collectUnderCeiling]]: the files' footer row counts
+    * must fit the shared vector ceiling — never an unbounded collect),
+    * or from `extending`: the vector of a subset of `eqDels` (None: the
+    * empty subset) and the raw rows (keys, field?, seq) of the rest,
+    * which a caller collected in a job it runs anyway. The normal form
+    * is a per-key max per family, so folding the rest into a copy of
+    * the subset's slots equals folding every row; the extended vector
+    * must hold at most the ceiling's count of keys plus rows. None =
     * over ceiling / vectors disabled (the caller keeps the join plan);
     * the None outcome caches like the position-vector cache. */
-  private def eqVectorFor(spark: SparkSession, tableDir: Path,
-                          eqDels: Seq[String], keySchema: StructType,
-                          seqs: Map[String, Long],
-                          delField: Option[StructField])
-      : Option[(Seq[DataType], org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[UnsafeRow, Array[AnyRef]]])] = {
-    val max = spark.conf.get(MorDeletes.VectorMaxConf,
-      MorDeletes.VectorMaxDefault.toString).toLong
-    if (max <= 0L || max >= Int.MaxValue.toLong) return None
-    // the ceiling is part of the key: lowering the conf must route
-    // new plans to the join path even when a larger vector was built
-    val key = spark.sparkContext.applicationId + "\u0000" + max +
-      "\u0000" + tableDir.toString + "\u0000" +
-      eqDels.sorted.mkString("\u0000")
+  private[catalog] def eqVectorFor(spark: SparkSession, tableDir: Path,
+                                   eqDels: Seq[String], keySchema: StructType,
+                                   seqs: Map[String, Long],
+                                   delField: Option[StructField],
+                                   extending: => Option[(Option[EqVector], Array[InternalRow])] = None)
+      : Option[EqVector] = {
+    val key = eqVecKey(spark, tableDir, eqDels)
     val cached = eqVecCache.get(key)
     if (cached != null) return cached
-    val bcSeq = PkTables.seqBroadcastFor(spark, tableDir, seqs)
-    // RAW rows (keys, field?, seq), ceiling-bounded; the driver folds
-    // the two families per key (blind max; lex-max (field, seq) pair)
-    val rows = PkTables.readEqDeletes(spark, tableDir, eqDels,
-        keySchema, bcSeq, delField)
-      .limit(max.toInt + 1)
-      .queryExecution.executedPlan.executeCollect()
-    val built =
-      if (rows.length > max) None
-      else {
-        val keyTypes = keySchema.fields.map(_.dataType).toSeq
-        val proj = UnsafeProjection.create(keyTypes.toArray)
-        val m = new java.util.HashMap[UnsafeRow, Array[AnyRef]](
-          rows.length * 2)
-        val n = keyTypes.length
-        val fieldType = delField.map(_.dataType)
-        val fieldOrd = fieldType.map(EqDeleteVectorKilled.ordering)
-        val fieldIdx = n // DelFieldCol right after the keys when present
-        val seqIdx = if (delField.isDefined) n + 1 else n
-        rows.foreach { r =>
-          val k = proj(r).copy()
-          var slots = m.get(k)
-          if (slots == null) { slots = new Array[AnyRef](3); m.put(k, slots); () }
-          val dseq = r.getLong(seqIdx)
-          val fv = fieldType.flatMap(t =>
-            if (r.isNullAt(fieldIdx)) None else Some(r.get(fieldIdx, t)))
-          fv match {
-            case None => // blind family: max seq
-              if (slots(0) == null ||
-                  slots(0).asInstanceOf[java.lang.Long].longValue() < dseq)
-                slots(0) = java.lang.Long.valueOf(dseq)
-            case Some(v) => // field family: lex-max (field, seq)
-              val less = slots(1) == null || {
-                val c = fieldOrd.get.compare(slots(1), v)
-                c < 0 || (c == 0 &&
-                  slots(2).asInstanceOf[java.lang.Long].longValue() < dseq)
-              }
-              if (less) {
-                slots(1) = v.asInstanceOf[AnyRef]
-                slots(2) = java.lang.Long.valueOf(dseq)
-              }
-          }
-        }
-        Some((keyTypes, spark.sparkContext.broadcast(m)))
-      }
+    val keyTypes = keySchema.fields.map(_.dataType).toSeq
+    val (base, rows) = extending match {
+      case Some((v, rest)) =>
+        val m = new java.util.HashMap[UnsafeRow, Array[AnyRef]]()
+        v.foreach(_.slots.value.forEach((k, slots) => { m.put(k, slots.clone()); () }))
+        (m, Some(rest).filter(_.length + m.size <= MorDeletes.vectorMax(spark)))
+      case None =>
+        (new java.util.HashMap[UnsafeRow, Array[AnyRef]](),
+          MorDeletes.collectUnderCeiling(spark, tableDir, eqDels,
+            PkTables.readEqDeletes(spark, tableDir, eqDels, keySchema,
+              PkTables.seqBroadcastFor(spark, tableDir, seqs), delField)))
+    }
+    val built = rows.map { rs =>
+      foldEqRows(base, rs, keyTypes, delField)
+      EqVector(keyTypes, spark.sparkContext.broadcast(base))
+    }
     eqVecCache.put(key, built)
     built
+  }
+
+  /** Fold raw eq-delete rows (keys, field?, seq) into per-key slots:
+    * the blind family's max seq, the field family's lex-max
+    * `(field, seq)` pair. */
+  private def foldEqRows(m: java.util.HashMap[UnsafeRow, Array[AnyRef]],
+                         rows: Array[InternalRow], keyTypes: Seq[DataType],
+                         delField: Option[StructField]): Unit = {
+    val proj = UnsafeProjection.create(keyTypes.toArray)
+    val n = keyTypes.length
+    val fieldType = delField.map(_.dataType)
+    val fieldOrd = fieldType.map(EqDeleteVectorKilled.ordering)
+    val fieldIdx = n // DelFieldCol right after the keys when present
+    val seqIdx = if (delField.isDefined) n + 1 else n
+    rows.foreach { r =>
+      val k = proj(r).copy()
+      var slots = m.get(k)
+      if (slots == null) { slots = new Array[AnyRef](3); m.put(k, slots); () }
+      val dseq = r.getLong(seqIdx)
+      val fv = fieldType.flatMap(t =>
+        if (r.isNullAt(fieldIdx)) None else Some(r.get(fieldIdx, t)))
+      fv match {
+        case None => // blind family: max seq
+          if (slots(0) == null ||
+              slots(0).asInstanceOf[java.lang.Long].longValue() < dseq)
+            slots(0) = java.lang.Long.valueOf(dseq)
+        case Some(v) => // field family: lex-max (field, seq)
+          val less = slots(1) == null || {
+            val c = fieldOrd.get.compare(slots(1), v)
+            c < 0 || (c == 0 &&
+              slots(2).asInstanceOf[java.lang.Long].longValue() < dseq)
+          }
+          if (less) {
+            slots(1) = v.asInstanceOf[AnyRef]
+            slots(2) = java.lang.Long.valueOf(dseq)
+          }
+      }
+    }
   }
 }
 
@@ -561,4 +590,44 @@ private[catalog] object EqDeleteVectorKilled {
     * `LessThan` for floating-point sequence fields. */
   def ordering(dt: DataType): Ordering[Any] =
     org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+}
+
+/** Key-set membership, `struct(keys) ∈ broadcast set` — the scan-local
+  * form of a semi-join against a driver-collected key set (the one-pass
+  * diff's touched-key restriction, [[MorDeletes.versionDiff]]). The set
+  * holds [[UnsafeRow]]s of `keyTypes`, the key projection the
+  * equality-delete vectors use. */
+private[catalog] final case class KeySetContains(
+    keys: org.apache.spark.broadcast.Broadcast[java.util.HashSet[UnsafeRow]],
+    keyTypes: Seq[DataType],
+    child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.Predicate {
+
+  override def nullable: Boolean = false
+
+  @transient private lazy val proj = UnsafeProjection.create(keyTypes.toArray)
+
+  def contains(key: InternalRow): Boolean =
+    key != null && keys.value.contains(proj(key))
+
+  override def eval(input: InternalRow): Any =
+    contains(child.eval(input).asInstanceOf[InternalRow])
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("keySet", this)
+    val k = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${k.code}
+        boolean ${ev.value} = !${k.isNull} && $ref.contains(${k.value});""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

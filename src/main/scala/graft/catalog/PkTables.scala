@@ -380,7 +380,8 @@ object PkTables {
     * different sequences must preserve each key's original threshold,
     * or a delete would wrongly extend past inserts that revived the
     * key. Plain files read the column as NULL; `coalesce` picks the
-    * birth sequence for them. */
+    * birth sequence for them. The read is indexed from the manifest's
+    * list ([[Snapshots.readListed]]): no listing job. */
   def readEqDeletes(spark: SparkSession, tableDir: Path,
                     eqDels: Seq[String], keySchema: StructType,
                     bc: org.apache.spark.broadcast.Broadcast[
@@ -395,8 +396,7 @@ object PkTables {
         DelFieldCol, f.dataType, nullable = true)).toSeq :+
       org.apache.spark.sql.types.StructField(DelSeqCol,
         org.apache.spark.sql.types.LongType, nullable = true))
-    spark.read.schema(withSeq)
-      .parquet(eqDels.map(f => tableDir.resolve(f).toString): _*)
+    Snapshots.readListed(spark, tableDir, eqDels, withSeq, basePath = false)
       .withColumn(DelSeqCol, coalesce(col(DelSeqCol),
         seqColumnFor(bc, col("_metadata.file_path"))))
   }

@@ -1007,11 +1007,34 @@ private[catalog] object Snapshots {
     else phys
   }
 
+  /** `(absolute path, size, modification ms)` of table-relative files —
+    * one attribute read per file, the index a manifest-listed read
+    * builds from ([[org.apache.spark.sql.GraftReadBridge.listedIndex]]). */
+  def listedStatuses(tableDir: Path, files: Seq[String])
+      : Seq[(String, Long, Long)] =
+    files.map { f =>
+      val p = tableDir.resolve(f)
+      val a = Files.readAttributes(p,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      (p.toString, a.size, a.lastModifiedTime.toMillis)
+    }
+
+  /** A parquet read of manifest-listed files under an explicit
+    * `schema`, indexed from the list itself: no existence-check pool and
+    * no listing job. `basePath` infers partition values from the
+    * directories under `tableDir`. */
+  def readListed(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
+                 files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+                 basePath: Boolean): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.GraftReadBridge.readListed(spark,
+      listedStatuses(tableDir, files), schema,
+      if (basePath) Map("basePath" -> tableDir.toString) else Map.empty)
+
   /** Read the given (table-relative) live files as one DataFrame in
     * PHYSICAL column names — per-shape parquet reads with the explicit
-    * declared schema, unioned by name, `_graft_file` materialized
-    * per group. The shared live-file read every stats/maintenance
-    * path uses. */
+    * declared schema, indexed from the list ([[readListed]]), unioned by
+    * name, `_graft_file` materialized per group. The shared live-file
+    * read every stats/maintenance path uses. */
   def readFiles(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
                 files: Seq[String]): org.apache.spark.sql.DataFrame = {
     val schema = physicalReadSchema(tableDir)
@@ -1026,9 +1049,7 @@ private[catalog] object Snapshots {
           org.apache.spark.sql.types.StructField(FileCol,
             org.apache.spark.sql.types.StringType)))
     groupByShape(dataFiles(files)).map { case (_, fs) =>
-      spark.read.option("basePath", tableDir.toString)
-        .schema(schema)
-        .parquet(fs.map(f => tableDir.resolve(f).toString): _*)
+      readListed(spark, tableDir, fs, schema, basePath = true)
         .withColumn(FileCol,
           org.apache.spark.sql.functions.col("_metadata.file_path"))
     }.reduce(_ unionByName _)

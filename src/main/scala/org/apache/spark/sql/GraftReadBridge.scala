@@ -84,6 +84,78 @@ object GraftReadBridge {
     DataSourceV2ScanRelation(rel, scan, output, keyGroupedPartitioning)
   }
 
+  /** A parquet file index over files whose list is already known (a
+    * manifest's): `files` are `(absolute path, size, modification
+    * ms)`, pre-filled into the index's status cache, so building it
+    * runs neither Spark's per-path existence check (a thread pool per
+    * read) nor its bulk listing (a distributed job once a read names
+    * 32 paths). It is the index `spark.read.schema(schema)
+    * .options(options).parquet(paths)` builds: the same qualified
+    * `rootPaths`, `inputFiles` and partition inference (`basePath`
+    * included), with its partition directories in path order. */
+  def listedIndex(spark: SparkSession, files: Seq[(String, Long, Long)],
+                  schema: StructType, options: Map[String, String])
+      : org.apache.spark.sql.execution.datasources.InMemoryFileIndex = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val fs = files.headOption.map(f => new Path(f._1)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration))
+    val statuses = files.map { case (abs, size, mtime) =>
+      val p = fs.get.makeQualified(new Path(abs))
+      new FileStatus(size, false, 1, fs.get.getDefaultBlockSize(p), mtime, p)
+    }
+    val byPath = statuses.map(s => s.getPath -> Array(s)).toMap
+    val cache = new org.apache.spark.sql.execution.datasources.FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        byPath.get(p)
+      override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    def index(spec: Option[org.apache.spark.sql.execution.datasources.PartitionSpec]) =
+      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(spark,
+        statuses.map(_.getPath), options, Some(schema), cache, spec)
+    // partition dirs in path order: the inferred order follows a hash
+    // map over ABSOLUTE paths, so scans would split and order rows
+    // differently per table location
+    val inferred = index(None).partitionSpec()
+    index(Some(inferred.copy(
+      partitions = inferred.partitions.sortBy(_.path.toString))))
+  }
+
+  /** The V1 read over [[listedIndex]]: the relation
+    * `spark.read.schema(schema).options(options).parquet(paths)`
+    * resolves to (partition columns from the index, the rest of
+    * `schema` as nullable data columns), planned as a
+    * `FileSourceScanExec`. */
+  def readListed(spark: SparkSession, files: Seq[(String, Long, Long)],
+                 schema: StructType, options: Map[String, String])
+      : DataFrame = {
+    val index = listedIndex(spark, files, schema, options)
+    val part = index.partitionSchema
+    val resolver = spark.sessionState.conf.resolver
+    val data = StructType(schema.filterNot(f =>
+      part.exists(p => resolver(p.name, f.name))))
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        part, data.asNullable, None, new ParquetFileFormat, options)(spark))
+  }
+
+  /** The V2 parquet table over [[listedIndex]]. */
+  def listedTable(name: String, spark: SparkSession,
+                  files: Seq[(String, Long, Long)], schema: StructType,
+                  options: Map[String, String])
+      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable = {
+    import scala.jdk.CollectionConverters._
+    val index = listedIndex(spark, files, schema, options)
+    new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+        name, spark,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava),
+        files.map(_._1), Some(schema), classOf[ParquetFileFormat]) {
+      override lazy val fileIndex
+          : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =
+        index
+    }
+  }
+
   /** V2 transform → Catalyst [[Expression]] (a `TransformExpression`
     * bound through the table's FunctionCatalog), resolved against
     * `plan`'s output — byte-compatible with what the SPJ machinery

@@ -3,7 +3,7 @@ package graft.catalog
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
 
-/** The ONE-PASS version diff ([[PkTables.versionDiff]], r17
+/** The ONE-PASS version diff ([[MorDeletes.versionDiff]], r17
   * optimization): for a purely-additive commit on a PK table the
   * changelog computes as one scan + one key shuffle. THE LAW: its
   * rows are IDENTICAL to the audited two-snapshot diff

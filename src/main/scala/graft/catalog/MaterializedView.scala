@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum,
   * batch twin of the streaming MV pipeline (the reference's entire
   * analytics job is a continuously-maintained aggregate,
   * `flink-cdc/sql/revenue-analytics.sql:46-65`; Delta/Snowflake users
-  * know this as incremental refresh): a grouped sum/count aggregate
-  * over a VERSIONED lake table, materialized as its own versioned
+  * know this as incremental refresh): a grouped sum/count/min/max
+  * aggregate over a VERSIONED lake table, materialized as its own versioned
   * lake table and refreshed by folding the source's CHANGE FEED over
   * `(lastApplied, latest]` instead of recomputing the world.
   *
@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum,
   *      snapshot `from` reconstructs snapshot `to`);
   *   2. the signed delta fold (after rows +1, before rows −1, the
   *      [[graft.cdc.Upsert.applyChangelogAggregateRetract]] algebra —
-  *      sum/count are the invertible aggregates, which is exactly why
-  *      the surface is restricted to them; avg = sum/count downstream);
+  *      sum/count fold invertibly; min/max fold inserts monotonically
+  *      and recompute a group from the source when the range retracts
+  *      one of its rows; avg = sum/count downstream);
   *   3. SQL `MERGE INTO` on the MV table — O(changed groups) writes,
   *      groups whose row count reaches zero DELETE (and under
   *      `graft.write.mode='merge-on-read'` the refresh commit is a
@@ -86,7 +87,7 @@ object MaterializedView {
       source: String,
       keys: Seq[String],
       groupBy: Seq[String],
-      aggs: Seq[(String, String)], // (source col, sum|count)
+      aggs: Seq[(String, String)], // (source col, sum|count|min|max)
       version: Long,               // last source version folded in
       mvVersion: Long,             // MV latest at last finalize/intent
       pendingTo: Option[Long],     // two-phase intent marker (legacy)
@@ -163,7 +164,7 @@ object MaterializedView {
   }
 
   /** Create `mvRef` as a versioned lake table materializing
-    * `GROUP BY groupBy` sum/count aggregates over the versioned
+    * `GROUP BY groupBy` sum/count/min/max aggregates over the versioned
     * source, at the source's CURRENT version; `keys` is the source's
     * row identity (the change feed's diff key). The MV lays out as
     * `bucket(buckets, groupBy.head)` — cardinality-independent

@@ -1192,7 +1192,7 @@ private[catalog] final class RuntimePrunedScan(
 
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    spec.map(f => Expressions.column(f.col)).toArray
+    RuntimePrunedScan.filterRefs(readSchema(), spec.map(_.col))
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val runtime = predicates.toSeq.map(DeletableTable.statsFilter)
@@ -1356,7 +1356,7 @@ private[catalog] final class BucketKeyedScan(
 
   override def filterAttributes():
       Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(Expressions.column(bucket.col))
+    RuntimePrunedScan.filterRefs(readSchema(), Seq(bucket.col))
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val runtime = predicates.toSeq.map(DeletableTable.statsFilter)
@@ -1493,6 +1493,15 @@ private[catalog] final class ShapeUnionScan(
 }
 
 private[catalog] object RuntimePrunedScan {
+
+  /** The runtime-filter columns of a scan: those of `cols` its read
+    * schema still holds. Spark resolves them against the scan's output,
+    * so a partition or bucket column pruned from the read (a join that
+    * selects no key column) would fail the join's analysis. */
+  private[catalog] def filterRefs(readSchema: StructType, cols: Seq[String]):
+      Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    cols.filter(c => readSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      .map(Expressions.column).toArray
 
   /** A parquet scan over only the given table-relative partition dirs
     * or files (basePath keeps partition-value inference), with the

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import java.nio.file.{Files, Path}
 
 /** The ONE-PASS version diff for plain (non-PK) merge-on-read tables
-  * ([[MorDeletes.versionDiffMor]], r17 optimization). THE LAW: under
+  * ([[MorDeletes.versionDiff]], r17 optimization). THE LAW: under
   * the key-identity contract every feed consumer assumes, its rows
   * equal the audited two-snapshot diff (`ChangeFeed.between`) for
   * every purely-additive commit — appends, MoR DELETE, MoR

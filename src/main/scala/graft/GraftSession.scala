@@ -20,12 +20,18 @@ object GraftSession {
 
   /** Scale-oriented conf applied to any builder (local or cluster).
     *
-    * The two codegen settings at the end are static: the generated-code
-    * cache is sized once per JVM, when code is first generated, and a
-    * session's artifact isolation is fixed when the session is created.
-    * They take effect when this builder creates the SparkContext (and its
-    * first session); `getOrCreate` returning a session that already runs
-    * keeps the values that session was created with. */
+    * The two codegen settings are static: the generated-code cache is
+    * sized once per JVM, when code is first generated, and a session's
+    * artifact isolation is fixed when the session is created. They take
+    * effect when this builder creates the SparkContext (and its first
+    * session); `getOrCreate` returning a session that already runs keeps
+    * the values that session was created with.
+    *
+    * The two file-system settings at the end are JVM-static too: Hadoop
+    * caches a `FileSystem` per scheme, authority and user, without its
+    * conf, so `fs.file.impl` holds only when a conf carrying it creates
+    * the first `file:` instance -- normally the SparkContext this builder
+    * creates. (`FileContext` reads its setting on every call.) */
   def tuned(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -62,4 +68,10 @@ object GraftSession {
     // and the session a streaming query clones shares the classes of the
     // session it came from.
     .config("spark.sql.artifact.isolation.enabled", "false")
+    // `file:` without a process per written file: with no native Hadoop
+    // library the stock local file system forks `chmod` for every file,
+    // `.crc` and directory it creates and `readlink` for every `FileContext`
+    // rename (the streaming offset and commit logs). One FS per Hadoop API.
+    .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
 }

@@ -177,8 +177,14 @@ final class BucketedStateStore(spark: SparkSession, dir: String, val buckets: In
     schemas(commit) = df.schema
     val body = (touched.sorted.mkString(",") +:
       ledger.map { case (t, b) => s"batch=$t:$b" }).mkString("\n")
-    val out = fs.create(manifestPath(commit), true)
+    // the manifest is the commit record: written whole under a temp
+    // name, then published by rename, so a crash mid-write leaves the
+    // version uncommitted instead of committed with a cut ledger
+    val staged = new Path(s"$dir/v=$commit/_graft_manifest.tmp")
+    val out = fs.create(staged, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(staged, manifestPath(commit)))
+      throw new java.io.IOException(s"could not publish $staged as ${manifestPath(commit)}")
     expire(prior.withCommit(commit, touched.toSet, ledger))
   }
 

@@ -110,15 +110,24 @@ object GraftReadBridge {
       override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
-    def index(spec: Option[org.apache.spark.sql.execution.datasources.PartitionSpec]) =
-      new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(spark,
-        statuses.map(_.getPath), options, Some(schema), cache, spec)
-    // partition dirs in path order: the inferred order follows a hash
-    // map over ABSOLUTE paths, so scans would split and order rows
-    // differently per table location
-    val inferred = index(None).partitionSpec()
-    index(Some(inferred.copy(
-      partitions = inferred.partitions.sortBy(_.path.toString))))
+    new InMemoryFileIndex(spark, statuses.map(_.getPath), options, schema, cache)
+  }
+
+  /** Spark's index with its inferred partition directories in path
+    * order: the inferred order follows a hash map over ABSOLUTE paths,
+    * so scans would split and order rows differently per table
+    * location. It keeps its parent's simple name, so a scan over it
+    * prints the stock `Location: InMemoryFileIndex(n paths)`. */
+  final class InMemoryFileIndex(spark: SparkSession, paths: Seq[org.apache.hadoop.fs.Path],
+                                options: Map[String, String], schema: StructType,
+                                cache: org.apache.spark.sql.execution.datasources.FileStatusCache)
+      extends org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+        spark, paths, options, Some(schema), cache) {
+    override protected def inferPartitioning()
+        : org.apache.spark.sql.execution.datasources.PartitionSpec = {
+      val inferred = super.inferPartitioning()
+      inferred.copy(partitions = inferred.partitions.sortBy(_.path.toString))
+    }
   }
 
   /** The V1 read over [[listedIndex]]: the relation

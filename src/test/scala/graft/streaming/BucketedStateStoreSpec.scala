@@ -1,7 +1,11 @@
 package graft.streaming
 
 import graft.SparkSpec
+import java.io.{IOException, OutputStream}
+import java.net.URI
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 
 class BucketedStateStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -77,4 +81,58 @@ class BucketedStateStoreSpec extends SparkSpec {
     assert(store.readAll().get.as[(Long, String)].collect().toMap ==
       Map(1L -> "a2", 2L -> "b2"))
   }
+
+  test("a manifest write cut short leaves its version uncommitted") {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${CutManifestFs.Scheme}.impl", classOf[CutManifestFs].getName)
+    val dir = s"${CutManifestFs.Scheme}://${Files.createTempDirectory("graft-bss6")}"
+    val store = new BucketedStateStore(spark, dir, buckets = 2)
+    def rows = store.readAll().get.as[(Long, String)].collect().toMap
+    store.writeBuckets(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), Seq("k"), Seq(0, 1), 0,
+      appliedBatch = Some("t" -> 12L))
+    val next = Seq((1L, "a2"), (2L, "b2")).toDF("k", "v")
+    CutManifestFs.armed = true
+    try intercept[IOException](
+      store.writeBuckets(next, Seq("k"), Seq(0, 1), 1, appliedBatch = Some("t" -> 13L)))
+    finally CutManifestFs.armed = false
+    assert(rows == Map(1L -> "a", 2L -> "b"), "a cut manifest committed its version")
+    assert(store.lastAppliedBatch("t").contains(12L))
+    // the replayed batch commits as a newer version
+    store.writeBuckets(next, Seq("k"), Seq(0, 1), 1, appliedBatch = Some("t" -> 13L))
+    assert(rows == Map(1L -> "a2", 2L -> "b2"))
+    assert(store.lastAppliedBatch("t").contains(13L))
+  }
+}
+
+/** The raw local file system under its own scheme. While `armed`, a
+  * stream it creates for a `_graft_manifest*` file writes the first
+  * line (the claimed buckets) and then fails, as a crash mid-write
+  * would leave it. */
+class CutManifestFs extends RawLocalFileSystem {
+  override def getUri: URI = CutManifestFs.Uri
+
+  /** The overload `create(path, overwrite)` reaches. */
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (!CutManifestFs.armed || !f.getName.startsWith("_graft_manifest")) out
+    else new FSDataOutputStream(new OutputStream {
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        val nl = b.indexWhere(_ == '\n', off)
+        if (nl < 0 || nl >= off + len) out.write(b, off, len)
+        else {
+          out.write(b, off, nl + 1 - off)
+          throw new IOException(s"cut after the first line of $f")
+        }
+      }
+      override def close(): Unit = out.close()
+    }, null)
+  }
+}
+
+object CutManifestFs {
+  val Scheme = "cutmanifest"
+  val Uri: URI = URI.create(s"$Scheme:///")
+  @volatile var armed = false
 }
